@@ -154,12 +154,18 @@ def adaptive_duel_receipt(spark, sf_dir: str, k: int = 3) -> list[dict]:
       * ``default`` — the bare Catalyst plan (no reorder),
       * ``cached``  — the learned order served from the persisted cache
                       (zero episodes, the production fast path),
-      * ``duel``    — a LIVE re-duel with the cache bypassed
-                      (use_cache=False: episodes actually run, nothing is
-                      written), recording whether the fresh winner matches
-                      the cached order.
-    The deltas land in the bench JSON as ``adaptive_duel`` — the adaptive
-    tier's analogue of the ANN recall receipts."""
+      * ``duel``    — a LIVE re-score with the cache bypassed
+                      (use_cache=False: the candidates' sampled C_out is
+                      measured again, nothing is written), plus the full
+                      run of its winner.
+    Per query it also records ``cout`` (the fresh winner's sampled C_out),
+    ``episodes`` (sampled executions the re-score ran; candidates that bind
+    the same table sets in the same sequence share one) and ``same_order``.
+    C_out is exact on a seeded sample, so a re-score of an order learned on
+    this warehouse reproduces it; ``same_order: false`` flags a cached order
+    that came from elsewhere (a transferred order, or one learned under an
+    older reward). The deltas land in the bench JSON as ``adaptive_duel`` —
+    the adaptive tier's analogue of the ANN recall receipts."""
     import glob
     import hashlib
 
@@ -207,6 +213,8 @@ def adaptive_duel_receipt(spark, sf_dir: str, k: int = 3) -> list[dict]:
             "default": t_default,
             "cached": t_cached,
             "duel": t_duel,
+            "cout": next((e.cout for e in duel.episodes if e.order == duel.best_order), None),
+            "episodes": sum(not e.memo for e in duel.episodes),
             "same_order": duel.best_order == cached.best_order,
         })
     return receipts

@@ -15,7 +15,7 @@ This package re-expresses that surface Spark-first:
 - rewrites: Catalyst (pushdown, pruning, decorrelation, constant folding
   replace ~4k LoC of the reference's visitors, SURVEY §4.1)
 - joins: broadcast/shuffle hash + AQE; the reference's RL join ordering is
-  re-imagined as a bandit plan-chooser in ``plans.joinorder``
+  re-imagined as a sampled-C_out plan-chooser in ``plans.joinorder``
 - beyond-reference tier: dedup / similarity / text / multimodal operators for
   large-scale training-data pipelines, and Structured Streaming over events.
 """

@@ -12,10 +12,10 @@ Command surface, mapped 1:1 onto the Engine facade:
     bench <dir>               run a .sql directory with per-query stats
     exec <file>               run each ';'-terminated statement in a file
     explain <sql>             formatted physical plan
-    explain adaptive <sql>    bandit episode log + chosen join order
+    explain adaptive <sql>    per-order sampled C_out + chosen join order
     explain adaptive dot [every N] <sql>  graphviz DOT of the explored order tree (every N: snapshot files)
 ops [name ...]            register operator results as op_<name> SQL views
-    adaptive on|off           route SQL through the join-order bandit
+    adaptive on|off           route SQL through adaptive join ordering
     <anything else>           SQL -> execute + print rows
 
 Run: ``python -m skinnerdb_spark.console [sf_dir]``.
@@ -47,7 +47,7 @@ analyze <sql>             run the statement, report executed-plan metrics
 analyze dot <sql>         executed-plan profile graph (graphviz, SQLMetrics)
 vacuum [apply]            inventory (apply: reclaim) persisted artifacts
 explain <sql>             show the physical plan
-explain adaptive <sql>    show bandit episodes + chosen join order
+explain adaptive <sql>    show per-order sampled C_out + chosen join order
 explain adaptive dot [every N] <sql>  graphviz DOT of the explored order tree (every N: snapshot files)
 adaptive on|off           toggle adaptive join ordering for SQL input
 adaptive rule [off]       inject learned orders into Catalyst (plain SQL)

@@ -302,11 +302,13 @@ class Engine:
         src/query/QueryInfo.java:336-363 + src/joining/JoinProcessor.java).
 
         The query's join graph is extracted from Catalyst's analyzed plan;
-        eligible queries (top-level inner-join chains of >= 3 tables) run
-        through the UCB1 bandit (plans/graph.py), everything else falls back
-        to Catalyst's own plan unchanged. Results are always identical —
-        inner joins commute — only the join order differs. The chosen order
-        and episode stats land on ``self.last_adaptive``.
+        eligible queries (top-level inner-join chains of >= 3 tables) get
+        the candidate order with the lowest sampled C_out — the summed join
+        output rows of one budgeted execution on a seeded sample
+        (plans/graph.py) — and everything else falls back to Catalyst's own
+        plan unchanged. Results are always identical — inner joins commute —
+        only the join order differs. The chosen order and each candidate's
+        C_out land on ``self.last_adaptive``.
         """
         from skinnerdb_spark.plans.graph import adaptive_reorder
 
@@ -410,8 +412,8 @@ class Engine:
         """Text rendering of the adaptive join-ordering decision — the
         capability analogue of the reference's `explain` UCT-tree
         visualization (SkinnerCmd.processExplain, src/console/
-        SkinnerCmd.java:246-289 + TreePlotter): which orders were sampled,
-        what each episode cost, and which order won (or why the query fell
+        SkinnerCmd.java:246-289 + TreePlotter): which orders were scored,
+        each one's sampled C_out, and which order won (or why the query fell
         back to Catalyst)."""
         from skinnerdb_spark.plans.graph import adaptive_reorder
 
@@ -423,27 +425,24 @@ class Engine:
         if res.episodes:
             # prefix-tree rendering of the explored order space — the text
             # analogue of the reference's UCT tree plot (TreePlotter.java):
-            # each node is a join-order prefix with aggregate visit count
-            # and mean reward over the episodes that passed through it
-            lines.append("explored order tree (visits, mean reward):")
-            tree: dict[tuple, list] = {}
-            for ep in res.episodes:
-                for d in range(1, len(ep.order) + 1):
-                    node = tree.setdefault(ep.order[:d], [0, 0.0])
-                    node[0] += 1
-                    node[1] += ep.reward
+            # each node is a join-order prefix with the number of scored
+            # orders through it and the lowest C_out among them
+            lines.append("explored order tree (orders, lowest C_out):")
+            tree = _order_tree(res.episodes)
             for prefix in sorted(tree, key=lambda p: [str(x) for x in p]):
-                n, rsum = tree[prefix]
+                n, best = tree[prefix]
                 mark = " *" if prefix == res.best_order else ""
                 lines.append(
                     f"  {'  ' * (len(prefix) - 1)}{prefix[-1]:<20} "
-                    f"n={n} reward {rsum / n:+.3f}{mark}"
+                    f"n={n} C_out {best}{mark}"
                 )
             lines.append("episodes (sampled fact side):")
             for ep in res.episodes:
+                how = "memo" if ep.memo else f"{ep.seconds*1000:.1f} ms"
+                cout = "timeout" if ep.timed_out else ep.cout
                 lines.append(
-                    f"  {' > '.join(ep.order):<60} {ep.seconds*1000:7.1f} ms  "
-                    f"{ep.rows:>8} rows  reward {ep.reward:+.3f}"
+                    f"  {' > '.join(ep.order):<60} {how:>10}  "
+                    f"{ep.rows:>8} rows  C_out {cout}  joins {list(ep.joins)}"
                 )
         else:
             lines.append("(single connected order — no episodes needed)")
@@ -455,8 +454,8 @@ class Engine:
         (src/visualization/TreePlotter.java renders the UCT tree to PDF;
         we emit .dot text so any graphviz install renders it, with no
         plotting dependency in the engine). Node label = table joined at
-        that depth, visit count, mean episode reward; the winning path is
-        drawn bold."""
+        that depth, number of scored orders through it, lowest sampled
+        C_out among them; the winning path is drawn bold."""
         from skinnerdb_spark.plans.graph import adaptive_reorder
 
         res = adaptive_reorder(self.spark.sql(text), use_cache=False, **kw)
@@ -543,31 +542,43 @@ class Engine:
         return results
 
 
+def _order_tree(episodes: list) -> dict[tuple, list]:
+    """Join-order prefix -> [orders scored through it, lowest C_out], the
+    C_out reading "timeout" when every such order hit its budget."""
+    tree: dict[tuple, list] = {}
+    for ep in episodes:
+        for d in range(1, len(ep.order) + 1):
+            node = tree.setdefault(tuple(ep.order[:d]), [0, None])
+            node[0] += 1
+            if not ep.timed_out and (node[1] is None or ep.cout < node[1]):
+                node[1] = ep.cout
+    for node in tree.values():
+        if node[1] is None:
+            node[1] = "timeout"
+    return tree
+
+
 def _render_uct_dot(
     best: tuple | None, episodes: list, fallback_reason: str | None = None
 ) -> str:
     """One graphviz DOT frame of the explored join-order prefix tree (shared
     by the final-state export and the N-spaced evolution snapshots): node =
-    order prefix with visit count and mean episode reward; the winning path
-    (as of the episodes rendered) is bold."""
+    order prefix with the number of scored orders through it and their
+    lowest sampled C_out; the winning path (as of the episodes rendered) is
+    bold."""
     out = ["digraph uct {", '  rankdir=LR; node [shape=box, fontsize=10];']
     if best is None:
         out.append(f'  fallback [label="not adaptive: {fallback_reason}"];')
         out.append("}")
         return "\n".join(out)
-    tree: dict[tuple, list] = {}
-    for ep in episodes:
-        for d in range(1, len(ep.order) + 1):
-            node = tree.setdefault(tuple(ep.order[:d]), [0, 0.0])
-            node[0] += 1
-            node[1] += ep.reward
+    tree = _order_tree(episodes)
     ids = {p: f"n{i}" for i, p in enumerate(sorted(tree, key=lambda p: [str(x) for x in p]))}
-    for prefix, (n, rsum) in tree.items():
+    for prefix, (n, cout) in tree.items():
         on_best = prefix == best[: len(prefix)]
         style = ', style=bold, color=blue' if on_best else ""
         out.append(
             f'  {ids[prefix]} [label="{prefix[-1]}\\nn={n} '
-            f'r={rsum / n:+.3f}"{style}];'
+            f'C_out={cout}"{style}];'
         )
         if len(prefix) > 1:
             parent = prefix[:-1]

@@ -1,6 +1,6 @@
 """Catalyst-side injection of learned join orders (SURVEY §4.3 option (c)).
 
-`Engine.adaptive_sql` applies the UCB1 bandit's learned orders at the API
+`Engine.adaptive_sql` applies learned (lowest sampled C_out) orders at the API
 boundary; this module pushes the same knowledge INTO Catalyst so plain
 ``spark.sql(...)`` / DataFrame users execute learned orders with no API
 change — the Spark analogue of the reference applying UCT orders inside the
@@ -15,7 +15,7 @@ Mechanism:
 - the shim delegates to a py4j callback (:class:`_PyReorderer`) and is the
   identity whenever the callback is absent, returns None, or throws;
 - the callback re-wraps the optimized plan as a DataFrame, reuses the
-  bandit's own extraction (plans/graph.py ``extract_query_graph`` — the
+  adaptive path's own extraction (plans/graph.py ``extract_query_graph`` — the
   optimizer-stage plan still satisfies its shape contract: unary parents,
   inner-join tree, LogicalRelation leaves), looks up the PERSISTED learned
   order by exact signature then shape signature, rebuilds the chain with
@@ -173,7 +173,7 @@ class _PyReorderer:
 
 def _strip_projects_over_joins(spark: SparkSession, jplan):
     """Drop column-pruning Projects sitting BETWEEN joins (the optimizer
-    inserts them mid-chain) so the bandit's flattener sees the whole join
+    inserts them mid-chain) so the adaptive path's flattener sees the whole join
     tree. Attribute references are by exprId, so widening an intermediate
     output is semantics-preserving; the pruning is re-derived when the
     rebuilt plan is re-optimized."""

@@ -32,22 +32,20 @@ semantics, only order.
 from __future__ import annotations
 
 import os
+import weakref
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from skinnerdb_spark.plans.joinorder import (
-    _TIMEOUT_PENALTY,
-    UCB1,
     AdaptiveJoinResult,
-    EpisodeStats,
     JoinEdge,
-    PrefixProgress,
     budgeted_count as _budgeted_count,
     connected_orders,
     greedy_orders,
     is_connected_order,
+    score_orders,
 )
 
 #: unary operators above the join subtree that replay unchanged over the
@@ -249,19 +247,34 @@ class ExtractionError(ValueError):
     """Query shape not eligible for adaptive reordering (caller falls back)."""
 
 
-#: per-JVM cache of resolved JavaClass handles, keyed by id(gateway jvm
-#: view). Every dotted component of a `spark._jvm.a.b.c.D` chain is its own
-#: py4j reflection ROUND TRIP (~0.3 ms), and extraction resolves the same
-#: four classes on every query — ~40 ms/query of pure class lookup at the
-#: bench's 172-query corpus (r12, measured by cProfile: 220 JVMView
-#: __getattr__ calls per 10 extractions). Keyed on id() of the JVMView:
-#: a new session builds a new gateway, so stale handles can never be
-#: served to a different JVM.
-_JVM_CLASSES: dict[tuple[int, str], Any] = {}
+#: per-application cache of resolved JavaClass handles, keyed by
+#: (applicationId, dotted path). Every dotted component of a
+#: `spark._jvm.a.b.c.D` chain is its own py4j reflection ROUND TRIP
+#: (~0.3 ms), and extraction resolves the same four classes on every query
+#: — ~40 ms/query of pure class lookup at the bench's 172-query corpus
+#: (r12, measured by cProfile: 220 JVMView __getattr__ calls per 10
+#: extractions). A stopped and restarted session is a new application, so
+#: no handle resolved for a dead app is ever served; the first lookup of a
+#: new app drops the old app's handles.
+_JVM_CLASSES: dict[tuple[str, str], Any] = {}
+
+#: applicationId per live SparkContext object: reading it costs two py4j
+#: round trips, more than most handle lookups it keys
+_APP_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _app_id(spark: SparkSession) -> str:
+    sc = spark.sparkContext
+    app = _APP_IDS.get(sc)
+    if app is None:
+        app = _APP_IDS[sc] = sc.applicationId
+        for k in [k for k in _JVM_CLASSES if k[0] != app]:
+            del _JVM_CLASSES[k]
+    return app
 
 
 def _jcls(spark: SparkSession, path: str) -> Any:
-    key = (id(spark._jvm), path)
+    key = (_app_id(spark), path)
     cls = _JVM_CLASSES.get(key)
     if cls is None:
         cls = spark._jvm
@@ -647,16 +660,13 @@ def build_graph_chain(
     graph: QueryGraph,
     order: tuple[str, ...],
     leaves: dict[str, DataFrame] | None = None,
-    progress: "PrefixProgress | None" = None,
 ) -> DataFrame:
     """Left-deep chain in ``order`` with every conjunct attached at its
     earliest bound position; exprId-resolved conditions, so safe under
-    duplicate names. With ``progress`` (exploration episodes only), each
-    partial join — edges AND post-conds for the bound set — is persisted
-    and resumed across episodes (joinorder.PrefixProgress, the reference's
-    ProgressTracker in Spark idiom). Set-keyed sharing is exact here too:
-    both edge attachment and post-cond placement depend only on the bound
-    TABLE SET, never on the order within it."""
+    duplicate names. Both edge attachment and post-cond placement depend
+    only on the bound TABLE SET, never on the order within it — which is
+    what lets joinorder.score_orders share one measurement between orders
+    that bind the same sets in the same sequence."""
     import pyspark.sql.functions as _F
 
     leaves = leaves or graph.leaves
@@ -679,18 +689,6 @@ def build_graph_chain(
         return acc
 
     for t in order[1:]:
-        hit = progress.get(frozenset(bound | {t})) if progress is not None else None
-        if hit is not None:
-            acc = hit
-            bound.add(t)
-            # everything the cached frame already applied is spoken for
-            for i, e in enumerate(graph.edges):
-                if e.left_table in bound and e.right_table in bound:
-                    used.add(i)
-            for i, (need, _) in enumerate(graph.post_conds):
-                if need <= bound:
-                    post_used.add(i)
-            continue
         conds = []
         for i, e in enumerate(graph.edges):
             if i not in used and e.touches(t) and e.other(t) in bound:
@@ -704,9 +702,6 @@ def build_graph_chain(
         acc = acc.join(leaf(t), cond)
         bound.add(t)
         acc = attach_post(acc)
-        if progress is not None:
-            acc = progress.put(
-                frozenset(bound), acc, terminal=len(bound) == len(order))
     # edges between leaves both bound before either side joined (shouldn't
     # happen in left-deep orders, but stay safe) + any leftover post conds
     for i, c in enumerate(graph.edge_cols):
@@ -740,26 +735,27 @@ def adaptive_reorder(
     reuse_shape: bool = True,
     episode_budget_s: float | None = None,
 ) -> AdaptiveJoinResult:
-    """Route any DataFrame through the UCB1 join-order bandit.
+    """Reorder any DataFrame's inner-join chain by sampled C_out.
 
     Extraction failure (ineligible shape) returns the original DataFrame
-    with best_order=() — never an error. Episodes run candidate chains over
-    a sampled fact table (size-capped at ~``sample_rows`` rows estimated
-    from optimizer stats); with ``episode_budget_s`` set, each episode is
-    additionally WALL-CLOCK bounded — overruns are cancelled via job-group
-    interruption and penalized (joinorder.budgeted_count: the Spark idiom
-    of the reference's 500-step episode budget,
+    with best_order=() — never an error. On a cache miss, the first
+    ``episodes`` candidates (greedy seeds first, then the DFS enumeration)
+    are scored by joinorder.score_orders: each runs once over a seeded
+    sample of the fact table (size-capped at ~``sample_rows`` rows) and
+    scores the sum of its join output rows; a candidate that binds the
+    same table sets in the same sequence as an earlier one reuses its
+    score and runs no job. With ``episode_budget_s`` set, each episode is
+    WALL-CLOCK bounded — overruns are cancelled via job-group interruption
+    and rank last (joinorder.budgeted_count: the Spark idiom of the
+    reference's 500-step episode budget,
     src/joining/JoinProcessor.java:109-152 + src/config/JoinConfig.java:22).
-    The winning order executes in full, unbudgeted, and is cached per graph
-    signature.
+    The lowest-C_out order executes in full, unbudgeted, and is cached per
+    graph signature.
     """
-    import math
-    import time
-
     # ops/test escape hatch: SKINNER_ADAPTIVE_DISABLE=1 turns every
     # adaptive wrapper into the identity (Catalyst's own order executes).
     # tools/gate_check.py uses it so plan fingerprints don't vary with the
-    # learned-order cache state or wall-clock episode rewards.
+    # learned-order cache state.
     if os.environ.get("SKINNER_ADAPTIVE_DISABLE") == "1":
         res = AdaptiveJoinResult(df, ())
         res.reason = "disabled via SKINNER_ADAPTIVE_DISABLE"  # type: ignore[attr-defined]
@@ -856,9 +852,9 @@ def adaptive_reorder(
         chain = build_graph_chain(graph, cands[0])
         return AdaptiveJoinResult(finish(graph, chain), cands[0])
 
-    # arm set: incumbent (validated transfer) first, then selectivity-greedy
-    # seeds, then the DFS enumeration — the bandit plays unplayed arms in
-    # list order, so with few episodes the duel is exactly
+    # candidates: incumbent (validated transfer) first, then
+    # selectivity-greedy seeds, then the DFS enumeration — scored in list
+    # order, so with few episodes the duel is exactly
     # "transferred order vs greedy-smallest order"
     graph.ensure_sizes()
     seeds: list[tuple[str, ...]] = []
@@ -880,46 +876,14 @@ def adaptive_reorder(
     sampled = dict(graph.leaves)
     if fraction < 1.0:
         sampled[fact] = graph.leaves[fact].sample(fraction=fraction, seed=seed)
-    bandit = UCB1(len(cands))
-    stats: list[EpisodeStats] = []
-    # ProgressTracker analogue: episodes resume shared partial joins from
-    # persisted blocks (joinorder.PrefixProgress); exploration-only — the
-    # winner below is built WITHOUT progress, a fresh unpersisted plan
-    progress = PrefixProgress()
-    try:
-        for _ in range(episodes):
-            arm = bandit.select()
-            # first play of an arm is timed cold (record-only) so rewards
-            # stay comparable; repeats resume from the persisted blocks
-            progress.record_only = bandit.n[arm] == 0
-            hits_before = progress.hits
-            rows, dt = _budgeted_count(
-                build_graph_chain(graph, cands[arm], leaves=sampled, progress=progress),
-                episode_budget_s,
-            )
-            timed_out = rows is None
-            _COUNTERS["episodes"] += 1
-            reward = -math.log(max(dt, 1e-4) * (_TIMEOUT_PENALTY if timed_out else 1.0))
-            if progress.hits > hits_before:
-                # the episode collapsed onto a persisted TERMINAL frame: its
-                # near-zero dt measures the cache, not the arm's plan, and
-                # feeding it to the bandit would snowball best() onto
-                # whichever arm repeats first (ADVICE r7). A hit implies
-                # every arm already has a cold play (first plays are
-                # record-only misses), and with terminal-only frames no
-                # repeat can add signal — stop exploring.
-                stats.append(
-                    EpisodeStats(cands[arm], dt, -1 if timed_out else rows, reward, timed_out)
-                )
-                break
-            bandit.update(arm, reward)
-            stats.append(
-                EpisodeStats(cands[arm], dt, -1 if timed_out else rows, reward, timed_out)
-            )
-        prefix_hits = progress.hits
-    finally:
-        progress.clear()
-    best = cands[bandit.best()]
+    best, stats = score_orders(
+        cands,
+        lambda o: build_graph_chain(graph, o, leaves=sampled),
+        episodes,
+        episode_budget_s,
+        count=_budgeted_count,
+    )
+    _COUNTERS["episodes"] += sum(not e.memo for e in stats)
     if use_cache:
         _cache_put(graph.signature, best)
         if graph.shape_sig not in _ORDER_CACHE:
@@ -927,4 +891,4 @@ def adaptive_reorder(
         if graph.transfer_sig not in _ORDER_CACHE:
             _cache_put(graph.transfer_sig, best)
     chain = build_graph_chain(graph, best)
-    return AdaptiveJoinResult(finish(graph, chain), best, stats, prefix_hits)
+    return AdaptiveJoinResult(finish(graph, chain), best, stats)

@@ -9,16 +9,18 @@ mid-flight, so we reproduce the *spirit* — no prior cost model, learn from
 execution — at the granularity Spark supports:
 
 1. candidate space: left-deep, connected join orders (same cartesian-avoid
-   rule as the reference);
-2. observation: cheap sampled-execution cardinality measurements per prefix
-   (sample the fact side, count the join output — the analogue of a budgeted
-   episode);
-3. policy: UCB1 bandit over candidate orders, rewards = negative normalized
-   cost of the sampled episode; repeated across episodes like the reference's
-   epsilon-greedy/UCB1 policies (src/config/JoinConfig.java:28-34);
-4. execution: winning order emitted as a plain DataFrame join chain, which
-   Catalyst/AQE then executes (broadcast/shuffle selection stays adaptive at
-   stage granularity).
+   rule as the reference), selectivity-greedy seeds first;
+2. observation: one budgeted execution of a candidate's chain on a seeded
+   sample of the fact side, read back as the output rows of every join
+   (``numOutputRows`` SQL metrics of the executed plan);
+3. score: sampled C_out, the sum of those join cardinalities — the reward
+   is a property of the data, not of wall time, so it is exact and repeats
+   across processes, and each candidate is scored once. Candidates that
+   bind the same table sets in the same sequence have the same C_out
+   (inner joins commute) and share one measurement;
+4. execution: the lowest-C_out order (ties: candidate order) is emitted as
+   a plain DataFrame join chain, which Catalyst/AQE then executes
+   (broadcast/shuffle selection stays adaptive at stage granularity).
 
 Default engine path remains pure Catalyst; this module is opt-in and must
 always produce identical results, only (maybe) faster plans.
@@ -26,12 +28,13 @@ always produce identical results, only (maybe) faster plans.
 
 from __future__ import annotations
 
-import math
 import time
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from skinnerdb_spark.plans.metrics import join_rows
 
 
 @dataclass(frozen=True)
@@ -105,7 +108,7 @@ def greedy_orders(
     order and its ``max_orders`` cap can exhaust on permutations that all
     open with the same (large) tables — for an 8-way join graph, dim-first
     orders may not appear AT ALL among the first 12. Seeding the candidate
-    list with greedy orders guarantees the bandit always has a
+    list with greedy orders guarantees the scorer always has a
     small-leading, filter-early arm to play against whatever the DFS
     produced; learning at a 36M-row warehouse then starts from sane
     incumbents instead of noise (found via the cardinality-matched JOB
@@ -133,120 +136,19 @@ def greedy_orders(
     return out
 
 
-class UCB1:
-    """UCB1 bandit over a fixed arm set (reference: UctNode UCB1 policy,
-    src/joining/uct/UctNode.java:239-262)."""
-
-    def __init__(self, n_arms: int, exploration: float = math.sqrt(2.0)):
-        self.n = [0] * n_arms
-        self.mean = [0.0] * n_arms
-        self.c = exploration
-        self.t = 0
-
-    def select(self) -> int:
-        self.t += 1
-        for i, cnt in enumerate(self.n):
-            if cnt == 0:  # play every arm once first
-                return i
-        return max(
-            range(len(self.n)),
-            key=lambda i: self.mean[i] + self.c * math.sqrt(math.log(self.t) / self.n[i]),
-        )
-
-    def update(self, arm: int, reward: float) -> None:
-        self.n[arm] += 1
-        self.mean[arm] += (reward - self.mean[arm]) / self.n[arm]
-
-    def best(self) -> int:
-        return max(range(len(self.n)), key=lambda i: (self.n[i], self.mean[i]))
-
-
-class PrefixProgress:
-    """The reference's ProgressTracker, Spark-first (SURVEY §2.3's last
-    unported row — src/joining/progress/ProgressTracker.java:64-148,
-    State.java:87-108): SkinnerDB stores per-join-order-prefix progress so
-    a later episode whose order shares a prefix with an earlier one never
-    redoes the shared work. Spark cannot resume a join mid-tuple, but the
-    unit of progress it CAN share is a materialized join result, keyed by
-    the SET of bound tables (inner joins commute, so a set key shares
-    strictly more than the reference's order-prefix key). MEASURED design
-    point (PERFORMANCE.md r7): persisting every mid-chain prefix is a NET
-    LOSS — each persist() inserts an InMemoryRelation boundary that forces
-    full materialization of every intermediate, defeating Spark's
-    pipelined join execution (79 s vs 34 s over 10 episodes of a 15-way
-    chain). Only the TERMINAL frame of each episode is persisted: a repeat
-    episode's chain collapses onto the cached full-set frame at its last
-    extension and costs ~nothing, while first plays keep their fully
-    pipelined single-pass plans. Exploration-only, like the reference: the
-    winning order's full execution is always a fresh unpersisted plan."""
-
-    def __init__(self) -> None:
-        self._frames: dict[frozenset[str], DataFrame] = {}
-        self.hits = 0
-        #: while True, get() misses on purpose (puts still record): the
-        #: FIRST play of each bandit arm is timed cold so wall-clock
-        #: rewards stay comparable across arms — resuming another arm's
-        #: blocks would make later-played arms look artificially fast.
-        #: Repeat plays flip this off and resume (the ProgressTracker win).
-        self.record_only = False
-
-    def get(self, bound: frozenset[str]) -> DataFrame | None:
-        if self.record_only:
-            return None
-        df = self._frames.get(bound)
-        if df is not None:
-            self.hits += 1
-        return df
-
-    def put(self, bound: frozenset[str], df: DataFrame,
-            terminal: bool = True) -> DataFrame:
-        if not terminal:
-            # mid-chain persistence measured as a net loss (see class doc)
-            return df
-        if bound in self._frames:
-            # only reachable in record_only mode (a lookup would have hit
-            # first otherwise): another arm already recorded this set —
-            # keep its blocks, don't persist a duplicate (which would also
-            # leak the old frame on overwrite)
-            return df
-        from pyspark import StorageLevel
-
-        cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._frames[bound] = cached
-        return cached
-
-    def clear(self) -> None:
-        """Unpersist everything (episodes are over; the winner runs fresh)."""
-        for df in self._frames.values():
-            df.unpersist()
-        self._frames.clear()
-
-
 def build_join_chain(
     dfs: dict[str, DataFrame],
     order: tuple[str, ...],
     edges: list[JoinEdge],
-    progress: PrefixProgress | None = None,
 ) -> DataFrame:
     """Materialize a left-deep join order as a DataFrame chain; every edge
     whose both sides are bound attaches at the earliest position (the
     reference's predicate placement, LeftDeepPlan.java:54-124 — Catalyst would
-    do the same, we just keep the order pinned). With ``progress`` set
-    (exploration episodes only), each partial join is persisted and reused
-    across episodes — see :class:`PrefixProgress`."""
+    do the same, we just keep the order pinned)."""
     acc = dfs[order[0]]
     bound = {order[0]}
     used: set[int] = set()
     for t in order[1:]:
-        hit = progress.get(frozenset(bound | {t})) if progress is not None else None
-        if hit is not None:
-            acc = hit
-            bound.add(t)
-            # edges inside the cached prefix are already applied there
-            for i, e in enumerate(edges):
-                if e.left_table in bound and e.right_table in bound:
-                    used.add(i)
-            continue
         conds = []
         for i, e in enumerate(edges):
             if i in used or not e.touches(t):
@@ -263,45 +165,72 @@ def build_join_chain(
             cond = cond & c
         acc = acc.join(dfs[t], cond)
         bound.add(t)
-        if progress is not None:
-            acc = progress.put(
-                frozenset(bound), acc, terminal=len(bound) == len(order))
     return acc
 
 
 @dataclass
 class EpisodeStats:
     order: tuple[str, ...]
-    seconds: float
+    seconds: float  # 0.0 when scored from the memo
     rows: int  # -1 when the episode hit its budget and was cancelled
-    reward: float
+    #: output rows of each join of the sampled chain, bottom-up
+    joins: tuple[int, ...] = ()
     timed_out: bool = False
+    #: scored from an earlier candidate that binds the same table sets in
+    #: the same sequence (no job ran)
+    memo: bool = False
+
+    @property
+    def cout(self) -> int:
+        """Sampled C_out: the sum of the chain's join output rows."""
+        return sum(self.joins)
 
 
-#: reward multiplier on elapsed time for a cancelled episode: a budget hit
-#: must score clearly worse than any order that finished AT the budget.
-_TIMEOUT_PENALTY = 4.0
+#: AQE rule that replaces a join over an empty materialized stage with an
+#: empty relation. On a sample that erases exactly the joins whose output
+#: rows an episode exists to read (a 12-way chain collapsed to a bare
+#: EmptyRelation), so it is excluded while an episode runs.
+_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_EMPTY_PROPAGATION = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 
 
-def budgeted_count(df: DataFrame, budget_s: float | None = None) -> tuple[int | None, float]:
-    """``df.count()`` under a WALL-CLOCK budget — the Spark-idiom analogue
-    of the reference's per-episode step budget (OldJoin.executeWithBudget
-    runs <= 500 tuple steps per episode, src/joining/JoinProcessor.java:109-152
-    + src/config/JoinConfig.java:22): Spark joins cannot pause mid-stage, so
-    the budget is enforced by running the episode's jobs in their own
-    thread under a unique job group and CANCELLING the group on timeout.
+def budgeted_count(
+    df: DataFrame, budget_s: float | None = None
+) -> tuple[int | None, float, tuple[int, ...]]:
+    """Count ``df`` under a WALL-CLOCK budget and read back the output rows
+    of each of its joins — one sampled episode. The budget is the
+    Spark-idiom analogue of the reference's per-episode step budget
+    (OldJoin.executeWithBudget runs <= 500 tuple steps per episode,
+    src/joining/JoinProcessor.java:109-152 + src/config/JoinConfig.java:22):
+    Spark joins cannot pause mid-stage, so the episode's jobs run in their
+    own thread under a unique job group that is CANCELLED on timeout.
 
-    Returns (rows, elapsed); rows is None when cancelled. ``budget_s=None``
-    counts unbudgeted. The final (winning) execution is never budgeted —
-    only exploration episodes are, exactly like the reference."""
+    Returns (rows, elapsed, join_rows); rows is None and join_rows empty
+    when cancelled. ``budget_s=None`` counts unbudgeted. The final (winning)
+    execution is never budgeted — only exploration episodes are, exactly
+    like the reference."""
+    counted = df.groupBy().count()
+    conf = df.sparkSession.conf
+    prev = conf.get(_EXCLUDED_RULES, None)
+    conf.set(_EXCLUDED_RULES, ",".join(filter(None, [prev, _EMPTY_PROPAGATION])))
+    try:
+        rows, dt = _count_within(counted, budget_s)
+    finally:
+        if prev is None:
+            conf.unset(_EXCLUDED_RULES)
+        else:
+            conf.set(_EXCLUDED_RULES, prev)
+    return rows, dt, (() if rows is None else join_rows(counted))
+
+
+def _count_within(counted: DataFrame, budget_s: float | None) -> tuple[int | None, float]:
+    t0 = time.monotonic()
     if budget_s is None:
-        t0 = time.monotonic()
-        n = df.count()
-        return n, time.monotonic() - t0
+        return counted.collect()[0][0], time.monotonic() - t0
     import threading
     import uuid
 
-    sc = df.sparkSession.sparkContext
+    sc = counted.sparkSession.sparkContext
     group = f"skinner-episode-{uuid.uuid4().hex[:8]}"
     out: dict = {}
 
@@ -310,7 +239,7 @@ def budgeted_count(df: DataFrame, budget_s: float | None = None) -> tuple[int | 
         # thread to its own JVM thread), so only THIS episode is cancelled
         sc.setJobGroup(group, "skinnerdb budgeted episode", interruptOnCancel=True)
         try:
-            out["n"] = df.count()
+            out["n"] = counted.collect()[0][0]
         except Exception as e:  # cancellation surfaces as a SparkException
             out["err"] = e
 
@@ -322,7 +251,6 @@ def budgeted_count(df: DataFrame, budget_s: float | None = None) -> tuple[int | 
     from pyspark import InheritableThread
 
     th = InheritableThread(target=run, daemon=True)
-    t0 = time.monotonic()
     th.start()
     th.join(budget_s)
     if th.is_alive():
@@ -339,9 +267,41 @@ def budgeted_count(df: DataFrame, budget_s: float | None = None) -> tuple[int | 
                 "its jobs may overlap subsequent episodes", group
             )
         return None, time.monotonic() - t0
-    if "err" in out:
-        return None, time.monotonic() - t0
-    return out["n"], time.monotonic() - t0
+    return out.get("n"), time.monotonic() - t0
+
+
+def score_orders(
+    cands: list[tuple[str, ...]],
+    build: Callable[[tuple[str, ...]], DataFrame],
+    episodes: int,
+    budget_s: float | None = None,
+    count: Callable | None = None,
+) -> tuple[tuple[str, ...], list[EpisodeStats]]:
+    """Score the first ``episodes`` candidates by sampled C_out; return the
+    winner and one EpisodeStats per scored candidate, in candidate order.
+
+    ``build(order)`` makes the order's chain over the sampled inputs and
+    ``count`` runs it (default :func:`budgeted_count`). Both the join
+    cardinalities and the placement of every predicate depend only on the
+    bound-table SET at each step, so a candidate whose sequence of bound
+    sets was already measured — e.g. a swap of the first two tables — is
+    scored from the memo and runs no job. The winner has the lowest C_out;
+    timed-out candidates rank last and ties go to the earlier candidate.
+    With nothing scored the first candidate wins."""
+    count = count or budgeted_count
+    memo: dict[tuple[frozenset[str], ...], EpisodeStats] = {}
+    stats: list[EpisodeStats] = []
+    for order in cands[:episodes]:
+        key = tuple(frozenset(order[:i]) for i in range(2, len(order) + 1))
+        if key in memo:
+            stats.append(replace(memo[key], order=order, seconds=0.0, memo=True))
+            continue
+        rows, dt, joins = count(build(order), budget_s)
+        memo[key] = EpisodeStats(order, dt, -1 if rows is None else rows, joins, rows is None)
+        stats.append(memo[key])
+    if not stats:
+        return cands[0], stats
+    return min(stats, key=lambda e: (e.timed_out, e.cout)).order, stats
 
 
 @dataclass
@@ -349,9 +309,6 @@ class AdaptiveJoinResult:
     df: DataFrame
     best_order: tuple[str, ...]
     episodes: list[EpisodeStats] = field(default_factory=list)
-    #: partial-join results resumed from a prior episode's persisted blocks
-    #: (the ProgressTracker analogue, see PrefixProgress)
-    prefix_hits: int = 0
 
 
 def adaptive_join(
@@ -363,23 +320,17 @@ def adaptive_join(
     max_orders: int = 16,
     seed: int = 42,
     episode_budget_s: float | None = None,
-    share_progress: bool = True,
 ) -> AdaptiveJoinResult:
-    """Bandit-chosen join order, learned from sampled execution.
+    """Join order chosen by sampled C_out (see :func:`score_orders`).
 
-    Each episode samples the designated fact table (largest input if not
-    given), runs one candidate order's join chain on the sample, and rewards
-    the bandit with -log(elapsed) normalized — the analogue of the reference's
-    per-episode progress reward (OldJoin.java:92-106). With
-    ``episode_budget_s`` set, an episode exceeding the wall-clock budget is
-    CANCELLED and penalized (see :func:`budgeted_count` — the reference's
-    500-step episode budget in Spark idiom); the winner always executes in
-    full, unbudgeted. With ``share_progress`` (default), partial-join
-    results are persisted per bound-table set and REUSED across episodes —
-    the ProgressTracker analogue (:class:`PrefixProgress`): repeated or
-    prefix-sharing orders resume instead of redoing work, exploration-only.
-    Results are identical for every order (inner joins commute); only the
-    physical plan differs.
+    The designated fact table (first input if not given) is sampled with a
+    fixed seed and the first ``episodes`` connected orders are scored on
+    it. With ``episode_budget_s`` set, an episode exceeding the wall-clock
+    budget is CANCELLED and ranks last (see :func:`budgeted_count` — the
+    reference's 500-step episode budget in Spark idiom); the winner always
+    executes in full, unbudgeted, on the unsampled inputs. Results are
+    identical for every order (inner joins commute); only the physical plan
+    differs.
     """
     tables = list(dfs)
     fact = fact or tables[0]
@@ -394,28 +345,7 @@ def adaptive_join(
 
     sampled = dict(dfs)
     sampled[fact] = dfs[fact].sample(fraction=sample_fraction, seed=seed)
-    bandit = UCB1(len(cands))
-    stats: list[EpisodeStats] = []
-    progress = PrefixProgress() if share_progress else None
-    try:
-        for _ in range(episodes):
-            arm = bandit.select()
-            if progress is not None:
-                progress.record_only = bandit.n[arm] == 0
-            rows, dt = budgeted_count(
-                build_join_chain(sampled, cands[arm], edges, progress),
-                episode_budget_s,
-            )
-            timed_out = rows is None
-            reward = -math.log(max(dt, 1e-4) * (_TIMEOUT_PENALTY if timed_out else 1.0))
-            bandit.update(arm, reward)
-            stats.append(
-                EpisodeStats(cands[arm], dt, -1 if timed_out else rows, reward, timed_out)
-            )
-    finally:
-        hits = progress.hits if progress is not None else 0
-        if progress is not None:
-            progress.clear()
-    best = cands[bandit.best()]
-    # the winner executes in full on a FRESH plan — never from episode blocks
-    return AdaptiveJoinResult(build_join_chain(dfs, best, edges), best, stats, hits)
+    best, stats = score_orders(
+        cands, lambda o: build_join_chain(sampled, o, edges), episodes, episode_budget_s
+    )
+    return AdaptiveJoinResult(build_join_chain(dfs, best, edges), best, stats)

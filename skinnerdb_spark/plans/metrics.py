@@ -59,6 +59,18 @@ def _iter_nodes(node: Any):
         yield from _iter_nodes(it.next())
 
 
+def join_rows(df: DataFrame) -> tuple[int, ...]:
+    """Output rows of every join in the executed plan, innermost first
+    (for a left-deep chain: the first join's output, then the next ...).
+    Call after an action has run ``df``'s own plan."""
+    out = []
+    for node in _iter_nodes(df._jdf.queryExecution().executedPlan()):
+        name = node.nodeName()
+        if name.endswith("Join") or name == "CartesianProduct":
+            out.append(int(node.longMetric("numOutputRows").value()))
+    return tuple(reversed(out))
+
+
 def plan_metrics(df: DataFrame) -> dict[str, int]:
     """Sum shuffle/spill/memory SQLMetrics over the executed plan.
 

@@ -1,8 +1,9 @@
 """Adaptive-join-ordered query — the reference's headline feature exercised
 inside the correctness gate.
 
-The bandit (plans/joinorder.py) learns a left-deep order from sampled
-episodes, then the winning order executes as a plain join chain. Inner joins
+plans/joinorder.py scores candidate left-deep orders by sampled C_out (the
+summed join output rows of one execution on a seeded sample of the fact
+table) and the lowest-scoring order executes as a plain join chain. Inner joins
 commute, so the result must be — and is, oracle-verified — identical to
 Catalyst's own choice; only the physical plan differs. bench=False: this entry
 demonstrates the planner, the equivalent static plan is timed as tpch_q05.

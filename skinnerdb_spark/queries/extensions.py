@@ -1176,21 +1176,19 @@ def approx_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("is_pass", F.lit(False)).alias("is_pass"),
         )
     )
+    def total(c) -> Column:
+        # SUM over an empty probe is NULL where the oracle's COUNT(*) is 0
+        return F.coalesce(F.sum(c), F.lit(0)).cast("bigint")
+
     counts = flags.agg(
-        F.sum("cnt").cast("bigint").alias("n_rows_probe"),
-        F.sum(F.when(F.col("is_pass"), F.col("cnt")).otherwise(F.lit(0)))
-        .cast("bigint")
+        total("cnt").alias("n_rows_probe"),
+        total(F.when(F.col("is_pass"), F.col("cnt")).otherwise(F.lit(0)))
         .alias("n_rows_pass"),
-        F.sum(F.when(F.col("is_true"), F.col("cnt")).otherwise(F.lit(0)))
-        .cast("bigint")
+        total(F.when(F.col("is_true"), F.col("cnt")).otherwise(F.lit(0)))
         .alias("n_rows_true"),
         F.count(F.lit(1)).cast("bigint").alias("n_probe"),
-        F.sum(F.when(F.col("is_pass"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_pass"),
-        F.sum(F.when(F.col("is_true"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_true_keys"),
+        total(F.when(F.col("is_pass"), 1).otherwise(0)).alias("n_pass"),
+        total(F.when(F.col("is_true"), 1).otherwise(0)).alias("n_true_keys"),
     )
 
     def c1(df: DataFrame, name: str) -> DataFrame:

@@ -8,7 +8,7 @@ nation/region/orders (dims).
 
 These exercise exactly the plan space the reference's UCT join-ordering
 explores (SURVEY §2.3); in Spark the dimensions broadcast and AQE/CBO pick the
-probe order (plans/joinorder.py offers the bandit-driven alternative).
+probe order (plans/joinorder.py offers the sampled-C_out alternative).
 """
 
 from __future__ import annotations

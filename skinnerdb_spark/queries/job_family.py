@@ -118,7 +118,7 @@ def job_deep15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """15-way snowflake with self-joins: two items of one order, each with a
     full part -> supplier -> nation -> region chain, the customer's
     nation -> region chain, and a repeat-purchase orders alias bound by a
-    date theta. Routed through the adaptive join-order bandit — the widest
+    date theta. Routed through adaptive join ordering — the widest
     graph it learns (15 leaves; extraction handles the dup-alias naming and
     places both theta conjuncts at their earliest bound position)."""
     rt = read_table
@@ -170,7 +170,7 @@ def job_deep15(spark: SparkSession, sf_dir: str) -> DataFrame:
 # repeat-purchase orders alias, stacked LIKE/NOT LIKE and ordering thetas.
 # Byte-synced with queries_sql/t12_deep17_01.sql (which the bench drives
 # through Engine.adaptive_sql); this entry routes the same graph through the
-# bandit at the widest width the extractor handles (17 leaves).
+# adaptive path at the widest width the extractor handles (17 leaves).
 # ---------------------------------------------------------------------------
 _T12_FILE = _os.path.join(
     _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),

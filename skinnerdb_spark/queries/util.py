@@ -11,8 +11,9 @@ from skinnerdb_spark.catalog import read_table  # noqa: F401  (re-export)
 def adaptive(df: DataFrame) -> DataFrame:
     """Route a built query through runtime-adaptive join ordering
     (plans/graph.py): the join graph is extracted from the analyzed plan,
-    a UCB1 bandit picks the order from sampled episodes, and the learned
-    order is cached per graph signature. Ineligible shapes return the input
+    the candidate order with the lowest sampled C_out (summed join output
+    rows on a seeded sample, each candidate executed once) wins, and the
+    learned order is cached per graph signature. Ineligible shapes return the input
     plan unchanged — wrapping is always semantics-preserving."""
     from skinnerdb_spark.plans.graph import adaptive_reorder
 

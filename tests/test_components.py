@@ -14,7 +14,6 @@ from skinnerdb_spark.catalog import read_table
 from skinnerdb_spark.engine import Engine
 from skinnerdb_spark.operators import multimodal
 from skinnerdb_spark.plans.joinorder import (
-    UCB1,
     JoinEdge,
     adaptive_join,
     build_join_chain,
@@ -53,14 +52,6 @@ def test_connected_orders_avoid_cartesian():
             ), f"cartesian step in {o}"
     # customer-first can never be followed by supplier/lineitem only
     assert ("customer", "supplier") not in {o[:2] for o in orders}
-
-
-def test_ucb1_prefers_better_arm():
-    b = UCB1(2)
-    for _ in range(50):
-        arm = b.select()
-        b.update(arm, 1.0 if arm == 1 else 0.0)
-    assert b.best() == 1
 
 
 def test_adaptive_join_matches_catalyst(spark, sf_dir):
@@ -1915,6 +1906,39 @@ def test_stream_bitmap_monitor_matches_batch(spark, sf_dir, tmp_path):
         assert all(r["count"] == 1 for r in mon2)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+def test_bloom_semijoin_empty_probe_matches_oracle(spark, sf_dir, tmp_path):
+    """approx_bloom_semijoin on a warehouse whose probe selection (H2-1995
+    shipments) is empty: its row and key counts must read 0, as the
+    oracle's COUNT(*)s do, not the NULL of a SUM over no rows."""
+    import math
+    import shutil
+
+    import duckdb
+
+    from skinnerdb_spark.catalog import table_path
+    from skinnerdb_spark.registry import all_specs
+
+    wh = str(tmp_path)
+    shutil.copy(table_path(sf_dir, "orders"), table_path(wh, "orders"))
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM read_parquet('{table_path(sf_dir, 'lineitem')}') "
+        "WHERE NOT (l_shipdate >= DATE '1995-07-01' AND l_shipdate < DATE '1996-01-01')) "
+        f"TO '{table_path(wh, 'lineitem')}' (FORMAT PARQUET)"
+    )
+    for t in ("orders", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(wh, t)}')")
+    spec = all_specs()["approx_bloom_semijoin"]
+    got = spec.spark(spark, wh).toPandas().iloc[0].to_dict()
+    exp = con.execute(spec.oracle).df().iloc[0].to_dict()
+    con.close()
+    assert exp["n_probe"] == 0 and exp["n_rows_probe"] == 0  # the probe is empty
+    assert sorted(got) == sorted(exp)
+    for k, v in exp.items():
+        both_null = all(x is None or (isinstance(x, float) and math.isnan(x)) for x in (v, got[k]))
+        assert both_null or got[k] == v, (k, got[k], v)
 
 
 def test_native_runtime_bloom_filter_fires(spark, sf_dir):

@@ -486,7 +486,7 @@ def test_budgeted_episode_cancellation_and_learning(spark, sf_dir):
     """Budgeted episodes (r6 — the reference's 500-step episode budget,
     JoinConfig.java:22, in Spark idiom): an episode exceeding the wall-clock
     budget is cancelled via job-group interruption, recorded as timed_out
-    with a penalized reward, and the session stays fully usable; the final
+    (ranked last), and the session stays fully usable; the final
     execution is never budgeted, so results are exact either way."""
     import time
 
@@ -503,14 +503,15 @@ def test_budgeted_episode_cancellation_and_learning(spark, sf_dir):
         .filter(F.col("h").contains("deadbeefcafe"))
     )
     t0 = time.monotonic()
-    n, dt = budgeted_count(slow, budget_s=0.3)
+    n, dt, joins = budgeted_count(slow, budget_s=0.3)
     assert n is None, "overrunning episode must be cancelled"
+    assert joins == ()
     assert dt >= 0.3
     assert time.monotonic() - t0 < 35, "cancellation must not hang"
     # the session survives the cancellation
     assert spark.range(10).count() == 10
     # unbudgeted path unchanged
-    n2, _ = budgeted_count(spark.range(100), budget_s=None)
+    n2, _, _ = budgeted_count(spark.range(100), budget_s=None)
     assert n2 == 100
 
     # end-to-end: a tiny budget times out every episode, yet the winning
@@ -545,47 +546,12 @@ def test_budgeted_episode_cancellation_and_learning(spark, sf_dir):
     assert res.df.collect() == expect, "final execution must be exact"
 
 
-def test_prefix_progress_resumes_partial_joins(spark):
-    """ProgressTracker analogue (r7 — src/joining/progress/ProgressTracker
-    .java:64-148 in Spark idiom): exploration episodes persist each partial
-    join keyed by its bound-table SET and later episodes resume from the
-    persisted blocks. Set keying shares strictly more than the reference's
-    order-prefix keying: order (f,a,b) seeds order (f,b,a) at the full set."""
-    from skinnerdb_spark.plans.joinorder import (
-        JoinEdge,
-        PrefixProgress,
-        build_join_chain,
-    )
-
-    f = spark.createDataFrame(
-        [(i, i % 5, i % 7) for i in range(60)], "fid bigint, ja bigint, jb bigint")
-    da = spark.createDataFrame([(i, i * 10) for i in range(5)], "ja2 bigint, av bigint")
-    db = spark.createDataFrame([(i, i * 100) for i in range(7)], "jb2 bigint, bv bigint")
-    dfs = {"f": f, "a": da, "b": db}
-    edges = [JoinEdge("f", "ja", "a", "ja2"), JoinEdge("f", "jb", "b", "jb2")]
-
-    want = sorted(map(tuple, build_join_chain(dfs, ("f", "a", "b"), edges).collect()))
-
-    sc = spark.sparkContext
-    persisted_before = sc._jsc.getPersistentRDDs().size()
-    prog = PrefixProgress()
-    c1 = build_join_chain(dfs, ("f", "a", "b"), edges, prog)
-    assert sorted(map(tuple, c1.collect())) == want
-    assert prog.hits == 0  # first episode: nothing to resume
-    # different order, same final set: the 3-table frame is resumed
-    c2 = build_join_chain(dfs, ("f", "b", "a"), edges, prog)
-    assert prog.hits == 1
-    assert sorted(map(tuple, c2.collect())) == [tuple(r) for r in want]
-    # identical order: resumes at the terminal set (mid-chain prefixes are
-    # deliberately not persisted — measured net loss, see PrefixProgress)
-    build_join_chain(dfs, ("f", "a", "b"), edges, prog)
-    assert prog.hits == 2
-    prog.clear()
-    assert sc._jsc.getPersistentRDDs().size() == persisted_before
-
-
-def test_adaptive_join_shares_progress_across_episodes(spark):
-    from skinnerdb_spark.plans.joinorder import JoinEdge, adaptive_join
+def test_adaptive_join_shares_measurements_across_orders(spark):
+    """adaptive_join scores orders by sampled C_out: (f,a,b) and (a,f,b)
+    bind the same table sets in the same sequence, so the second is scored
+    from the first's measurement; the result matches the fixed-order chain
+    and the winner's plan holds no cached episode frame."""
+    from skinnerdb_spark.plans.joinorder import JoinEdge, adaptive_join, build_join_chain
 
     f = spark.createDataFrame(
         [(i, i % 4, i % 6) for i in range(80)], "fid bigint, ja bigint, jb bigint")
@@ -594,72 +560,160 @@ def test_adaptive_join_shares_progress_across_episodes(spark):
     dfs = {"f": f, "a": da, "b": db}
     edges = [JoinEdge("f", "ja", "a", "ja2"), JoinEdge("f", "jb", "b", "jb2")]
 
-    shared = adaptive_join(dfs, edges, fact="f", episodes=6, sample_fraction=1.0)
-    assert shared.prefix_hits > 0, "repeated/overlapping orders must resume"
-    unshared = adaptive_join(
-        dfs, edges, fact="f", episodes=6, sample_fraction=1.0, share_progress=False)
-    assert unshared.prefix_hits == 0
-    # winners may differ (wall-clock rewards), so column order may differ;
-    # compare as sorted name->value rows
+    res = adaptive_join(dfs, edges, fact="f", episodes=6, sample_fraction=1.0)
+    by_order = {e.order: e for e in res.episodes}
+    assert by_order[("a", "f", "b")].memo
+    assert by_order[("a", "f", "b")].joins == by_order[("f", "a", "b")].joins == (80, 80)
+    assert sum(not e.memo for e in res.episodes) == 2  # {a,f} first or {b,f} first
+    assert min(res.episodes, key=lambda e: e.cout).order == res.best_order
+
     def rows(df):
         return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
 
-    assert rows(shared.df) == rows(unshared.df)
-    # episode blocks are unpersisted; the winner plan is fresh (no InMemory)
-    assert "InMemoryTableScan" not in shared.df._jdf.queryExecution().executedPlan().toString()
+    assert rows(res.df) == rows(build_join_chain(dfs, ("f", "a", "b"), edges))
+    assert "InMemoryTableScan" not in res.df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_adaptive_reorder_episodes_share_progress(spark):
-    """The arbitrary-SQL path (plans/graph.py) shares episode progress too.
-    First plays are record-only (cold, comparable rewards), so resumes
-    appear on REPEAT plays: this query has 4 connected orders, so 6
-    episodes guarantee >= 2 repeats, each resuming its own full chain."""
-    import os
-
-    from skinnerdb_spark.plans import graph
-
-    os.environ.setdefault("SKINNER_ORDER_CACHE_PERSIST", "1")
-    sc = spark.sparkContext
-    persisted_before = sc._jsc.getPersistentRDDs().size()
-    df = spark.sql(
-        "SELECT COUNT(*) AS n FROM lineitem, orders, supplier "
-        "WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey"
-    )
-    g = graph.extract_query_graph(df)
-    graph._ORDER_CACHE.pop(g.signature, None)
-    graph._ORDER_CACHE.pop(g.shape_sig, None)
-    graph._ORDER_CACHE.pop(g.transfer_sig, None)
-    res = graph.adaptive_reorder(df, episodes=6, use_cache=False)
-    assert res.episodes, "episodes must have run"
-    assert res.prefix_hits >= 1, "repeat plays must resume persisted prefixes"
-    assert res.df.collect()[0]["n"] == df.collect()[0]["n"]
-    assert sc._jsc.getPersistentRDDs().size() == persisted_before
-
-
-def test_episode_loop_stops_at_first_progress_hit(spark, monkeypatch):
-    """ADVICE r7: an episode served from a persisted TERMINAL frame measures
-    the cache, not the arm — its reward must not feed the bandit, and since
-    a hit implies every arm already has a cold play (first plays are
-    record-only misses) the loop stops: prefix_hits can never exceed 1 and
-    episode count is bounded by arms+1 even when far more episodes are
-    requested."""
+def test_adaptive_reorder_swapped_first_pair_runs_one_episode(spark, monkeypatch):
+    """The two greedy seeds of this query differ only by swapping the first
+    two tables: the same bound sets in the same sequence, hence the same
+    C_out. Scoring both takes exactly one sampled execution."""
     from skinnerdb_spark.plans import graph as G
 
     monkeypatch.setenv("SKINNER_ORDER_CACHE_PERSIST", "0")
     q = ("SELECT COUNT(*) AS c FROM customer, orders, nation "
          "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey "
-         "AND o_totalprice > 777.0")
+         "AND o_totalprice > 555.0")
     g = G.extract_query_graph(spark.sql(q))
     for k in (g.signature, g.shape_sig, g.transfer_sig):
         G._ORDER_CACHE.pop(k, None)
-    res = G.adaptive_reorder(spark.sql(q), episodes=12, use_cache=False)
-    assert res.best_order
-    assert res.prefix_hits <= 1, (
-        "terminal-frame hits beyond the first add no signal — loop must stop"
+    real = G._budgeted_count
+    calls = []
+
+    def counting(df, budget_s=None):
+        calls.append(budget_s)
+        return real(df, budget_s)
+
+    monkeypatch.setattr(G, "_budgeted_count", counting)
+    before = G.adaptive_counters()["episodes"]
+    res = G.adaptive_reorder(spark.sql(q), episodes=2, episode_budget_s=30.0)
+    first, second = res.episodes
+    assert second.order[:2] == first.order[1::-1] and second.order[2:] == first.order[2:]
+    assert calls == [30.0]
+    assert G.adaptive_counters()["episodes"] == before + 1
+    assert not first.memo and second.memo and second.seconds == 0.0
+    assert second.joins == first.joins and len(first.joins) == 2
+    assert res.best_order == first.order  # tie: the earlier candidate wins
+    assert res.df.collect() == spark.sql(q).collect()
+
+
+def test_empty_sample_arm_reports_every_join(spark, monkeypatch):
+    """An arm whose sampled result is empty still reads the output rows of
+    every join. Left alone, AQE's empty-relation propagation would replace
+    the joins above an empty stage with an EmptyRelation and leave no join
+    metric to read; the rule is excluded only while the episode runs."""
+    from skinnerdb_spark.plans import graph as G
+
+    monkeypatch.setenv("SKINNER_ORDER_CACHE_PERSIST", "0")
+    q = ("SELECT COUNT(*) AS c FROM customer, orders, nation, region "
+         "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey "
+         "AND n_regionkey = r_regionkey AND r_name = 'NOWHERE'")
+    conf_key = "spark.sql.adaptive.optimizer.excludedRules"
+    before = spark.conf.get(conf_key, None)
+    res = G.adaptive_reorder(spark.sql(q), episodes=3, use_cache=False)
+    assert res.episodes
+    for e in res.episodes:
+        assert not e.timed_out and e.rows == 0
+        assert len(e.joins) == 3, e
+    assert spark.conf.get(conf_key, None) == before
+    assert res.df.collect()[0]["c"] == 0
+
+
+_DETERMINISM_SCRIPT = r"""
+import json, os, sys
+os.environ["SKINNER_ORDER_CACHE_PERSIST"] = "0"
+from skinnerdb_spark.catalog import register_views
+from skinnerdb_spark.plans.graph import adaptive_reorder
+from skinnerdb_spark.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+register_views(spark, sys.argv[1])
+out = {}
+for name in sys.argv[2:]:
+    with open(os.path.join("queries_sql", name + ".sql")) as f:
+        text = f.read().strip().rstrip(";")
+    res = adaptive_reorder(spark.sql(text), episodes=3, sample_rows=2000, use_cache=False)
+    out[name] = [list(res.best_order),
+                 [[list(e.order), list(e.joins), e.timed_out] for e in res.episodes]]
+spark.stop()
+print("RESULT " + json.dumps(out))
+"""
+
+
+@pytest.mark.slow
+def test_learned_orders_repeat_across_processes(sf_dir):
+    """Sampled C_out is a property of the seeded sample, not of timing or
+    play order: three fresh processes learn the same order and the same
+    per-join cardinalities for a 4-, 8- and 12-table corpus shape."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = ["t2_chain_05", "t8_deep8_05", "t10_deep12_08"]
+    runs = []
+    for _ in range(3):
+        proc = subprocess.run(
+            [sys.executable, "-c", _DETERMINISM_SCRIPT, sf_dir, *names],
+            cwd=root, capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        line = next(x for x in proc.stdout.splitlines() if x.startswith("RESULT "))
+        runs.append(json.loads(line[len("RESULT "):]))
+    assert runs[0] == runs[1] == runs[2]
+    for name in names:
+        best, episodes = runs[0][name]
+        assert best and episodes
+        assert all(len(joins) == len(best) - 1 and not timed_out
+                   for _, joins, timed_out in episodes), episodes
+
+
+_RESTART_SCRIPT = r"""
+import sys
+from skinnerdb_spark.catalog import register_views
+from skinnerdb_spark.plans import graph as G
+from skinnerdb_spark.session import get_spark
+
+q = ("SELECT COUNT(*) AS c FROM customer, orders, nation "
+     "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey")
+apps = []
+for _ in range(2):
+    spark = get_spark(master="local[1]", shuffle_partitions=1)
+    register_views(spark, sys.argv[1])
+    app = spark.sparkContext.applicationId
+    g = G.extract_query_graph(spark.sql(q))
+    assert sorted(g.names) == ["customer", "nation", "orders"], g.names
+    assert G._JVM_CLASSES and {k[0] for k in G._JVM_CLASSES} == {app}, G._JVM_CLASSES
+    apps.append(app)
+    spark.stop()
+assert apps[0] != apps[1], apps
+print("OK")
+"""
+
+
+@pytest.mark.slow
+def test_jvm_class_handles_follow_session_restart(sf_dir):
+    """Resolved JVM class handles are keyed by applicationId: after a stop
+    and restart in one process, extraction still works and only handles
+    resolved for the live application are held (or served)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, sf_dir],
+        cwd=root, capture_output=True, text=True, timeout=600,
     )
-    assert len(res.episodes) <= 12
-    # every bandit-scored episode is a cold play of a distinct arm: orders
-    # among the non-hit episodes must be unique
-    if res.prefix_hits:
-        cold = res.episodes[:-1]
-        assert len({e.order for e in cold}) == len(cold)
+    assert proc.returncode == 0 and "OK" in proc.stdout, proc.stderr[-3000:]

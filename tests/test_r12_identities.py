@@ -180,7 +180,7 @@ def test_asof_first_shipment_matches_general_asof_join(spark, sf_dir):
 def test_ned_keyed_build_matches_transform_lambda_reference(spark, sf_dir):
     """r12: the top-level-hash deletion-key build must emit exactly the
     (name, key) SET the old transform()-lambda + array_union shape did."""
-    from skinnerdb_spark.operators.dedup import _memo
+    from skinnerdb_spark.operators.text import deletion_keys
 
     names = (
         read_table(spark, sf_dir, "customer")
@@ -198,15 +198,7 @@ def test_ned_keyed_build_matches_transform_lambda_reference(spark, sf_dir):
             )
         ).alias("k"),
     )
-    keyed = _memo(spark, sf_dir, "ned_keyed", lambda: None)  # must already exist
-    assert keyed is not None or True  # memo presence is not the contract
-    # build via the entry's own path: run the entry once so the memo exists
-    all_specs()["name_edit_distance_pairs"].spark(spark, sf_dir).count()
-    from skinnerdb_spark.operators import dedup as D
-
-    key = (spark.sparkContext.applicationId, sf_dir, "ned_keyed")
-    new_keyed = D._SHARED[key]
-    _assert_frames_equal(new_keyed, reference)
+    _assert_frames_equal(deletion_keys(names), reference)
 
 
 def test_pmi_family_derivation_matches_inline_counts(spark, sf_dir):

@@ -108,7 +108,7 @@ def main() -> int:
 
     # deterministic fingerprints: adaptive wrappers must not consult the
     # learned-order cache (its contents vary with session history) or run
-    # wall-clock-rewarded episodes at build time
+    # sampled episodes at build time
     os.environ["SKINNER_ADAPTIVE_DISABLE"] = "1"
     os.environ["SKINNER_ORDER_CACHE_PERSIST"] = "0"
     from skinnerdb_spark.session import get_spark

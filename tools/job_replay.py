@@ -9,7 +9,7 @@ cross-check against an oracle DBMS) re-created for this engine:
 - warehouse: tools/datagen_imdb.py (deterministic, literal-seeded — built on
   demand if absent);
 - engine side: each query text runs VERBATIM through Engine.adaptive_sql
-  (the UCB1 learned-order path — the reference's headline feature applied
+  (the learned-order path — the reference's headline feature applied
   to its own workload);
 - oracle side: the same text on DuckDB over the same parquet files;
 - checks per query (the BenchAndVerify triple, minus the per-predicate
