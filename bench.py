@@ -160,7 +160,8 @@ def adaptive_duel_receipt(spark, sf_dir: str, k: int = 3) -> list[dict]:
                       run of its winner.
     Per query it also records ``cout`` (the fresh winner's sampled C_out),
     ``episodes`` (sampled executions the re-score ran; candidates that bind
-    the same table sets in the same sequence share one) and ``same_order``.
+    the same table sets in the same sequence share one, and when all do,
+    none runs: ``episodes`` 0 and ``cout`` null) and ``same_order``.
     C_out is exact on a seeded sample, so a re-score of an order learned on
     this warehouse reproduces it; ``same_order: false`` flags a cached order
     that came from elsewhere (a transferred order, or one learned under an
@@ -214,7 +215,7 @@ def adaptive_duel_receipt(spark, sf_dir: str, k: int = 3) -> list[dict]:
             "cached": t_cached,
             "duel": t_duel,
             "cout": next((e.cout for e in duel.episodes if e.order == duel.best_order), None),
-            "episodes": sum(not e.memo for e in duel.episodes),
+            "episodes": sum(e.measured for e in duel.episodes),
             "same_order": duel.best_order == cached.best_order,
         })
     return receipts

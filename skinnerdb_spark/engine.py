@@ -307,8 +307,12 @@ class Engine:
         output rows of one budgeted execution on a seeded sample
         (plans/graph.py) — and everything else falls back to Catalyst's own
         plan unchanged. Results are always identical — inner joins commute —
-        only the join order differs. The chosen order and each candidate's
-        C_out land on ``self.last_adaptive``.
+        only the join order differs. When every scored candidate binds the
+        same table sets in the same sequence, the first wins and no sample
+        runs (its stats are marked ``predetermined``). The learned chain
+        streams its largest input (plans/graph.py ``_streamed_leaf``). The
+        chosen order and each candidate's C_out land on
+        ``self.last_adaptive``.
         """
         from skinnerdb_spark.plans.graph import adaptive_reorder
 
@@ -422,7 +426,10 @@ class Engine:
         if not res.best_order:
             return f"not adaptive: {getattr(res, 'reason', 'ineligible')}"
         lines = [f"chosen order: {' > '.join(res.best_order)}"]
-        if res.episodes:
+        if _predetermined(res.episodes):
+            lines.append(f"({_unmeasured_note(res.episodes)})")
+            lines.extend(f"  {' > '.join(ep.order)}" for ep in res.episodes)
+        elif res.episodes:
             # prefix-tree rendering of the explored order space — the text
             # analogue of the reference's UCT tree plot (TreePlotter.java):
             # each node is a join-order prefix with the number of scored
@@ -445,7 +452,7 @@ class Engine:
                     f"{ep.rows:>8} rows  C_out {cout}  joins {list(ep.joins)}"
                 )
         else:
-            lines.append("(single connected order — no episodes needed)")
+            lines.append(f"({_unmeasured_note(res.episodes)})")
         return "\n".join(lines)
 
     def explain_adaptive_dot(self, text: str, **kw) -> str:
@@ -542,6 +549,21 @@ class Engine:
         return results
 
 
+def _predetermined(episodes: list) -> bool:
+    """The decision needed no sampled execution (joinorder.score_orders
+    marks every candidate alike)."""
+    return bool(episodes) and episodes[0].predetermined
+
+
+def _unmeasured_note(episodes: list) -> str:
+    """Why no order was measured: one connected order, or candidates that
+    all bind the same table sets in the same sequence."""
+    if not episodes:
+        return "single connected order — no episodes needed"
+    n = len(episodes)
+    return f"{n} candidate{'s' if n > 1 else ''}, one bound-set sequence: no sampled execution"
+
+
 def _order_tree(episodes: list) -> dict[tuple, list]:
     """Join-order prefix -> [orders scored through it, lowest C_out], the
     C_out reading "timeout" when every such order hit its budget."""
@@ -571,7 +593,7 @@ def _render_uct_dot(
         out.append(f'  fallback [label="not adaptive: {fallback_reason}"];')
         out.append("}")
         return "\n".join(out)
-    tree = _order_tree(episodes)
+    tree = {} if _predetermined(episodes) else _order_tree(episodes)
     ids = {p: f"n{i}" for i, p in enumerate(sorted(tree, key=lambda p: [str(x) for x in p]))}
     for prefix, (n, cout) in tree.items():
         on_best = prefix == best[: len(prefix)]
@@ -586,7 +608,7 @@ def _render_uct_dot(
             out.append(f"  {ids[parent]} -> {ids[prefix]}{estyle};")
     if not tree:
         out.append(
-            f'  only [label="{" > ".join(best)}\\n(single connected order)"];'
+            f'  only [label="{" > ".join(best)}\\n({_unmeasured_note(episodes)})"];'
         )
     out.append("}")
     return "\n".join(out)

@@ -419,13 +419,16 @@ class QueryGraph:
     row_counts: dict[str, int] = field(default_factory=dict)
 
     def ensure_sizes(self) -> None:
-        """Optimizer-stat size estimates per leaf (no jobs run). Deferred:
-        a cached-order hit never pays the per-leaf optimizer passes."""
+        """Catalyst's size estimate of each leaf's analyzed plan (no jobs
+        run). Read from the analyzed plan, which every leaf already has,
+        not the optimized one: an optimizer pass costs ~3.5 ms a leaf on a
+        4-core host, and for filtered scans both plans give the same bytes.
+        Deferred until a learned order is scored or built."""
         if self.sizes:
             return
         for name, ldf in self.leaves.items():
             self.sizes[name] = int(
-                ldf._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+                ldf._jdf.queryExecution().analyzed().stats().sizeInBytes()
             )
 
     def est_rows(self, name: str) -> int:
@@ -619,7 +622,7 @@ def extract_query_graph(df: DataFrame) -> QueryGraph:
         )
 
     # -- leaf DataFrames with local filters pushed in (size estimates are
-    #    computed lazily — only a cache MISS needs them, see ensure_sizes)
+    #    computed lazily, see ensure_sizes)
     leaves: dict[str, DataFrame] = {}
     for name, lp in zip(names, leaf_plans):
         ldf = _of_rows(spark, lp)
@@ -666,9 +669,14 @@ def build_graph_chain(
     duplicate names. Both edge attachment and post-cond placement depend
     only on the bound TABLE SET, never on the order within it — which is
     what lets joinorder.score_orders share one measurement between orders
-    that bind the same sets in the same sequence."""
+    that bind the same sets in the same sequence.
+
+    The final chain (``leaves`` not given) streams its largest input: see
+    :func:`_streamed_leaf`. Chains over sampled ``leaves`` carry no such
+    hint."""
     import pyspark.sql.functions as _F
 
+    stream = _streamed_leaf(graph, order) if leaves is None else None
     leaves = leaves or graph.leaves
 
     def leaf(t: str) -> DataFrame:
@@ -699,6 +707,8 @@ def build_graph_chain(
         cond = conds[0]
         for c in conds[1:]:
             cond = cond & c
+        if t == stream:
+            acc = acc.hint("broadcast")
         acc = acc.join(leaf(t), cond)
         bound.add(t)
         acc = attach_post(acc)
@@ -709,6 +719,29 @@ def build_graph_chain(
             acc = acc.filter(c)
     acc = attach_post(acc)
     return acc
+
+
+def _streamed_leaf(graph: QueryGraph, order: tuple[str, ...]) -> str | None:
+    """The leaf a learned order should stream rather than broadcast, or None.
+
+    Catalyst estimates a join's size as the product of its inputs, so after
+    a few dimension joins the accumulated side of a dimension-first chain
+    looks larger than the fact table, and the fact table is the one that
+    gets broadcast (a hash relation over every lineitem row). When the
+    largest leaf joins after leaves that are all smaller and together fit
+    under ``spark.sql.autoBroadcastJoinThreshold`` (-1 disables this), the
+    accumulated side is hinted for broadcast instead. A user
+    ``F.broadcast`` on the largest leaf wins. Only Catalyst's size
+    estimates are read (:meth:`QueryGraph.ensure_sizes`); no job runs."""
+    limit = graph.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    fact = graph.fact
+    i = order.index(fact)
+    if limit < 0 or i == 0 or fact in graph.hinted:
+        return None
+    bound = [graph.sizes[t] for t in order[:i]]
+    if max(bound) >= graph.sizes[fact] or sum(bound) > limit:
+        return None
+    return fact
 
 
 def finish(graph: QueryGraph, chain: DataFrame) -> DataFrame:
@@ -744,12 +777,16 @@ def adaptive_reorder(
     sample of the fact table (size-capped at ~``sample_rows`` rows) and
     scores the sum of its join output rows; a candidate that binds the
     same table sets in the same sequence as an earlier one reuses its
-    score and runs no job. With ``episode_budget_s`` set, each episode is
+    score and runs no job, and when all scored candidates share one
+    sequence the first wins without any sampled run (every EpisodeStats is
+    then ``predetermined``; ``_COUNTERS["episodes"]`` counts measured
+    candidates only). With ``episode_budget_s`` set, each episode is
     WALL-CLOCK bounded — overruns are cancelled via job-group interruption
     and rank last (joinorder.budgeted_count: the Spark idiom of the
     reference's 500-step episode budget,
     src/joining/JoinProcessor.java:109-152 + src/config/JoinConfig.java:22).
-    The lowest-C_out order executes in full, unbudgeted, and is cached per
+    The lowest-C_out order executes in full, unbudgeted, as a chain that
+    streams its largest input (:func:`_streamed_leaf`), and is cached per
     graph signature.
     """
     # ops/test escape hatch: SKINNER_ADAPTIVE_DISABLE=1 turns every
@@ -773,9 +810,8 @@ def adaptive_reorder(
         res.reason = "no connected left-deep order"  # type: ignore[attr-defined]
         return res
 
-    # cache lookup happens BEFORE any size estimation: a hit (the common
-    # case for benchmark directories and dashboards) pays no optimizer
-    # passes, just the chain rebuild
+    # cache lookup happens BEFORE any sampling: a hit (the common case for
+    # benchmark directories and dashboards) pays just the chain rebuild
     cached = None
     transferred = None
     if use_cache:
@@ -883,7 +919,7 @@ def adaptive_reorder(
         episode_budget_s,
         count=_budgeted_count,
     )
-    _COUNTERS["episodes"] += sum(not e.memo for e in stats)
+    _COUNTERS["episodes"] += sum(e.measured for e in stats)
     if use_cache:
         _cache_put(graph.signature, best)
         if graph.shape_sig not in _ORDER_CACHE:

@@ -17,7 +17,8 @@ execution — at the granularity Spark supports:
    is a property of the data, not of wall time, so it is exact and repeats
    across processes, and each candidate is scored once. Candidates that
    bind the same table sets in the same sequence have the same C_out
-   (inner joins commute) and share one measurement;
+   (inner joins commute) and share one measurement; when every candidate
+   has the same sequence, the first wins and nothing is measured;
 4. execution: the lowest-C_out order (ties: candidate order) is emitted as
    a plain DataFrame join chain, which Catalyst/AQE then executes
    (broadcast/shuffle selection stays adaptive at stage granularity).
@@ -171,19 +172,28 @@ def build_join_chain(
 @dataclass
 class EpisodeStats:
     order: tuple[str, ...]
-    seconds: float  # 0.0 when scored from the memo
-    rows: int  # -1 when the episode hit its budget and was cancelled
+    seconds: float  # 0.0 when no job ran for this candidate
+    rows: int  # -1 when no count finished (cancelled, or predetermined)
     #: output rows of each join of the sampled chain, bottom-up
     joins: tuple[int, ...] = ()
     timed_out: bool = False
     #: scored from an earlier candidate that binds the same table sets in
     #: the same sequence (no job ran)
     memo: bool = False
+    #: not measured: every scored candidate binds the same table sets in the
+    #: same sequence, so the first one wins whatever a sample would say
+    predetermined: bool = False
 
     @property
-    def cout(self) -> int:
-        """Sampled C_out: the sum of the chain's join output rows."""
-        return sum(self.joins)
+    def measured(self) -> bool:
+        """A sampled execution ran for this candidate."""
+        return not (self.memo or self.predetermined)
+
+    @property
+    def cout(self) -> int | None:
+        """Sampled C_out: the sum of the chain's join output rows (None
+        when not measured)."""
+        return None if self.predetermined else sum(self.joins)
 
 
 #: AQE rule that replaces a join over an empty materialized stage with an
@@ -192,6 +202,10 @@ class EpisodeStats:
 #: EmptyRelation), so it is excluded while an episode runs.
 _EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
 _EMPTY_PROPAGATION = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+#: whole-stage codegen, pinned on while an episode runs: the interpreted hash
+#: join returns before reading its stream side once its build side is empty,
+#: so every join below it reports 0 output rows
+_WHOLE_STAGE = "spark.sql.codegen.wholeStage"
 
 
 def budgeted_count(
@@ -208,18 +222,28 @@ def budgeted_count(
     Returns (rows, elapsed, join_rows); rows is None and join_rows empty
     when cancelled. ``budget_s=None`` counts unbudgeted. The final (winning)
     execution is never budgeted — only exploration episodes are, exactly
-    like the reference."""
+    like the reference.
+
+    Join rows are exact only where the joins run inside whole-stage
+    codegen, which is pinned on for the episode (AQE's empty-relation
+    propagation is excluded likewise). A stage that still falls back to
+    interpreted execution — more than ``spark.sql.codegen.maxFields``
+    fields, or generated code over the huge-method limit — stops at an
+    empty build side, and the joins below it read 0 on an empty sample."""
     counted = df.groupBy().count()
     conf = df.sparkSession.conf
-    prev = conf.get(_EXCLUDED_RULES, None)
-    conf.set(_EXCLUDED_RULES, ",".join(filter(None, [prev, _EMPTY_PROPAGATION])))
+    prev = {k: conf.get(k, None) for k in (_EXCLUDED_RULES, _WHOLE_STAGE)}
+    rules = prev[_EXCLUDED_RULES]
+    conf.set(_EXCLUDED_RULES, ",".join(filter(None, [rules, _EMPTY_PROPAGATION])))
+    conf.set(_WHOLE_STAGE, "true")
     try:
         rows, dt = _count_within(counted, budget_s)
     finally:
-        if prev is None:
-            conf.unset(_EXCLUDED_RULES)
-        else:
-            conf.set(_EXCLUDED_RULES, prev)
+        for k, v in prev.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
     return rows, dt, (() if rows is None else join_rows(counted))
 
 
@@ -285,22 +309,26 @@ def score_orders(
     cardinalities and the placement of every predicate depend only on the
     bound-table SET at each step, so a candidate whose sequence of bound
     sets was already measured — e.g. a swap of the first two tables — is
-    scored from the memo and runs no job. The winner has the lowest C_out;
-    timed-out candidates rank last and ties go to the earlier candidate.
-    With nothing scored the first candidate wins."""
+    scored from the memo and runs no job. When every scored candidate has
+    the same sequence (or there is only one), no measurement can change the
+    winner: the first candidate wins, no job runs, and each candidate's
+    stats carry the ``predetermined`` marker; with nothing scored the first
+    candidate wins likewise. Otherwise the winner has the lowest C_out;
+    timed-out candidates rank last and ties go to the earlier candidate."""
     count = count or budgeted_count
+    scored = cands[:episodes]
+    keys = [tuple(frozenset(o[:i]) for i in range(2, len(o) + 1)) for o in scored]
+    if len(set(keys)) <= 1:
+        return cands[0], [EpisodeStats(o, 0.0, -1, predetermined=True) for o in scored]
     memo: dict[tuple[frozenset[str], ...], EpisodeStats] = {}
     stats: list[EpisodeStats] = []
-    for order in cands[:episodes]:
-        key = tuple(frozenset(order[:i]) for i in range(2, len(order) + 1))
+    for order, key in zip(scored, keys):
         if key in memo:
             stats.append(replace(memo[key], order=order, seconds=0.0, memo=True))
             continue
         rows, dt, joins = count(build(order), budget_s)
         memo[key] = EpisodeStats(order, dt, -1 if rows is None else rows, joins, rows is None)
         stats.append(memo[key])
-    if not stats:
-        return cands[0], stats
     return min(stats, key=lambda e: (e.timed_out, e.cout)).order, stats
 
 

@@ -1145,36 +1145,33 @@ def approx_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("cnt")
         ),
     )
-    probe = kc.select("k")
-    pe = probe.select(
-        "k",
-        F.explode(
-            F.array(*[F.expr(_bloom_bucket_spark(i)) for i in (1, 2, 3)])
-        ).alias("b"),
-    )
-    pass_keys = (
-        pe.join(F.broadcast(bits), "b")
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("nset"))
-        .filter(F.col("nset") == BLOOM_K)
-        .select("k")
+    # per probe key: its row count and whether all BLOOM_K of its buckets
+    # are set, folded in ONE aggregate over the exploded key frame, so no
+    # join meets a frame sized by an explode-times-join estimate: while the
+    # cached frames are not yet materialized, such an estimate plans a
+    # sort-merge join that shuffles the probe side.
+    hits = (
+        kc.select(
+            "k",
+            "cnt",
+            F.explode(
+                F.array(*[F.expr(_bloom_bucket_spark(i)) for i in (1, 2, 3)])
+            ).alias("b"),
+        )
+        .join(F.broadcast(bits.withColumn("hit", F.lit(1))), "b", "left")
+        .groupBy("k", "cnt")
+        .agg((F.count("hit") == BLOOM_K).alias("is_pass"))
     )
     # one flag frame, one counting pass: every key/row statistic folds out
     # of the per-key count frame (flags carries (cnt, is_true, is_pass)
     # per key; the first ladder cut this entry 54 s -> see PERFORMANCE.md
     # — the naive 8-aggregate layout re-scanned the fact table and
     # re-computed the probe distinct per count)
-    flags = (
-        kc.join(
-            build.withColumn("is_true", F.lit(True)), "k", "left"
-        )
-        .join(pass_keys.withColumn("is_pass", F.lit(True)), "k", "left")
-        .select(
-            "k",
-            "cnt",
-            F.coalesce("is_true", F.lit(False)).alias("is_true"),
-            F.coalesce("is_pass", F.lit(False)).alias("is_pass"),
-        )
+    flags = hits.join(build.withColumn("is_true", F.lit(True)), "k", "left").select(
+        "k",
+        "cnt",
+        F.coalesce("is_true", F.lit(False)).alias("is_true"),
+        "is_pass",
     )
     def total(c) -> Column:
         # SUM over an empty probe is NULL where the oracle's COUNT(*) is 0

@@ -230,7 +230,9 @@ def test_cross_warehouse_order_transfer(spark, sf_dir, monkeypatch):
     for k in (g1.signature, g1.shape_sig, g1.transfer_sig):
         G._ORDER_CACHE.pop(k, None)
     r1 = adaptive_reorder(spark.sql(q), episodes=2)
-    assert r1.episodes  # cold: learned via sampled episodes
+    # cold: decided by scoring, not served from a cache (the two scored
+    # seeds share one bound-set sequence, so the decision is predetermined)
+    assert r1.episodes and all(e.predetermined for e in r1.episodes)
     register_views(spark, "/root/testdata/sf0.01")
     try:
         # earlier tests (or the persisted file) may already hold an
@@ -256,14 +258,14 @@ def test_cross_warehouse_order_transfer(spark, sf_dir, monkeypatch):
         monkeypatch.delenv("SKINNER_ORDER_TRANSFER", raising=False)
         g2 = _pop_scope_sigs()
         r4 = adaptive_reorder(spark.sql(q), episodes=2)
-        assert r4.episodes  # duel happened
+        assert r4.episodes  # scored on this warehouse, not served as-is
         assert r4.episodes[0].order == r1.best_order  # incumbent played first
         assert g2.signature in G._ORDER_CACHE  # validated winner cached here
 
         monkeypatch.setenv("SKINNER_ORDER_TRANSFER", "0")
         _pop_scope_sigs()
         r3 = adaptive_reorder(spark.sql(q), episodes=2)
-        assert r3.episodes  # transfer disabled -> cold learning again
+        assert r3.episodes  # transfer disabled -> scored cold again
 
         # exploit-only fast path at scale (VERDICT r7 item 3): with the
         # size threshold forced below this warehouse, a previously-duelled
@@ -306,9 +308,12 @@ def test_order_cache_hit(spark, monkeypatch):
     G._ORDER_CACHE.pop(g.shape_sig, None)
     G._ORDER_CACHE.pop(g.transfer_sig, None)
     r1 = adaptive_reorder(spark.sql(q), episodes=2)
-    assert r1.episodes  # learned
+    # learned by scoring (predetermined: the two seeds share one bound-set
+    # sequence), not served from a cache
+    assert r1.episodes and all(e.predetermined for e in r1.episodes)
     r2 = adaptive_reorder(spark.sql(q), episodes=2)
     assert getattr(r2, "reason", None) == "cached"
+    assert not r2.episodes
     assert r2.best_order == r1.best_order
 
 
@@ -574,10 +579,26 @@ def test_adaptive_join_shares_measurements_across_orders(spark):
     assert "InMemoryTableScan" not in res.df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_adaptive_reorder_swapped_first_pair_runs_one_episode(spark, monkeypatch):
+def _count_episodes(monkeypatch, G):
+    """Route graph's sampled executions through a recorder; returns the
+    list of budgets, one entry per sampled execution."""
+    real = G._budgeted_count
+    calls = []
+
+    def counting(df, budget_s=None):
+        calls.append(budget_s)
+        return real(df, budget_s)
+
+    monkeypatch.setattr(G, "_budgeted_count", counting)
+    return calls
+
+
+def test_adaptive_reorder_swapped_first_pair_runs_no_episode(spark, monkeypatch):
     """The two greedy seeds of this query differ only by swapping the first
     two tables: the same bound sets in the same sequence, hence the same
-    C_out. Scoring both takes exactly one sampled execution."""
+    C_out, and ties go to the first candidate. The winner is fixed before
+    any sample runs, so no sampled execution runs and both candidates carry
+    the "not measured" marker."""
     from skinnerdb_spark.plans import graph as G
 
     monkeypatch.setenv("SKINNER_ORDER_CACHE_PERSIST", "0")
@@ -587,24 +608,75 @@ def test_adaptive_reorder_swapped_first_pair_runs_one_episode(spark, monkeypatch
     g = G.extract_query_graph(spark.sql(q))
     for k in (g.signature, g.shape_sig, g.transfer_sig):
         G._ORDER_CACHE.pop(k, None)
-    real = G._budgeted_count
-    calls = []
-
-    def counting(df, budget_s=None):
-        calls.append(budget_s)
-        return real(df, budget_s)
-
-    monkeypatch.setattr(G, "_budgeted_count", counting)
+    calls = _count_episodes(monkeypatch, G)
     before = G.adaptive_counters()["episodes"]
     res = G.adaptive_reorder(spark.sql(q), episodes=2, episode_budget_s=30.0)
     first, second = res.episodes
     assert second.order[:2] == first.order[1::-1] and second.order[2:] == first.order[2:]
-    assert calls == [30.0]
-    assert G.adaptive_counters()["episodes"] == before + 1
-    assert not first.memo and second.memo and second.seconds == 0.0
-    assert second.joins == first.joins and len(first.joins) == 2
-    assert res.best_order == first.order  # tie: the earlier candidate wins
+    assert calls == []
+    assert G.adaptive_counters()["episodes"] == before
+    for e in res.episodes:
+        assert e.predetermined and not e.measured and not e.memo
+        assert e.joins == () and e.seconds == 0.0 and e.cout is None
+    assert res.best_order == first.order
+    assert G._ORDER_CACHE[g.signature] == first.order  # learned, and cached
     assert res.df.collect() == spark.sql(q).collect()
+
+
+def test_adaptive_reorder_measures_each_sequence_once(spark, monkeypatch):
+    """Three candidates over two distinct bound-set sequences: each sequence
+    runs one sampled execution, the candidate that repeats a sequence is
+    scored from the memo, and the lowest C_out wins."""
+    from skinnerdb_spark.plans import graph as G
+
+    q = ("SELECT COUNT(*) AS c FROM customer, orders, nation "
+         "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey "
+         "AND o_totalprice > 556.0")
+    calls = _count_episodes(monkeypatch, G)
+    before = G.adaptive_counters()["episodes"]
+    res = G.adaptive_reorder(spark.sql(q), episodes=3, use_cache=False)
+    seqs = [tuple(frozenset(e.order[:i]) for i in (2, 3)) for e in res.episodes]
+    assert len(res.episodes) == 3 and len(set(seqs)) == 2
+    assert len(calls) == 2
+    assert G.adaptive_counters()["episodes"] == before + 2
+    assert [e.measured for e in res.episodes].count(True) == 2
+    assert not any(e.predetermined for e in res.episodes)
+    for e, seq in zip(res.episodes, seqs):
+        twin = next(m for m, s in zip(res.episodes, seqs) if s == seq)
+        assert e.joins == twin.joins and len(e.joins) == 2
+        assert e.memo == (e is not twin)
+    assert res.best_order == min(res.episodes, key=lambda e: e.cout).order
+    assert res.df.collect() == spark.sql(q).collect()
+
+
+def test_score_orders_runs_a_job_only_when_it_can_change_the_winner():
+    """Unit level: one candidate, or candidates that all share one
+    bound-set sequence, run no count; otherwise each distinct sequence is
+    counted exactly once."""
+    from skinnerdb_spark.plans.joinorder import score_orders
+
+    counted = []
+
+    def count(order, budget_s):
+        counted.append(order)
+        return 1, 0.01, (len(order) * 10, 7 if order[0] == "c" else 3)
+
+    build = lambda o: o  # noqa: E731 — the fake count receives the order
+    for cands, episodes in (
+        ([("a", "b", "c")], 4),
+        ([("a", "b", "c"), ("b", "a", "c"), ("c", "b", "a")], 2),
+    ):
+        best, stats = score_orders(cands, build, episodes, count=count)
+        assert counted == [] and best == cands[0]
+        assert [e.order for e in stats] == cands[:episodes]
+        assert all(e.predetermined and e.rows == -1 for e in stats)
+
+    cands = [("a", "b", "c"), ("b", "a", "c"), ("c", "b", "a")]
+    best, stats = score_orders(cands, build, 3, count=count)
+    assert counted == [("a", "b", "c"), ("c", "b", "a")]
+    assert [e.measured for e in stats] == [True, False, True] and stats[1].memo
+    assert best == ("a", "b", "c") and [e.cout for e in stats] == [33, 33, 37]
+    assert score_orders(cands, build, 0, count=count) == (cands[0], [])
 
 
 def test_empty_sample_arm_reports_every_join(spark, monkeypatch):
@@ -627,6 +699,110 @@ def test_empty_sample_arm_reports_every_join(spark, monkeypatch):
         assert len(e.joins) == 3, e
     assert spark.conf.get(conf_key, None) == before
     assert res.df.collect()[0]["c"] == 0
+
+
+def test_empty_sample_arm_reports_every_join_without_codegen(spark):
+    """With whole-stage codegen off, the interpreted hash join returns
+    before reading its stream side once its build side is empty, and every
+    join below it reads 0 output rows. Episodes pin codegen on, so the
+    sampled C_out is the same with the session's codegen on or off."""
+    from skinnerdb_spark.plans import graph as G
+
+    q = ("SELECT COUNT(*) AS c FROM customer, orders, nation, region "
+         "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey "
+         "AND n_regionkey = r_regionkey AND r_name = 'NOWHERE'")
+    on = G.adaptive_reorder(spark.sql(q), episodes=3, use_cache=False)
+    assert any(e.measured and e.cout > 0 for e in on.episodes), on.episodes
+    key = "spark.sql.codegen.wholeStage"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        off = G.adaptive_reorder(spark.sql(q), episodes=3, use_cache=False)
+        assert spark.conf.get(key) == "false"
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    assert [(e.order, e.joins) for e in off.episodes] == [
+        (e.order, e.joins) for e in on.episodes
+    ]
+    assert off.best_order == on.best_order
+
+
+def _corpus_sql(name: str) -> str:
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "queries_sql", name + ".sql")
+    with open(path) as f:
+        return f.read().strip().rstrip(";")
+
+
+def _broadcast_subtrees(df) -> list[str]:
+    """treeString of every BroadcastExchange in df's physical plan."""
+    from skinnerdb_spark.plans.metrics import _iter_nodes
+
+    return [
+        n.treeString()
+        for n in _iter_nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "BroadcastExchange"
+    ]
+
+
+def test_learned_order_streams_its_largest_input(spark):
+    """A dimension-first learned order hints its accumulated side for
+    broadcast before the fact table joins, so lineitem streams: no
+    BroadcastExchange is built over the lineitem scan. Without the hint,
+    Catalyst's product estimate of the accumulated side makes lineitem the
+    smaller input, and it is the one broadcast."""
+    from skinnerdb_spark.plans import graph as G
+
+    q = _corpus_sql("t8_deep8_02")
+    res = G.adaptive_reorder(spark.sql(q), episodes=2, sample_rows=8000, use_cache=False)
+    assert res.best_order[0] != "l" and "l" in res.best_order, res.best_order
+    assert "strategy=broadcast" in res.df._jdf.queryExecution().analyzed().toString()
+    lineitem_scan = "FileScan parquet [l_"
+    assert not any(lineitem_scan in t for t in _broadcast_subtrees(res.df))
+    g = G.extract_query_graph(spark.sql(q))
+    unhinted = G.finish(g, G.build_graph_chain(g, res.best_order, leaves=g.leaves))
+    assert any(lineitem_scan in t for t in _broadcast_subtrees(unhinted))
+    assert res.df.collect() == spark.sql(q).collect()
+
+
+def test_no_stream_hint_when_broadcast_is_disabled(spark):
+    """autoBroadcastJoinThreshold=-1 turns broadcasts off, and the learned
+    chain then carries no broadcast hint either."""
+    from skinnerdb_spark.plans import graph as G
+
+    q = _corpus_sql("t8_deep8_02")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        res = G.adaptive_reorder(spark.sql(q), episodes=2, sample_rows=8000, use_cache=False)
+        assert res.best_order[0] != "l", res.best_order
+        assert "strategy=broadcast" not in res.df._jdf.queryExecution().analyzed().toString()
+        assert not _broadcast_subtrees(res.df)
+        assert res.df.collect() == spark.sql(q).collect()
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_explain_shows_predetermined_decision(spark, sf_dir):
+    """explain_adaptive and its DOT export name a decision that needed no
+    sampled execution as such, not as a single connected order."""
+    from skinnerdb_spark.engine import Engine
+
+    eng = Engine(spark, sf_dir)
+    q = ("SELECT COUNT(*) AS c FROM customer, orders, nation "
+         "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey")
+    note = "2 candidates, one bound-set sequence: no sampled execution"
+    text = eng.explain_adaptive(q, episodes=2)
+    assert note in text and "single connected" not in text
+    assert all(e.predetermined for e in eng.last_adaptive.episodes)
+    dot = eng.explain_adaptive_dot(q, episodes=2)
+    assert note in dot and "single connected" not in dot
+    assert dot.startswith("digraph uct {") and dot.rstrip().endswith("}")
 
 
 _DETERMINISM_SCRIPT = r"""
