@@ -152,8 +152,9 @@ def adaptive_duel_receipt(spark, sf_dir: str, k: int = 3) -> list[dict]:
     Picks ``k`` corpus queries deterministically (md5 of filename — stable
     across runs, no RNG), and for each runs three timed executions:
       * ``default`` — the bare Catalyst plan (no reorder),
-      * ``cached``  — the learned order served from the persisted cache
-                      (zero episodes, the production fast path),
+      * ``cached``  — the learned order served from the in-process cache
+                      (zero episodes, the production fast path; the
+                      corpus passes above learned it),
       * ``duel``    — a LIVE re-score with the cache bypassed
                       (use_cache=False: the candidates' sampled C_out is
                       measured again, nothing is written), plus the full
@@ -162,11 +163,12 @@ def adaptive_duel_receipt(spark, sf_dir: str, k: int = 3) -> list[dict]:
     ``episodes`` (sampled executions the re-score ran; candidates that bind
     the same table sets in the same sequence share one, and when all do,
     none runs: ``episodes`` 0 and ``cout`` null) and ``same_order``.
-    C_out is exact on a seeded sample, so a re-score of an order learned on
-    this warehouse reproduces it; ``same_order: false`` flags a cached order
-    that came from elsewhere (a transferred order, or one learned under an
-    older reward). The deltas land in the bench JSON as ``adaptive_duel`` —
-    the adaptive tier's analogue of the ANN recall receipts."""
+    C_out is exact on a seeded sample, so a re-score reproduces the cached
+    order; ``same_order: false`` flags a cached order that a re-score would
+    not pick (one learned by another instantiation of the same template,
+    whose filter constants differ). The deltas land in the bench JSON as
+    ``adaptive_duel`` — the adaptive tier's analogue of the ANN recall
+    receipts."""
     import glob
     import hashlib
 
@@ -367,8 +369,7 @@ def main() -> None:
         "calibration_secs": [cal_sec, cal_sec_post],
         "ann_recall": ann_recall,
         "adaptive_duel": duels,
-        # adaptive-tier episode spend this run (VERDICT r7 item 3: the
-        # exploit-only fast path's effect must be observable per run)
+        # adaptive-tier spend this run: sampled executions and cache hits
         "adaptive": __import__(
             "skinnerdb_spark.plans.graph", fromlist=["adaptive_counters"]
         ).adaptive_counters(),

@@ -344,8 +344,7 @@ class Engine:
     def cached_sql(self, text: str, refresh: bool = False) -> DataFrame:
         """Persisted result cache: re-running the same SQL against an
         unchanged warehouse reads the materialized parquet result instead of
-        recomputing — the third durable artifact alongside the persisted
-        join-order cache (plans/graph.py) and the IVF index (operators/
+        recomputing — a durable artifact like the IVF index (operators/
         ivf.py), and the Spark-native upgrade of the reference's per-session
         result reuse (its RAM-resident intermediate caching dies with the
         JVM; this survives sessions and is shareable cluster-wide on DFS).

@@ -17,8 +17,10 @@ Mechanism:
 - the callback re-wraps the optimized plan as a DataFrame, reuses the
   adaptive path's own extraction (plans/graph.py ``extract_query_graph`` — the
   optimizer-stage plan still satisfies its shape contract: unary parents,
-  inner-join tree, LogicalRelation leaves), looks up the PERSISTED learned
-  order by exact signature then shape signature, rebuilds the chain with
+  inner-join tree, LogicalRelation leaves), looks up the learned order by
+  the graph's cache key (plans/graph.py ``QueryGraph.cache_key``: sorted
+  names, so Catalyst's own permutation of the joins before this rule runs
+  still finds the order learned at the API boundary), rebuilds the chain with
   the same leaf relations (exprIds preserved — parent operators reference
   attributes by id, so replacing the subtree is safe), and hands back the
   rebuilt plan's own optimized form (fresh pushdown/pruning run under a
@@ -134,8 +136,8 @@ class _PyReorderer:
 
     def _reorder(self, jplan):
         from skinnerdb_spark.plans.graph import (
+            _ORDER_CACHE,
             ExtractionError,
-            _cache_get,
             _of_rows,
             build_graph_chain,
             extract_query_graph,
@@ -148,18 +150,10 @@ class _PyReorderer:
         except ExtractionError:
             self.misses += 1
             return None
-        from skinnerdb_spark.plans.graph import _transfer_enabled
-
-        cached = (
-            _cache_get(graph.signature)
-            or _cache_get(graph.shape_sig)
-            or _shape_lookup_unordered(graph.shape_sig)
-            or (_transfer_enabled() and _cache_get(graph.transfer_sig) or None)
-        )
+        cached = _ORDER_CACHE.get(graph.cache_key)
+        # the key holds the sorted leaf names, so a hit is a permutation of
+        # this plan's leaves
         if cached is None or tuple(graph.names) == tuple(cached):
-            self.misses += 1
-            return None
-        if set(cached) != set(graph.names):
             self.misses += 1
             return None
         try:
@@ -197,21 +191,6 @@ def _strip_projects_over_joins(spark: SparkSession, jplan):
         return node.withNewChildren(_scala_seq(spark, newkids))
 
     return walk(jplan)
-
-
-def _shape_lookup_unordered(shape_sig: tuple):
-    """Shape lookup ignoring the chain order baked into shape_sig[0]: the
-    order learned at the API boundary (user-written chain order) must still
-    be found when Catalyst's own reordering already permuted the joins
-    before this rule runs. O(1) via the canonical-key secondary index
-    (graph._SHAPE_INDEX) — this runs inside the optimizer per query, so the
-    previous O(cache) linear scan was hot-path cost (ADVICE r6)."""
-    from skinnerdb_spark.plans.graph import _ORDER_CACHE, _SHAPE_INDEX, _canon_shape
-
-    if len(shape_sig) != 3:
-        return None
-    primary = _SHAPE_INDEX.get(_canon_shape(shape_sig))
-    return _ORDER_CACHE.get(primary) if primary is not None else None
 
 
 def rule_available(spark: SparkSession) -> bool:

@@ -64,28 +64,27 @@ _PASSTHROUGH = {
     "Tail",
 }
 
-#: per-process cache of learned join orders, keyed by graph signature —
-#: repeated templates (a benchmark directory, a dashboard) skip the sampled
-#: episodes entirely after the first run, the cross-query analogue of the
-#: reference reusing its UCT tree across episodes of one query. Exact and
-#: shape signatures include the leaves' scan locations, so two warehouses
-#: with identical table names never share an AUTHORITATIVE entry; a third,
-#: scope-free "transfer" tier (see extract_query_graph.transfer_sig) serves
-#: as a warm start for the same query shape on a NEW warehouse — join-order
-#: quality tracks *relative* cardinalities, which proportional scaling of
-#: the same schema preserves (measured: the first sf1 run paid 20-22x on
-#: 15-way shapes purely in cold episodes, PERFORMANCE.md round-6). FIFO-
-#: capped: entries are a few strings each, the cap only guards a
-#: pathological template generator.
+#: per-process cache of learned join orders, keyed by QueryGraph.cache_key
+#: (the graph's canonical shape: sorted leaf names, sorted scan scopes,
+#: sorted edges, no filter constants) — repeated templates (a benchmark
+#: directory, a dashboard) skip scoring after the first run, the
+#: cross-query analogue of the reference reusing its UCT tree across
+#: episodes of one query. The scopes are the leaves' scan locations, so two
+#: warehouses with identical table names never share an order. Nothing is
+#: persisted: sampled C_out is a deterministic function of the seeded
+#: sample, so a new process learns the same orders again (the reference,
+#: too, keeps no learned state across sessions). FIFO-capped: entries are
+#: a few strings each, the cap only guards a pathological template
+#: generator.
 _ORDER_CACHE: dict[tuple, tuple[str, ...]] = {}
 _ORDER_CACHE_CAP = 4096
 
-#: bumped on every mutation of _ORDER_CACHE (put or bulk load). Consumers
-#: that memoize "this plan shape had no learned order" (the Catalyst rule's
-#: no-op memo, plans/catalyst_rule.py) compare against this to invalidate
-#: their memo when new orders are learned — otherwise a query shape first
-#: seen before its order was learned would never be reordered for the rest
-#: of the session (ADVICE r7).
+#: bumped on every put into _ORDER_CACHE. Consumers that memoize "this
+#: plan shape had no learned order" (the Catalyst rule's no-op memo,
+#: plans/catalyst_rule.py) compare against this to invalidate their memo
+#: when new orders are learned — otherwise a query shape first seen before
+#: its order was learned would never be reordered for the rest of the
+#: session (ADVICE r7).
 _ORDER_CACHE_VERSION = 0
 
 
@@ -95,152 +94,21 @@ def order_cache_version() -> int:
 
 #: process-lifetime observability for the adaptive tier (bench.py emits
 #: these in its JSON so episode spend is visible per run): episodes =
-#: sampled exploration executions actually run; exploit_hits = duels
-#: skipped by the at-scale transfer fast path; cache_hits = zero-episode
-#: signature/shape cache servings.
-_COUNTERS = {"episodes": 0, "exploit_hits": 0, "cache_hits": 0}
+#: sampled exploration executions actually run; cache_hits = orders served
+#: from _ORDER_CACHE with no scoring.
+_COUNTERS = {"episodes": 0, "cache_hits": 0}
 
 
 def adaptive_counters() -> dict[str, int]:
     return dict(_COUNTERS)
 
 
-def _exploit_rows_threshold() -> int:
-    """Estimated fact-row count at or above which a previously-duelled
-    transferred order is exploited WITHOUT a fresh duel (0 disables).
-
-    Default 16M estimated rows: well above every bench/test warehouse
-    (sf0.1 lineitem ~600k, sf1 ~6M) so local learning behavior is
-    unchanged, and below the sf10/100-TB regime where exploration episodes
-    were measured above-linear (~4.3x at the sf1->sf10 step on deep
-    shapes, VERDICT r7 item 3)."""
-    try:
-        return int(os.environ.get("SKINNER_TRANSFER_EXPLOIT_ROWS", "16000000"))
-    except ValueError:
-        return 16_000_000
-
-#: secondary index for ORDER-INSENSITIVE shape lookup (ADVICE r6 /
-#: VERDICT r6 item 6): canonical (sorted names, scopes, edges) -> the
-#: primary _ORDER_CACHE key. The Catalyst rule's unordered shape lookup
-#: runs inside every optimizer invocation of an eligible query — an O(cache)
-#: scan there puts up to 4096 tuple comparisons in the optimizer hot path;
-#: this dict makes it O(1). Values are primary KEYS (not orders), so a key
-#: popped from _ORDER_CACHE (cap eviction, test isolation) degrades to a
-#: clean miss instead of a stale hit.
-_SHAPE_INDEX: dict[tuple, tuple] = {}
-
-
-def _canon_shape(key: tuple) -> tuple:
-    return (tuple(sorted(key[0])), key[1], key[2])
-
-
-def _index_shape(key: tuple) -> None:
-    # shape keys are (names, scopes, edges); exact signatures add a 4th
-    # element and transfer keys lead with the "xfer" marker
-    if len(key) == 3 and key[0] != "xfer":
-        _SHAPE_INDEX[_canon_shape(key)] = key
-
-#: learned orders also persist across sessions (spark-warehouse/
-#: joinorder_cache.json, same durability upgrade as the IVF index vs the
-#: reference's per-session RAM indexes): a new driver process inherits every
-#: order previous sessions learned and pays zero episodes on template hits.
-#: Stale-safe by construction — signatures embed the scan locations, so a
-#: different warehouse simply misses. Opt out: SKINNER_ORDER_CACHE_PERSIST=0.
-_ORDER_CACHE_FILE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "spark-warehouse",
-    "joinorder_cache.json",
-)
-_persist_loaded = False
-
-
-def _persist_enabled() -> bool:
-    return os.environ.get("SKINNER_ORDER_CACHE_PERSIST", "1") != "0"
-
-
-def _transfer_enabled() -> bool:
-    """Cross-warehouse order transfer (SKINNER_ORDER_TRANSFER=0 disables):
-    a new warehouse with the same query shape starts from the order learned
-    elsewhere instead of paying cold episodes. Correctness is unaffected
-    either way — the order only shapes the plan; AQE still picks physical
-    strategies per stage from THIS warehouse's runtime sizes."""
-    return os.environ.get("SKINNER_ORDER_TRANSFER", "1") != "0"
-
-
-def _tuplify(x):
-    return tuple(_tuplify(e) for e in x) if isinstance(x, list) else x
-
-
-def load_order_cache(path: str | None = None) -> int:
-    """Merge the persisted order cache into the in-process one (idempotent;
-    in-process entries win; the in-memory cap applies so a grown file cannot
-    balloon the dict). Returns the number of entries loaded."""
-    import json
-
-    global _persist_loaded
-    _persist_loaded = True
-    try:
-        with open(path or _ORDER_CACHE_FILE) as f:
-            items = json.load(f)
-    except (OSError, ValueError):
-        return 0
-    n = 0
-    for k, v in items:
-        if len(_ORDER_CACHE) >= _ORDER_CACHE_CAP:
-            break
-        key = _tuplify(k)
-        if key not in _ORDER_CACHE:
-            _ORDER_CACHE[key] = tuple(v)
-            _index_shape(key)
-            n += 1
-        # backfill the scope-free transfer tier from persisted SHAPE keys
-        # (files written before the tier existed have none): shape keys are
-        # (names, scopes, edges); exact signatures add a 4th element and
-        # transfer keys lead with the "xfer" marker, so len==3 + marker
-        # check identifies them unambiguously
-        if len(key) == 3 and key[0] != "xfer":
-            xk = ("xfer", key[0], key[2])
-            if xk not in _ORDER_CACHE and len(_ORDER_CACHE) < _ORDER_CACHE_CAP:
-                _ORDER_CACHE[xk] = tuple(v)
-    global _ORDER_CACHE_VERSION
-    _ORDER_CACHE_VERSION += 1
-    return n
-
-
-def save_order_cache(path: str | None = None) -> None:
-    """Atomically persist the in-process cache (tmp file + replace)."""
-    import json
-
-    path = path or _ORDER_CACHE_FILE
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump([[k, v] for k, v in _ORDER_CACHE.items()], f)
-    os.replace(tmp, path)
-
-
-def _cache_get(key: tuple):
-    if not _persist_loaded and _persist_enabled():
-        load_order_cache()
-    return _ORDER_CACHE.get(key)
-
-
 def _cache_put(key: tuple, order: tuple[str, ...]) -> None:
-    # merge the persisted file BEFORE the first save: a put-before-get path
-    # must not clobber orders other sessions already learned
-    if _persist_enabled() and not _persist_loaded:
-        load_order_cache()
     if key not in _ORDER_CACHE and len(_ORDER_CACHE) >= _ORDER_CACHE_CAP:
         _ORDER_CACHE.pop(next(iter(_ORDER_CACHE)))
     _ORDER_CACHE[key] = order
-    _index_shape(key)
     global _ORDER_CACHE_VERSION
     _ORDER_CACHE_VERSION += 1
-    if _persist_enabled():
-        try:
-            save_order_cache()
-        except OSError:
-            pass
 
 
 class ExtractionError(ValueError):
@@ -364,8 +232,8 @@ def _split_conjuncts(expr: Any) -> list:
 def _leaf_info(leaf: Any) -> tuple[str | None, str | None]:
     """(display_name, scan_scope): nearest SubqueryAlias under unary wrappers
     or the file-scan's path stem for the name (read_table-built leaves have
-    no alias); the scan's FULL root path as the scope — cache signatures
-    embed it so identical table names in different warehouses never share
+    no alias); the scan's FULL root path as the scope — the order-cache key
+    embeds it so identical table names in different warehouses never share
     learned orders."""
     node, name = leaf, None
     while True:
@@ -403,19 +271,15 @@ class QueryGraph:
     parents: list[Any]
     #: original root output attributes (schema pin for parentless queries)
     out_attrs: list[Any]
-    #: exact cache signature: names + edge tuples + local-filter SQL
-    signature: tuple = field(default=())
-    #: shape signature (no filter constants): same join graph -> same
-    #: template family, eligible for cross-query order reuse
-    shape_sig: tuple = field(default=())
-    #: scope-free signature (no scan locations, no filter constants): the
-    #: cross-warehouse transfer key — a warm start only, never authoritative
-    transfer_sig: tuple = field(default=())
+    #: order-cache key: sorted names, sorted scan scopes, sorted edge
+    #: tuples (no filter constants) — same join graph on the same
+    #: warehouse -> same template family, which shares one learned order
+    cache_key: tuple = field(default=())
     #: leaves the user marked F.broadcast() — re-hinted at chain rebuild
     hinted: frozenset[str] = field(default=frozenset())
     #: per-leaf ROW-count estimates (see est_rows) — separate cache from
-    #: the byte sizes: bytes drive relative ordering, rows drive absolute
-    #: thresholds (exploit gate, episode sampling fraction)
+    #: the byte sizes: bytes drive relative ordering, rows size the
+    #: episode sample (sampling fraction = sample_rows / fact rows)
     row_counts: dict[str, int] = field(default_factory=dict)
 
     def ensure_sizes(self) -> None:
@@ -435,8 +299,8 @@ class QueryGraph:
         """Best-available ROW-count estimate for a leaf, no jobs run.
 
         sizeInBytes//100 misclassifies wide tables (ADVICE r8: a multi-KB
-        document row overshoots row count 10-100x, tripping the absolute-
-        row thresholds far too early), so prefer, in order:
+        document row overshoots row count 10-100x, shrinking the episode
+        sample 10-100x below ``sample_rows``), so prefer, in order:
         1. optimizer rowCount (present when CBO stats exist);
         2. parquet footer row counts from the leaf's input files — exact
            for the scan, an upper bound after filters, read driver-side
@@ -579,7 +443,6 @@ def extract_query_graph(df: DataFrame) -> QueryGraph:
         spark, "org.apache.spark.sql.catalyst.expressions.SubqueryExpression"
     )
     local_filters: dict[str, list[Any]] = {n: [] for n in names}
-    local_sql: list[str] = []
     edges: list[JoinEdge] = []
     edge_cols: list[Column] = []
     post_conds: list[tuple[frozenset[str], Column]] = []
@@ -599,7 +462,6 @@ def extract_query_graph(df: DataFrame) -> QueryGraph:
         if len(touched) <= 1:
             target = next(iter(touched), names[0])
             local_filters[target].append(cj)
-            local_sql.append(cj.sql())
         elif (
             len(touched) == 2
             and _cls(cj) in ("EqualTo", "EqualNullSafe")
@@ -631,8 +493,8 @@ def extract_query_graph(df: DataFrame) -> QueryGraph:
         leaves[name] = ldf
     sizes: dict[str, int] = {}
 
-    shape_sig = (
-        tuple(names),
+    cache_key = (
+        tuple(sorted(names)),
         tuple(sorted(scopes)),
         tuple(
             sorted(
@@ -640,8 +502,6 @@ def extract_query_graph(df: DataFrame) -> QueryGraph:
             )
         ),
     )
-    signature = shape_sig + (tuple(sorted(local_sql)),)
-    transfer_sig = ("xfer", shape_sig[0], shape_sig[2])
     return QueryGraph(
         spark=spark,
         names=names,
@@ -652,9 +512,7 @@ def extract_query_graph(df: DataFrame) -> QueryGraph:
         sizes=sizes,
         parents=parents,
         out_attrs=list(_j(spark, analyzed.output())),
-        signature=signature,
-        shape_sig=shape_sig,
-        transfer_sig=transfer_sig,
+        cache_key=cache_key,
         hinted=frozenset(n for n, h in zip(names, leaf_hinted) if h),
     )
 
@@ -765,7 +623,6 @@ def adaptive_reorder(
     max_orders: int = 12,
     seed: int = 42,
     use_cache: bool = True,
-    reuse_shape: bool = True,
     episode_budget_s: float | None = None,
 ) -> AdaptiveJoinResult:
     """Reorder any DataFrame's inner-join chain by sampled C_out.
@@ -786,8 +643,8 @@ def adaptive_reorder(
     reference's 500-step episode budget,
     src/joining/JoinProcessor.java:109-152 + src/config/JoinConfig.java:22).
     The lowest-C_out order executes in full, unbudgeted, as a chain that
-    streams its largest input (:func:`_streamed_leaf`), and is cached per
-    graph signature.
+    streams its largest input (:func:`_streamed_leaf`), and is cached under
+    the graph's :attr:`QueryGraph.cache_key`.
     """
     # ops/test escape hatch: SKINNER_ADAPTIVE_DISABLE=1 turns every
     # adaptive wrapper into the identity (Catalyst's own order executes).
@@ -811,96 +668,32 @@ def adaptive_reorder(
         return res
 
     # cache lookup happens BEFORE any sampling: a hit (the common case for
-    # benchmark directories and dashboards) pays just the chain rebuild
-    cached = None
-    transferred = None
-    if use_cache:
-        cached = _cache_get(graph.signature)
-        if cached is None and reuse_shape:
-            # template-family reuse: a query with the same join graph but
-            # different filter constants inherits the learned order (the
-            # reference learns per query; cross-template reuse is the
-            # Spark-first trade — per-order *physical* strategy still adapts
-            # at runtime via AQE, so a selectivity flip costs little)
-            cached = _cache_get(graph.shape_sig)
-        if cached is None and reuse_shape and _transfer_enabled():
-            # cross-warehouse transfer: same shape learned on ANOTHER
-            # warehouse (scope-free key). A warm start, never authoritative:
-            # by default the transferred order enters the episode duel below
-            # as the INCUMBENT arm and must win on THIS warehouse's sampled
-            # rewards before it executes (an order learned at 20 MB ran 40x
-            # behind greedy at the 100x-cardinality JOB replay — blind trust
-            # does not survive a scale jump). SKINNER_ORDER_TRANSFER=trust
-            # restores the r6 zero-episode behavior for same-machine,
-            # same-scale warehouse clones; the validated winner is written
-            # under THIS scope's signatures either way.
-            transferred = _cache_get(graph.transfer_sig)
-            if transferred is not None and is_connected_order(
-                transferred, graph.names, graph.edges
-            ):
-                reason = None
-                if os.environ.get("SKINNER_ORDER_TRANSFER") == "trust":
-                    reason = "cached-transfer"
-                else:
-                    # exploit-only fast path at scale (VERDICT r7 item 3):
-                    # every transfer-cache entry was written as a DUEL
-                    # WINNER (only _cache_put after the episode loop or a
-                    # validated run writes transfer_sig), so above the
-                    # size threshold re-exploring pays full sampled
-                    # executions at big-SF cost for a bounded, already-
-                    # duelled gain — the measured ~4.3x above-linear step
-                    # on 15/17-way shapes at sf10. Below the threshold the
-                    # duel still runs (cheap, keeps learning); on a cache
-                    # MISS the duel always runs. SKINNER_TRANSFER_EXPLOIT
-                    # _ROWS=0 disables the fast path entirely.
-                    thr = _exploit_rows_threshold()
-                    if thr > 0:
-                        # actual ROW estimate (footer/CBO-backed, ADVICE
-                        # r8): bytes//100 overshot wide-row tables 10-100x
-                        # and froze learning far below the intended regime
-                        est = graph.est_rows(graph.fact)
-                        if est >= thr:
-                            reason = "transfer-exploit"
-                            _COUNTERS["exploit_hits"] += 1
-                if reason is not None:
-                    # deliberately NOT written under this scope's signature:
-                    # the signature tier means "duel-validated at this
-                    # scope", and both trust and exploit are warm starts,
-                    # not authority — a later run below the threshold (or
-                    # with the fast path disabled) still duels and only its
-                    # winner becomes authoritative here
-                    chain = build_graph_chain(graph, transferred)
-                    res = AdaptiveJoinResult(finish(graph, chain), transferred)
-                    res.reason = reason  # type: ignore[attr-defined]
-                    return res
-    # validity — not membership in the first max_orders DFS candidates —
-    # gates a cache hit: a winner that entered via the greedy seeds (the
-    # 8-way-join case the seeds exist for) is absent from the DFS prefix,
-    # and a membership check would silently discard it and re-run the full
-    # episode loop on every execution (ADVICE r7)
+    # benchmark directories and dashboards) pays just the chain rebuild.
+    # Template-family reuse: a query with the same join graph but different
+    # filter constants inherits the learned order (the reference learns per
+    # query; cross-template reuse is the Spark-first trade — per-order
+    # *physical* strategy still adapts at runtime via AQE, so a selectivity
+    # flip costs little). Validity — not membership in the first max_orders
+    # DFS candidates — gates a hit: a winner that entered via the greedy
+    # seeds (the 8-way-join case the seeds exist for) is absent from the DFS
+    # prefix, and a membership check would silently discard it and re-score
+    # on every execution (ADVICE r7)
+    cached = _ORDER_CACHE.get(graph.cache_key) if use_cache else None
     if cached is not None and is_connected_order(cached, graph.names, graph.edges):
         _COUNTERS["cache_hits"] += 1
         chain = build_graph_chain(graph, cached)
         res = AdaptiveJoinResult(finish(graph, chain), cached)
         res.reason = "cached"  # type: ignore[attr-defined]
         return res
-    if len(cands) == 1 and transferred is None:
+    if len(cands) == 1:
         chain = build_graph_chain(graph, cands[0])
         return AdaptiveJoinResult(finish(graph, chain), cands[0])
 
-    # candidates: incumbent (validated transfer) first, then
-    # selectivity-greedy seeds, then the DFS enumeration — scored in list
-    # order, so with few episodes the duel is exactly
-    # "transferred order vs greedy-smallest order"
+    # candidates: selectivity-greedy seeds, then the DFS enumeration —
+    # scored in list order, so with few episodes the duel is between the
+    # greedy seeds
     graph.ensure_sizes()
-    seeds: list[tuple[str, ...]] = []
-    if transferred is not None and is_connected_order(
-        transferred, graph.names, graph.edges
-    ):
-        seeds.append(transferred)
-    for g in greedy_orders(graph.names, graph.edges, graph.sizes):
-        if g not in seeds:
-            seeds.append(g)
+    seeds = greedy_orders(graph.names, graph.edges, graph.sizes)
     cands = seeds + [c for c in cands if c not in seeds]
     fact = graph.fact
 
@@ -921,10 +714,6 @@ def adaptive_reorder(
     )
     _COUNTERS["episodes"] += sum(e.measured for e in stats)
     if use_cache:
-        _cache_put(graph.signature, best)
-        if graph.shape_sig not in _ORDER_CACHE:
-            _cache_put(graph.shape_sig, best)
-        if graph.transfer_sig not in _ORDER_CACHE:
-            _cache_put(graph.transfer_sig, best)
+        _cache_put(graph.cache_key, best)
     chain = build_graph_chain(graph, best)
     return AdaptiveJoinResult(finish(graph, chain), best, stats)

@@ -84,7 +84,7 @@ def is_connected_order(
 ) -> bool:
     """True iff ``order`` covers every table and never forms a cartesian
     product — validity check for orders that arrive from outside the
-    enumeration (cache/transfer tiers)."""
+    enumeration (the learned-order cache)."""
     if sorted(order) != sorted(tables):
         return False
     for i, t in enumerate(order[1:], 1):

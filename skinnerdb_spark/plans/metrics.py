@@ -41,22 +41,32 @@ def run_and_count(df: DataFrame) -> int:
         return df.count()
 
 
-def _iter_nodes(node: Any):
-    """Yield every SparkPlan node, unwrapping AQE + query-stage shells."""
-    yield node
-    cls = node.getClass().getSimpleName()
+def _unwrap(node: Any) -> Any:
+    """The plan inside AQE and query-stage shells (``node`` itself when it
+    is neither)."""
     try:
-        if cls == "AdaptiveSparkPlanExec":
-            yield from _iter_nodes(node.executedPlan())
-            return
-        if cls.endswith("QueryStageExec"):
-            yield from _iter_nodes(node.plan())
-            return
+        while True:
+            cls = node.getClass().getSimpleName()
+            if cls == "AdaptiveSparkPlanExec":
+                node = node.executedPlan()
+            elif cls.endswith("QueryStageExec"):
+                node = node.plan()
+            else:
+                return node
     except Exception:
-        pass
-    it = node.children().iterator()
-    while it.hasNext():
-        yield from _iter_nodes(it.next())
+        return node
+
+
+def _iter_nodes(node: Any):
+    """Yield every SparkPlan node, AQE and query-stage shells unwrapped.
+    Children are walked by size()/apply(i): iterating a py4j collection to
+    exhaustion costs a converted JVM exception per collection (see verify
+    notes)."""
+    node = _unwrap(node)
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _iter_nodes(kids.apply(i))
 
 
 def join_rows(df: DataFrame) -> tuple[int, ...]:
@@ -127,17 +137,6 @@ def plan_dot(df: DataFrame) -> str:
     lines = ["digraph plan {", "  rankdir=BT;", '  node [shape=box, fontsize=10];']
     counter = [0]
 
-    def unwrap(node: Any) -> Any:
-        cls = node.getClass().getSimpleName()
-        try:
-            if cls == "AdaptiveSparkPlanExec":
-                return unwrap(node.executedPlan())
-            if cls.endswith("QueryStageExec"):
-                return unwrap(node.plan())
-        except Exception:
-            pass
-        return node
-
     def node_label(node: Any) -> str:
         cls = node.getClass().getSimpleName().replace("Exec", "")
         rows = time_ms = None
@@ -163,16 +162,13 @@ def plan_dot(df: DataFrame) -> str:
         return "\\n".join(parts)
 
     def walk(node: Any) -> int:
-        node = unwrap(node)
+        node = _unwrap(node)
         counter[0] += 1
         nid = counter[0]
         lines.append(f'  n{nid} [label="{node_label(node)}"];')
         kids = node.children()
-        # walk by size()/apply(i): iterating a py4j collection to exhaustion
-        # costs a converted JVM exception per collection (see verify notes)
         for i in range(kids.size()):
-            cid = walk(kids.apply(i))
-            lines.append(f"  n{cid} -> n{nid};")
+            lines.append(f"  n{walk(kids.apply(i))} -> n{nid};")
         return nid
 
     walk(root)

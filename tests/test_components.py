@@ -774,24 +774,18 @@ def test_binaryfile_ingest_to_features(spark, tmp_path):
 def test_explain_adaptive_dot_renders_tree(spark, sf_dir):
     """DOT export of the explored UCT order tree (TreePlotter file-output
     analogue): valid digraph text, winning path bold, fallback labeled."""
-    import os
+    eng = Engine(spark, sf_dir)
+    dot = eng.explain_adaptive_dot(
+        "SELECT COUNT(*) AS n FROM lineitem, orders, supplier "
+        "WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey"
+    )
+    assert dot.startswith("digraph uct {") and dot.rstrip().endswith("}")
+    assert "->" in dot or "single connected" in dot or "n0" in dot
+    assert "style=bold" in dot or "single connected" in dot
+    assert eng.last_adaptive.best_order
 
-    os.environ["SKINNER_ORDER_CACHE_PERSIST"] = "0"
-    try:
-        eng = Engine(spark, sf_dir)
-        dot = eng.explain_adaptive_dot(
-            "SELECT COUNT(*) AS n FROM lineitem, orders, supplier "
-            "WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey"
-        )
-        assert dot.startswith("digraph uct {") and dot.rstrip().endswith("}")
-        assert "->" in dot or "single connected" in dot or "n0" in dot
-        assert "style=bold" in dot or "single connected" in dot
-        assert eng.last_adaptive.best_order
-
-        fallback = eng.explain_adaptive_dot("SELECT COUNT(*) AS n FROM region")
-        assert "not adaptive" in fallback
-    finally:
-        os.environ.pop("SKINNER_ORDER_CACHE_PERSIST", None)
+    fallback = eng.explain_adaptive_dot("SELECT COUNT(*) AS n FROM region")
+    assert "not adaptive" in fallback
 
 
 def test_cached_sql_roundtrip_and_staleness(spark, sf_dir, tmp_path):

@@ -62,10 +62,10 @@ def test_extracted_edges_match_handwritten_star(spark, sf_dir):
 
 
 def test_est_rows_footer_exact_not_bytes_guess(spark, sf_dir):
-    """ADVICE r8: the exploit gate's row estimate must be an actual row
-    count (parquet footers / CBO), not sizeInBytes//100 — the byte guess
-    overshoots wide-row tables (documents: multi-KB text rows) by 10-100x
-    and froze bandit learning far below the intended 16M-row regime."""
+    """ADVICE r8: the row estimate that sizes the episode sample must be
+    an actual row count (parquet footers / CBO), not sizeInBytes//100 —
+    the byte guess overshoots wide-row tables (documents: multi-KB text
+    rows) by 10-100x and shrinks the sample by as much."""
     dfs = {
         "documents": read_table(spark, sf_dir, "documents"),
         "lineitem": read_table(spark, sf_dir, "lineitem"),
@@ -199,114 +199,37 @@ def test_nondeterministic_fallback_matches_catalyst(spark):
 
 def test_order_cache_not_shared_across_warehouses(spark, sf_dir):
     """Same table names, different warehouse directories -> different cache
-    signatures (learned orders must not leak across data scales)."""
+    keys: an order learned on one warehouse is not served on another
+    (learned orders must not leak across data scales)."""
+    from skinnerdb_spark.plans import graph as G
+
     q = ("SELECT COUNT(*) AS c FROM customer, orders, nation "
          "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey")
     g1 = extract_query_graph(spark.sql(q))
+    learned = adaptive_reorder(spark.sql(q), episodes=2)
+    assert learned.best_order and G._ORDER_CACHE[g1.cache_key] == learned.best_order
     register_views(spark, "/root/testdata/sf0.01")
     try:
         g2 = extract_query_graph(spark.sql(q))
+        G._ORDER_CACHE.pop(g2.cache_key, None)
+        other = adaptive_reorder(spark.sql(q), episodes=2)
     finally:
         register_views(spark, sf_dir)  # restore module-fixture views
-    assert g1.shape_sig != g2.shape_sig
-    assert g1.signature != g2.signature
-    assert g1.transfer_sig == g2.transfer_sig  # the scope-free transfer key
+    assert g1.cache_key != g2.cache_key
+    assert other.best_order and getattr(other, "reason", None) != "cached"
+    assert other.episodes  # scored on this warehouse
 
 
-def test_cross_warehouse_order_transfer(spark, sf_dir, monkeypatch):
-    """An order learned on one warehouse warm-starts the SAME query shape on
-    a different warehouse (scope-free transfer tier). Default contract (r7):
-    the transferred order enters the episode duel as the INCUMBENT arm and
-    the validated winner is written under the new scope's signatures;
-    SKINNER_ORDER_TRANSFER=trust restores the r6 zero-episode behavior
-    (never written back), and =0 restores cold learning."""
-    from skinnerdb_spark.plans import graph as G
-
-    monkeypatch.setenv("SKINNER_ORDER_CACHE_PERSIST", "0")
-    q = ("SELECT COUNT(*) AS c FROM customer, orders, nation "
-         "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey "
-         "AND o_totalprice > 999.0")
-    g1 = extract_query_graph(spark.sql(q))
-    for k in (g1.signature, g1.shape_sig, g1.transfer_sig):
-        G._ORDER_CACHE.pop(k, None)
-    r1 = adaptive_reorder(spark.sql(q), episodes=2)
-    # cold: decided by scoring, not served from a cache (the two scored
-    # seeds share one bound-set sequence, so the decision is predetermined)
-    assert r1.episodes and all(e.predetermined for e in r1.episodes)
-    register_views(spark, "/root/testdata/sf0.01")
-    try:
-        # earlier tests (or the persisted file) may already hold an
-        # AUTHORITATIVE order for this query at the sf0.01 scope — drop it
-        # so the lookup can only hit the transfer tier under test
-        def _pop_scope_sigs():
-            g2 = extract_query_graph(spark.sql(q))
-            G._ORDER_CACHE.pop(g2.signature, None)
-            G._ORDER_CACHE.pop(g2.shape_sig, None)
-            return g2
-
-        # trust mode: zero episodes, never written under the new scope
-        monkeypatch.setenv("SKINNER_ORDER_TRANSFER", "trust")
-        g2 = _pop_scope_sigs()
-        r2 = adaptive_reorder(spark.sql(q), episodes=2)
-        assert getattr(r2, "reason", None) == "cached-transfer"
-        assert r2.best_order == r1.best_order
-        assert not r2.episodes
-        assert g2.signature not in G._ORDER_CACHE  # warm start, not authority
-
-        # default (validated): episodes run with the transferred order as
-        # the first arm played, and the winner IS cached under this scope
-        monkeypatch.delenv("SKINNER_ORDER_TRANSFER", raising=False)
-        g2 = _pop_scope_sigs()
-        r4 = adaptive_reorder(spark.sql(q), episodes=2)
-        assert r4.episodes  # scored on this warehouse, not served as-is
-        assert r4.episodes[0].order == r1.best_order  # incumbent played first
-        assert g2.signature in G._ORDER_CACHE  # validated winner cached here
-
-        monkeypatch.setenv("SKINNER_ORDER_TRANSFER", "0")
-        _pop_scope_sigs()
-        r3 = adaptive_reorder(spark.sql(q), episodes=2)
-        assert r3.episodes  # transfer disabled -> scored cold again
-
-        # exploit-only fast path at scale (VERDICT r7 item 3): with the
-        # size threshold forced below this warehouse, a previously-duelled
-        # transferred order is exploited with ZERO episodes — and stays a
-        # warm start, never authority
-        monkeypatch.delenv("SKINNER_ORDER_TRANSFER", raising=False)
-        monkeypatch.setenv("SKINNER_TRANSFER_EXPLOIT_ROWS", "1")
-        g2 = _pop_scope_sigs()
-        before = G.adaptive_counters()
-        r5 = adaptive_reorder(spark.sql(q), episodes=2)
-        after = G.adaptive_counters()
-        assert getattr(r5, "reason", None) == "transfer-exploit"
-        assert r5.best_order == r1.best_order
-        assert not r5.episodes
-        assert after["exploit_hits"] == before["exploit_hits"] + 1
-        assert after["episodes"] == before["episodes"]
-        assert g2.signature not in G._ORDER_CACHE
-
-        # threshold disabled (=0): the duel runs again even with a
-        # transfer entry present
-        monkeypatch.setenv("SKINNER_TRANSFER_EXPLOIT_ROWS", "0")
-        _pop_scope_sigs()
-        r6 = adaptive_reorder(spark.sql(q), episodes=2)
-        assert r6.episodes
-    finally:
-        register_views(spark, sf_dir)
-
-
-def test_order_cache_hit(spark, monkeypatch):
+def test_order_cache_hit(spark):
     q = """SELECT COUNT(*) AS c FROM customer, orders, nation
            WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey
              AND o_totalprice > 1234.5"""
-    # isolate from the cross-session persisted cache: a previous process may
-    # already have learned this exact signature
+    # earlier tests may already have learned this shape (same tables and
+    # edges, other filter constants)
     from skinnerdb_spark.plans import graph as G
 
-    monkeypatch.setenv("SKINNER_ORDER_CACHE_PERSIST", "0")
     g = extract_query_graph(spark.sql(q))
-    G._ORDER_CACHE.pop(g.signature, None)
-    G._ORDER_CACHE.pop(g.shape_sig, None)
-    G._ORDER_CACHE.pop(g.transfer_sig, None)
+    G._ORDER_CACHE.pop(g.cache_key, None)
     r1 = adaptive_reorder(spark.sql(q), episodes=2)
     # learned by scoring (predetermined: the two seeds share one bound-set
     # sequence), not served from a cache
@@ -315,6 +238,36 @@ def test_order_cache_hit(spark, monkeypatch):
     assert getattr(r2, "reason", None) == "cached"
     assert not r2.episodes
     assert r2.best_order == r1.best_order
+
+
+def test_learned_orders_stay_in_process(spark):
+    """Learned orders live in this process only: a cold adaptive_reorder
+    learns and caches its order, but writes no
+    spark-warehouse/joinorder_cache.json and creates no file in the
+    checkout's root or its spark-warehouse directory."""
+    import os
+
+    from skinnerdb_spark.plans import graph as G
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    warehouse = os.path.join(root, "spark-warehouse")
+    path = os.path.join(warehouse, "joinorder_cache.json")
+
+    def snapshot():
+        listing = [sorted(os.listdir(d)) if os.path.isdir(d) else None
+                   for d in (root, warehouse)]
+        st = os.stat(path) if os.path.exists(path) else None
+        return listing, st and (st.st_size, st.st_mtime_ns)
+
+    q = ("SELECT COUNT(*) AS c FROM customer, orders, nation "
+         "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey "
+         "AND o_totalprice > 557.0")
+    g = extract_query_graph(spark.sql(q))
+    G._ORDER_CACHE.pop(g.cache_key, None)
+    before = snapshot()
+    res = adaptive_reorder(spark.sql(q), episodes=2)
+    assert res.episodes and G._ORDER_CACHE[g.cache_key] == res.best_order
+    assert snapshot() == before
 
 
 def test_broadcast_hint_survives_reorder(spark):
@@ -460,33 +413,6 @@ def test_deep_corpus_has_twenty_plus_queries():
     assert len(_deep_corpus()) >= 20
 
 
-def test_order_cache_persists_across_processes(spark, tmp_path, monkeypatch):
-    """Learned orders survive process restarts (the reference rebuilds its
-    UCT state every session; we persist, like the IVF index): save writes an
-    atomic JSON snapshot, load merges it back with in-process entries
-    winning, and tuple keys round-trip exactly."""
-    from skinnerdb_spark.plans import graph as G
-
-    # keep the test away from the REAL persisted file: no auto-save, and the
-    # synthetic key must never leak into spark-warehouse/joinorder_cache.json
-    monkeypatch.setenv("SKINNER_ORDER_CACHE_PERSIST", "0")
-    path = str(tmp_path / "orders.json")
-    key = (("a", "b"), ("file:/x",), (("a", "k", "b", "k"),), ("(a.k = 1)",))
-    G._cache_put(key, ("a", "b"))
-    G.save_order_cache(path)
-
-    saved = dict(G._ORDER_CACHE)
-    G._ORDER_CACHE.clear()
-    assert G.load_order_cache(path) >= 1
-    assert G._ORDER_CACHE[key] == ("a", "b"), "tuple keys must round-trip"
-    # in-process entries win over the file on merge
-    G._ORDER_CACHE[key] = ("b", "a")
-    G.load_order_cache(path)
-    assert G._ORDER_CACHE[key] == ("b", "a")
-    G._ORDER_CACHE.clear()
-    G._ORDER_CACHE.update(saved)
-
-
 def test_budgeted_episode_cancellation_and_learning(spark, sf_dir):
     """Budgeted episodes (r6 — the reference's 500-step episode budget,
     JoinConfig.java:22, in Spark idiom): an episode exceeding the wall-clock
@@ -521,21 +447,12 @@ def test_budgeted_episode_cancellation_and_learning(spark, sf_dir):
 
     # end-to-end: a tiny budget times out every episode, yet the winning
     # order still executes in full and matches Catalyst
-    import os
-
     from skinnerdb_spark.plans import graph
 
-    os.environ["SKINNER_ORDER_CACHE_PERSIST"] = os.environ.get(
-        "SKINNER_ORDER_CACHE_PERSIST", "1"
-    )
     df = spark.sql(
         "SELECT COUNT(*) AS n FROM lineitem, orders, supplier "
         "WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey"
     )
-    g = graph.extract_query_graph(df)
-    graph._ORDER_CACHE.pop(g.signature, None)
-    graph._ORDER_CACHE.pop(g.shape_sig, None)
-    graph._ORDER_CACHE.pop(g.transfer_sig, None)
     res = graph.adaptive_reorder(
         spark.sql(
             "SELECT COUNT(*) AS n FROM lineitem, orders, supplier "
@@ -601,13 +518,11 @@ def test_adaptive_reorder_swapped_first_pair_runs_no_episode(spark, monkeypatch)
     the "not measured" marker."""
     from skinnerdb_spark.plans import graph as G
 
-    monkeypatch.setenv("SKINNER_ORDER_CACHE_PERSIST", "0")
     q = ("SELECT COUNT(*) AS c FROM customer, orders, nation "
          "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey "
          "AND o_totalprice > 555.0")
     g = G.extract_query_graph(spark.sql(q))
-    for k in (g.signature, g.shape_sig, g.transfer_sig):
-        G._ORDER_CACHE.pop(k, None)
+    G._ORDER_CACHE.pop(g.cache_key, None)
     calls = _count_episodes(monkeypatch, G)
     before = G.adaptive_counters()["episodes"]
     res = G.adaptive_reorder(spark.sql(q), episodes=2, episode_budget_s=30.0)
@@ -619,7 +534,7 @@ def test_adaptive_reorder_swapped_first_pair_runs_no_episode(spark, monkeypatch)
         assert e.predetermined and not e.measured and not e.memo
         assert e.joins == () and e.seconds == 0.0 and e.cout is None
     assert res.best_order == first.order
-    assert G._ORDER_CACHE[g.signature] == first.order  # learned, and cached
+    assert G._ORDER_CACHE[g.cache_key] == first.order  # learned, and cached
     assert res.df.collect() == spark.sql(q).collect()
 
 
@@ -679,14 +594,13 @@ def test_score_orders_runs_a_job_only_when_it_can_change_the_winner():
     assert score_orders(cands, build, 0, count=count) == (cands[0], [])
 
 
-def test_empty_sample_arm_reports_every_join(spark, monkeypatch):
+def test_empty_sample_arm_reports_every_join(spark):
     """An arm whose sampled result is empty still reads the output rows of
     every join. Left alone, AQE's empty-relation propagation would replace
     the joins above an empty stage with an EmptyRelation and leave no join
     metric to read; the rule is excluded only while the episode runs."""
     from skinnerdb_spark.plans import graph as G
 
-    monkeypatch.setenv("SKINNER_ORDER_CACHE_PERSIST", "0")
     q = ("SELECT COUNT(*) AS c FROM customer, orders, nation, region "
          "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey "
          "AND n_regionkey = r_regionkey AND r_name = 'NOWHERE'")
@@ -807,7 +721,6 @@ def test_explain_shows_predetermined_decision(spark, sf_dir):
 
 _DETERMINISM_SCRIPT = r"""
 import json, os, sys
-os.environ["SKINNER_ORDER_CACHE_PERSIST"] = "0"
 from skinnerdb_spark.catalog import register_views
 from skinnerdb_spark.plans.graph import adaptive_reorder
 from skinnerdb_spark.session import get_spark

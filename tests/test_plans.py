@@ -569,3 +569,36 @@ def test_r9_session2b_entries_plan_shapes(spark, sf_dir):
     plan = executed("ev_markov_stationary")
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan, plan[:600]
     assert "FileScan parquet" not in plan
+
+
+def test_plan_dot_shows_the_executed_aqe_plan(spark, sf_dir):
+    """plan_dot on an executed adaptive plan: the AQE and query-stage shells
+    are unwrapped, the nodes are the ones the metric walker visits (in the
+    same order), every node but the root has one edge to its parent, and
+    the operators carry their run's row counts."""
+    import re
+
+    from skinnerdb_spark.catalog import register_views
+    from skinnerdb_spark.plans.metrics import _iter_nodes, plan_dot, run_and_count
+
+    register_views(spark, sf_dir)
+    df = spark.sql(
+        "SELECT o_orderpriority, COUNT(*) AS c FROM orders "
+        "JOIN customer ON c_custkey = o_custkey GROUP BY o_orderpriority"
+    )
+    n = run_and_count(df)
+    root = df._jdf.queryExecution().executedPlan()
+    assert root.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    dot = plan_dot(df)
+    labels = re.findall(r'n(\d+) \[label="([^"]*)"\];', dot)
+    edges = re.findall(r"n(\d+) -> n(\d+);", dot)
+    names = [label.split("\\n")[0] for _, label in labels]
+    assert not any(x == "AdaptiveSparkPlan" or x.endswith("QueryStage") for x in names)
+    assert names == [
+        x.getClass().getSimpleName().replace("Exec", "") for x in _iter_nodes(root)
+    ]
+    assert {"ShuffleExchange", "BroadcastExchange", "BroadcastHashJoin"} <= set(names)
+    assert len(edges) == len(labels) - 1
+    assert sorted(int(child) for child, _ in edges) == list(range(2, len(labels) + 1))
+    agg = [label for label in (lb for _, lb in labels) if label.startswith("HashAggregate")]
+    assert f"rows={n}" in agg[0], agg

@@ -110,7 +110,6 @@ def main() -> int:
     # learned-order cache (its contents vary with session history) or run
     # sampled episodes at build time
     os.environ["SKINNER_ADAPTIVE_DISABLE"] = "1"
-    os.environ["SKINNER_ORDER_CACHE_PERSIST"] = "0"
     from skinnerdb_spark.session import get_spark
 
     spark = get_spark(app_name="gate-check")
