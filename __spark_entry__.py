@@ -249,7 +249,7 @@ _REVERIFY: list[str] = [
     # already listed above):
     "dedup_clusters",
     # r12 (ADVICE r11 medium): the entry-body .cache() frames route
-    # through the dedup _memo LRU so eviction unpersists them (storage no
+    # through the state.memo LRU so eviction unpersists them (storage no
     # longer grows unbounded across a multi-SF session). Values unchanged
     # — same frames, tracked persist; oracle canonical-equal at sf0.01.
     # The approx_* / ev_countmin_sketch siblings of the same change are
@@ -285,6 +285,21 @@ _REVERIFY: list[str] = [
     # per consumer (sf10 same-session A/B 29.4/13.6 -> 14.0/10.3 s; oracle
     # canonical-equal at sf0.01/sf0.1).
     "text_tfidf_topk",
+    # per-application state moved to skinnerdb_spark/state.py: the seed
+    # frame is a memo entry in the state's child session (was a bare
+    # .cache() in a module-private session dict)
+    "rcte_order_chains",
+    # the order-position frame is a memo entry (was a bare .cache()) and
+    # the script runs in the session that holds its view
+    "sql_script_chain_report",
+    # memo is imported at module top instead of inside the entry body
+    "sim_bruteforce_topk",
+    # (also changed by the same move, already listed above:
+    # adaptive_star_join, which now wraps a DataFrame-API join chain in
+    # queries.util.adaptive; approx_bloom_semijoin, approx_distinct_kmv,
+    # approx_kmv_merge, docs_dsir_weights, docs_kn_bigram_score,
+    # docs_pmi_topk, ev_countmin_sketch, name_edit_distance_pairs,
+    # text_tfidf_topk)
 ]
 
 #: pinned to the very FRONT of the gate window: new registry entries for

@@ -423,7 +423,7 @@ class Engine:
         res = adaptive_reorder(self.spark.sql(text), use_cache=False, **kw)
         self.last_adaptive = res
         if not res.best_order:
-            return f"not adaptive: {getattr(res, 'reason', 'ineligible')}"
+            return f"not adaptive: {res.reason}"
         lines = [f"chosen order: {' > '.join(res.best_order)}"]
         if _predetermined(res.episodes):
             lines.append(f"({_unmeasured_note(res.episodes)})")
@@ -467,7 +467,7 @@ class Engine:
         res = adaptive_reorder(self.spark.sql(text), use_cache=False, **kw)
         self.last_adaptive = res
         if not res.best_order:
-            return _render_uct_dot(None, [], getattr(res, "reason", "ineligible"))
+            return _render_uct_dot(None, [], res.reason)
         return _render_uct_dot(tuple(res.best_order), res.episodes)
 
     def explain_adaptive_dot_snapshots(
@@ -488,7 +488,7 @@ class Engine:
         res = adaptive_reorder(self.spark.sql(text), use_cache=False, **kw)
         self.last_adaptive = res
         if not res.best_order:
-            return [_render_uct_dot(None, [], getattr(res, "reason", "ineligible"))]
+            return [_render_uct_dot(None, [], res.reason)]
         best = tuple(res.best_order)
         cuts = list(range(every, len(res.episodes), every)) + [len(res.episodes)]
         return [_render_uct_dot(best, res.episodes[:k]) for k in cuts]

@@ -42,6 +42,7 @@ from pyspark.sql.window import Window
 
 from skinnerdb_spark.queries.util import ranked_topk, read_table, stats_exact
 from skinnerdb_spark.registry import register
+from skinnerdb_spark.state import memo
 
 #: session gap reused from streaming.windows (30 min); re-declared to avoid
 #: an import cycle — test_components pins the two constants equal.
@@ -441,9 +442,7 @@ def shared_co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization the self-join re-executes per reference — at sf10 that
     was the bulk of pagerank's 52 s. The cache is stats-bearing
     (InMemoryRelation), so Catalyst still sizes the downstream joins."""
-    from skinnerdb_spark.operators.dedup import _memo
-
-    return _memo(spark, sf_dir, "co_edges", lambda: _co_edges(spark, sf_dir))
+    return memo(spark, sf_dir, "co_edges", lambda: _co_edges(spark, sf_dir))
 
 
 @register(
@@ -544,8 +543,6 @@ def shared_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     before-plan). Two narrow int64 columns per doc — far below the
     verbatim-spans heap-competition threshold — and stats-bearing, so AQE
     still sizes the scoring join."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     def build() -> DataFrame:
         d = read_table(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull() & (F.length("text") > 0)
@@ -557,7 +554,7 @@ def shared_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dl"),
         )
 
-    return _memo(spark, sf_dir, "doc_len", build)
+    return memo(spark, sf_dir, "doc_len", build)
 
 
 def shared_bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -568,8 +565,6 @@ def shared_bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-aggregated per (doc, term). docs_bm25_topk and docs_hybrid_rrf
     both derive their scoring AND the df counts from this one frame, so
     the explode runs once per session instead of once per entry."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     def build() -> DataFrame:
         d = read_table(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull() & (F.length("text") > 0)
@@ -584,7 +579,7 @@ def shared_bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
         )
 
-    return _memo(spark, sf_dir, "bm25_tf", build)
+    return memo(spark, sf_dir, "bm25_tf", build)
 
 
 @register(

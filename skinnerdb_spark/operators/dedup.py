@@ -29,21 +29,11 @@ from skinnerdb_spark.operators.textprims import (
 )
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
+from skinnerdb_spark.state import memo
 
 N_HASHES = 8  # minhash signature length
 N_BANDS = 4  # LSH bands (rows per band = 2)
 SIMHASH_BITS = 32
-
-#: session-lifetime memo for the shared LSH intermediates (signatures,
-#: shingle sets, candidate pairs) — the LSH-family entries reuse one cached
-#: computation instead of re-shingling per query. Keyed on applicationId (a
-#: stable session identity: id(spark) can be reused by a new session after
-#: GC, handing out DataFrames bound to a dead JVM handle); LRU-capped, and
-#: eviction .unpersist()s the evicted DataFrame — dropping only the Python
-#: reference would leave the block in the JVM CacheManager, so the cap
-#: would bound this dict but not executor storage memory.
-_SHARED: dict[tuple, DataFrame] = {}
-_SHARED_CAP = 64
 
 #: conf key: LSH buckets larger than this are dropped from candidate
 #: generation (a degenerate band key — e.g. near-constant documents — would
@@ -53,24 +43,9 @@ LSH_MAX_BUCKET = "skinnerdb.lsh.maxBucket"
 _LSH_MAX_BUCKET_DEFAULT = 100_000
 
 
-def _memo(spark: SparkSession, sf_dir: str, key: str, builder) -> DataFrame:
-    k = (spark.sparkContext.applicationId, sf_dir, key)
-    if k in _SHARED:
-        _SHARED[k] = _SHARED.pop(k)  # move-to-end: true LRU recency order
-    else:
-        if len(_SHARED) >= _SHARED_CAP:
-            evicted = _SHARED.pop(next(iter(_SHARED)))
-            try:
-                evicted.unpersist(blocking=False)
-            except Exception:
-                pass  # owning session may already be stopped
-        _SHARED[k] = builder().cache()
-    return _SHARED[k]
-
-
 def shared_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached (doc_id, sig) minhash signatures for sf_dir's documents."""
-    return _memo(
+    return memo(
         spark, sf_dir, "sigs",
         lambda: minhash_signatures(read_table(spark, sf_dir, "documents")),
     )
@@ -90,7 +65,7 @@ def shared_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.array_distinct(shingles_expr("w", k=3)).alias("sh_set"))
             .withColumn("n", F.size("sh_set"))
         )
-    return _memo(spark, sf_dir, "shsets", build)
+    return memo(spark, sf_dir, "shsets", build)
 
 
 def shared_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,7 +85,7 @@ def shared_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
 
-    return _memo(spark, sf_dir, "shhashes", build)
+    return memo(spark, sf_dir, "shhashes", build)
 
 
 def cap_buckets(bands: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
@@ -178,7 +153,7 @@ def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
             .distinct()
         )
-    return _memo(spark, sf_dir, f"cand@{cap}", build)
+    return memo(spark, sf_dir, f"cand@{cap}", build)
 
 
 # --------------------------------------------------------------------------
@@ -477,7 +452,7 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shared_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached (doc_id, simhash, bucket16) — one tiny row per doc;
     the pairs entry reuses it instead of re-running the signature pass."""
-    return _memo(spark, sf_dir, "simhash", lambda: _simhash_sigs(spark, sf_dir))
+    return memo(spark, sf_dir, "simhash", lambda: _simhash_sigs(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -532,7 +507,7 @@ def shared_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     must propagate here (and to shared_clusters downstream) instead of
     serving pairs verified against the OLD candidate set."""
     cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    return _memo(
+    return memo(
         spark, sf_dir, f"verified_jaccard@{cap}",
         lambda: _exact_jaccard_on_candidates(spark, sf_dir),
     )
@@ -679,7 +654,7 @@ def shared_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster_n",
         )
 
-    return _memo(spark, sf_dir, f"clusters-{algo}@{cap}", build)
+    return memo(spark, sf_dir, f"clusters-{algo}@{cap}", build)
 
 
 #: keep-best representative selection per duplicate cluster — the decision
@@ -1229,7 +1204,7 @@ def shared_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-session cap change must rebuild the pairs, not serve ones computed
     under the old cap."""
     cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    return _memo(
+    return memo(
         spark, sf_dir, f"prefix_pairs@{cap}",
         lambda: _prefix_pairs_impl(spark, sf_dir),
     )

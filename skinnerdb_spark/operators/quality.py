@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
+from skinnerdb_spark.state import memo
 
 #: stop-word evidence list (Gopher uses an English function-word list; the
 #: synthetic corpus vocabulary contains these members of it)
@@ -270,12 +271,10 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memory cache (NOT DISK_ONLY: the frame is 4 int columns per
     # doc-bucket — ~0.3 GB at sf10, far below the verbatim-spans multi-GB
     # heap-competition threshold, and the 4 reads dominate the cost).
-    # r12 (ADVICE r11): tracked by the dedup _memo LRU so eviction
+    # r12 (ADVICE r11): tracked by the state.memo LRU so eviction
     # unpersists it instead of stranding one frame per sf_dir.
-    from skinnerdb_spark.operators.dedup import _memo
-
     _dbt = dbt
-    dbt = _memo(spark, sf_dir, "dsir_dbt", lambda: _dbt)
+    dbt = memo(spark, sf_dir, "dsir_dbt", lambda: _dbt)
     raw = dbt.groupBy("b").agg(F.sum("k").cast("bigint").alias("cr"))
     tgt = (
         dbt.filter(F.col("is_tgt") == 1)
@@ -639,11 +638,9 @@ def ev_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE corpus pass; cached because `truth` feeds three consumers with
     # different prunings (the dbt/no-ReusedExchange story above). r12
-    # (ADVICE r11): tracked by the dedup _memo LRU — raw .cache() was
+    # (ADVICE r11): tracked by the state.memo LRU — raw .cache() was
     # never unpersisted across a multi-SF session.
-    from skinnerdb_spark.operators.dedup import _memo
-
-    truth = _memo(
+    truth = memo(
         spark, sf_dir, "cms_truth",
         lambda: e.groupBy("user_id").agg(
             F.count(F.lit(1)).cast("bigint").alias("true_n")

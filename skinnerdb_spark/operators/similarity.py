@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 from skinnerdb_spark.operators.textprims import fan_out, hex_high_sql
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
+from skinnerdb_spark.state import memo
 
 DIM = 64  # embedding dimensionality in the test warehouse
 N_PLANES = 8  # sign-LSH hyperplanes
@@ -93,8 +94,6 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured against — and the input of knn_label_vote and the bench recall
     section, so the (tiny) result is memoized per (session, warehouse) like
     the other shared similarity intermediates."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     def build():
         e = read_table(spark, sf_dir, "embeddings")
         normed = e.select("vec_id", "embedding", norm_exact("embedding").alias("nrm"))
@@ -123,7 +122,7 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "neighbor_id", "cosine", "rnk")
         )
 
-    return _memo(spark, sf_dir, "brute_topk", build)
+    return memo(spark, sf_dir, "brute_topk", build)
 
 
 # --------------------------------------------------------------------------
@@ -355,8 +354,6 @@ def shared_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal -> 11.3 s integer, measured; max |sum| ~ 64 * 1e6 per plane,
     nowhere near int64). Quantization moves a bit only when a projection
     sits within ~1e-6 of zero — measured recall is unchanged (0.96)."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     def build():
         e = read_table(spark, sf_dir, "embeddings")
         qe = e.select(
@@ -396,7 +393,7 @@ def shared_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _memo(spark, sf_dir, "simbits", build)
+    return memo(spark, sf_dir, "simbits", build)
 
 
 def _multi_signatures_df(
@@ -519,8 +516,6 @@ def shared_query_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal projection MAGNITUDES ordered by plane index. Query-side only
     (vec_id < N_QUERIES), so the frame is N_QUERIES rows whatever the
     corpus size — the margin ranking never touches corpus-scale data."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     def build():
         e = read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < N_QUERIES)
         qe = e.select(
@@ -553,7 +548,7 @@ def shared_query_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _memo(spark, sf_dir, "qmargins", build)
+    return memo(spark, sf_dir, "qmargins", build)
 
 
 def _margin_probe_candidates(

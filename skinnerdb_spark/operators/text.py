@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from skinnerdb_spark.operators.textprims import fan_out, oracle_shingles_cte, shingles_expr
 from skinnerdb_spark.queries.util import read_table, stats_exact
 from skinnerdb_spark.registry import register
+from skinnerdb_spark.state import memo
 
 
 def _occurrences(text: F.Column, needle: str) -> F.Column:
@@ -338,8 +339,6 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-audited; warm run 1.0 s at sf0.1). At a 100M-term web vocabulary,
     drop the broadcast hint and let AQE pick the exchange. No UDFs, no
     collects."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     d = read_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     )
@@ -356,7 +355,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounds it to one explode per session (tracked LRU persist — .cache()
     # is MEMORY_AND_DISK, so an oversized tf spills instead of evicting
     # execution memory). sf10 same-session A/B: 29.4/13.6 -> 14.0/10.3 s.
-    tf = _memo(spark, sf_dir, "tfidf_tf", _tf)
+    tf = memo(spark, sf_dir, "tfidf_tf", _tf)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     from pyspark.sql.window import Window
@@ -488,9 +487,7 @@ def name_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old array_union's in-row dedup of coinciding deletions, and the
     # frame is memoized so both join sides read one cached build. sf1:
     # cold 67.9 -> 13.3 s, warm 9.7 -> 4.0 s, output identical.
-    from skinnerdb_spark.operators.dedup import _memo
-
-    keyed = _memo(spark, sf_dir, "ned_keyed", lambda: deletion_keys(names))
+    keyed = memo(spark, sf_dir, "ned_keyed", lambda: deletion_keys(names))
     a = keyed.select(F.col("name").alias("name_a"), "k")
     b = keyed.select(F.col("name").alias("name_b"), "k")
     # verify BEFORE dedup: the in-row Levenshtein is cheaper than shuffling
@@ -878,7 +875,6 @@ def shared_word_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-entry build: merges fold over the (word, cnt) table, the piece
     alphabet ranks via ranked_topk (no unpartitioned window), the summary
     broadcasts onto consumers' corpus scans."""
-    from skinnerdb_spark.operators.dedup import _memo
     from skinnerdb_spark.queries.util import ranked_topk
 
     def build() -> DataFrame:
@@ -907,7 +903,7 @@ def shared_word_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _memo(spark, sf_dir, "bpe_we", build)
+    return memo(spark, sf_dir, "bpe_we", build)
 
 
 @register(
@@ -1043,9 +1039,7 @@ def docs_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shared_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached (doc_id, n_bigrams, lm_score) — see
     :func:`docs_bigram_lm_score` for the algorithm contract."""
-    from skinnerdb_spark.operators.dedup import _memo
-
-    return _memo(spark, sf_dir, "bigram_lm", lambda: _bigram_lm_scores(spark, sf_dir))
+    return memo(spark, sf_dir, "bigram_lm", lambda: _bigram_lm_scores(spark, sf_dir))
 
 
 def shared_bigram_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1061,8 +1055,6 @@ def shared_bigram_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
     dbt story exactly. The cache bounds that to one explode per session;
     the frame is the per-doc DISTINCT-bigram count (narrower than the
     exploded instance stream) and both LM entries read it."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     def build() -> DataFrame:
         d = read_table(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull() & (F.length("text") > 0)
@@ -1077,20 +1069,30 @@ def shared_bigram_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("k")
         )
 
-    return _memo(spark, sf_dir, "bigram_inst", build)
+    return memo(spark, sf_dir, "bigram_inst", build)
+
+
+def shared_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-cached (a, b, cab) corpus bigram counts, c(ab) = SUM(k) over
+    :func:`shared_bigram_instances` (exact). The vocab^2-bounded model
+    feeds several consumers with different prunings (ca, cb, ntot and the
+    scoring join of both bigram LMs; stot and the scored join of
+    docs_pmi_topk), so ReusedExchange does not fire and, uncached, each
+    consumer re-aggregated the instances (the docs_dsir_weights
+    precedent)."""
+    return memo(
+        spark, sf_dir, "bigram_cab",
+        lambda: shared_bigram_instances(spark, sf_dir)
+        .groupBy("a", "b")
+        .agg(F.sum("k").cast("bigint").alias("cab")),
+    )
 
 
 def _bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE corpus explode: the (doc_id, a, b) pre-aggregate is the shared
-    # family memo and the corpus-wide model derives from it — c(ab) =
-    # SUM(k) over doc_id, exactly.
+    # family memo and the corpus-wide model derives from it.
     inst = shared_bigram_instances(spark, sf_dir)
-    # cab feeds ca and the scoring join with different prunings (no
-    # ReusedExchange); cache the vocab^2-bounded model so the pass over
-    # inst runs once (the docs_dsir_weights precedent).
-    cab = (
-        inst.groupBy("a", "b").agg(F.sum("k").cast("bigint").alias("cab")).cache()
-    )
+    cab = shared_bigram_counts(spark, sf_dir)
     ca = cab.groupBy("a").agg(F.sum("cab").cast("bigint").alias("ca"))
     j = (
         inst.join(cab, ["a", "b"])
@@ -1159,7 +1161,7 @@ def docs_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio is one double expression over exact integers with an identical
     operation tree on both sides. Scale shape (r12, guide §2.1
     re-computation): the bigram counts derive from the session-memoized
-    family pre-aggregate (``shared_bigram_instances``; cab = SUM(k) is the
+    family model (``shared_bigram_counts``; cab = SUM(k) is the
     corpus count exactly — integer arithmetic) and the unigram counts are
     their own memoized vocab-sized frame — the old inline plan re-executed
     the corpus tokenize+explode per consumer (uni feeds tot/ca/cb and big
@@ -1169,7 +1171,6 @@ def docs_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     under AQE, scalar totals ride broadcast 1-row frames, and the top-k is
     `ranked_topk` (TakeOrderedAndProject + k x k rank join — no
     unpartitioned window)."""
-    from skinnerdb_spark.operators.dedup import _memo
     from skinnerdb_spark.queries.util import ranked_topk
 
     def _uni() -> DataFrame:
@@ -1183,15 +1184,9 @@ def docs_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
 
-    uni = _memo(spark, sf_dir, "pmi_uni", _uni)
+    uni = memo(spark, sf_dir, "pmi_uni", _uni)
     tot = uni.agg(F.sum("c").cast("bigint").alias("t"))
-    inst = shared_bigram_instances(spark, sf_dir)
-    big = _memo(
-        spark, sf_dir, "pmi_cab",
-        lambda: inst.groupBy("a", "b").agg(
-            F.sum("k").cast("bigint").alias("cab")
-        ),
-    )
+    big = shared_bigram_counts(spark, sf_dir)
     stot = big.agg(F.sum("cab").cast("bigint").alias("s"))
     ua = uni.select(F.col("term").alias("a"), F.col("c").alias("ca"))
     ub = uni.select(F.col("term").alias("b"), F.col("c").alias("cb"))
@@ -1284,16 +1279,12 @@ def docs_kn_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the model joins broadcast when small / co-partition on the bigram key
     otherwise; n1tot is a 1-row broadcast."""
     # ONE corpus explode (r11, same fold as _bigram_lm_scores): the
-    # (doc_id, a, b) pre-aggregate is the shared family memo; the bigram
-    # model and all three N1+ distinct-context counts derive from it
-    # exactly (c(ab) = SUM(k) over doc_id). cab is cached because its FOUR
-    # consumers (ca, cb, ntot, the scoring join) prune it differently —
-    # without the cache each one re-aggregated inst (5 corpus explodes in
-    # the before-plan, plans/r11/docs_kn_bigram_score_before.txt).
+    # (doc_id, a, b) pre-aggregate and the bigram model are shared family
+    # memos; all three N1+ distinct-context counts derive from the model
+    # exactly (5 corpus explodes in the uncached before-plan,
+    # plans/r11/docs_kn_bigram_score_before.txt).
     inst = shared_bigram_instances(spark, sf_dir)
-    cab = (
-        inst.groupBy("a", "b").agg(F.sum("k").cast("bigint").alias("cab")).cache()
-    )
+    cab = shared_bigram_counts(spark, sf_dir)
     ca = cab.groupBy("a").agg(
         F.sum("cab").cast("bigint").alias("ca"),
         F.count(F.lit(1)).cast("bigint").alias("n1a"),

@@ -32,7 +32,6 @@ semantics, only order.
 from __future__ import annotations
 
 import os
-import weakref
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -47,6 +46,7 @@ from skinnerdb_spark.plans.joinorder import (
     is_connected_order,
     score_orders,
 )
+from skinnerdb_spark.state import jvm_class
 
 #: unary operators above the join subtree that replay unchanged over the
 #: reordered chain (Filter is special-cased: directly above the join it is
@@ -115,43 +115,6 @@ class ExtractionError(ValueError):
     """Query shape not eligible for adaptive reordering (caller falls back)."""
 
 
-#: per-application cache of resolved JavaClass handles, keyed by
-#: (applicationId, dotted path). Every dotted component of a
-#: `spark._jvm.a.b.c.D` chain is its own py4j reflection ROUND TRIP
-#: (~0.3 ms), and extraction resolves the same four classes on every query
-#: — ~40 ms/query of pure class lookup at the bench's 172-query corpus
-#: (r12, measured by cProfile: 220 JVMView __getattr__ calls per 10
-#: extractions). A stopped and restarted session is a new application, so
-#: no handle resolved for a dead app is ever served; the first lookup of a
-#: new app drops the old app's handles.
-_JVM_CLASSES: dict[tuple[str, str], Any] = {}
-
-#: applicationId per live SparkContext object: reading it costs two py4j
-#: round trips, more than most handle lookups it keys
-_APP_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def _app_id(spark: SparkSession) -> str:
-    sc = spark.sparkContext
-    app = _APP_IDS.get(sc)
-    if app is None:
-        app = _APP_IDS[sc] = sc.applicationId
-        for k in [k for k in _JVM_CLASSES if k[0] != app]:
-            del _JVM_CLASSES[k]
-    return app
-
-
-def _jcls(spark: SparkSession, path: str) -> Any:
-    key = (_app_id(spark), path)
-    cls = _JVM_CLASSES.get(key)
-    if cls is None:
-        cls = spark._jvm
-        for part in path.split("."):
-            cls = getattr(cls, part)
-        _JVM_CLASSES[key] = cls
-    return cls
-
-
 def _j(spark: SparkSession, seq: Any) -> list:
     """Scala Seq -> Python list, by INDEX access — never by py4j iteration.
 
@@ -160,19 +123,19 @@ def _j(spark: SparkSession, seq: Any) -> list:
     per occurrence; a typical extraction iterates ~12 collections, which was
     ~90% of a measured 342 ms/query extraction cost. size()+get(i) performs
     the same traversal exception-free (measured: extraction drops to ~30 ms)."""
-    jl = _jcls(spark, "scala.jdk.javaapi.CollectionConverters").asJava(seq)
+    jl = jvm_class(spark, "scala.jdk.javaapi.CollectionConverters").asJava(seq)
     return [jl.get(i) for i in range(jl.size())]
 
 
 def _scala_seq(spark: SparkSession, items: list) -> Any:
-    al = _jcls(spark, "java.util.ArrayList")()
+    al = jvm_class(spark, "java.util.ArrayList")()
     for it in items:
         al.add(it)
-    return _jcls(spark, "scala.jdk.javaapi.CollectionConverters").asScala(al).toSeq()
+    return jvm_class(spark, "scala.jdk.javaapi.CollectionConverters").asScala(al).toSeq()
 
 
 def _of_rows(spark: SparkSession, plan: Any) -> DataFrame:
-    jdf = _jcls(spark, "org.apache.spark.sql.classic.Dataset").ofRows(
+    jdf = jvm_class(spark, "org.apache.spark.sql.classic.Dataset").ofRows(
         spark._jsparkSession, plan
     )
     return DataFrame(jdf, spark)
@@ -181,7 +144,7 @@ def _of_rows(spark: SparkSession, plan: Any) -> DataFrame:
 def _col(spark: SparkSession, expr: Any) -> Column:
     from pyspark.sql.classic.column import Column as _CCol
 
-    jc = _jcls(spark, "org.apache.spark.sql.classic.ExpressionUtils").column(expr)
+    jc = jvm_class(spark, "org.apache.spark.sql.classic.ExpressionUtils").column(expr)
     return _CCol(jc)
 
 
@@ -439,7 +402,7 @@ def extract_query_graph(df: DataFrame) -> QueryGraph:
             attr_leaf[aid] = name
 
     # -- classify the conjunct pool
-    has_subquery = _jcls(
+    has_subquery = jvm_class(
         spark, "org.apache.spark.sql.catalyst.expressions.SubqueryExpression"
     )
     local_filters: dict[str, list[Any]] = {n: [] for n in names}
@@ -651,21 +614,15 @@ def adaptive_reorder(
     # tools/gate_check.py uses it so plan fingerprints don't vary with the
     # learned-order cache state.
     if os.environ.get("SKINNER_ADAPTIVE_DISABLE") == "1":
-        res = AdaptiveJoinResult(df, ())
-        res.reason = "disabled via SKINNER_ADAPTIVE_DISABLE"  # type: ignore[attr-defined]
-        return res
+        return AdaptiveJoinResult(df, (), reason="disabled via SKINNER_ADAPTIVE_DISABLE")
     try:
         graph = extract_query_graph(df)
     except ExtractionError as e:
-        res = AdaptiveJoinResult(df, ())
-        res.reason = str(e)  # type: ignore[attr-defined]
-        return res
+        return AdaptiveJoinResult(df, (), reason=str(e))
 
     cands = connected_orders(graph.names, graph.edges, max_orders=max_orders)
     if not cands:
-        res = AdaptiveJoinResult(df, ())
-        res.reason = "no connected left-deep order"  # type: ignore[attr-defined]
-        return res
+        return AdaptiveJoinResult(df, (), reason="no connected left-deep order")
 
     # cache lookup happens BEFORE any sampling: a hit (the common case for
     # benchmark directories and dashboards) pays just the chain rebuild.
@@ -682,9 +639,7 @@ def adaptive_reorder(
     if cached is not None and is_connected_order(cached, graph.names, graph.edges):
         _COUNTERS["cache_hits"] += 1
         chain = build_graph_chain(graph, cached)
-        res = AdaptiveJoinResult(finish(graph, chain), cached)
-        res.reason = "cached"  # type: ignore[attr-defined]
-        return res
+        return AdaptiveJoinResult(finish(graph, chain), cached, reason="cached")
     if len(cands) == 1:
         chain = build_graph_chain(graph, cands[0])
         return AdaptiveJoinResult(finish(graph, chain), cands[0])

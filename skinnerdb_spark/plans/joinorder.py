@@ -137,38 +137,6 @@ def greedy_orders(
     return out
 
 
-def build_join_chain(
-    dfs: dict[str, DataFrame],
-    order: tuple[str, ...],
-    edges: list[JoinEdge],
-) -> DataFrame:
-    """Materialize a left-deep join order as a DataFrame chain; every edge
-    whose both sides are bound attaches at the earliest position (the
-    reference's predicate placement, LeftDeepPlan.java:54-124 — Catalyst would
-    do the same, we just keep the order pinned)."""
-    acc = dfs[order[0]]
-    bound = {order[0]}
-    used: set[int] = set()
-    for t in order[1:]:
-        conds = []
-        for i, e in enumerate(edges):
-            if i in used or not e.touches(t):
-                continue
-            if e.other(t) in bound:
-                lc = e.left_col if e.left_table == t else e.right_col
-                oc = e.right_col if e.left_table == t else e.left_col
-                conds.append(dfs[t][lc] == acc[oc])
-                used.add(i)
-        if not conds:
-            raise ValueError(f"order {order} joins {t} with no bound edge (cartesian)")
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond & c
-        acc = acc.join(dfs[t], cond)
-        bound.add(t)
-    return acc
-
-
 @dataclass
 class EpisodeStats:
     order: tuple[str, ...]
@@ -337,43 +305,5 @@ class AdaptiveJoinResult:
     df: DataFrame
     best_order: tuple[str, ...]
     episodes: list[EpisodeStats] = field(default_factory=list)
-
-
-def adaptive_join(
-    dfs: dict[str, DataFrame],
-    edges: list[JoinEdge],
-    fact: str | None = None,
-    episodes: int = 8,
-    sample_fraction: float = 0.05,
-    max_orders: int = 16,
-    seed: int = 42,
-    episode_budget_s: float | None = None,
-) -> AdaptiveJoinResult:
-    """Join order chosen by sampled C_out (see :func:`score_orders`).
-
-    The designated fact table (first input if not given) is sampled with a
-    fixed seed and the first ``episodes`` connected orders are scored on
-    it. With ``episode_budget_s`` set, an episode exceeding the wall-clock
-    budget is CANCELLED and ranks last (see :func:`budgeted_count` — the
-    reference's 500-step episode budget in Spark idiom); the winner always
-    executes in full, unbudgeted, on the unsampled inputs. Results are
-    identical for every order (inner joins commute); only the physical plan
-    differs.
-    """
-    tables = list(dfs)
-    fact = fact or tables[0]
-    cands = connected_orders(tables, edges, max_orders=max_orders)
-    # prefer orders that start at the fact table (probe-side last heuristic
-    # falls out of broadcasting the dims)
-    cands.sort(key=lambda o: (o[0] != fact, o))
-    if not cands:
-        raise ValueError("no connected join order exists (query graph is disconnected)")
-    if len(cands) == 1:
-        return AdaptiveJoinResult(build_join_chain(dfs, cands[0], edges), cands[0])
-
-    sampled = dict(dfs)
-    sampled[fact] = dfs[fact].sample(fraction=sample_fraction, seed=seed)
-    best, stats = score_orders(
-        cands, lambda o: build_join_chain(sampled, o, edges), episodes, episode_budget_s
-    )
-    return AdaptiveJoinResult(build_join_chain(dfs, best, edges), best, stats)
+    #: why no order was scored: "cached", or why the query was not reordered
+    reason: str = ""

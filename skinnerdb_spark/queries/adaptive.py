@@ -1,12 +1,15 @@
 """Adaptive-join-ordered query — the reference's headline feature exercised
 inside the correctness gate.
 
-plans/joinorder.py scores candidate left-deep orders by sampled C_out (the
+The star join is built with the DataFrame API and wrapped in
+``queries.util.adaptive``: plans/graph.py extracts the join graph from the
+analyzed plan, scores candidate left-deep orders by sampled C_out (the
 summed join output rows of one execution on a seeded sample of the fact
-table) and the lowest-scoring order executes as a plain join chain. Inner joins
-commute, so the result must be — and is, oracle-verified — identical to
-Catalyst's own choice; only the physical plan differs. bench=False: this entry
-demonstrates the planner, the equivalent static plan is timed as tpch_q05.
+table) and executes the lowest-scoring order as a plain join chain. Inner
+joins commute, so the result must be — and is, oracle-verified — identical
+to Catalyst's own choice; only the physical plan differs. bench=False: this
+entry demonstrates the planner, the equivalent static plan is timed as
+tpch_q05.
 """
 
 from __future__ import annotations
@@ -15,8 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skinnerdb_spark.functions.exact import DS, dsum
-from skinnerdb_spark.plans.joinorder import JoinEdge, adaptive_join
-from skinnerdb_spark.queries.util import read_table, ts
+from skinnerdb_spark.queries.util import adaptive, read_table, ts
 from skinnerdb_spark.registry import register
 
 
@@ -34,23 +36,17 @@ from skinnerdb_spark.registry import register
     tags=("adaptive", "join"),
 )
 def adaptive_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dfs = {
-        "lineitem": read_table(spark, sf_dir, "lineitem"),
-        "orders": read_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderdate") >= ts("1996-01-01")
-        ),
-        "supplier": read_table(spark, sf_dir, "supplier"),
-        "nation": read_table(spark, sf_dir, "nation"),
-    }
-    edges = [
-        JoinEdge("lineitem", "l_orderkey", "orders", "o_orderkey"),
-        JoinEdge("lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        JoinEdge("supplier", "s_nationkey", "nation", "n_nationkey"),
-    ]
-    res = adaptive_join(
-        dfs, edges, fact="lineitem", episodes=4, sample_fraction=0.1, max_orders=8
-    )
-    return res.df.groupBy("n_name").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+    l = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= ts("1996-01-01"))
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
+    return adaptive(
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .join(s, l.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .groupBy("n_name")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+        )
     )

@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 from skinnerdb_spark.functions.exact import DS, dsum
 from skinnerdb_spark.queries.util import read_table, ts
 from skinnerdb_spark.registry import register
+from skinnerdb_spark.state import memo
 
 
 @register(
@@ -642,14 +643,12 @@ def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     honesty column) derives from the SAME cached distinct-key frame (r11:
     it previously re-ran the corpus scan + distinct as its own subtree —
     2 scans in the before-plan, 1 after), joined on the 3-row group key.
-    The cache is tracked by the dedup ``_memo`` LRU (r12, ADVICE r11): a
+    The cache is tracked by the ``state.memo`` LRU (r12, ADVICE r11): a
     raw ``.cache()`` here was never unpersisted, so a multi-SF session
     stranded one distinct-key frame per sf_dir in the JVM CacheManager;
     the memo's cap/eviction unpersists evicted frames."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     l = read_table(spark, sf_dir, "lineitem")
-    dk = _memo(
+    dk = memo(
         spark, sf_dir, "kmv_dk",
         lambda: l.select("l_returnflag", "l_partkey").distinct(),
     )
@@ -808,14 +807,12 @@ def approx_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns per distinct key, stats-bearing. The direct side must stay an
     independent computation over the full key frame (deriving it from
     part_bot would assume the very merge property the entry verifies).
-    r12 (ADVICE r11): the cache is tracked by the dedup ``_memo`` LRU so
+    r12 (ADVICE r11): the cache is tracked by the ``state.memo`` LRU so
     eviction unpersists it — a raw ``.cache()`` grew executor storage
     unbounded across a multi-SF session."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     l = read_table(spark, sf_dir, "lineitem")
     dk = l.select("l_returnflag", "l_linestatus", "l_partkey").distinct()
-    h = _memo(
+    h = memo(
         spark, sf_dir, "kmv_merge_h",
         lambda: dk.select(
             "l_returnflag",
@@ -1095,8 +1092,6 @@ def approx_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analogue: none (the reference prunes via in-RAM key indexes,
     src/indexing/Index.java — this is the distributed, bounded-memory
     equivalent a 100 TB fact scan actually ships)."""
-    from skinnerdb_spark.operators.dedup import _memo
-
     o = read_table(spark, sf_dir, "orders")
     # build / probe / bits are each read by 2-5 consumers below (bits x3
     # union branches, the flags fold, the cardinality columns) with
@@ -1104,9 +1099,9 @@ def approx_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-executed per consumer (11 scans in the r11 before-plan, 3 after).
     # All three are bounded: build and probe are distinct KEY sets (the
     # selective filters applied first), bits is <= BLOOM_M rows. r12
-    # (ADVICE r11): caches tracked by the dedup _memo LRU so eviction
+    # (ADVICE r11): caches tracked by the state.memo LRU so eviction
     # unpersists them instead of stranding blocks across a multi-SF run.
-    build = _memo(
+    build = memo(
         spark, sf_dir, "bloom_build",
         lambda: o.filter(
             (F.col("o_orderpriority") == "1-URGENT")
@@ -1124,7 +1119,7 @@ def approx_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc = part if acc is None else acc.unionAll(part)
         return acc.distinct()
 
-    bits = _memo(spark, sf_dir, "bloom_bits", _bits)
+    bits = memo(spark, sf_dir, "bloom_bits", _bits)
 
     li = read_table(spark, sf_dir, "lineitem")
     rows_probe = li.filter(
@@ -1139,7 +1134,7 @@ def approx_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unique in this frame, so COUNT(*) == COUNT(DISTINCT k) and the
     # distinct counts become plain conditional sums. sf10 (downstream of
     # the shared frames): 5.3/3.8 -> 1.6/1.8 s, output identical.
-    kc = _memo(
+    kc = memo(
         spark, sf_dir, "bloom_probe_cnt",
         lambda: rows_probe.groupBy("k").agg(
             F.count(F.lit(1)).cast("bigint").alias("cnt")

@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
+from skinnerdb_spark.state import child_session, memo
 
 __all__ = ["rcte_order_chains", "events_variant_props", "text_word_offsets_udtf"]
 
@@ -55,24 +56,6 @@ CHAIN_CAP = 8
 #: guard for every subsequent query in the session).
 _ROW_LIMIT = 2_000_000_000
 
-#: one recursion-scoped child session per SparkContext (applicationId keys
-#: it — id(spark) can be recycled after GC). newSession() shares the
-#: SparkContext, table cache, and builder-time confs but owns its SQLConf
-#: and temp-view namespace, so the raised cteRecursionRowLimit (and the
-#: recursion's temp view) never leak into the caller's session.
-_RCTE_SESSIONS: dict[str, SparkSession] = {}
-
-
-def _recursion_session(spark: SparkSession) -> SparkSession:
-    key = spark.sparkContext.applicationId
-    s2 = _RCTE_SESSIONS.get(key)
-    if s2 is None:
-        if len(_RCTE_SESSIONS) >= 4:  # dead-context hygiene, not a hot path
-            _RCTE_SESSIONS.clear()
-        s2 = spark.newSession()
-        s2.conf.set("spark.sql.cteRecursionRowLimit", str(_ROW_LIMIT))
-        _RCTE_SESSIONS[key] = s2
-    return s2
 
 # Both engines evaluate the identical recursion: anchor = each customer's
 # first order, step = join the frontier to the customer's next order by
@@ -141,13 +124,14 @@ def rcte_order_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache each of the CHAIN_CAP rounds would re-scan + re-window orders.
     The recursion-row-limit conf (a runaway guard, default 1e6 total rows)
     is raised out of the way — the depth cap is the real bound here — in a
-    DEDICATED child session (:func:`_recursion_session`), so the guard
+    DEDICATED child session (:func:`state.child_session`), so the guard
     stays at its default for everything else the caller runs (ADVICE r8).
     """
-    spark = _recursion_session(spark)
-    o = read_table(spark, sf_dir, "orders")
-    seq = (
-        o.select(
+    spark = child_session(spark, {"spark.sql.cteRecursionRowLimit": str(_ROW_LIMIT)})
+
+    def build() -> DataFrame:
+        o = read_table(spark, sf_dir, "orders")
+        return o.select(
             "o_custkey",
             "o_orderkey",
             F.col("o_totalprice").cast("decimal(12,2)").alias("price"),
@@ -155,11 +139,10 @@ def rcte_order_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
             .over(Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey"))
             .cast("int")
             .alias("pos"),
-        )
-        .filter(F.col("pos") <= CHAIN_CAP)
-    )
+        ).filter(F.col("pos") <= CHAIN_CAP)
+
     view = "skinner_rcte_seq8"
-    seq.cache().createOrReplaceTempView(view)
+    memo(spark, sf_dir, "rcte_seq", build).createOrReplaceTempView(view)
     return spark.sql("WITH RECURSIVE\n" + _RCTE_CHAIN.format(seq=view))
 
 
@@ -393,17 +376,22 @@ def sql_script_chain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 4-row accumulator. Driver state is the accumulator array — 4
     structs, bounded by the loop constant, never data-sized. The oracle
     computes the same report with a generate_series cross join."""
-    o = read_table(spark, sf_dir, "orders")
-    seq = o.select(
-        "o_custkey",
-        F.col("o_totalprice").cast("decimal(12,2)").alias("price"),
-        F.row_number()
-        .over(Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey"))
-        .cast("int")
-        .alias("pos"),
-    )
-    seq.cache().createOrReplaceTempView("skinner_script_seq")
-    return spark.sql(
+    def build() -> DataFrame:
+        o = read_table(spark, sf_dir, "orders")
+        return o.select(
+            "o_custkey",
+            F.col("o_totalprice").cast("decimal(12,2)").alias("price"),
+            F.row_number()
+            .over(Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey"))
+            .cast("int")
+            .alias("pos"),
+        )
+
+    # the view lands in the session the memo entry was built in, so the
+    # script runs there too
+    seq = memo(spark, sf_dir, "script_seq", build)
+    seq.createOrReplaceTempView("skinner_script_seq")
+    return seq.sparkSession.sql(
         """
         BEGIN
           DECLARE k INT DEFAULT 1;

@@ -38,7 +38,7 @@ def installed(spark, sf_dir):
 
 def _learn(spark, sql, **kw):
     res = graph.adaptive_reorder(spark.sql(sql), **kw)
-    assert res.best_order, getattr(res, "reason", None)
+    assert res.best_order, res.reason
     return res.best_order
 
 

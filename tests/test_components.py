@@ -13,12 +13,7 @@ from pyspark.sql import functions as F
 from skinnerdb_spark.catalog import read_table
 from skinnerdb_spark.engine import Engine
 from skinnerdb_spark.operators import multimodal
-from skinnerdb_spark.plans.joinorder import (
-    JoinEdge,
-    adaptive_join,
-    build_join_chain,
-    connected_orders,
-)
+from skinnerdb_spark.plans.joinorder import JoinEdge, connected_orders
 from skinnerdb_spark.sources.csv import load_csv
 from skinnerdb_spark.streaming.windows import (
     run_stream_once,
@@ -52,35 +47,6 @@ def test_connected_orders_avoid_cartesian():
             ), f"cartesian step in {o}"
     # customer-first can never be followed by supplier/lineitem only
     assert ("customer", "supplier") not in {o[:2] for o in orders}
-
-
-def test_adaptive_join_matches_catalyst(spark, sf_dir):
-    dfs = {
-        "lineitem": read_table(spark, sf_dir, "lineitem"),
-        "orders": read_table(spark, sf_dir, "orders"),
-        "customer": read_table(spark, sf_dir, "customer"),
-        "supplier": read_table(spark, sf_dir, "supplier"),
-    }
-    res = adaptive_join(dfs, EDGES, fact="lineitem", episodes=4, sample_fraction=0.2)
-    got = res.df.count()
-    expect = (
-        dfs["lineitem"]
-        .join(dfs["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(dfs["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(dfs["supplier"], F.col("l_suppkey") == F.col("s_suppkey"))
-        .count()
-    )
-    assert got == expect, "adaptive order must not change inner-join semantics"
-    assert res.best_order[0] == "lineitem" or len(res.episodes) > 0
-
-
-def test_build_join_chain_rejects_cartesian(spark, sf_dir):
-    dfs = {
-        "customer": read_table(spark, sf_dir, "customer"),
-        "supplier": read_table(spark, sf_dir, "supplier"),
-    }
-    with pytest.raises(ValueError, match="cartesian"):
-        build_join_chain(dfs, ("customer", "supplier"), EDGES)
 
 
 # --------------------------------------------------------------------------

@@ -18,7 +18,6 @@ from skinnerdb_spark.plans.graph import (
     adaptive_reorder,
     extract_query_graph,
 )
-from skinnerdb_spark.plans.joinorder import JoinEdge
 from skinnerdb_spark.queries.util import read_table, ts
 
 
@@ -28,8 +27,8 @@ def views(spark, sf_dir):
 
 
 def test_extracted_edges_match_handwritten_star(spark, sf_dir):
-    """The graph extracted from adaptive_star_join's query equals the
-    hand-built JoinEdge list in queries/adaptive.py."""
+    """The graph extracted from adaptive_star_join's join chain recovers
+    the three equi-join edges a human would write by hand."""
     dfs = {
         "lineitem": read_table(spark, sf_dir, "lineitem"),
         "orders": read_table(spark, sf_dir, "orders").filter(
@@ -193,7 +192,7 @@ def test_nondeterministic_fallback_matches_catalyst(spark):
          "AND rand() < 1.1")
     res = adaptive_reorder(spark.sql(q), episodes=2)
     assert res.best_order == ()
-    assert "non-deterministic" in getattr(res, "reason", "")
+    assert "non-deterministic" in res.reason
     assert res.df.collect() == spark.sql(q).collect()
 
 
@@ -216,7 +215,7 @@ def test_order_cache_not_shared_across_warehouses(spark, sf_dir):
     finally:
         register_views(spark, sf_dir)  # restore module-fixture views
     assert g1.cache_key != g2.cache_key
-    assert other.best_order and getattr(other, "reason", None) != "cached"
+    assert other.best_order and other.reason != "cached"
     assert other.episodes  # scored on this warehouse
 
 
@@ -235,7 +234,7 @@ def test_order_cache_hit(spark):
     # sequence), not served from a cache
     assert r1.episodes and all(e.predetermined for e in r1.episodes)
     r2 = adaptive_reorder(spark.sql(q), episodes=2)
-    assert getattr(r2, "reason", None) == "cached"
+    assert r2.reason == "cached"
     assert not r2.episodes
     assert r2.best_order == r1.best_order
 
@@ -468,32 +467,46 @@ def test_budgeted_episode_cancellation_and_learning(spark, sf_dir):
     assert res.df.collect() == expect, "final execution must be exact"
 
 
-def test_adaptive_join_shares_measurements_across_orders(spark):
-    """adaptive_join scores orders by sampled C_out: (f,a,b) and (a,f,b)
-    bind the same table sets in the same sequence, so the second is scored
-    from the first's measurement; the result matches the fixed-order chain
-    and the winner's plan holds no cached episode frame."""
-    from skinnerdb_spark.plans.joinorder import JoinEdge, adaptive_join, build_join_chain
+def test_adaptive_reorder_shares_measurements_across_orders(spark):
+    """(a,f,b) and (f,a,b) bind the same table sets in the same sequence, so
+    the second is scored from the first's measurement: exact join rows on
+    an unsampled fact side, two sampled executions for four candidates, the
+    lowest C_out wins, the result matches Catalyst's, and the winner's plan
+    holds no cached episode frame."""
+    views = {
+        "fct": spark.range(80).selectExpr("id AS fid", "id % 4 AS ja", "id % 6 AS jb"),
+        "da": spark.range(4).selectExpr("id AS ja2", "id AS av"),
+        "db": spark.range(6).selectExpr("id AS jb2", "id AS bv"),
+    }
+    for name, df in views.items():
+        df.createOrReplaceTempView(name)
+    q = "SELECT fid, av, bv FROM fct, da, db WHERE ja = ja2 AND jb = jb2"
+    try:
+        res = adaptive_reorder(spark.sql(q), episodes=6, use_cache=False)
+        by_order = {e.order: e for e in res.episodes}
+        assert by_order[("fct", "da", "db")].memo
+        assert by_order[("fct", "da", "db")].joins == by_order[("da", "fct", "db")].joins
+        assert by_order[("da", "fct", "db")].joins == (80, 80)
+        assert len(res.episodes) == 4 and sum(e.measured for e in res.episodes) == 2
+        assert min(res.episodes, key=lambda e: e.cout).order == res.best_order
+        assert sorted(res.df.collect()) == sorted(spark.sql(q).collect())
+        assert "InMemoryTableScan" not in res.df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for name in views:
+            spark.catalog.dropTempView(name)
 
-    f = spark.createDataFrame(
-        [(i, i % 4, i % 6) for i in range(80)], "fid bigint, ja bigint, jb bigint")
-    da = spark.createDataFrame([(i, i) for i in range(4)], "ja2 bigint, av bigint")
-    db = spark.createDataFrame([(i, i) for i in range(6)], "jb2 bigint, bv bigint")
-    dfs = {"f": f, "a": da, "b": db}
-    edges = [JoinEdge("f", "ja", "a", "ja2"), JoinEdge("f", "jb", "b", "jb2")]
 
-    res = adaptive_join(dfs, edges, fact="f", episodes=6, sample_fraction=1.0)
-    by_order = {e.order: e for e in res.episodes}
-    assert by_order[("a", "f", "b")].memo
-    assert by_order[("a", "f", "b")].joins == by_order[("f", "a", "b")].joins == (80, 80)
-    assert sum(not e.memo for e in res.episodes) == 2  # {a,f} first or {b,f} first
-    assert min(res.episodes, key=lambda e: e.cout).order == res.best_order
+def test_build_graph_chain_rejects_cartesian(spark):
+    """An order that joins a table sharing no edge with the bound prefix (a
+    cartesian step) is refused."""
+    from skinnerdb_spark.plans.graph import build_graph_chain
 
-    def rows(df):
-        return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
-
-    assert rows(res.df) == rows(build_join_chain(dfs, ("f", "a", "b"), edges))
-    assert "InMemoryTableScan" not in res.df._jdf.queryExecution().executedPlan().toString()
+    g = extract_query_graph(spark.sql(
+        "SELECT COUNT(*) AS c FROM customer, orders, nation "
+        "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey"
+    ))
+    with pytest.raises(ValueError, match="no bound edge"):
+        build_graph_chain(g, ("orders", "nation", "customer"))
 
 
 def _count_episodes(monkeypatch, G):
@@ -770,32 +783,50 @@ def test_learned_orders_repeat_across_processes(sf_dir):
 
 _RESTART_SCRIPT = r"""
 import sys
+from skinnerdb_spark import state
 from skinnerdb_spark.catalog import register_views
 from skinnerdb_spark.plans import graph as G
+from skinnerdb_spark.registry import all_specs
 from skinnerdb_spark.session import get_spark
 
+sf_dir = sys.argv[1]
+specs = all_specs()
 q = ("SELECT COUNT(*) AS c FROM customer, orders, nation "
      "WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey")
-apps = []
+entries = ["dedup_minhash_lsh", "rcte_order_chains"]
+apps, results = [], []
 for _ in range(2):
     spark = get_spark(master="local[1]", shuffle_partitions=1)
-    register_views(spark, sys.argv[1])
-    app = spark.sparkContext.applicationId
+    apps.append(state.app_id(spark))
+    # the first look at a new application drops every entry of the old one
+    assert not state._MEMO and not state._CLASSES and state._CHILD is None
+    register_views(spark, sf_dir)
     g = G.extract_query_graph(spark.sql(q))
     assert sorted(g.names) == ["customer", "nation", "orders"], g.names
-    assert G._JVM_CLASSES and {k[0] for k in G._JVM_CLASSES} == {app}, G._JVM_CLASSES
-    apps.append(app)
+    results.append({
+        n: sorted(repr(r) for r in specs[n].spark(spark, sf_dir).collect())
+        for n in entries
+    })
+    sc = spark.sparkContext
+    assert state._CLASSES
+    assert state._MEMO, state._MEMO
+    assert all(df.sparkSession.sparkContext is sc for df in state._MEMO.values())
+    assert state._CHILD is not None and state._CHILD.sparkContext is sc
     spark.stop()
 assert apps[0] != apps[1], apps
+assert results[0] == results[1]
+assert all(results[0].values()), results[0]
 print("OK")
 """
 
 
 @pytest.mark.slow
 def test_jvm_class_handles_follow_session_restart(sf_dir):
-    """Resolved JVM class handles are keyed by applicationId: after a stop
-    and restart in one process, extraction still works and only handles
-    resolved for the live application are held (or served)."""
+    """Per-application state follows a stop and restart in one process: the
+    new application's first lookup drops the old one's memo entries, JVM
+    class handles and child session; afterwards the state holds only the
+    live application's, and extraction, dedup_minhash_lsh and
+    rcte_order_chains return the same rows in both applications."""
     import os
     import subprocess
     import sys
