@@ -8,10 +8,14 @@ subsume the Java-serialized schema file and the eager RAM load
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from skinnerdb_spark.state import plan_helper
 
 #: every table the driver generates (TESTDATA.md)
 TABLES = [
@@ -49,10 +53,21 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session.py, because callers — including the verification driver — may
     hand us a SparkSession built without our factory; a plain session throws
     PARQUET_TYPE_ILLEGAL on the events table otherwise.
+
+    The schema is the one ``spark.read.parquet`` would infer, read from the
+    first data file's footer on the driver with Spark's own reader and
+    converter (``skinner.PlanHelper.parquetSchema``), so no
+    schema-inference job runs. Nothing is cached: a rewritten table shows
+    its new schema on the next read.
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    schema = plan_helper(spark).parquetSchema(spark._jsparkSession, path)
+    reader = spark.read if schema is None else spark.read.schema(
+        StructType.fromJson(json.loads(schema))
+    )
+    df = reader.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos -> NTZ without any timezone dependency: epoch-NTZ + exact
         # decimal-second interval. (timestamp_micros + CAST AS TIMESTAMP_NTZ

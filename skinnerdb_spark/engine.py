@@ -310,7 +310,7 @@ class Engine:
         only the join order differs. When every scored candidate binds the
         same table sets in the same sequence, the first wins and no sample
         runs (its stats are marked ``predetermined``). The learned chain
-        streams its largest input (plans/graph.py ``_streamed_leaf``). The
+        streams its largest input (plans/graph.py ``build_graph_chain``). The
         chosen order and each candidate's C_out land on
         ``self.last_adaptive``.
         """

@@ -14,8 +14,10 @@ Mechanism:
   reordering, so what this rule emits is what executes;
 - the shim delegates to a py4j callback (:class:`_PyReorderer`) and is the
   identity whenever the callback is absent, returns None, or throws;
-- the callback re-wraps the optimized plan as a DataFrame, reuses the
-  adaptive path's own extraction (plans/graph.py ``extract_query_graph`` — the
+- the callback re-wraps the optimized plan as a DataFrame (the JVM plan
+  helper, plans/java/skinner/PlanHelper.java, drops the Projects between
+  its joins first), reuses the adaptive path's own extraction
+  (plans/graph.py ``extract_query_graph`` — the
   optimizer-stage plan still satisfies its shape contract: unary parents,
   inner-join tree, LogicalRelation leaves), looks up the learned order by
   the graph's cache key (plans/graph.py ``QueryGraph.cache_key``: sorted
@@ -40,9 +42,12 @@ Fallback matrix (all clean):
 
 from __future__ import annotations
 
+import json
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+
+from skinnerdb_spark.state import plan_helper
 
 #: process-global NON-BLOCKING re-entrancy guard. A thread-local flag would
 #: only stop the nested re-optimization (`_reorder` calls
@@ -138,15 +143,16 @@ class _PyReorderer:
         from skinnerdb_spark.plans.graph import (
             _ORDER_CACHE,
             ExtractionError,
-            _of_rows,
             build_graph_chain,
             extract_query_graph,
             finish,
         )
 
-        df = _of_rows(self._spark, _strip_projects_over_joins(self._spark, jplan))
+        # the optimizer puts column-pruning Projects between joins; without
+        # them the plan flattens like an analyzed one
+        jdf = plan_helper(self._spark).stripProjectsOverJoins(self._spark._jsparkSession, jplan)
         try:
-            graph = extract_query_graph(df)
+            graph = extract_query_graph(DataFrame(jdf, self._spark))
         except ExtractionError:
             self.misses += 1
             return None
@@ -163,34 +169,6 @@ class _PyReorderer:
             return None
         self.hits += 1
         return out._jdf.queryExecution().optimizedPlan()
-
-
-def _strip_projects_over_joins(spark: SparkSession, jplan):
-    """Drop column-pruning Projects sitting BETWEEN joins (the optimizer
-    inserts them mid-chain) so the adaptive path's flattener sees the whole join
-    tree. Attribute references are by exprId, so widening an intermediate
-    output is semantics-preserving; the pruning is re-derived when the
-    rebuilt plan is re-optimized."""
-    from skinnerdb_spark.plans.graph import _cls, _scala_seq
-
-    def walk(node):
-        cls = _cls(node)
-        kids = [node.children().apply(i) for i in range(node.children().size())]
-        newkids = []
-        changed = False
-        for child in kids:
-            c = child
-            if cls == "Join":
-                while _cls(c) == "Project" and _cls(c.children().head()) == "Join":
-                    c = c.children().head()
-            nc = walk(c)
-            changed = changed or (nc is not c) or (c is not child)
-            newkids.append(nc)
-        if not changed:
-            return node
-        return node.withNewChildren(_scala_seq(spark, newkids))
-
-    return walk(jplan)
 
 
 def rule_available(spark: SparkSession) -> bool:
@@ -234,27 +212,4 @@ def uninstall_learned_order_rule(spark: SparkSession) -> None:
 def executed_join_order(df: DataFrame) -> list[str]:
     """Leaf table-name order of the topmost join chain in df's OPTIMIZED
     plan (left-deep flatten order) — the plan-assertion hook for tests."""
-    from skinnerdb_spark.plans.graph import _cls, _leaf_info
-
-    plan = df._jdf.queryExecution().optimizedPlan()
-    node = plan
-    while _cls(node) != "Join":
-        kids = node.children()
-        if kids.size() != 1:
-            return []
-        node = kids.head()
-    names: list[str] = []
-
-    def flatten(jn):
-        c = _cls(jn)
-        if c == "Join":
-            for i in range(jn.children().size()):
-                flatten(jn.children().apply(i))
-        elif c == "Project" and _cls(jn.children().head()) == "Join":
-            flatten(jn.children().head())
-        else:
-            base, _ = _leaf_info(jn)
-            names.append(base or "?")
-
-    flatten(node)
-    return names
+    return json.loads(plan_helper(df.sparkSession).joinOrder(df._jdf))

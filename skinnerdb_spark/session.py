@@ -20,6 +20,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from skinnerdb_spark.state import JAR
+
 
 def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -82,9 +84,8 @@ def get_spark(
     # for the first session of the process; later getOrCreate()s reuse the
     # running JVM and install_learned_order_rule() simply reports
     # unavailable (clean fallback to Engine.adaptive_sql).
-    _rule_jar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "skinner-rule.jar")
     extra_conf = dict(extra_conf or {})
-    if os.path.isfile(_rule_jar):
+    if os.path.isfile(JAR):
         # APPEND to any pre-existing classpath (env/spark-defaults or a
         # user-supplied extra_conf value) instead of clobbering either way
         # (ADVICE r6): dropping the ambient path breaks user deps; dropping
@@ -119,7 +120,7 @@ def get_spark(
         ambient = os.pathsep.join(p for p in ambient_parts if p)
         user = extra_conf.pop("spark.driver.extraClassPath", "")
         seen: list[str] = []
-        for part in (*user.split(os.pathsep), *ambient.split(os.pathsep), _rule_jar):
+        for part in (*user.split(os.pathsep), *ambient.split(os.pathsep), JAR):
             if part and part not in seen:
                 seen.append(part)
         b = b.config("spark.driver.extraClassPath", os.pathsep.join(seen))

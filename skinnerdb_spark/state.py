@@ -6,7 +6,7 @@ to that context. So one record, for the live application, holds:
 
 - the memo LRU of cached intermediates that several entries share
   (:func:`memo`), keyed ``(sf_dir, key)``;
-- resolved JVM class handles (:func:`jvm_class`);
+- the JVM plan helper (:func:`plan_helper`);
 - one child session (:func:`child_session`).
 
 The applicationId is read once per SparkContext object (two py4j round
@@ -21,6 +21,7 @@ keyed by scan scope and stays valid across applications); it lives in
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from typing import Any
 
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 MEMO_CAP = 64
 
 _MEMO: dict[tuple[str, str], DataFrame] = {}
-_CLASSES: dict[str, Any] = {}
+_HELPER: Any = None
 _CHILD: SparkSession | None = None
 #: the SparkContext the entries above belong to, and its applicationId
 _SC: SparkContext | None = None
@@ -44,13 +45,13 @@ _APP: str | None = None
 def app_id(spark: SparkSession) -> str:
     """applicationId of ``spark``'s application; on a change of
     application, drops every entry of the previous one."""
-    global _CHILD, _SC, _APP
+    global _CHILD, _HELPER, _SC, _APP
     sc = spark.sparkContext
     if sc is not _SC:
         app = sc.applicationId
         if app != _APP:
             _MEMO.clear()
-            _CLASSES.clear()
+            _HELPER = None
             _CHILD = None
         _SC, _APP = sc, app
     return _APP
@@ -74,19 +75,28 @@ def memo(
     return df
 
 
-def jvm_class(spark: SparkSession, path: str) -> Any:
-    """The JavaClass at dotted ``path``, resolved once per application.
-    Every dotted component of a ``spark._jvm.a.b.c.D`` chain is its own
-    py4j reflection round trip (~0.3 ms), and join-graph extraction
-    resolves the same few classes on every query."""
+#: the compiled plans/java/ classes (tools/build_jar.py)
+JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "skinner-rule.jar")
+
+
+def plan_helper(spark: SparkSession) -> Any:
+    """The application's ``skinner.PlanHelper`` instance (plans/java/),
+    which walks and rebuilds Catalyst plans in the JVM. Its class is loaded
+    from :data:`JAR` through a URLClassLoader whose parent is Spark's own
+    loader, so it works in any session, including one whose JVM was
+    launched without the jar on its classpath."""
+    global _HELPER
     app_id(spark)
-    cls = _CLASSES.get(path)
-    if cls is None:
-        cls = spark._jvm
-        for part in path.split("."):
-            cls = getattr(cls, part)
-        _CLASSES[path] = cls
-    return cls
+    if _HELPER is None:
+        jvm, gw = spark._jvm, spark.sparkContext._gateway
+        urls = gw.new_array(jvm.java.net.URL, 1)
+        urls[0] = jvm.java.io.File(JAR).toURI().toURL()
+        parent = spark._jsparkSession.getClass().getClassLoader()
+        cls = jvm.java.net.URLClassLoader(urls, parent).loadClass("skinner.PlanHelper")
+        _HELPER = cls.getConstructor(gw.new_array(jvm.java.lang.Class, 0)).newInstance(
+            gw.new_array(jvm.java.lang.Object, 0)
+        )
+    return _HELPER
 
 
 def child_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:

@@ -4,6 +4,7 @@ order with no API change; clean fallback when the shim jar is absent."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import textwrap
@@ -115,7 +116,7 @@ def test_fallback_when_jar_absent():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert "FALLBACK_OK" in out.stdout, out.stderr[-2000:]
 

@@ -6,6 +6,7 @@ session cannot inherit this test session's JVM configs."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -142,6 +143,20 @@ for name in ["ev_tumbling_hour", "ev_sessionization", "ev_sliding_2h",
     if not ok:
         failures.append(name)
 
+# one adaptive corpus query gets its learned order applied in this plain
+# session: the JVM plan helper loads with nothing on the launch classpath
+from skinnerdb_spark.catalog import register_views
+from skinnerdb_spark.plans.graph import adaptive_reorder
+
+register_views(spark, os.environ["SKINNER_ORACLE_SF_DIR"])
+with open(os.path.join("queries_sql", "t8_deep8_01.sql")) as f:
+    text = f.read().strip().rstrip(";")
+res = adaptive_reorder(spark.sql(text), episodes=2, sample_rows=2000)
+ok = len(res.best_order) == 8 and sorted(res.df.collect()) == sorted(spark.sql(text).collect())
+print("adaptive t8_deep8_01", "OK" if ok else "MISMATCH", res.best_order, res.reason)
+if not ok:
+    failures.append("adaptive t8_deep8_01")
+
 assert E.entry(spark).count() > 0
 spark.stop()
 sys.exit(1 if failures else 0)
@@ -155,7 +170,7 @@ def test_plain_driver_session_runs_contract():
         capture_output=True,
         text=True,
         timeout=600,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert res.returncode == 0, f"stdout:\n{res.stdout}\nstderr:\n{res.stderr[-2000:]}"
     assert "MISMATCH" not in res.stdout

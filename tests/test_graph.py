@@ -55,7 +55,7 @@ def test_extracted_edges_match_handwritten_star(spark, sf_dir):
     assert got == hand
     assert set(graph.names) == {"lineitem", "orders", "supplier", "nation"}
     # local predicate (the orders date filter) pushed into the leaf, not lost
-    assert "1996" in graph.leaves["orders"]._jdf.queryExecution().analyzed().toString()
+    assert "1996" in graph.leaf("orders")._jdf.queryExecution().analyzed().toString()
     # fact = biggest estimated input
     assert graph.fact == "lineitem"
 
@@ -691,7 +691,8 @@ def test_learned_order_streams_its_largest_input(spark):
     lineitem_scan = "FileScan parquet [l_"
     assert not any(lineitem_scan in t for t in _broadcast_subtrees(res.df))
     g = G.extract_query_graph(spark.sql(q))
-    unhinted = G.finish(g, G.build_graph_chain(g, res.best_order, leaves=g.leaves))
+    # the whole fact leaf in the place of a sample: no stream hint
+    unhinted = G.finish(g, G.build_graph_chain(g, res.best_order, g.leaf(g.fact)))
     assert any(lineitem_scan in t for t in _broadcast_subtrees(unhinted))
     assert res.df.collect() == spark.sql(q).collect()
 
@@ -799,7 +800,7 @@ for _ in range(2):
     spark = get_spark(master="local[1]", shuffle_partitions=1)
     apps.append(state.app_id(spark))
     # the first look at a new application drops every entry of the old one
-    assert not state._MEMO and not state._CLASSES and state._CHILD is None
+    assert not state._MEMO and state._HELPER is None and state._CHILD is None
     register_views(spark, sf_dir)
     g = G.extract_query_graph(spark.sql(q))
     assert sorted(g.names) == ["customer", "nation", "orders"], g.names
@@ -808,7 +809,7 @@ for _ in range(2):
         for n in entries
     })
     sc = spark.sparkContext
-    assert state._CLASSES
+    assert state._HELPER is not None
     assert state._MEMO, state._MEMO
     assert all(df.sparkSession.sparkContext is sc for df in state._MEMO.values())
     assert state._CHILD is not None and state._CHILD.sparkContext is sc
@@ -824,7 +825,7 @@ print("OK")
 def test_jvm_class_handles_follow_session_restart(sf_dir):
     """Per-application state follows a stop and restart in one process: the
     new application's first lookup drops the old one's memo entries, JVM
-    class handles and child session; afterwards the state holds only the
+    plan helper and child session; afterwards the state holds only the
     live application's, and extraction, dedup_minhash_lsh and
     rcte_order_chains return the same rows in both applications."""
     import os

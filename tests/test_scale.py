@@ -3,6 +3,8 @@ and the bandit join-order path producing Catalyst-identical results."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -545,11 +547,13 @@ def test_zorder_accepts_timestamp_columns(spark, sf_dir, tmp_path):
     assert mean_frac < 0.5
 
 
-SF1_DIR = "/root/repo/.scale_data/sf1"
+SF1_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale_data", "sf1"
+)
 
 
 @pytest.mark.skipif(
-    not __import__("os").path.isdir(SF1_DIR),
+    not os.path.isdir(SF1_DIR),
     reason="sf1 scale warehouse not generated (tools/datagen_scale.py)",
 )
 def test_plan_shapes_stable_at_10x_scale(spark, sf_dir):
