@@ -44,10 +44,11 @@ def table_path(sf_dir: str, name: str) -> str:
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy columnar scan; Catalyst pushes filters/projections into it.
 
-    events.ts is TIMESTAMP(NANOS) in parquet — Spark reads it as long
-    (spark.sql.legacy.parquet.nanosAsLong) and we truncate to microseconds,
-    exactly like DuckDB's ns->us conversion, yielding TIMESTAMP_NTZ under the
-    UTC session.
+    The committed warehouses store events.ts as TIMESTAMP(MICROS). An
+    events file written elsewhere may store it as TIMESTAMP(NANOS): Spark
+    reads that as long (spark.sql.legacy.parquet.nanosAsLong) and we
+    truncate to microseconds, exactly like DuckDB's ns->us conversion,
+    yielding TIMESTAMP_NTZ under the UTC session.
 
     The config is set here at runtime (it is session-settable), not only in
     session.py, because callers — including the verification driver — may

@@ -60,24 +60,12 @@ from skinnerdb_spark.state import plan_helper
 #: warehouses with identical table names never share an order. Nothing is
 #: persisted: sampled C_out is a deterministic function of the seeded
 #: sample, so a new process learns the same orders again (the reference,
-#: too, keeps no learned state across sessions). FIFO-capped: entries are
-#: a few strings each, the cap only guards a pathological template
-#: generator.
+#: too, keeps no learned state across sessions). Its one reader is
+#: :func:`adaptive_reorder`: a learned order reaches Catalyst only as the
+#: chain that function rebuilds. FIFO-capped: entries are a few strings
+#: each, the cap only guards a pathological template generator.
 _ORDER_CACHE: dict[tuple, tuple[str, ...]] = {}
 _ORDER_CACHE_CAP = 4096
-
-#: bumped on every put into _ORDER_CACHE. Consumers that memoize "this
-#: plan shape had no learned order" (the Catalyst rule's no-op memo,
-#: plans/catalyst_rule.py) compare against this to invalidate their memo
-#: when new orders are learned — otherwise a query shape first seen before
-#: its order was learned would never be reordered for the rest of the
-#: session (ADVICE r7).
-_ORDER_CACHE_VERSION = 0
-
-
-def order_cache_version() -> int:
-    return _ORDER_CACHE_VERSION
-
 
 #: process-lifetime observability for the adaptive tier (bench.py emits
 #: these in its JSON so episode spend is visible per run): episodes =
@@ -94,8 +82,6 @@ def _cache_put(key: tuple, order: tuple[str, ...]) -> None:
     if key not in _ORDER_CACHE and len(_ORDER_CACHE) >= _ORDER_CACHE_CAP:
         _ORDER_CACHE.pop(next(iter(_ORDER_CACHE)))
     _ORDER_CACHE[key] = order
-    global _ORDER_CACHE_VERSION
-    _ORDER_CACHE_VERSION += 1
 
 
 class ExtractionError(ValueError):

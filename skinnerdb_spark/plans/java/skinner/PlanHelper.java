@@ -123,32 +123,6 @@ public final class PlanHelper {
         return schema.isDefined() ? schema.get().json() : null;
     }
 
-    /**
-     * {@code plan} without the column-pruning Projects the optimizer puts
-     * between joins, as a Dataset, so an optimized plan flattens like an
-     * analyzed one. Attributes resolve by exprId, so widening an
-     * intermediate output keeps semantics.
-     */
-    public Dataset<Row> stripProjectsOverJoins(SparkSession spark, LogicalPlan plan) {
-        return Dataset.ofRows(spark, strip(plan));
-    }
-
-    private static LogicalPlan strip(LogicalPlan node) {
-        boolean join = node instanceof Join;
-        boolean changed = false;
-        List<LogicalPlan> kids = new ArrayList<>();
-        for (LogicalPlan child : list(node.children())) {
-            LogicalPlan c = child;
-            while (join && c instanceof Project && ((Project) c).child() instanceof Join) {
-                c = ((Project) c).child();
-            }
-            LogicalPlan nc = strip(c);
-            changed |= nc != child;
-            kids.add(nc);
-        }
-        return changed ? node.withNewChildren(seq(kids)) : node;
-    }
-
     /** Leaf names of the topmost join of {@code df}'s optimized plan, in
      *  left-deep flatten order, as a JSON list. */
     public String joinOrder(Dataset<?> df) throws Exception {

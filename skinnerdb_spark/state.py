@@ -76,24 +76,30 @@ def memo(
 
 
 #: the compiled plans/java/ classes (tools/build_jar.py)
-JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "skinner-rule.jar")
+JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "skinner-plans.jar")
+#: (py4j gateway, PlanHelper class): the class is loaded once per JVM and
+#: outlives a stop and restart of the application. py4j caches reflected
+#: methods by class name, so a second class of the same name loaded after
+#: a restart would be called with the first one's methods and fail.
+_HELPER_CLASS: tuple[Any, Any] | None = None
 
 
 def plan_helper(spark: SparkSession) -> Any:
     """The application's ``skinner.PlanHelper`` instance (plans/java/),
     which walks and rebuilds Catalyst plans in the JVM. Its class is loaded
     from :data:`JAR` through a URLClassLoader whose parent is Spark's own
-    loader, so it works in any session, including one whose JVM was
-    launched without the jar on its classpath."""
-    global _HELPER
+    loader, so no session needs the jar on its launch classpath."""
+    global _HELPER, _HELPER_CLASS
     app_id(spark)
     if _HELPER is None:
         jvm, gw = spark._jvm, spark.sparkContext._gateway
-        urls = gw.new_array(jvm.java.net.URL, 1)
-        urls[0] = jvm.java.io.File(JAR).toURI().toURL()
-        parent = spark._jsparkSession.getClass().getClassLoader()
-        cls = jvm.java.net.URLClassLoader(urls, parent).loadClass("skinner.PlanHelper")
-        _HELPER = cls.getConstructor(gw.new_array(jvm.java.lang.Class, 0)).newInstance(
+        if _HELPER_CLASS is None or _HELPER_CLASS[0] is not gw:
+            urls = gw.new_array(jvm.java.net.URL, 1)
+            urls[0] = jvm.java.io.File(JAR).toURI().toURL()
+            parent = spark._jsparkSession.getClass().getClassLoader()
+            loader = jvm.java.net.URLClassLoader(urls, parent)
+            _HELPER_CLASS = (gw, loader.loadClass("skinner.PlanHelper"))
+        _HELPER = _HELPER_CLASS[1].getConstructor(gw.new_array(jvm.java.lang.Class, 0)).newInstance(
             gw.new_array(jvm.java.lang.Object, 0)
         )
     return _HELPER

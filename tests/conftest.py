@@ -12,6 +12,10 @@ SF_DIR = os.environ.get("SKINNER_TEST_SF_DIR", "/root/testdata/sf0.001")
 # static oracle SQL (e.g. sim_ivf_ann's persisted-index path) must target the
 # SF the tests run at — pin before the registry is populated
 os.environ.setdefault("SKINNER_ORACLE_SF_DIR", SF_DIR)
+# get_spark's 32g driver heap default lets the suite's JVM grow past the
+# memory of a 16 GB host, where the kernel kills it mid-suite; the tests
+# read sf0.001, and subprocess sessions inherit the setting
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")

@@ -231,18 +231,6 @@ def test_analyze_dot_renders_executed_profile(console):
     assert "rows=25" in out  # the scan's executed output-row metric
 
 
-def test_adaptive_rule_toggle(console):
-    """`adaptive rule` installs the Catalyst learned-order injection on the
-    session (session.py puts the shim jar on the classpath); `adaptive rule
-    off` removes it. Injection semantics are covered in
-    tests/test_catalyst_rule.py."""
-    out = console.handle("adaptive rule")
-    assert "rule on" in out
-    # plain SQL still works with the rule installed
-    assert "5" in console.handle("SELECT COUNT(*) AS n FROM region")
-    assert "off" in console.handle("adaptive rule off")
-
-
 def test_vacuum_repoints_cached_views(console, spark, sf_dir):
     """A view that was compressed AND cached ('index') reports no
     inputFiles (InMemoryRelation) — vacuum must still detect it via plan

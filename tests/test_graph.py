@@ -9,6 +9,8 @@ provably safe.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +21,7 @@ from skinnerdb_spark.plans.graph import (
     extract_query_graph,
 )
 from skinnerdb_spark.queries.util import read_table, ts
+from skinnerdb_spark.state import plan_helper
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -267,6 +270,29 @@ def test_learned_orders_stay_in_process(spark):
     res = adaptive_reorder(spark.sql(q), episodes=2)
     assert res.episodes and G._ORDER_CACHE[g.cache_key] == res.best_order
     assert snapshot() == before
+
+
+SQL3 = """SELECT n_name, COUNT(*) AS n
+           FROM customer, orders, nation
+           WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey
+           GROUP BY n_name"""
+
+SQL_DEEP7 = """SELECT r_name, COUNT(*) AS n
+               FROM lineitem, orders, customer, nation, region, supplier, part
+               WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
+                 AND c_nationkey = n_nationkey AND n_regionkey = r_regionkey
+                 AND l_suppkey = s_suppkey AND l_partkey = p_partkey
+               GROUP BY r_name"""
+
+
+@pytest.mark.parametrize("q", [SQL3, SQL_DEEP7], ids=["sql3", "deep7"])
+def test_adaptive_result_executes_learned_order(spark, q):
+    """The optimized plan of the reordered frame joins its leaves in the
+    learned order (Catalyst keeps it), and the rows equal Catalyst's."""
+    res = adaptive_reorder(spark.sql(q), episodes=2, max_orders=8)
+    assert res.best_order, res.reason
+    assert tuple(json.loads(plan_helper(spark).joinOrder(res.df._jdf))) == tuple(res.best_order)
+    assert sorted(res.df.collect()) == sorted(spark.sql(q).collect())
 
 
 def test_broadcast_hint_survives_reorder(spark):

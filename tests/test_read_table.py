@@ -10,6 +10,7 @@ import json
 import os
 import uuid
 
+import pytest
 from pyspark.sql.types import LongType, StructType
 
 from skinnerdb_spark.catalog import TABLES, read_table, table_path
@@ -73,6 +74,33 @@ def test_events_nanos_column_converted_before_footer_read(spark, tmp_path):
         ]
     finally:
         spark.conf.set(NANOS, before or "true")
+
+
+@pytest.mark.parametrize("entry", ["asof_latest_order", "ev_tumbling_hour"])
+def test_nanos_events_warehouse_matches_oracle_checked_rows(spark, sf_dir, tmp_path, entry):
+    """A registry entry reading events.ts gives the same rows on a
+    warehouse whose events.ts is TIMESTAMP(NANOS) as on the test warehouse,
+    whose rows test_oracle.py compares with DuckDB. The other tables are
+    symlinks; ts is the test warehouse's micros times 1000, so truncating
+    back to micros is exact."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from skinnerdb_spark.registry import all_specs
+
+    for t in TABLES:
+        if t != "events":
+            os.symlink(table_path(sf_dir, t), table_path(str(tmp_path), t))
+    events = pq.read_table(table_path(sf_dir, "events"))
+    i = events.schema.get_field_index("ts")
+    ns = pc.multiply(events["ts"].cast(pa.int64()), 1000).cast(pa.timestamp("ns"))
+    pq.write_table(events.set_column(i, "ts", ns), table_path(str(tmp_path), "events"), version="2.6")
+    assert pq.read_schema(table_path(str(tmp_path), "events")).field("ts").type == pa.timestamp("ns")
+
+    run = all_specs()[entry].spark
+    rows = [sorted(run(spark, d).collect(), key=repr) for d in (str(tmp_path), sf_dir)]
+    assert rows[0] == rows[1] and rows[0]
 
 
 def test_read_table_runs_no_job(spark, sf_dir):

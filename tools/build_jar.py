@@ -1,9 +1,8 @@
 #!/usr/bin/env python
 """Compile every class under skinnerdb_spark/plans/java/ against the
 installed pyspark's jars and package them at
-skinnerdb_spark/jars/skinner-rule.jar: the Catalyst rule shim
-(skinner.SkinnerReorderRule, put on the driver classpath by session.py) and
-the join-graph helper (skinner.PlanHelper, loaded at run time by state.py).
+skinnerdb_spark/jars/skinner-plans.jar: the join-graph helper
+(skinner.PlanHelper, loaded at run time by state.py).
 Requires javac (JDK 17); tests/test_jar.py checks that the committed jar
 holds what this compiles.
 
@@ -21,7 +20,7 @@ import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = os.path.join(REPO, "skinnerdb_spark", "plans", "java")
-JAR = os.path.join(REPO, "skinnerdb_spark", "jars", "skinner-rule.jar")
+JAR = os.path.join(REPO, "skinnerdb_spark", "jars", "skinner-plans.jar")
 
 
 def compile_classes(out_dir: str) -> None:
