@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from skinnerdb_spark.queries.util import ranked_topk, read_table, stats_exact
+from skinnerdb_spark.queries.util import ranked_topk, read_table
 from skinnerdb_spark.registry import register
 from skinnerdb_spark.state import memo
 
@@ -319,17 +319,9 @@ def profile_frame(df: DataFrame, cols: list[tuple[str, str]] | None = None) -> D
     the strings are engine-portable. ``cols`` defaults to every column with
     the kind inferred from its dtype. Single pass — see
     :func:`profile_table` for the plan-shape notes. Also exposed as the
-    console's ``profile <table>`` command.
-
-    ``spark.skinnerdb.stats.exact=false`` swaps the multi-column exact
-    COUNT(DISTINCT) (a 100 TB hazard: the expand operator multiplies the
-    scan's rows by the distinct-agg count before the shuffle) for
-    approx_count_distinct — HLL++ partials, no expand, one ordinary
-    shuffle. Oracle divergence is warned; error is the sketch's standard
-    ~2.3% rsd."""
+    console's ``profile <table>`` command."""
     if cols is None:
         cols = [(c, _render_kind(t)) for c, t in df.dtypes]
-    exact = stats_exact(df.sparkSession)
 
     def render(col: str, kind: str, agg) -> F.Column:
         c = agg(F.col(col))
@@ -346,27 +338,22 @@ def profile_frame(df: DataFrame, cols: list[tuple[str, str]] | None = None) -> D
             render(c, k, F.min).alias(f"{c}__min"),
             render(c, k, F.max).alias(f"{c}__max"),
         ]
-        if not exact:
-            aggs.append(
-                F.approx_count_distinct(F.col(c)).cast("bigint").alias(f"{c}__nd")
-            )
     one = df.agg(*aggs)
-    if exact:
-        # exact path: STACKED TWO-LEVEL distinct per column (the distinct_agg
-        # reformulation, VERDICT r6 item 5) instead of one multi-distinct agg
-        # — Spark plans n distinct children as an Expand that replicates
-        # every (wide) input row n+1 times through the shuffle. Each column
-        # here runs its own column-pruned scan + map-side dedup; shuffle
-        # volume is bounded by that column's cardinality, not the row count,
-        # and the n one-row results broadcast into the stack. Measured
-        # 4.1 s -> ~1 s warm on the 6-column orders profile at sf0.1.
-        for c, _ in cols:
-            ndf = (
-                df.select(c)
-                .distinct()
-                .agg(F.count(F.col(c)).cast("bigint").alias(f"{c}__nd"))
-            )
-            one = one.join(F.broadcast(ndf))
+    # STACKED TWO-LEVEL distinct per column (the distinct_agg reformulation,
+    # VERDICT r6 item 5) instead of one multi-distinct agg — Spark plans n
+    # distinct children as an Expand that replicates every (wide) input row
+    # n+1 times through the shuffle. Each column here runs its own
+    # column-pruned scan + map-side dedup; shuffle volume is bounded by that
+    # column's cardinality, not the row count, and the n one-row results
+    # broadcast into the stack. Measured 4.1 s -> ~1 s warm on the 6-column
+    # orders profile at sf0.1.
+    for c, _ in cols:
+        ndf = (
+            df.select(c)
+            .distinct()
+            .agg(F.count(F.col(c)).cast("bigint").alias(f"{c}__nd"))
+        )
+        one = one.join(F.broadcast(ndf))
     stack_args = ", ".join(
         f"'{c}', n_rows - {c}__cnt, {c}__nd, {c}__min, {c}__max" for c, _ in cols
     )
@@ -392,11 +379,9 @@ def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: unlike the oracle's 6-scan UNION ALL, the Spark plan is a
     SINGLE pass — all 24 aggregates (4 per column) evaluate in one
     partial+final aggregation over one scan, then 6 rows are unpivoted
-    driver-free with stack(). COUNT(DISTINCT) over multiple columns expands
-    to Spark's standard expand-operator plan (6x row expansion map-side,
-    one shuffle); ``spark.skinnerdb.stats.exact=false`` swaps n_distinct
-    for approx_count_distinct and the expand disappears (exact is the
-    default so the entry stays oracle-matched)."""
+    driver-free with stack(). The distinct counts run as one column-pruned
+    dedup per column, broadcast into that row, so the plan has no Expand
+    (a multi-column COUNT(DISTINCT) would replicate each row 6x)."""
     return profile_frame(read_table(spark, sf_dir, "orders"), _PROFILE_COLS)
 
 
@@ -976,35 +961,22 @@ def orders_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection (operators/quantiles.py): map-side-combined histogram scans
     with O(bins) executor state, never a value buffer. They broadcast back
     as a 1-row frame and bucket assignment + counts stay pure map-side
-    algebra plus one tiny aggregation. ``spark.skinnerdb.stats.exact=
-    false`` swaps in approx_percentile boundaries: identical downstream
-    plan shape, one-pass bounded-memory sketch, oracle divergence warned
-    (bucket DEPTHS stay ~10% by construction; tests/test_components.py
-    asserts the approx path's depth error bound)."""
+    algebra plus one tiny aggregation."""
     from skinnerdb_spark.operators.quantiles import exact_value_at_ranks
 
     o = read_table(spark, sf_dir, "orders")
-    if stats_exact(spark):
-        deciles = exact_value_at_ranks(
-            o,
-            [],
-            "o_totalprice",
-            lambda n: F.array(
-                *[F.floor((i * n + 9) / 10).cast("long") for i in range(1, 10)]
-            ),
-        )
-        b = deciles.agg(
-            *[
-                F.max(F.when(F.col("qi") == i - 1, F.col("value"))).alias(f"b{i}")
-                for i in range(1, 10)
-            ]
-        )
-    else:
-        pcts = [i / 10 for i in range(1, 10)]
-        arr = ",".join(str(p) for p in pcts)
-        b = o.agg(
-            F.expr(f"approx_percentile(o_totalprice, array({arr}))").alias("bs")
-        ).select(*[F.element_at(F.col("bs"), i).alias(f"b{i}") for i in range(1, 10)])
+    deciles = exact_value_at_ranks(
+        o,
+        [],
+        "o_totalprice",
+        lambda n: F.array(*[F.floor((i * n + 9) / 10).cast("long") for i in range(1, 10)]),
+    )
+    b = deciles.agg(
+        *[
+            F.max(F.when(F.col("qi") == i - 1, F.col("value"))).alias(f"b{i}")
+            for i in range(1, 10)
+        ]
+    )
     assigned = o.crossJoin(F.broadcast(b)).select(
         sum(
             [F.when(F.col("o_totalprice") > F.col(f"b{i}"), 1).otherwise(0) for i in range(1, 10)],

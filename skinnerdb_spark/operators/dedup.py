@@ -618,9 +618,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     are dense (LSH proposes most intra-cluster pairs directly), so this
     converges in 2-3 rounds in practice. At 100 TB the loop runs on the
     VERIFIED PAIR GRAPH only — a small fraction of the corpus — never on the
-    documents themselves; the alternating large-star/small-star formulation
-    (O(log n) rounds on adversarial chain graphs) is the drop-in upgrade if
-    component diameters ever grow. The DuckDB oracle computes the same
+    documents themselves. An adversarial chain graph (documents that each
+    LSH-collide only with their nearest variant) would make the round count
+    linear in chain length. The DuckDB oracle computes the same
     closure with a recursive CTE — feasible only at test scale, which is
     exactly why the distributed path exists.
 
@@ -633,20 +633,17 @@ def shared_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached cluster assignment — the closure runs its iterative
     rounds EAGERLY (per-round changed-count aggregates), so every consumer
     of dedup_clusters (dedup_keep_best, sample_leakage_free_split) used to
-    re-pay the full 20-30 s loop at sf10. Memo key includes the component
-    algorithm conf: switching label<->star must not serve a stale frame.
-    The cached frame holds only docs in verified near-dup pairs — a small
-    fraction of the corpus. Key also carries the LSH bucket cap (ADVICE
-    r8): clusters derive from verified pairs derive from cand@{cap}."""
-    algo = str(spark.conf.get(CC_ALGO, "label")).lower()
+    re-pay the full 20-30 s loop at sf10. The cached frame holds only docs
+    in verified near-dup pairs — a small fraction of the corpus. The key
+    carries the LSH bucket cap (ADVICE r8): clusters derive from verified
+    pairs derive from cand@{cap}."""
     cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
 
     def build() -> DataFrame:
         verified = shared_verified_pairs(spark, sf_dir).filter(
             F.col("jaccard") >= 0.5
         )
-        components = star_components if algo == "star" else min_label_components
-        labels = components(verified.select("doc_a", "doc_b"))
+        labels = min_label_components(verified.select("doc_a", "doc_b"))
         sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_n"))
         return labels.join(sizes, "lbl").select(
             F.col("doc").alias("doc_id"),
@@ -654,7 +651,7 @@ def shared_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster_n",
         )
 
-    return memo(spark, sf_dir, f"clusters-{algo}@{cap}", build)
+    return memo(spark, sf_dir, f"clusters@{cap}", build)
 
 
 #: keep-best representative selection per duplicate cluster — the decision
@@ -730,78 +727,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint").alias("dropped_tokens"),
     )
 
-
-def star_components(pairs: DataFrame, max_rounds: int = 32) -> DataFrame:
-    """(doc, lbl) component labels via alternating large-star / small-star
-    rounds (the MapReduce-CC formulation) — O(log n) rounds on ANY graph
-    shape, vs min-label propagation's O(diameter).
-
-    The scale story: near-dup clusters are dense, so propagation usually wins
-    (2-3 rounds, one join each); but an adversarial chain graph — e.g.
-    boilerplate documents that each only LSH-collide with their nearest
-    variant — makes propagation linear in chain length. Star contraction
-    re-wires the graph itself each round (every node to its neighborhood
-    min), halving tree heights: the worst case is logarithmic. Selectable in
-    :func:`dedup_clusters` via conf ``skinnerdb.cc.algo``; both paths are
-    equality-tested against exact union-find on random graphs
-    (tests/test_property.py).
-
-    large-star: node u connects each LARGER neighbor to min(N(u) + u).
-    small-star: each edge oriented (larger -> smaller); node u connects its
-    smaller neighbors and itself to their min. Fixpoint = star forest whose
-    centers are component minima."""
-    npart = _cc_parallelism(pairs)
-    e = (
-        pairs.toDF("u", "v")
-        .filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .repartition(npart, "u")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        # large-star on the symmetrized edge list
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        mins = mins.select("u", F.least("mn", F.col("u")).alias("m"))
-        large = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        e1 = (
-            large.filter(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-            .distinct()
-        )
-        # small-star on the (larger -> smaller) oriented list
-        mins2 = e1.groupBy("u").agg(F.min("v").alias("m"))
-        j = e1.join(mins2, "u")
-        small = (
-            j.filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(mins2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-        )
-        new_e = (
-            small.filter(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if new_e.exceptAll(e).union(e.exceptAll(new_e)).isEmpty():
-            e = new_e
-            break
-        e = new_e
-    # fixpoint is a star forest: u -> center v; centers label themselves
-    return e.select(F.col("u").alias("doc"), F.col("v").alias("lbl")).union(
-        e.select(F.col("v").alias("doc"), F.col("v").alias("lbl")).distinct()
-    )
-
-
-#: conf key for dedup_clusters' CC algorithm: 'label' (min-label
-#: propagation, best for dense near-dup clusters) | 'star' (large/small-star
-#: contraction, O(log n) rounds on adversarial chain graphs)
-CC_ALGO = "skinnerdb.cc.algo"
 
 #: edges per partition for the CC loops. The pair graph is orders of
 #: magnitude smaller than the corpus, so running its iterations at the

@@ -857,17 +857,12 @@ def embed_norm_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: norm2 is one map-side in-row fold (no shuffle); the
     fences are one tiny aggregate broadcast back (not a global window).
-    The exact percentile buffers the norm column on one executor —
-    ``spark.skinnerdb.stats.exact=false`` swaps in approx_percentile, the
-    same conf-gated trade as the other statistics aggregates."""
-    from skinnerdb_spark.queries.util import stats_exact
-
+    The exact percentile buffers the norm column on one executor."""
     e = read_table(spark, sf_dir, "embeddings")
     n = e.select("vec_id", "label", dot_exact("embedding", "embedding").alias("norm2"))
-    fn = "percentile" if stats_exact(spark) else "approx_percentile"
     f = n.agg(
-        F.expr(f"{fn}(norm2, 0.25)").cast("double").alias("q1"),
-        F.expr(f"{fn}(norm2, 0.75)").cast("double").alias("q3"),
+        F.expr("percentile(norm2, 0.25)").cast("double").alias("q1"),
+        F.expr("percentile(norm2, 0.75)").cast("double").alias("q3"),
     )
     iqr = F.col("q3") - F.col("q1")
     return n.join(F.broadcast(f)).select(

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skinnerdb_spark.operators.textprims import fan_out, oracle_shingles_cte, shingles_expr
-from skinnerdb_spark.queries.util import read_table, stats_exact
+from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
 from skinnerdb_spark.state import memo
 
@@ -281,17 +281,11 @@ def docs_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile_cont — bit-equal, gate-verified), which buffers each group's
     values in an ObjectHashAggregate. That is the honest cost of EXACT order
     statistics; it is fine while any single group's values fit an executor
-    (millions of docs per source). ``spark.skinnerdb.stats.exact=false``
-    swaps in approx_percentile — one-pass bounded-memory sketch for true
-    100 TB group cardinality; engine-specific results, so the exact form is
-    the default and the approx path warns about oracle divergence."""
+    (millions of docs per source)."""
     d = read_table(spark, sf_dir, "documents")
-    fn = "percentile" if stats_exact(spark) else "approx_percentile"
     return d.groupBy("source").agg(
         *[
-            # cast: approx_percentile returns the input's int type; pin the
-            # schema to exact-mode's double so the modes are drop-ins
-            F.expr(f"{fn}(n_chars, {q})").cast("double").alias(f"q{int(q * 100)}")
+            F.expr(f"percentile(n_chars, {q})").cast("double").alias(f"q{int(q * 100)}")
             for q in (0.25, 0.50, 0.75, 0.95)
         ]
     )

@@ -28,17 +28,8 @@ def words(text_col: str = "text") -> Column:
     return F.split(F.col(text_col), " ")
 
 
-#: conf key: estimated bytes of input per core above which fan_out is a no-op
-FAN_OUT_BYTES_PER_CORE = "skinnerdb.fanout.bytesPerCore"
-_FAN_OUT_DEFAULT = 32 * 1024 * 1024
-#: conf key: 'auto' (stats-conditional, default) | 'always' | 'never'.
-#: The explicit override for environments where the stats probe is wrong or
-#: unavailable: under Spark Connect ``df._jdf`` does not exist, so 'auto'
-#: degrades to ALWAYS repartitioning (safe on small inputs, a gratuitous
-#: full-corpus shuffle at real scale — set 'never' there); conversely a plan
-#: with no reliable stats can report a huge sizeInBytes and wrongly skip the
-#: fan-out for a small input — set 'always' to force it.
-FAN_OUT_MODE = "skinnerdb.fanout.mode"
+#: estimated input bytes per core at or above which fan_out is a no-op
+FAN_OUT_MIN_BYTES_PER_CORE = 32 * 1024 * 1024
 
 
 def fan_out(df):
@@ -51,33 +42,18 @@ def fan_out(df):
     is already wide and the same call must NOT inject a gratuitous full
     shuffle of the corpus, so the helper is size-conditional: when the
     optimizer's size estimate says the input already carries >=
-    ``skinnerdb.fanout.bytesPerCore`` (default 32 MiB) per core — i.e. the
-    natural scan partitioning feeds every core — the input is returned
-    unchanged. Stats come from the optimized logical plan (no job runs).
-
-    The stats probe uses the classic-mode ``df._jdf`` handle. Where that is
-    unavailable (Spark Connect) or untrustworthy, ``skinnerdb.fanout.mode``
-    overrides the decision outright: 'never' => identity, 'always' =>
-    unconditional repartition, 'auto' (default) => stats-conditional with
-    fan-out as the failure fallback.
+    :data:`FAN_OUT_MIN_BYTES_PER_CORE` per core — i.e. the natural scan
+    partitioning feeds every core — the input is returned unchanged. Stats
+    come from the optimized logical plan (no job runs); where they are
+    unavailable (Spark Connect has no ``df._jdf``) the input fans out.
     """
-    spark = df.sparkSession
-    mode = "auto"
+    cores = df.sparkSession.sparkContext.defaultParallelism
     try:
-        mode = str(spark.conf.get(FAN_OUT_MODE, "auto")).lower()
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        if size >= cores * FAN_OUT_MIN_BYTES_PER_CORE:
+            return df
     except Exception:
-        pass
-    if mode == "never":
-        return df
-    cores = spark.sparkContext.defaultParallelism
-    if mode != "always":
-        try:
-            per_core = int(spark.conf.get(FAN_OUT_BYTES_PER_CORE, str(_FAN_OUT_DEFAULT)))
-            size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            if size >= cores * per_core:
-                return df
-        except Exception:
-            pass  # stats unavailable (e.g. Spark Connect) -> fan out
+        pass  # stats unavailable (e.g. Spark Connect) -> fan out
     return df.repartition(cores)
 
 

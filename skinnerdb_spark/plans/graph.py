@@ -67,6 +67,9 @@ from skinnerdb_spark.state import plan_helper
 _ORDER_CACHE: dict[tuple, tuple[str, ...]] = {}
 _ORDER_CACHE_CAP = 4096
 
+#: seed of the fact-leaf sample every scored candidate runs on
+_SAMPLE_SEED = 42
+
 #: process-lifetime observability for the adaptive tier (bench.py emits
 #: these in its JSON so episode spend is visible per run): episodes =
 #: sampled exploration executions actually run; cache_hits = orders served
@@ -239,7 +242,6 @@ def adaptive_reorder(
     episodes: int = 4,
     sample_rows: int = 20_000,
     max_orders: int = 12,
-    seed: int = 42,
     use_cache: bool = True,
     episode_budget_s: float | None = None,
 ) -> AdaptiveJoinResult:
@@ -312,7 +314,7 @@ def adaptive_reorder(
         # decision reads no row estimate
         fraction = min(1.0, sample_rows / graph.est_rows(graph.fact))
         leaf = graph.leaf(graph.fact)
-        return leaf.sample(fraction=fraction, seed=seed) if fraction < 1.0 else leaf
+        return leaf.sample(fraction=fraction, seed=_SAMPLE_SEED) if fraction < 1.0 else leaf
 
     best, stats = score_orders(
         cands,

@@ -94,16 +94,20 @@ def is_connected_order(
     return True
 
 
+#: how many of the smallest leaves open a greedy candidate
+_GREEDY_STARTS = 4
+
+
 def greedy_orders(
     tables: list[str],
     edges: list[JoinEdge],
     sizes: dict[str, int],
-    starts: int = 4,
 ) -> list[tuple[str, ...]]:
     """Selectivity-seeded left-deep candidates: start from each of the
-    ``starts`` smallest leaves (optimizer size estimates, post-pushdown),
-    then repeatedly append the smallest CONNECTED unjoined table — the
-    classic greedy heuristic (Selinger-style min-size expansion).
+    ``_GREEDY_STARTS`` smallest leaves (optimizer size estimates,
+    post-pushdown), then repeatedly append the smallest CONNECTED unjoined
+    table — the classic greedy heuristic (Selinger-style min-size
+    expansion).
 
     Why this exists: ``connected_orders``'s bounded DFS enumerates in table
     order and its ``max_orders`` cap can exhaust on permutations that all
@@ -116,7 +120,7 @@ def greedy_orders(
     replay — the DFS-only arm set learned fact-first orders that ran 40x
     behind the greedy ones at scale 100)."""
     out: list[tuple[str, ...]] = []
-    for s in sorted(tables, key=lambda t: (sizes.get(t, 0), t))[:starts]:
+    for s in sorted(tables, key=lambda t: (sizes.get(t, 0), t))[:_GREEDY_STARTS]:
         order = [s]
         rest = set(tables) - {s}
         while rest:

@@ -20,32 +20,6 @@ def adaptive(df: DataFrame) -> DataFrame:
     return adaptive_reorder(df).df
 
 
-#: conf key gating the exact-vs-approximate statistics aggregates
-#: (percentiles, distinct counts). Default "true" = exact (oracle-matched,
-#: buffers per-group values / expands for multi-distinct — fine to ~1e6-1e8
-#: values per group). "false" = sketches (approx_percentile /
-#: approx_count_distinct): one-pass bounded memory, the 100 TB setting —
-#: results are engine-specific, so a warning documents oracle divergence
-#: (the same protocol as the LSH hot-bucket cap).
-STATS_EXACT = "spark.skinnerdb.stats.exact"
-
-
-def stats_exact(spark) -> bool:
-    """Resolve the exact-stats conf; warn once per call site when approx."""
-    import warnings
-
-    v = str(spark.conf.get(STATS_EXACT, "true")).lower()
-    if v not in ("true", "false"):
-        raise ValueError(f"{STATS_EXACT} must be true|false, got {v!r}")
-    if v == "false":
-        warnings.warn(
-            f"{STATS_EXACT}=false: sketch-based statistics aggregates are "
-            "engine-specific and will diverge from the DuckDB oracle",
-            stacklevel=3,
-        )
-    return v == "true"
-
-
 def ranked_topk(
     df: DataFrame, spec: list[tuple[str, str]], k: int, rnk_col: str = "rnk"
 ) -> DataFrame:

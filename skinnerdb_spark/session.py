@@ -25,6 +25,21 @@ def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half the host's physical memory in
+    whole GiB, between 1g and 32g. A larger heap lets G1 grow the JVM until
+    the kernel's OOM killer ends it; where the host's memory cannot be read
+    the default is the 32g cap."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "32g"
+    return f"{min(32, max(1, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "skinnerdb-spark",
     master: str | None = None,
@@ -75,7 +90,7 @@ def get_spark(
         # running JVM leaves it unchanged). On a real cluster executors carry
         # their own spark.executor.memory; this knob then only covers
         # driver-side collects and broadcast staging.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
     )

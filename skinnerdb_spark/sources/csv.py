@@ -13,7 +13,6 @@ string-typed date columns.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -68,17 +67,3 @@ def compact(spark: SparkSession, path: str, out_path: str, target_mb: int = 128)
     df.repartition(n_files).write.mode("overwrite").parquet(out_path)
     return n_files
 
-
-def csv_to_parquet(
-    spark: SparkSession,
-    csv_path: str,
-    parquet_path: str,
-    schema: T.StructType | str,
-    **csv_opts,
-) -> DataFrame:
-    """The reference's load-then-compress flow (LoadCSV + Compressor) in one
-    step: Parquet dictionary/RLE encoding subsumes the reference's global
-    string dictionary (src/compression/Compressor.java:31-50)."""
-    df = load_csv(spark, csv_path, schema, **csv_opts)
-    store_table(df, parquet_path)
-    return spark.read.parquet(parquet_path)

@@ -1091,79 +1091,6 @@ def test_transition_update_emits_late_count_for_late_only_batch():
     assert empty.empty and list(empty.columns) == list(out.columns)
 
 
-def test_stats_exact_conf_gates_approx_sketches(spark, sf_dir):
-    """VERDICT r5 item 2: one conf (spark.skinnerdb.stats.exact) swaps the
-    three exact-aggregate scale hazards for bounded-memory sketches —
-    profile_table's COUNT(DISTINCT) (expand operator), and the exact
-    percentiles of orders_equidepth_hist / docs_length_quantiles. Exact
-    stays the default (oracle-matched); the approx path must warn, keep the
-    schema, drop the expand, and land within sketch error."""
-    import warnings
-
-    from skinnerdb_spark.operators.analytics import (
-        orders_equidepth_hist,
-        profile_table,
-    )
-    from skinnerdb_spark.operators.text import docs_length_quantiles
-    from skinnerdb_spark.queries.util import STATS_EXACT
-
-    exact_prof = {r["col_name"]: r.asDict() for r in profile_table(spark, sf_dir).collect()}
-    exact_hist = {r["bucket"]: r["n"] for r in orders_equidepth_hist(spark, sf_dir).collect()}
-    exact_q = docs_length_quantiles(spark, sf_dir)
-    exact_q_rows = {r["source"]: r["q50"] for r in exact_q.collect()}
-    # r7: the exact path no longer plans a multi-distinct Expand either — it
-    # runs one two-level dedup pipeline per column (the distinct_agg
-    # reformulation), so NEITHER mode may show the expand operator
-    exact_plan = profile_table(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" not in exact_plan, "exact distinct must use stacked two-level aggs"
-
-    prev = spark.conf.get(STATS_EXACT, None)
-    spark.conf.set(STATS_EXACT, "false")
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            prof_df = profile_table(spark, sf_dir)
-        assert any(STATS_EXACT in str(x.message) for x in w), (
-            "approx mode must warn about oracle divergence"
-        )
-        assert "Expand" not in prof_df._jdf.queryExecution().executedPlan().toString()
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            prof = {r["col_name"]: r.asDict() for r in prof_df.collect()}
-            hist = {r["bucket"]: r["n"] for r in orders_equidepth_hist(spark, sf_dir).collect()}
-            q_df = docs_length_quantiles(spark, sf_dir)
-            q_rows = {r["source"]: r["q50"] for r in q_df.collect()}
-        for c, ex in exact_prof.items():
-            ap = prof[c]
-            # everything but the sketched distinct count is still exact
-            for k in ("n_rows", "n_nulls", "min_val", "max_val"):
-                assert ap[k] == ex[k], (c, k)
-            assert abs(ap["n_distinct"] - ex["n_distinct"]) <= max(
-                3, 0.1 * ex["n_distinct"]
-            ), (c, ap["n_distinct"], ex["n_distinct"])
-        total = sum(exact_hist.values())
-        assert sum(hist.values()) == total, "every row lands in some bucket"
-        for b, n in hist.items():
-            assert abs(n - total / 10) <= 0.05 * total, (b, n)
-        assert q_df.schema == exact_q.schema, "approx mode must keep the schema"
-        for src, ex50 in exact_q_rows.items():
-            assert abs(q_rows[src] - ex50) <= max(2.0, 0.05 * ex50), (src,)
-    finally:
-        if prev is None:
-            spark.conf.unset(STATS_EXACT)
-        else:
-            spark.conf.set(STATS_EXACT, prev)
-
-    # exact path untouched after restore, and bad values are loud
-    assert {r["bucket"]: r["n"] for r in orders_equidepth_hist(spark, sf_dir).collect()} == exact_hist
-    spark.conf.set(STATS_EXACT, "maybe")
-    try:
-        with pytest.raises(ValueError, match="stats.exact"):
-            profile_table(spark, sf_dir).collect()
-    finally:
-        spark.conf.unset(STATS_EXACT)
-
-
 def test_codecs_roundtrip_all_png_filters_and_bmp():
     """Pure-stdlib codecs (r6): BMP and PNG encode/decode round-trip pixel-
     exact (gray/RGB/RGBA), the decoder reconstructs every PNG filter type

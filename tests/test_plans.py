@@ -96,6 +96,26 @@ def test_pipeline_ops_plan_shapes(spark, sf_dir):
     assert "hashpartitioning" not in plan and "Join" not in plan
 
 
+def test_profile_table_has_no_expand(spark, sf_dir):
+    """profile_table counts each column's distinct values in its own
+    column-pruned dedup: no multi-distinct Expand that replicates every
+    orders row once per column."""
+    assert "Expand" not in plan_of(spark, "profile_table", sf_dir)
+
+
+def test_fan_out_spreads_only_small_inputs(spark, monkeypatch):
+    """fan_out round-robins an input whose size estimate is under
+    FAN_OUT_MIN_BYTES_PER_CORE per core, and returns a larger one as is."""
+    from skinnerdb_spark.operators import textprims
+
+    cores = spark.sparkContext.defaultParallelism
+    small = spark.range(100)
+    plan = textprims.fan_out(small)._jdf.queryExecution().executedPlan().toString()
+    assert f"RoundRobinPartitioning({cores})" in plan, plan
+    monkeypatch.setattr(textprims, "FAN_OUT_MIN_BYTES_PER_CORE", 1)
+    assert textprims.fan_out(small) is small
+
+
 def test_adaptive_path_keeps_broadcasts(spark, sf_dir):
     """A query routed through the join-order bandit still broadcasts its
     small dimensions — reordering must not forfeit physical adaptivity."""

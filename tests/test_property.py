@@ -12,10 +12,9 @@ input space is where the breadth comes from.
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import given, settings, strategies as st
 
-from skinnerdb_spark.operators.dedup import min_label_components, star_components
+from skinnerdb_spark.operators.dedup import min_label_components
 from skinnerdb_spark.operators.textprims import shingles_expr
 
 
@@ -45,16 +44,14 @@ edge_lists = st.lists(
 )
 
 
-@pytest.mark.parametrize("components", [min_label_components, star_components])
 @settings(max_examples=8, deadline=None)
 @given(edges=edge_lists)
-def test_components_match_union_find(spark, components, edges):
-    """Any undirected graph: BOTH distributed CC implementations (min-label
-    propagation and large/small-star contraction) must agree with exact
+def test_components_match_union_find(spark, edges):
+    """Any undirected graph: min-label propagation must agree with exact
     union-find — including multi-hop chains, cycles, duplicate and reversed
     edges (hypothesis shrinks to the minimal failing graph)."""
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    got = {r.doc: r.lbl for r in components(pairs).collect()}
+    got = {r.doc: r.lbl for r in min_label_components(pairs).collect()}
     assert got == _union_find_components(edges)
 
 
