@@ -51,7 +51,7 @@ def run_pass(spark, sf_dir: str, csv_lines: list[str] | None) -> tuple[dict, dic
     SQLMetrics)."""
     from skinnerdb_spark.engine import Engine
     from skinnerdb_spark.plans.metrics import plan_metrics, run_and_count
-    from skinnerdb_spark.registry import all_specs
+    from skinnerdb_spark.registry import all_specs, family_builds
 
     specs = {n: s for n, s in all_specs().items() if s.bench}
     # SPARK_GRAFT_BENCH_EXCLUDE: comma-separated entry names to skip — used
@@ -90,26 +90,7 @@ def run_pass(spark, sf_dir: str, csv_lines: list[str] | None) -> tuple[dict, dic
     # times the shared build (cache materialization included); member
     # queries then measure steady-state. On pass 2+ the memoized caches are
     # warm and these rows measure cache-read floor — by design.
-    from skinnerdb_spark.operators import analytics as _ana
-    from skinnerdb_spark.operators import dedup as _dedup
-    from skinnerdb_spark.operators import similarity as _sim
-    from skinnerdb_spark.operators import text as _text
-
-    for label, build in (
-        ("family:co_edges", _ana.shared_co_edges),
-        ("family:bigram_inst", _text.shared_bigram_instances),
-        ("family:doc_len", _ana.shared_doc_lengths),
-        ("family:bm25_tf", _ana.shared_bm25_tf),
-        ("family:minhash_sigs", _dedup.shared_sigs),
-        ("family:shingle_sets", _dedup.shared_shingle_sets),
-        ("family:shingle_hashes", _dedup.shared_shingle_hashes),
-        ("family:lsh_candidates", _dedup.lsh_candidates),
-        ("family:verified_pairs", _dedup.shared_verified_pairs),
-        ("family:prefix_pairs", _dedup.shared_prefix_pairs),
-        ("family:simhash_sigs", _dedup.shared_simhash),
-        ("family:sign_bits", _sim.shared_bits),
-        ("family:brute_topk", _sim.sim_bruteforce_topk),
-    ):
+    for label, build in family_builds():
         t0 = time.monotonic()
         df = build(spark, sf_dir)
         n = run_and_count(df)
@@ -320,27 +301,12 @@ def main() -> None:
 
     # ANN quality: recall@k of each approximate entry vs the exact
     # brute-force baseline (the judge-facing approximation dial)
-    ann_recall: dict[str, float] = {}
     try:
-        def topk_sets(name: str) -> dict[int, set[int]]:
-            out: dict[int, set[int]] = {}
-            for r in all_specs()[name].spark(spark, sf_dir).collect():
-                out.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-            return out
+        from skinnerdb_spark.operators import similarity
 
-        truth = topk_sets("sim_bruteforce_topk")
-        for name in (
-            "sim_lsh_ann",
-            "sim_lsh_multiprobe",
-            "sim_ivf_ann",
-            "sim_pq_ann",
-            "sim_ivfpq_ann",
-            "sim_sq_ann",
-        ):
-            got = topk_sets(name)
-            hits = sum(len(got.get(q, set()) & t) for q, t in truth.items())
-            total = sum(len(t) for t in truth.values())
-            ann_recall[name] = round(hits / total, 4) if total else 0.0
+        ann_recall = {
+            r["entry"]: r["recall_at_k"] for r in similarity.ann_recall(spark, sf_dir)["entries"]
+        }
     except Exception as exc:  # recall is reporting, never a bench failure
         ann_recall = {"error": str(exc)}
 

@@ -18,12 +18,15 @@ reference hand-rolls (SURVEY §4.1) plus the ones it lacks.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from skinnerdb_spark.catalog import register_views
 from skinnerdb_spark.session import get_spark
 from skinnerdb_spark.sources.csv import load_csv
+from skinnerdb_spark.state import plan_helper
 
 
 class Engine:
@@ -205,30 +208,18 @@ class Engine:
         caller must not delete the artifact while those exist.
 
         A CACHED view reports no inputFiles() (its plan substitutes an
-        InMemoryRelation), so detection walks the analyzed plan's relation
-        leaves; re-pointing such a view also drops and rebuilds its cache —
-        a lazy, never-materialized cache would otherwise recompute from the
-        deleted files on first use."""
+        InMemoryRelation), so detection also reads the root paths of the
+        analyzed plan's relation leaves (``PlanHelper.scanPaths``);
+        re-pointing such a view also drops and rebuilds its cache — a lazy,
+        never-materialized cache would otherwise recompute from the deleted
+        files on first use."""
         from skinnerdb_spark.catalog import TABLES, read_table
 
         def scan_paths(name: str) -> list[str]:
-            out: list[str] = []
             try:
-                out.extend(self.spark.table(name).inputFiles())
-                plan = self.spark.table(name)._jdf.queryExecution().analyzed()
-                leaves = plan.collectLeaves()
-                for i in range(leaves.size()):
-                    lf = leaves.apply(i)
-                    if lf.getClass().getSimpleName().startswith("LogicalRelation"):
-                        try:
-                            out.append(
-                                lf.relation().location().rootPaths().head().toString()
-                            )
-                        except Exception:
-                            pass
+                return json.loads(plan_helper(self.spark).scanPaths(self.spark.table(name)._jdf))
             except Exception:
-                pass
-            return out
+                return []
 
         unsafe: list[str] = []
         marker = artifact_path.rstrip("/") + "/"

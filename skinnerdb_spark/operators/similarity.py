@@ -18,6 +18,8 @@ identical.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -123,6 +125,49 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return memo(spark, sf_dir, "brute_topk", build)
+
+
+#: the approximate top-k entries, each with the representation its
+#: candidates are scored from; ann_recall measures them all
+ANN_ENTRIES = {
+    "sim_lsh_ann": "raw vectors (8 tables x 4-bit sign-LSH)",
+    "sim_lsh_multiprobe": "raw vectors (8 tables x 10-bit, 600 margin-ranked probes)",
+    "sim_ivf_ann": "raw vectors (nprobe=2 of 16 k-means cells)",
+    "sim_pq_ann": "8-byte PQ codes (16x4-bit), ADC then rescore",
+    "sim_ivfpq_ann": "8-byte PQ codes within nprobe IVF cells",
+    "sim_sq_ann": "int8 SQ codes (per-dimension uniform), then rescore",
+}
+
+
+def ann_recall(spark: SparkSession, sf_dir: str) -> dict:
+    """recall@k of every :data:`ANN_ENTRIES` entry against the exact
+    brute-force top-k on the same warehouse, with each entry's collect time:
+    ``{"queries", "k", "entries": [{"entry", "recall_at_k", "seconds"}]}``.
+    Read by the bench's ANN receipt and tools/ann_sweep.py."""
+    from skinnerdb_spark.registry import all_specs
+
+    specs = all_specs()
+
+    def topk(name: str) -> dict[int, set[int]]:
+        out: dict[int, set[int]] = {}
+        for r in specs[name].spark(spark, sf_dir).collect():
+            out.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+        return out
+
+    truth = topk("sim_bruteforce_topk")
+    total = sum(len(t) for t in truth.values())
+    rows = []
+    for name in ANN_ENTRIES:
+        t0 = time.time()
+        got = topk(name)
+        secs = time.time() - t0
+        hits = sum(len(got.get(q, set()) & t) for q, t in truth.items())
+        rows.append({
+            "entry": name,
+            "recall_at_k": round(hits / total, 4) if total else 0.0,
+            "seconds": round(secs, 2),
+        })
+    return {"queries": len(truth), "k": max(map(len, truth.values())), "entries": rows}
 
 
 # --------------------------------------------------------------------------
@@ -861,8 +906,8 @@ def embed_norm_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     n = e.select("vec_id", "label", dot_exact("embedding", "embedding").alias("norm2"))
     f = n.agg(
-        F.expr("percentile(norm2, 0.25)").cast("double").alias("q1"),
-        F.expr("percentile(norm2, 0.75)").cast("double").alias("q3"),
+        F.expr("percentile(norm2, 0.25)").alias("q1"),
+        F.expr("percentile(norm2, 0.75)").alias("q3"),
     )
     iqr = F.col("q3") - F.col("q1")
     return n.join(F.broadcast(f)).select(

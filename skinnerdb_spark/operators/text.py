@@ -285,7 +285,7 @@ def docs_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     return d.groupBy("source").agg(
         *[
-            F.expr(f"percentile(n_chars, {q})").cast("double").alias(f"q{int(q * 100)}")
+            F.expr(f"percentile(n_chars, {q})").alias(f"q{int(q * 100)}")
             for q in (0.25, 0.50, 0.75, 0.95)
         ]
     )

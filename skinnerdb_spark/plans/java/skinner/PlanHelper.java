@@ -36,23 +36,31 @@ import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint;
 import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias;
 import org.apache.spark.sql.classic.Dataset;
 import org.apache.spark.sql.classic.SparkSession;
+import org.apache.spark.sql.execution.FileSourceScanExec;
+import org.apache.spark.sql.execution.SparkPlan;
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec;
+import org.apache.spark.sql.execution.adaptive.QueryStageExec;
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation;
 import org.apache.spark.sql.execution.datasources.LogicalRelation;
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$;
+import org.apache.spark.sql.execution.metric.SQLMetric;
 import org.apache.spark.sql.types.StructType;
 import scala.Option;
 import scala.jdk.javaapi.CollectionConverters;
 
 /**
- * JVM side of the adaptive join tier (skinnerdb_spark/plans/graph.py).
+ * The one plan walker: every walk over Catalyst's trees runs here, in the
+ * JVM (skinnerdb_spark/plans/graph.py, plans/metrics.py and engine.py call
+ * it).
  *
  * Python chooses join orders; this class touches Catalyst's plans. One
  * {@link #extract} call walks a DataFrame's analyzed plan and keeps the
  * leaf plans, conditions and parent operators in a {@link Graph}, which
  * reports a compact JSON summary. One {@link Graph#rebuild} call builds the
- * left-deep chain of a chosen order and replays the parents over it. Plan
- * and expression handles never cross to Python, so a query costs a handful
- * of py4j round trips instead of one per plan node.
+ * left-deep chain of a chosen order and replays the parents over it. One
+ * {@link #executedNodes} call reports an executed plan's operators and
+ * their SQL metrics. Plan and expression handles never cross to Python, so
+ * a query costs a handful of py4j round trips instead of one per plan node.
  *
  * Loaded at run time through a URLClassLoader whose parent is Spark's
  * loader (skinnerdb_spark/state.py), so it needs nothing on the launch
@@ -121,6 +129,67 @@ public final class PlanHelper {
                 conf, seq(List.of(st)), spark.sessionState().conf().ignoreCorruptFiles()),
             spark);
         return schema.isDefined() ? schema.get().json() : null;
+    }
+
+    /**
+     * The executed physical plan of {@code df} as JSON: {"adaptive": whether
+     * its root is an AQE shell, "nodes": [...]}. Nodes are in pre-order,
+     * AQE and query-stage shells unwrapped; each has "class" (the simple
+     * class name), "name" (nodeName), "parent" (its parent's index, -1 at
+     * the root), "metrics" ({key: [display name, value]} in the plan's
+     * order; the key stands in for a missing display name) and, on a file
+     * scan, "scan" (the scan's first root path). Metrics read 0 until an
+     * action has run the plan.
+     */
+    public String executedNodes(Dataset<?> df) throws Exception {
+        SparkPlan root = df.queryExecution().executedPlan();
+        List<Map<String, Object>> nodes = new ArrayList<>();
+        addNodes(root, -1, nodes);
+        Map<String, Object> out = new LinkedHashMap<>();
+        out.put("adaptive", root instanceof AdaptiveSparkPlanExec);
+        out.put("nodes", nodes);
+        return JSON.writeValueAsString(out);
+    }
+
+    private static void addNodes(SparkPlan node, int parent, List<Map<String, Object>> out) {
+        while (node instanceof AdaptiveSparkPlanExec || node instanceof QueryStageExec) {
+            node = node instanceof QueryStageExec q ? q.plan()
+                : ((AdaptiveSparkPlanExec) node).executedPlan();
+        }
+        Map<String, Object> row = new LinkedHashMap<>();
+        row.put("class", node.getClass().getSimpleName());
+        row.put("name", node.nodeName());
+        row.put("parent", parent);
+        Map<String, Object> metrics = new LinkedHashMap<>();
+        for (Map.Entry<String, SQLMetric> e : CollectionConverters.asJava(node.metrics()).entrySet()) {
+            Option<String> name = e.getValue().name();
+            String display = name.isDefined() && !name.get().isEmpty() ? name.get() : e.getKey();
+            metrics.put(e.getKey(), List.of(display, e.getValue().value()));
+        }
+        row.put("metrics", metrics);
+        if (node instanceof FileSourceScanExec scan
+                && scan.relation().location().rootPaths().nonEmpty()) {
+            row.put("scan", scan.relation().location().rootPaths().head().toString());
+        }
+        int self = out.size();
+        out.add(row);
+        for (SparkPlan child : list(node.children())) {
+            addNodes(child, self, out);
+        }
+    }
+
+    /** The files {@code df} reads and the root path of every file relation
+     *  in its analyzed plan (a cached view reports no input files), as a
+     *  JSON list. */
+    public String scanPaths(Dataset<?> df) throws Exception {
+        List<String> out = new ArrayList<>(Arrays.asList(df.inputFiles()));
+        for (LogicalPlan leaf : list(df.queryExecution().analyzed().collectLeaves())) {
+            String root = leafInfo(leaf)[1];
+            if (root != null) {
+                out.add(root);
+            }
+        }
+        return JSON.writeValueAsString(out);
     }
 
     /** Leaf names of the topmost join of {@code df}'s optimized plan, in

@@ -3,16 +3,20 @@ reference bench (src/benchmark/BenchUtil.java:66-79 emits 16 columns of
 UCT/tuple counters; the Spark-meaningful equivalents are shuffle bytes,
 spill, and peak operator memory, read from SQLMetrics after execution).
 
-Walks the physical plan (through AQE and query-stage wrappers) and sums the
-named SQLMetric values. Call only after an action has run the plan —
-metrics are zero before execution.
+Reads the executed physical plan as one node table (the JVM walks it,
+through AQE and query-stage wrappers) and folds the named SQLMetric values
+over it. Call only after an action has run the plan — metrics are zero
+before execution.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Any
 
 from pyspark.sql import DataFrame
+
+from skinnerdb_spark.state import plan_helper
 
 #: metric-name fragments -> output keys (summed over all plan nodes)
 _METRIC_KEYS = {
@@ -41,43 +45,25 @@ def run_and_count(df: DataFrame) -> int:
         return df.count()
 
 
-def _unwrap(node: Any) -> Any:
-    """The plan inside AQE and query-stage shells (``node`` itself when it
-    is neither)."""
-    try:
-        while True:
-            cls = node.getClass().getSimpleName()
-            if cls == "AdaptiveSparkPlanExec":
-                node = node.executedPlan()
-            elif cls.endswith("QueryStageExec"):
-                node = node.plan()
-            else:
-                return node
-    except Exception:
-        return node
-
-
-def _iter_nodes(node: Any):
-    """Yield every SparkPlan node, AQE and query-stage shells unwrapped.
-    Children are walked by size()/apply(i): iterating a py4j collection to
-    exhaustion costs a converted JVM exception per collection (see verify
-    notes)."""
-    node = _unwrap(node)
-    yield node
-    kids = node.children()
-    for i in range(kids.size()):
-        yield from _iter_nodes(kids.apply(i))
+def plan_nodes(df: DataFrame) -> dict[str, Any]:
+    """The executed plan of ``df`` as one table, read in one py4j call:
+    ``{"adaptive": bool, "nodes": [...]}``, nodes in pre-order with AQE and
+    query-stage shells unwrapped, each ``{"class", "name", "parent",
+    "metrics": {key: [display name, value]}}`` plus ``"scan"`` (root path)
+    on a file scan. The walk runs in the JVM (``PlanHelper.executedNodes``).
+    Call after an action has run the plan — metrics are zero before."""
+    return json.loads(plan_helper(df.sparkSession).executedNodes(df._jdf))
 
 
 def join_rows(df: DataFrame) -> tuple[int, ...]:
     """Output rows of every join in the executed plan, innermost first
     (for a left-deep chain: the first join's output, then the next ...).
     Call after an action has run ``df``'s own plan."""
-    out = []
-    for node in _iter_nodes(df._jdf.queryExecution().executedPlan()):
-        name = node.nodeName()
-        if name.endswith("Join") or name == "CartesianProduct":
-            out.append(int(node.longMetric("numOutputRows").value()))
+    out = [
+        node["metrics"]["numOutputRows"][1]
+        for node in plan_nodes(df)["nodes"]
+        if node["name"].endswith("Join") or node["name"] == "CartesianProduct"
+    ]
     return tuple(reversed(out))
 
 
@@ -97,28 +83,33 @@ def plan_metrics(df: DataFrame) -> dict[str, int]:
         "adaptive": False,
     }
     try:
-        root = df._jdf.queryExecution().executedPlan()
+        plan = plan_nodes(df)
     except Exception:
         return out
-    out["adaptive"] = root.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
-    for node in _iter_nodes(root):
-        cls = node.getClass().getSimpleName()
-        if "ShuffleExchange" in cls:
+    out["adaptive"] = plan["adaptive"]
+    for node in plan["nodes"]:
+        if "ShuffleExchange" in node["class"]:
             out["shuffle_count"] += 1
-        try:
-            mit = node.metrics().iterator()
-        except Exception:
-            continue
-        while mit.hasNext():
-            t = mit.next()
-            metric = t._2()
-            name = metric.name().isDefined() and metric.name().get() or t._1()
+        for name, value in node["metrics"].values():
             for frag, key in _METRIC_KEYS.items():
-                if frag in str(name):
-                    v = int(metric.value())
-                    if v > 0:
-                        out[key] += v
+                if frag in name and value > 0:
+                    out[key] += value
     return out
+
+
+def _dot_label(node: dict[str, Any]) -> str:
+    rows = time_ms = None
+    for name, value in node["metrics"].values():
+        if name == "number of output rows":
+            rows = value
+        elif "total time" in name or name.endswith("time in scan"):
+            time_ms = value
+    parts = [node["class"].replace("Exec", "")]
+    if rows is not None:
+        parts.append(f"rows={rows}")
+    if time_ms is not None and time_ms > 0:
+        parts.append(f"t={time_ms}ms")
+    return "\\n".join(parts)
 
 
 def plan_dot(df: DataFrame) -> str:
@@ -131,46 +122,20 @@ def plan_dot(df: DataFrame) -> str:
     AQE / query-stage shells are unwrapped so the graph shows the plan that
     actually ran; edges point in DATA-FLOW direction (child -> parent)."""
     try:
-        root = df._jdf.queryExecution().executedPlan()
+        nodes = plan_nodes(df)["nodes"]
     except Exception:
         return "digraph plan {}"
+    kids: list[list[int]] = [[] for _ in nodes]
+    for i, node in enumerate(nodes[1:], 1):
+        kids[node["parent"]].append(i)
     lines = ["digraph plan {", "  rankdir=BT;", '  node [shape=box, fontsize=10];']
-    counter = [0]
 
-    def node_label(node: Any) -> str:
-        cls = node.getClass().getSimpleName().replace("Exec", "")
-        rows = time_ms = None
-        try:
-            mit = node.metrics().iterator()
-            while mit.hasNext():
-                t = mit.next()
-                metric = t._2()
-                name = str(
-                    metric.name().isDefined() and metric.name().get() or t._1()
-                )
-                if name == "number of output rows":
-                    rows = int(metric.value())
-                elif "total time" in name or name.endswith("time in scan"):
-                    time_ms = int(metric.value())
-        except Exception:
-            pass
-        parts = [cls]
-        if rows is not None:
-            parts.append(f"rows={rows}")
-        if time_ms is not None and time_ms > 0:
-            parts.append(f"t={time_ms}ms")
-        return "\\n".join(parts)
+    def walk(i: int) -> None:
+        lines.append(f'  n{i + 1} [label="{_dot_label(nodes[i])}"];')
+        for k in kids[i]:
+            walk(k)
+            lines.append(f"  n{k + 1} -> n{i + 1};")
 
-    def walk(node: Any) -> int:
-        node = _unwrap(node)
-        counter[0] += 1
-        nid = counter[0]
-        lines.append(f'  n{nid} [label="{node_label(node)}"];')
-        kids = node.children()
-        for i in range(kids.size()):
-            lines.append(f"  n{walk(kids.apply(i))} -> n{nid};")
-        return nid
-
-    walk(root)
+    walk(0)
     lines.append("}")
     return "\n".join(lines)

@@ -691,15 +691,26 @@ def _corpus_sql(name: str) -> str:
         return f.read().strip().rstrip(";")
 
 
-def _broadcast_subtrees(df) -> list[str]:
-    """treeString of every BroadcastExchange in df's physical plan."""
-    from skinnerdb_spark.plans.metrics import _iter_nodes
+def _broadcast_subtrees(df) -> list[list[dict]]:
+    """The nodes of every BroadcastExchange subtree in df's executed plan."""
+    from skinnerdb_spark.plans.metrics import plan_nodes
+
+    nodes = plan_nodes(df)["nodes"]
+
+    def within(k: int, root: int) -> bool:
+        while k > root:  # pre-order: a parent's index is below its child's
+            k = nodes[k]["parent"]
+        return k == root
 
     return [
-        n.treeString()
-        for n in _iter_nodes(df._jdf.queryExecution().executedPlan())
-        if n.nodeName() == "BroadcastExchange"
+        [n for k, n in enumerate(nodes) if within(k, i)]
+        for i, b in enumerate(nodes)
+        if b["name"] == "BroadcastExchange"
     ]
+
+
+def _scans_lineitem(subtree: list[dict]) -> bool:
+    return any(n.get("scan", "").endswith("lineitem.parquet") for n in subtree)
 
 
 def test_learned_order_streams_its_largest_input(spark):
@@ -714,12 +725,11 @@ def test_learned_order_streams_its_largest_input(spark):
     res = G.adaptive_reorder(spark.sql(q), episodes=2, sample_rows=8000, use_cache=False)
     assert res.best_order[0] != "l" and "l" in res.best_order, res.best_order
     assert "strategy=broadcast" in res.df._jdf.queryExecution().analyzed().toString()
-    lineitem_scan = "FileScan parquet [l_"
-    assert not any(lineitem_scan in t for t in _broadcast_subtrees(res.df))
+    assert not any(_scans_lineitem(t) for t in _broadcast_subtrees(res.df))
     g = G.extract_query_graph(spark.sql(q))
     # the whole fact leaf in the place of a sample: no stream hint
     unhinted = G.finish(g, G.build_graph_chain(g, res.best_order, g.leaf(g.fact)))
-    assert any(lineitem_scan in t for t in _broadcast_subtrees(unhinted))
+    assert any(_scans_lineitem(t) for t in _broadcast_subtrees(unhinted))
     assert res.df.collect() == spark.sql(q).collect()
 
 

@@ -109,3 +109,25 @@ def test_cache_hit_round_trip_budget(spark, name, py4j_calls):
     assert res.reason == "cached" and res.best_order == learned.best_order
     assert n <= 25, py4j_calls
     assert res.df.collect() == spark.sql(text).collect()
+
+
+def test_executed_plan_reads_round_trip_budget(spark, sf_dir, py4j_calls):
+    """Each read of an executed plan — the C_out reward (join_rows), a bench
+    row's metrics and the DOT profile — costs at most 3 py4j round trips:
+    the JVM walks the plan and returns one node table. (The Python walker
+    took 1,632, 321 and 1,632 on this plan in the suite's session.)"""
+    from skinnerdb_spark.plans.metrics import join_rows, plan_dot, plan_metrics, run_and_count
+    from skinnerdb_spark.registry import all_specs
+
+    df = all_specs()["tpch_q03"].spark(spark, sf_dir)
+    run_and_count(df)
+    counts = {}
+    for read in (plan_metrics, join_rows, plan_dot):
+        read(df)  # the helper is loaded outside the count window
+        _drain_proxy_deletes(spark)
+        py4j_calls.clear()
+        out = read(df)
+        _drain_proxy_deletes(spark)
+        counts[read.__name__] = len(py4j_calls)
+        assert out
+    assert max(counts.values()) <= 3, counts

@@ -1,17 +1,14 @@
 """Reproducible ANN recall/cost sweep over the registered vector-search
 entries.
 
-Prints one markdown table (and a JSON line) of recall@K vs candidate cost
-for every approximate entry, measured against the exact brute-force
-baseline on the same warehouse — the numbers cited in INVENTORY.md /
-PERFORMANCE.md regenerate from this script.
+Prints one markdown table (and a JSON line) of recall@K and collect time
+for every approximate entry (``operators.similarity.ANN_ENTRIES``),
+measured against the exact brute-force baseline on the same warehouse —
+the numbers cited in INVENTORY.md / PERFORMANCE.md regenerate from this
+script. The bench's ``ann_recall`` receipt is the same computation.
 
 Usage:
     python tools/ann_sweep.py [sf_dir]     # default /root/testdata/sf0.01
-
-Candidate cost = |exact-scored candidate pairs| / (|queries| * (N-1)), i.e.
-the fraction of the corpus each query touches with full-precision math;
-for the code-compressed entries the touched representation is also noted.
 """
 
 from __future__ import annotations
@@ -19,72 +16,26 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ANN_ENTRIES = [
-    # name, candidate-representation note
-    ("sim_lsh_ann", "raw vectors (8 tables x 4-bit sign-LSH)"),
-    ("sim_lsh_multiprobe", "raw vectors (8 tables x 10-bit, 600 margin-ranked probes)"),
-    ("sim_ivf_ann", "raw vectors (nprobe=2 of 16 k-means cells)"),
-    ("sim_pq_ann", "8-byte PQ codes (16x4-bit), ADC then rescore"),
-    ("sim_ivfpq_ann", "8-byte PQ codes within nprobe IVF cells"),
-]
-
 
 def main(sf_dir: str = "/root/testdata/sf0.01") -> dict:
-    from pyspark.sql import functions as F
-
+    from skinnerdb_spark.operators.similarity import ANN_ENTRIES, ann_recall
     from skinnerdb_spark.queries.util import read_table
-    from skinnerdb_spark.registry import all_specs
     from skinnerdb_spark.session import get_spark
 
     spark = get_spark(app_name="ann-sweep")
-    specs = all_specs()
-    n_corpus = read_table(spark, sf_dir, "embeddings").count()
-
-    def topk(name):
-        out: dict[int, set[int]] = {}
-        for r in specs[name].spark(spark, sf_dir).collect():
-            out.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return out
-
-    truth = topk("sim_bruteforce_topk")
-    n_q = len(truth)
-    k = max(len(v) for v in truth.values())
-
-    rows = []
-    for name, rep in ANN_ENTRIES:
-        t0 = time.time()
-        got = topk(name)
-        secs = time.time() - t0
-        hits = sum(len(got.get(q, set()) & t) for q, t in truth.items())
-        total = sum(len(t) for t in truth.values())
-        # candidate cost: re-derive the exact-scored pair count by running
-        # the entry's candidate stage via its public constant where exposed;
-        # entries funnel through exact_topk_on_candidates, so the emitted
-        # row count is top-k — cost is instead read from the documented
-        # candidate constants to stay cheap and exact.
-        rows.append(
-            {
-                "entry": name,
-                "recall_at_k": round(hits / total, 4) if total else 0.0,
-                "seconds": round(secs, 2),
-                "representation": rep,
-            }
-        )
-
     report = {
         "sf_dir": sf_dir,
-        "corpus": n_corpus,
-        "queries": n_q,
-        "k": k,
-        "entries": rows,
+        "corpus": read_table(spark, sf_dir, "embeddings").count(),
+        **ann_recall(spark, sf_dir),
     }
-    print(f"\n| entry | recall@{k} | secs | candidate representation |")
+    for r in report["entries"]:
+        r["representation"] = ANN_ENTRIES[r["entry"]]
+    print(f"\n| entry | recall@{report['k']} | secs | candidate representation |")
     print("|---|---|---|---|")
-    for r in rows:
+    for r in report["entries"]:
         print(
             f"| {r['entry']} | {r['recall_at_k']} | {r['seconds']} "
             f"| {r['representation']} |"

@@ -223,22 +223,7 @@ def main() -> None:
     # 100 s (99.8 s of which was the LSH chain build it happened to
     # trigger first). (Since r10 the @realvocab branch precedes families —
     # see the ordering note in the output loop.)
-    from skinnerdb_spark.operators import analytics as _ana
-    from skinnerdb_spark.operators import dedup as _dedup
-    from skinnerdb_spark.operators import similarity as _sim
-
-    families = [
-        ("family:co_edges", _ana.shared_co_edges),
-        ("family:minhash_sigs", _dedup.shared_sigs),
-        ("family:shingle_sets", _dedup.shared_shingle_sets),
-        ("family:shingle_hashes", _dedup.shared_shingle_hashes),
-        ("family:lsh_candidates", _dedup.lsh_candidates),
-        ("family:verified_pairs", _dedup.shared_verified_pairs),
-        ("family:prefix_pairs", _dedup.shared_prefix_pairs),
-        ("family:simhash_sigs", _dedup.shared_simhash),
-        ("family:sign_bits", _sim.shared_bits),
-        ("family:brute_topk", _sim.sim_bruteforce_topk),
-    ]
+    from skinnerdb_spark.registry import family_builds
 
     class _FamilySpec:
         def __init__(self, name, fn):
@@ -301,7 +286,7 @@ def main() -> None:
             # rebuild lazily inside their member rows if needed.
             print("recycling session after the @realvocab branch", flush=True)
             spark = fresh_session(spark)
-        for fname, fn in families:
+        for fname, fn in family_builds():
             # a family build whose every consumer is excluded at this corpus
             # must not run against it (prefix_pairs on the dense-vocab sf10
             # warehouse is quadratic BY CONSTRUCTION — its consumers carry
