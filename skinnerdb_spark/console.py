@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import sys
 
+from skinnerdb_spark.artifacts import ARTIFACT_ROOT
 from skinnerdb_spark.catalog import DEFAULT_SF_DIR
 from skinnerdb_spark.engine import Engine
 
@@ -209,8 +210,7 @@ class Console:
         import os
 
         dots = self.engine.explain_adaptive_dot_snapshots(sql, every=every)
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        out_dir = os.path.join(repo_root, "spark-warehouse", "uct_snapshots")
+        out_dir = os.path.join(ARTIFACT_ROOT, "uct_snapshots")
         os.makedirs(out_dir, exist_ok=True)
         paths = []
         for i, dot in enumerate(dots, 1):

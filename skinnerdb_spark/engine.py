@@ -23,6 +23,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from skinnerdb_spark.artifacts import ARTIFACT_ROOT, du, file_fingerprint
 from skinnerdb_spark.catalog import register_views
 from skinnerdb_spark.session import get_spark
 from skinnerdb_spark.sources.csv import load_csv
@@ -85,19 +86,7 @@ class Engine:
         if self.sf_dir is None:
             raise ValueError("compress requires an attached warehouse (attach_warehouse)")
 
-        def du(path: str) -> int:
-            if os.path.isfile(path):
-                return os.path.getsize(path)
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-
-        # repo-root anchored, like the IVF index — a console launched from a
-        # different cwd must find the same compressed copies
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        out_root = os.path.join(repo_root, "spark-warehouse", "compressed")
+        out_root = os.path.join(ARTIFACT_ROOT, "compressed")
         report = []
         for t in names or TABLES:
             src = table_path(self.sf_dir, t)
@@ -142,21 +131,11 @@ class Engine:
 
         from skinnerdb_spark.operators import ivf, pq
 
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        wh = os.path.join(repo_root, "spark-warehouse")
-
-        def du(path: str) -> int:
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-
         report: list[dict] = []
-        if not os.path.isdir(wh):
+        if not os.path.isdir(ARTIFACT_ROOT):
             return report
-        for name in sorted(os.listdir(wh)):
-            path = os.path.join(wh, name)
+        for name in sorted(os.listdir(ARTIFACT_ROOT)):
+            path = os.path.join(ARTIFACT_ROOT, name)
             if not os.path.isdir(path):
                 continue
             stale = None
@@ -260,8 +239,7 @@ class Engine:
 
         if mode not in ("zorder", "range"):
             raise ValueError(f"unknown layout mode {mode!r} (zorder|range)")
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        dst = os.path.join(repo_root, "spark-warehouse", "layout", f"{name}_{mode}")
+        dst = os.path.join(ARTIFACT_ROOT, "layout", f"{name}_{mode}")
         df = self.table(name)
         missing = [c for c in cols if c not in df.columns]
         if missing:
@@ -357,22 +335,10 @@ class Engine:
 
         if self.sf_dir is None:
             raise ValueError("cached_sql requires an attached warehouse")
-        parts: list[str] = []
-        for root, _, files in sorted(os.walk(self.sf_dir)):
-            for fn in sorted(files):
-                p = os.path.join(root, fn)
-                st = os.stat(p)
-                parts.append(
-                    f"{os.path.relpath(p, self.sf_dir)}:{st.st_size}:{st.st_mtime_ns}"
-                )
-        wh_fp = hashlib.md5("|".join(parts).encode()).hexdigest()
         norm = " ".join(text.split())
-        key = hashlib.md5(f"{norm}|{wh_fp}".encode()).hexdigest()
-
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        key = hashlib.md5(f"{norm}|{file_fingerprint(self.sf_dir)}".encode()).hexdigest()
         cache_root = os.environ.get(
-            "SKINNER_RESULT_CACHE_DIR",
-            os.path.join(repo_root, "spark-warehouse", "result_cache"),
+            "SKINNER_RESULT_CACHE_DIR", os.path.join(ARTIFACT_ROOT, "result_cache")
         )
         cache_dir = os.path.join(cache_root, key)
         if not refresh and os.path.isdir(cache_dir):

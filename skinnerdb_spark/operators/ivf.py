@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from skinnerdb_spark import artifacts
+from skinnerdb_spark.artifacts import ARTIFACT_ROOT, file_fingerprint
 from skinnerdb_spark.operators.similarity import (
     TOP_K,  # noqa: F401  (re-export for tests)
     N_QUERIES,
@@ -51,39 +53,19 @@ TRAIN_SAMPLE = 2048  # lowest vec_ids — deterministic sample
 INDEX_VERSION = 2
 
 
-#: repo root via __file__ — the persisted index and the DuckDB oracle must
-#: agree on one absolute location whatever each process's cwd is.
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
 def default_index_path(sf_dir: str) -> str:
-    """Per-warehouse persisted-index location (inside spark-warehouse so the
-    repo checkout stays the only writable root)."""
+    """Per-warehouse persisted-index location under the artifact root."""
     sf_name = os.path.basename(sf_dir.rstrip("/")) or "default"
-    return os.path.join(_REPO_ROOT, "spark-warehouse", f"ivf_index_{sf_name}")
+    return os.path.join(ARTIFACT_ROOT, f"ivf_index_{sf_name}")
 
 
 def source_fingerprint(sf_dir: str) -> str:
-    """Identity of the embeddings source the index was built from: every
-    file's (relpath, size, mtime_ns) under embeddings.parquet, hashed. An
-    index whose recorded fingerprint no longer matches is STALE (the corpus
-    was rewritten) and must be rebuilt — path-basename keying alone would
-    happily serve assignments for vectors that no longer exist."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    parts: list[str] = []
-    if os.path.isdir(src):
-        for root, _, files in sorted(os.walk(src)):
-            for fn in sorted(files):
-                p = os.path.join(root, fn)
-                st = os.stat(p)
-                parts.append(f"{os.path.relpath(p, src)}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        parts.append(f"{os.path.basename(src)}:{st.st_size}:{st.st_mtime_ns}")
-    return f"v{INDEX_VERSION}:" + hashlib.md5("|".join(parts).encode()).hexdigest()
+    """Identity of the embeddings source the index was built from: the
+    file fingerprint of embeddings.parquet under the index format version.
+    An index whose recorded fingerprint no longer matches is STALE (the
+    corpus was rewritten) and must be rebuilt — path-basename keying alone
+    would happily serve assignments for vectors that no longer exist."""
+    return f"v{INDEX_VERSION}:" + file_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
 
 
 def train_centroids(train: np.ndarray, k: int = K_CELLS, iters: int = N_ITERS) -> np.ndarray:
@@ -174,12 +156,6 @@ def build_ivf_index(spark: SparkSession, e: DataFrame, path: str) -> None:
     assign_cells(e, centroids).write.mode("overwrite").parquet(f"{path}/assignments")
 
 
-def _meta_file(path: str) -> str:
-    import os
-
-    return os.path.join(path, "_source_fingerprint")
-
-
 #: the oracle SQL is a static string, so the persisted-index location it
 #: reads is resolved at import: the driver's gate runs at sf0.01 (default);
 #: tests/conftest.py pins SKINNER_ORACLE_SF_DIR to the local test SF before
@@ -235,15 +211,16 @@ def _ivf_oracle(index_path: str) -> str:
 def index_is_fresh(path: str, sf_dir: str) -> bool:
     """True iff a persisted index exists AND was built from the embeddings
     files currently on disk (see :func:`source_fingerprint`)."""
-    import os
+    return artifacts.index_is_fresh(path, "centroids", source_fingerprint(sf_dir))
 
-    if not os.path.isdir(os.path.join(path, "centroids")):
-        return False
-    try:
-        with open(_meta_file(path)) as f:
-            return f.read().strip() == source_fingerprint(sf_dir)
-    except OSError:
-        return False
+
+def ensure_ivf_index(spark: SparkSession, e: DataFrame, sf_dir: str) -> str:
+    """The warehouse's persisted index path, (re)built first unless fresh."""
+    path = default_index_path(sf_dir)
+    artifacts.ensure_index(
+        path, "centroids", source_fingerprint(sf_dir), lambda: build_ivf_index(spark, e, path)
+    )
+    return path
 
 
 def load_ivf_index(spark: SparkSession, path: str) -> tuple[np.ndarray, DataFrame]:
@@ -277,13 +254,7 @@ def sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (fixed sample/init/iterations), so cold and warm paths
     return identical results."""
     e = read_table(spark, sf_dir, "embeddings")
-    path = default_index_path(sf_dir)
-    if not index_is_fresh(path, sf_dir):
-        build_ivf_index(spark, e, path)
-        os.makedirs(path, exist_ok=True)
-        with open(_meta_file(path), "w") as f:
-            f.write(source_fingerprint(sf_dir))
-    centroids, cells = load_ivf_index(spark, path)
+    centroids, cells = load_ivf_index(spark, ensure_ivf_index(spark, e, sf_dir))
     probes = probe_cells(e, centroids)
     cand = (
         cells.join(F.broadcast(probes), "cell")

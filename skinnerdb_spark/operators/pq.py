@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from skinnerdb_spark import artifacts
+from skinnerdb_spark.artifacts import ARTIFACT_ROOT
 from skinnerdb_spark.operators import ivf as _ivf
 from skinnerdb_spark.operators.similarity import (
     DIM,
@@ -65,7 +67,7 @@ INDEX_VERSION = 1
 
 def default_index_path(sf_dir: str) -> str:
     sf_name = os.path.basename(sf_dir.rstrip("/")) or "default"
-    return os.path.join(_ivf._REPO_ROOT, "spark-warehouse", f"pq_index_{sf_name}")
+    return os.path.join(ARTIFACT_ROOT, f"pq_index_{sf_name}")
 
 
 def source_fingerprint(sf_dir: str) -> str:
@@ -179,13 +181,16 @@ def build_pq_index(spark: SparkSession, e: DataFrame, path: str) -> None:
 
 
 def index_is_fresh(path: str, sf_dir: str) -> bool:
-    if not os.path.isdir(os.path.join(path, "codebooks")):
-        return False
-    try:
-        with open(os.path.join(path, "_source_fingerprint")) as f:
-            return f.read().strip() == source_fingerprint(sf_dir)
-    except OSError:
-        return False
+    return artifacts.index_is_fresh(path, "codebooks", source_fingerprint(sf_dir))
+
+
+def ensure_pq_index(spark: SparkSession, e: DataFrame, sf_dir: str) -> str:
+    """The warehouse's persisted PQ index path, (re)built first unless fresh."""
+    path = default_index_path(sf_dir)
+    artifacts.ensure_index(
+        path, "codebooks", source_fingerprint(sf_dir), lambda: build_pq_index(spark, e, path)
+    )
+    return path
 
 
 _ORACLE_SF_DIR = os.environ.get("SKINNER_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -272,12 +277,7 @@ def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Persisted-index lifecycle (fingerprint staleness, warm reuse) matches
     sim_ivf_ann."""
     e = read_table(spark, sf_dir, "embeddings")
-    path = default_index_path(sf_dir)
-    if not index_is_fresh(path, sf_dir):
-        build_pq_index(spark, e, path)
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "_source_fingerprint"), "w") as f:
-            f.write(source_fingerprint(sf_dir))
+    path = ensure_pq_index(spark, e, sf_dir)
     cb = spark.read.parquet(f"{path}/codebooks")
     codes = spark.read.parquet(f"{path}/codes")
     queries = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -414,29 +414,11 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-sized-join algebra as the component entries; the composed
     cost at 100 TB is I/O on ~nprobe/k of an already-32x-smaller
     representation."""
-    from skinnerdb_spark.operators.ivf import (
-        N_PROBE,
-        build_ivf_index,
-        index_is_fresh as ivf_fresh,
-        load_ivf_index,
-        probe_cells,
-        source_fingerprint as ivf_fp,
-    )
+    from skinnerdb_spark.operators.ivf import N_PROBE, load_ivf_index, probe_cells
 
     e = read_table(spark, sf_dir, "embeddings")
-    ivf_path = _ivf.default_index_path(sf_dir)
-    if not ivf_fresh(ivf_path, sf_dir):
-        build_ivf_index(spark, e, ivf_path)
-        os.makedirs(ivf_path, exist_ok=True)
-        with open(os.path.join(ivf_path, "_source_fingerprint"), "w") as f:
-            f.write(ivf_fp(sf_dir))
-    pq_path = default_index_path(sf_dir)
-    if not index_is_fresh(pq_path, sf_dir):
-        build_pq_index(spark, e, pq_path)
-        os.makedirs(pq_path, exist_ok=True)
-        with open(os.path.join(pq_path, "_source_fingerprint"), "w") as f:
-            f.write(source_fingerprint(sf_dir))
-
+    ivf_path = _ivf.ensure_ivf_index(spark, e, sf_dir)
+    pq_path = ensure_pq_index(spark, e, sf_dir)
     centroids, cells = load_ivf_index(spark, ivf_path)
     probes = probe_cells(e, centroids, N_PROBE)
     ivf_cand = (

@@ -595,6 +595,50 @@ def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 KMV_K = 256  # bottom-k size: rsd ~ 1/sqrt(k-2) ~ 6.3%
 _KMV_DOMAIN = 1 << 60  # 15 md5 hex chars
+#: estimate over a sketch's (in_sketch, kth_min): (k-1) * H / h_(k), or the
+#: exact in-sketch count when a group has fewer than k distinct keys
+KMV_ESTIMATE = (
+    f"CASE WHEN in_sketch < {KMV_K} THEN CAST(in_sketch AS DOUBLE)"
+    f" ELSE CAST({KMV_K - 1} AS DOUBLE) * {_KMV_DOMAIN} / kth_min END"
+)
+
+
+def kmv_hash(col: str) -> Column:
+    """The KMV key hash: the first 15 md5 hex chars of the key's string
+    form as a BIGINT in [0, _KMV_DOMAIN) — the value the DuckDB oracles
+    compute as ``('0x' || SUBSTR(md5(...), 1, 15))::UBIGINT``."""
+    return F.expr(
+        f"CAST(conv(substring(md5(CAST(CAST({col} AS STRING) AS BINARY)),"
+        " 1, 15), 16, 10) AS BIGINT)"
+    )
+
+
+def bottom_k(df: DataFrame, keys: list[str]) -> DataFrame:
+    """The KMV_K rows of smallest ``h`` per ``keys``, in two phases: a
+    window per (keys, input partition) prunes each task's rows to <= k
+    BEFORE the exchange (the bottom-k of a union of bottom-k's is exact,
+    the TakeOrderedAndProject idea applied per group), so the keys-only
+    window sees <= k * n_partitions rows per group however large the key
+    space grows."""
+    pre = Window.partitionBy(*keys, F.spark_partition_id()).orderBy("h")
+    fin = Window.partitionBy(*keys).orderBy("h")
+    return (
+        df.withColumn("prn", F.row_number().over(pre))
+        .filter(F.col("prn") <= KMV_K)
+        .withColumn("rn", F.row_number().over(fin))
+        .filter(F.col("rn") <= KMV_K)
+        .drop("prn", "rn")
+    )
+
+
+def kmv_sketch(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
+    """(grp, h) bottom-k sketch rows of the distinct (group, key) pairs —
+    the kernel the streaming monitor (streaming/windows.py::
+    stream_kmv_monitor) shares with the batch entries through
+    :func:`kmv_hash` and :func:`bottom_k`, so the batch and stream paths
+    cannot drift arithmetically."""
+    dk = df.select(F.col(group_col).alias("grp"), F.col(key_col).alias("k")).distinct()
+    return bottom_k(dk.select("grp", kmv_hash("k").alias("h")), ["grp"])
 
 
 @register(
@@ -635,11 +679,7 @@ def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers, identical expression both engines).
 
     Scale shape: distinct (flag, key) first (map-side combinable), then
-    bottom-k in two phases — a per-(group, input-partition) window prunes
-    each task's stream to <= k rows BEFORE the exchange (the per-partition
-    bottom-k of a bottom-k union is exact, the TakeOrderedAndProject idea
-    applied per group), so the final group window sees <= k * n_partitions
-    rows however large the key space grows. The exact count (the report's
+    the two-phase :func:`bottom_k`. The exact count (the report's
     honesty column) derives from the SAME cached distinct-key frame (r11:
     it previously re-ran the corpus scan + distinct as its own subtree —
     2 scans in the before-plan, 1 after), joined on the 3-row group key.
@@ -652,25 +692,8 @@ def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "kmv_dk",
         lambda: l.select("l_returnflag", "l_partkey").distinct(),
     )
-    h = dk.select(
-        "l_returnflag",
-        F.expr(
-            "CAST(conv(substring(md5(CAST(CAST(l_partkey AS STRING) AS BINARY)),"
-            " 1, 15), 16, 10) AS BIGINT)"
-        ).alias("h"),
-    )
-    pre_w = Window.partitionBy(
-        "l_returnflag", F.spark_partition_id()
-    ).orderBy("h")
-    pruned = (
-        h.withColumn("prn", F.row_number().over(pre_w))
-        .filter(F.col("prn") <= KMV_K)
-        .drop("prn")
-    )
-    fin_w = Window.partitionBy("l_returnflag").orderBy("h")
     bot = (
-        pruned.withColumn("rn", F.row_number().over(fin_w))
-        .filter(F.col("rn") <= KMV_K)
+        bottom_k(dk.select("l_returnflag", kmv_hash("l_partkey").alias("h")), ["l_returnflag"])
         .groupBy("l_returnflag")
         .agg(
             F.max("h").cast("bigint").alias("kth_min"),
@@ -680,18 +703,14 @@ def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = dk.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_parts")
     )
-    est = (
-        f"CASE WHEN in_sketch < {KMV_K} THEN CAST(in_sketch AS DOUBLE)"
-        f" ELSE CAST({KMV_K - 1} AS DOUBLE) * {_KMV_DOMAIN} / kth_min END"
-    )
     return (
         bot.join(ex, "l_returnflag")
         .select(
             "l_returnflag",
             "exact_parts",
             "kth_min",
-            F.expr(est).alias("est_kmv"),
-            F.expr(f"ABS(({est}) - exact_parts) / exact_parts").alias("rel_err"),
+            F.expr(KMV_ESTIMATE).alias("est_kmv"),
+            F.expr(f"ABS(({KMV_ESTIMATE}) - exact_parts) / exact_parts").alias("rel_err"),
         )
         .orderBy("l_returnflag")
     )
@@ -798,8 +817,8 @@ def approx_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the partitioned sketches are (groups x statuses x k) rows;
     the merge re-ranks THAT bounded frame (distinct-by-hash first — the
-    same key under two statuses hashes identically); the direct side
-    reuses the entry-level bottom-k shape. Every window is group-keyed.
+    same key under two statuses hashes identically); every side runs the
+    same :func:`bottom_k`, and every window is group-keyed.
     The hashed distinct-key frame is CACHED (r11): it feeds the
     partitioned and the direct sketch with different prunings, so without
     materialization the corpus scan + 3-column distinct + md5 re-executed
@@ -814,24 +833,8 @@ def approx_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     dk = l.select("l_returnflag", "l_linestatus", "l_partkey").distinct()
     h = memo(
         spark, sf_dir, "kmv_merge_h",
-        lambda: dk.select(
-            "l_returnflag",
-            "l_linestatus",
-            F.expr(
-                "CAST(conv(substring(md5(CAST(CAST(l_partkey AS STRING) AS BINARY)),"
-                " 1, 15), 16, 10) AS BIGINT)"
-            ).alias("h"),
-        ),
+        lambda: dk.select("l_returnflag", "l_linestatus", kmv_hash("l_partkey").alias("h")),
     )
-
-    def bottom_k(df: DataFrame, keys: list[str]) -> DataFrame:
-        w = Window.partitionBy(*keys).orderBy("h")
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= KMV_K)
-            .drop("rn")
-        )
-
     part_bot = bottom_k(h, ["l_returnflag", "l_linestatus"])
     merged = (
         bottom_k(part_bot.select("l_returnflag", "h").distinct(), ["l_returnflag"])
@@ -956,34 +959,6 @@ def orders_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
         pct.join(busiest, "o_orderpriority")
         .select("o_orderpriority", "n", "p50_disc", "p90_disc", "busiest_month")
         .orderBy("o_orderpriority")
-    )
-
-
-def kmv_sketch(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
-    """(group, h) bottom-k sketch rows — the reusable KMV kernel behind
-    approx_distinct_kmv / approx_kmv_merge and the streaming monitor
-    (streaming/windows.py::stream_kmv_monitor), kept in one place so the
-    batch and stream paths cannot drift arithmetically. Same two-phase
-    bottom-k as the entries: per-(group, input-partition) pre-prune, then
-    the group-keyed final window."""
-    dk = df.select(
-        F.col(group_col).alias("grp"), F.col(key_col).alias("k")
-    ).distinct()
-    h = dk.select(
-        "grp",
-        F.expr(
-            "CAST(conv(substring(md5(CAST(CAST(k AS STRING) AS BINARY)),"
-            " 1, 15), 16, 10) AS BIGINT)"
-        ).alias("h"),
-    )
-    pre = Window.partitionBy("grp", F.spark_partition_id()).orderBy("h")
-    fin = Window.partitionBy("grp").orderBy("h")
-    return (
-        h.withColumn("prn", F.row_number().over(pre))
-        .filter(F.col("prn") <= KMV_K)
-        .withColumn("rn", F.row_number().over(fin))
-        .filter(F.col("rn") <= KMV_K)
-        .select("grp", "h")
     )
 
 

@@ -947,6 +947,67 @@ def ev_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _state_monitor(
+    spark: SparkSession,
+    src_dir: str,
+    state_path: str,
+    monitor_path: str,
+    checkpoint: str,
+    delta,
+    merge,
+    report,
+) -> None:
+    """The ``foreachBatch`` loop behind the four streaming state monitors
+    below. A monitor keeps a compact STATE table whose size is bounded by a
+    key domain (users, days, sketch slots), not by event volume, so the
+    stream can run forever; per micro-batch it writes MONITOR rows recomputed
+    from the whole state. It supplies three frame functions:
+
+    - ``delta(batch)``: the batch's state rows, through its batch twin's
+      kernel;
+    - ``merge(rows)``: the new state from the stored state rows unioned with
+      the delta (the delta alone on the first batch) — an associative fold,
+      so micro-batch boundaries cannot change the state;
+    - ``report(state)``: the monitor rows of the merged state.
+
+    Idempotence contract, the exactly-once recipe of Structured Streaming
+    (replayable source + checkpointed offsets + idempotent sink):
+
+    - the merged state is materialized ONCE per micro-batch by an eager
+      ``localCheckpoint``, which also cuts the read of ``state_path`` out of
+      its lineage: the state overwrite below would otherwise truncate its
+      own input mid-job;
+    - monitor rows are partitioned by ``batch_id`` and written with dynamic
+      partition overwrite, so a replayed batch rewrites ITS rows instead of
+      appending duplicates;
+    - the state overwrite restates the full frame."""
+    import os
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        rows = delta(batch_df)
+        if os.path.isdir(state_path):
+            rows = spark.read.parquet(state_path).unionByName(rows)
+        state = merge(rows).localCheckpoint(eager=True)
+        (
+            report(state)
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(monitor_path)
+        )
+        state.write.mode("overwrite").parquet(state_path)
+
+    (
+        stream_events(spark, src_dir)
+        .writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_ab_monitor(
     spark: SparkSession,
     src_dir: str,
@@ -954,94 +1015,42 @@ def stream_ab_monitor(
     monitor_path: str,
     checkpoint: str,
 ) -> None:
-    """Continuous A/B experiment monitor — the streaming twin of
-    operators/stattests.py::stats_ab_ztest, in the ``foreachBatch`` +
-    compact-state shape experimentation platforms run:
-
-    - state: one row per user ever seen, carrying the cumulative purchase
-      value in exact DECIMAL (bounded by |users|, NOT by event volume —
-      the stream can run forever);
-    - per micro-batch: merge the batch's per-user decimal deltas into the
-      state (full outer on user_id), recompute the four test integers and
-      the z statistic from the WHOLE state via the same
-      ``ab_ztest_from_conv`` arithmetic the batch entry uses, and write
-      one monitor row for the batch.
-
-    After a full drain the last monitor row is bit-identical to the batch
-    entry over the same files (pinned in tests/test_components.py) —
-    decimal state merging is associative, so micro-batch boundaries cannot
-    move a boundary user across the conversion threshold.
-
-    Idempotence: state overwrite re-states the full frame; monitor rows
-    are partitioned by batch_id with dynamic overwrite, so a replayed
-    batch rewrites ITS row instead of appending a duplicate. The state
-    read is eagerly materialized (localCheckpoint) before the overwrite —
-    reading lazily from the path being overwritten would truncate the
-    input mid-job."""
-    import os as _os
-
+    """Continuous A/B experiment monitor, the streaming twin of
+    operators/stattests.py::stats_ab_ztest. State: one row per user ever
+    seen with the cumulative purchase value in exact DECIMAL (bounded by
+    |users|). Per micro-batch the batch's per-user sums are added in, and
+    the four test integers and z are recomputed from the WHOLE state by the
+    batch entry's ``ab_ztest_from_conv``: one monitor row per batch.
+    Decimal addition is associative, so micro-batch boundaries cannot move
+    a boundary user across the threshold, and after a full drain the last
+    row is bit-identical to the batch entry (pinned in tests). Per-batch
+    loop and idempotence: :func:`_state_monitor`."""
     from skinnerdb_spark.operators.stattests import (
         AB_CONV_THRESHOLD,
         ab_ztest_from_conv,
     )
 
-    ev = stream_events(spark, src_dir)
+    def delta(batch: DataFrame) -> DataFrame:
+        purchase = F.when(
+            F.col("event_type") == "purchase", F.col("value").cast("decimal(30,6)")
+        )
+        return batch.groupBy("user_id").agg(F.sum(purchase).alias("s"))
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.groupBy("user_id").agg(
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.col("value").cast("decimal(30,6)"),
-                )
-            ).alias("s")
-        )
-        if _os.path.isdir(state_path):
-            old = spark.read.parquet(state_path).localCheckpoint(eager=True)
-            o, d = old.alias("o"), delta.alias("d")
-            merged = o.join(d, "user_id", "full_outer").select(
-                "user_id",
-                F.when(
-                    F.col("o.s").isNull() & F.col("d.s").isNull(),
-                    F.lit(None).cast("decimal(38,6)"),
-                )
-                .otherwise(
-                    F.coalesce(F.col("o.s"), F.lit(0).cast("decimal(38,6)"))
-                    + F.coalesce(F.col("d.s"), F.lit(0).cast("decimal(38,6)"))
-                )
-                .alias("s"),
-            )
-        else:
-            merged = delta.select("user_id", F.col("s").cast("decimal(38,6)").alias("s"))
-        merged = merged.localCheckpoint(eager=True)
-        conv = merged.select(
-            (F.col("user_id") % 2).alias("variant"),
-            F.when(
-                F.coalesce(
-                    F.col("s") > F.lit(float(AB_CONV_THRESHOLD)), F.lit(False)
-                ),
-                1,
-            )
-            .otherwise(0)
-            .alias("c"),
-        )
-        (
-            ab_ztest_from_conv(conv)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(monitor_path)
-        )
-        merged.write.mode("overwrite").parquet(state_path)
+    def merge(rows: DataFrame) -> DataFrame:
+        return rows.groupBy("user_id").agg(F.sum("s").alias("s"))
 
-    q = (
-        ev.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    def report(state: DataFrame) -> DataFrame:
+        converted = F.coalesce(F.col("s") > F.lit(float(AB_CONV_THRESHOLD)), F.lit(False))
+        return ab_ztest_from_conv(
+            state.select(
+                (F.col("user_id") % 2).alias("variant"),
+                F.when(converted, 1).otherwise(0).alias("c"),
+            )
+        )
+
+    _state_monitor(
+        spark, src_dir, state_path, monitor_path, checkpoint, delta, merge, report
     )
-    q.awaitTermination()
 
 
 def stream_cusum_monitor(
@@ -1051,52 +1060,27 @@ def stream_cusum_monitor(
     monitor_path: str,
     checkpoint: str,
 ) -> None:
-    """Continuous ingest-rate drift monitor — the streaming twin of
-    operators/stattests.py::ev_cusum_drift, in the same ``foreachBatch`` +
-    compact-state shape as stream_ab_monitor:
-
-    - state: one row per DAY ever seen carrying its cumulative event
-      count — bounded by the DATE DOMAIN (a year = 365 rows), not event
-      volume, so the stream can run forever;
-    - per micro-batch: merge the batch's daily counts into the state
-      (full outer on day, integer sum — associative, so micro-batch
-      boundaries cannot change any daily total), recompute the WHOLE
-      CUSUM series through the SAME ``cusum_series`` fold the batch entry
-      uses, and write one monitor row (n_days, total, alarms, maxima).
-
-    After a full drain the series recomputed from the final state is
-    row-identical to the batch entry over the same files (pinned in
-    tests/test_components.py) — daily-count merging is exact integer
-    addition. Idempotence: the stream_ab_monitor contract (state restated
-    per batch via eager localCheckpoint; monitor rows partitioned by
-    batch_id with dynamic overwrite, so replays rewrite)."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
+    """Continuous ingest-rate drift monitor, the streaming twin of
+    operators/stattests.py::ev_cusum_drift. State: one event count per DAY
+    ever seen (bounded by the date domain). Per micro-batch the batch's
+    daily counts are added in (exact integers, so batch boundaries cannot
+    change a daily total) and the WHOLE series is recomputed by the batch
+    entry's ``cusum_series`` fold: one monitor row (n_days, total, alarms,
+    maxima) per batch. After a full drain the state's series is
+    row-identical to the batch entry (pinned in tests). Per-batch loop and
+    idempotence: :func:`_state_monitor`."""
     from skinnerdb_spark.operators.stattests import cusum_series
 
-    ev = stream_events(spark, src_dir)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.groupBy(F.col("ts").cast("date").alias("d")).agg(
+    def delta(batch: DataFrame) -> DataFrame:
+        return batch.groupBy(F.col("ts").cast("date").alias("d")).agg(
             F.count(F.lit(1)).cast("bigint").alias("n")
         )
-        if _os.path.isdir(state_path):
-            old = spark.read.parquet(state_path).localCheckpoint(eager=True)
-            o, d = old.alias("o"), delta.alias("d")
-            merged = o.join(d, "d", "full_outer").select(
-                "d",
-                (
-                    F.coalesce(F.col("o.n"), F.lit(0).cast("bigint"))
-                    + F.coalesce(F.col("d.n"), F.lit(0).cast("bigint"))
-                ).cast("bigint").alias("n"),
-            )
-        else:
-            merged = delta
-        merged = merged.localCheckpoint(eager=True)
-        series = cusum_series(merged)
-        row = series.agg(
+
+    def merge(rows: DataFrame) -> DataFrame:
+        return rows.groupBy("d").agg(F.sum("n").cast("bigint").alias("n"))
+
+    def report(state: DataFrame) -> DataFrame:
+        return cusum_series(state).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_days"),
             F.sum("n_events").cast("bigint").alias("total_events"),
             F.sum(F.when(F.col("alarm"), 1).otherwise(0)).cast("bigint").alias("n_alarms"),
@@ -1104,22 +1088,10 @@ def stream_cusum_monitor(
             F.max("cusum_neg").alias("max_cusum_neg"),
             F.max("day").alias("last_day"),
         )
-        (
-            row.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(monitor_path)
-        )
-        merged.write.mode("overwrite").parquet(state_path)
 
-    q = (
-        ev.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _state_monitor(
+        spark, src_dir, state_path, monitor_path, checkpoint, delta, merge, report
     )
-    q.awaitTermination()
 
 
 def stream_kmv_monitor(
@@ -1129,76 +1101,30 @@ def stream_kmv_monitor(
     monitor_path: str,
     checkpoint: str,
 ) -> None:
-    """Streaming distinct-users-per-event-type monitor — the streaming twin
-    of approx_distinct_kmv, exploiting exactly the merge algebra
-    approx_kmv_merge pins (bottom-k of a union == bottom-k of the union of
-    bottom-k's):
+    """Streaming distinct-users-per-event-type monitor, the streaming twin
+    of approx_distinct_kmv. State: the bottom-k hash sketch per event type,
+    <= k rows per group however many distinct users arrive. Per micro-batch
+    the batch is sketched by the batch entries' ``kmv_sketch`` kernel and
+    merged by the algebra approx_kmv_merge pins (bottom-k of a union ==
+    bottom-k of the union of bottom-k's): one monitor row per (batch,
+    group) with the current kth_min and estimate. The merge is exact
+    selection, so after a full drain the state is ROW-IDENTICAL to
+    kmv_sketch() over the same files (pinned in tests). Per-batch loop and
+    idempotence: :func:`_state_monitor`."""
+    from skinnerdb_spark.queries.extensions import KMV_ESTIMATE, bottom_k, kmv_sketch
 
-    - state: the bottom-k hash sketch per event type — <= k rows per group
-      FOREVER, however many distinct users the stream accumulates (the
-      property that makes distinct-count state bounded where a naive
-      distinct would grow without limit);
-    - per micro-batch: sketch the batch (same kmv_sketch kernel as the
-      batch entries), union with the stored sketch, distinct by hash,
-      re-take bottom-k, persist; one monitor row per (batch, group) with
-      the current kth_min and estimate.
-
-    After a full drain the state sketch is ROW-IDENTICAL to kmv_sketch()
-    over the same files read as a batch (pinned in tests) — not just
-    approximately equal: the merge is exact selection algebra. Idempotence
-    follows the stream_ab_monitor contract (batch_id dynamic overwrite)."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from skinnerdb_spark.queries.extensions import KMV_K, _KMV_DOMAIN, kmv_sketch
-
-    ev = stream_events(spark, src_dir)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        delta = kmv_sketch(batch_df, "event_type", "user_id")
-        if _os.path.isdir(state_path):
-            old = spark.read.parquet(state_path).localCheckpoint(eager=True)
-            merged_in = old.unionByName(delta).distinct()
-        else:
-            merged_in = delta
-        from pyspark.sql.window import Window as _W
-
-        fin = _W.partitionBy("grp").orderBy("h")
-        merged = (
-            merged_in.withColumn("rn", F.row_number().over(fin))
-            .filter(F.col("rn") <= KMV_K)
-            .select("grp", "h")
-            .localCheckpoint(eager=True)
-        )
-        mon = merged.groupBy("grp").agg(
+    def report(state: DataFrame) -> DataFrame:
+        return state.groupBy("grp").agg(
             F.count(F.lit(1)).cast("bigint").alias("in_sketch"),
             F.max("h").cast("bigint").alias("kth_min"),
-        ).select(
-            "grp",
-            "in_sketch",
-            "kth_min",
-            F.expr(
-                f"CASE WHEN in_sketch < {KMV_K} THEN CAST(in_sketch AS DOUBLE)"
-                f" ELSE CAST({KMV_K - 1} AS DOUBLE) * {_KMV_DOMAIN} / kth_min END"
-            ).alias("est_distinct"),
-        )
-        (
-            mon.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(monitor_path)
-        )
-        merged.write.mode("overwrite").parquet(state_path)
+        ).select("grp", "in_sketch", "kth_min", F.expr(KMV_ESTIMATE).alias("est_distinct"))
 
-    q = (
-        ev.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _state_monitor(
+        spark, src_dir, state_path, monitor_path, checkpoint,
+        lambda batch: kmv_sketch(batch, "event_type", "user_id"),
+        lambda rows: bottom_k(rows.distinct(), ["grp"]),
+        report,
     )
-    q.awaitTermination()
 
 
 def stream_bitmap_monitor(
@@ -1208,66 +1134,29 @@ def stream_bitmap_monitor(
     monitor_path: str,
     checkpoint: str,
 ) -> None:
-    """Streaming activity-bitmap monitor — the streaming twin of
-    ev_bitmap_rollup, exploiting exactly the merge algebra that entry's
-    merge_exact receipt pins (bit_or over ANY partition of the rows folds
-    to the same word):
-
-    - state: one BIGINT day-bitmap per (user, month) — the state table is
-      |users| x |active months| WORDS forever, however many events the
-      stream accumulates (a naive distinct-(user, day) state grows with the
-      day count; the bitmap folds it into the word);
-    - per micro-batch: bitmap the batch (same user_month_bitmaps kernel as
-      the batch entry), bit_or-merge with the stored words, persist; one
-      monitor row per (batch, month) with current n_users / user_days /
-      max_days.
-
-    After a full drain the state table is ROW-IDENTICAL to the batch kernel
-    over the same files (pinned in tests) — bit_or merging is exact, not
-    approximate. Idempotence follows the stream_ab_monitor contract
-    (batch_id dynamic overwrite)."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
+    """Streaming activity-bitmap monitor, the streaming twin of
+    ev_bitmap_rollup. State: one BIGINT day-bitmap per (user, month), where
+    a distinct-(user, day) state would grow with the day count. Per
+    micro-batch the batch is bitmapped by the batch entry's
+    ``user_month_bitmaps`` kernel and bit_or-merged into the stored words
+    (the associativity that entry's merge_exact receipt pins): one monitor
+    row per (batch, month) with n_users / user_days / max_days. After a
+    full drain the state is ROW-IDENTICAL to the batch kernel (pinned in
+    tests). Per-batch loop and idempotence: :func:`_state_monitor`."""
     from skinnerdb_spark.operators.analytics import user_month_bitmaps
 
-    ev = stream_events(spark, src_dir)
+    days = F.expr("CAST(bit_count(bm) AS BIGINT)")
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        delta = user_month_bitmaps(batch_df)
-        if _os.path.isdir(state_path):
-            old = spark.read.parquet(state_path).localCheckpoint(eager=True)
-            merged_in = old.unionByName(delta)
-        else:
-            merged_in = delta
-        merged = (
-            merged_in.groupBy("user_id", "month")
-            .agg(F.expr("bit_or(bm)").alias("bm"))
-            .localCheckpoint(eager=True)
-        )
-        mon = merged.groupBy("month").agg(
+    def report(state: DataFrame) -> DataFrame:
+        return state.groupBy("month").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_users"),
-            F.sum(F.expr("CAST(bit_count(bm) AS BIGINT)"))
-            .cast("bigint")
-            .alias("user_days"),
-            F.max(F.expr("CAST(bit_count(bm) AS BIGINT)"))
-            .cast("bigint")
-            .alias("max_days"),
+            F.sum(days).cast("bigint").alias("user_days"),
+            F.max(days).cast("bigint").alias("max_days"),
         )
-        (
-            mon.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(monitor_path)
-        )
-        merged.write.mode("overwrite").parquet(state_path)
 
-    q = (
-        ev.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _state_monitor(
+        spark, src_dir, state_path, monitor_path, checkpoint,
+        user_month_bitmaps,
+        lambda rows: rows.groupBy("user_id", "month").agg(F.expr("bit_or(bm)").alias("bm")),
+        report,
     )
-    q.awaitTermination()

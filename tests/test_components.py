@@ -405,11 +405,8 @@ def test_ivf_index_staleness_detection(spark, sf_dir, tmp_path):
     import os
     import shutil
 
-    from skinnerdb_spark.operators.ivf import (
-        _meta_file,
-        index_is_fresh,
-        source_fingerprint,
-    )
+    from skinnerdb_spark.artifacts import FINGERPRINT_FILE
+    from skinnerdb_spark.operators.ivf import index_is_fresh, source_fingerprint
 
     wh = tmp_path / "warehouse"
     wh.mkdir()
@@ -418,7 +415,8 @@ def test_ivf_index_staleness_detection(spark, sf_dir, tmp_path):
     )
     idx = tmp_path / "idx"
     (idx / "centroids").mkdir(parents=True)  # stand-in for a built index
-    with open(_meta_file(str(idx)), "w") as f:
+    meta = idx / FINGERPRINT_FILE
+    with open(meta, "w") as f:
         f.write(source_fingerprint(str(wh)))
     assert index_is_fresh(str(idx), str(wh))
     # "rewrite" the corpus: content change -> different size/mtime
@@ -426,7 +424,7 @@ def test_ivf_index_staleness_detection(spark, sf_dir, tmp_path):
         f.write(b"x")
     assert not index_is_fresh(str(idx), str(wh))
     # missing fingerprint (pre-upgrade index) -> stale
-    os.remove(_meta_file(str(idx)))
+    os.remove(meta)
     assert not index_is_fresh(str(idx), str(wh))
 
 
