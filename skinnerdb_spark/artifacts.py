@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import hashlib
 import os
-from typing import Callable
+from collections.abc import Callable
 
 ARTIFACT_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "spark-warehouse"

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skinnerdb_spark import artifacts
-from skinnerdb_spark.artifacts import ARTIFACT_ROOT, file_fingerprint
 from skinnerdb_spark.operators.similarity import (
     TOP_K,  # noqa: F401  (re-export for tests)
     N_QUERIES,
@@ -56,7 +55,7 @@ INDEX_VERSION = 2
 def default_index_path(sf_dir: str) -> str:
     """Per-warehouse persisted-index location under the artifact root."""
     sf_name = os.path.basename(sf_dir.rstrip("/")) or "default"
-    return os.path.join(ARTIFACT_ROOT, f"ivf_index_{sf_name}")
+    return os.path.join(artifacts.ARTIFACT_ROOT, f"ivf_index_{sf_name}")
 
 
 def source_fingerprint(sf_dir: str) -> str:
@@ -65,7 +64,8 @@ def source_fingerprint(sf_dir: str) -> str:
     An index whose recorded fingerprint no longer matches is STALE (the
     corpus was rewritten) and must be rebuilt — path-basename keying alone
     would happily serve assignments for vectors that no longer exist."""
-    return f"v{INDEX_VERSION}:" + file_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    return f"v{INDEX_VERSION}:" + artifacts.file_fingerprint(src)
 
 
 def train_centroids(train: np.ndarray, k: int = K_CELLS, iters: int = N_ITERS) -> np.ndarray:

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from skinnerdb_spark import artifacts
-from skinnerdb_spark.artifacts import ARTIFACT_ROOT
 from skinnerdb_spark.operators import ivf as _ivf
 from skinnerdb_spark.operators.similarity import (
     DIM,
@@ -67,7 +66,7 @@ INDEX_VERSION = 1
 
 def default_index_path(sf_dir: str) -> str:
     sf_name = os.path.basename(sf_dir.rstrip("/")) or "default"
-    return os.path.join(ARTIFACT_ROOT, f"pq_index_{sf_name}")
+    return os.path.join(artifacts.ARTIFACT_ROOT, f"pq_index_{sf_name}")
 
 
 def source_fingerprint(sf_dir: str) -> str:

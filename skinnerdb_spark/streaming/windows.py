@@ -10,6 +10,8 @@ batch oracle meaningful for the stream path.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -953,9 +955,9 @@ def _state_monitor(
     state_path: str,
     monitor_path: str,
     checkpoint: str,
-    delta,
-    merge,
-    report,
+    delta: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+    report: Callable[[DataFrame], DataFrame],
 ) -> None:
     """The ``foreachBatch`` loop behind the four streaming state monitors
     below. A monitor keeps a compact STATE table whose size is bounded by a
