@@ -6,7 +6,10 @@ three files (``event_id % 3``) that arrive one per drain, against one
 checkpoint and one state path: three ``batch_id``s, two merges of stored
 state with a new batch. After the last drain each monitor must agree with
 its batch twin over the whole table, exactly as the single-drain tests in
-``test_components.py`` assert.
+``test_components.py`` assert. A fourth drain then re-runs the last batch
+under its own ``batch_id``, as Structured Streaming does after a crash
+between the state overwrite and the offset commit; the state must not count
+that batch twice.
 """
 
 from __future__ import annotations
@@ -130,15 +133,27 @@ def test_incremental_drains_match_batch(spark, sf_dir, tmp_path, name):
     src.mkdir()
     state = str(tmp_path / "state")
     monitor = str(tmp_path / "monitor")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        for i in range(N_PARTS):
-            shutil.copy(parts / f"part-{i}.parquet", src / f"part-{i}.parquet")
-            monitor_fn(spark, str(src), state, monitor, str(tmp_path / "ck"))
+    ck = tmp_path / "ck"
+
+    def verify():
         mon = spark.read.parquet(monitor)
         counts = mon.groupBy("batch_id", *keys).count().collect()
         assert sorted({r["batch_id"] for r in counts}) == list(range(N_PARTS))
         assert all(r["count"] == 1 for r in counts)
         check(spark, sf_dir, state, mon)
+
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    try:
+        for i in range(N_PARTS):
+            shutil.copy(parts / f"part-{i}.parquet", src / f"part-{i}.parquet")
+            monitor_fn(spark, str(src), state, monitor, str(ck))
+        verify()
+        # drop the last offset commit: the next drain re-runs that batch
+        last = N_PARTS - 1
+        (ck / "commits" / str(last)).unlink()
+        (ck / "commits" / f".{last}.crc").unlink(missing_ok=True)
+        monitor_fn(spark, str(src), state, monitor, str(ck))
+        assert (ck / "commits" / str(last)).exists()
+        verify()
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
