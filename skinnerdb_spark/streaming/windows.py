@@ -949,6 +949,10 @@ def ev_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the state column holding the ``batch_id`` whose rows the state includes
+APPLIED_BATCH = "applied_batch_id"
+
+
 def _state_monitor(
     spark: SparkSession,
     src_dir: str,
@@ -982,13 +986,22 @@ def _state_monitor(
     - monitor rows are partitioned by ``batch_id`` and written with dynamic
       partition overwrite, so a replayed batch rewrites ITS rows instead of
       appending duplicates;
-    - the state overwrite restates the full frame."""
+    - the state overwrite restates the full frame and, in the same write,
+      the batch's id (column :data:`APPLIED_BATCH`). A batch at or below the
+      stored id is skipped: after a crash between the state overwrite and
+      the offset commit, Structured Streaming re-runs that batch under the
+      same id, and a summed state would count it twice. A state path
+      therefore belongs to one checkpoint."""
     import os
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         rows = delta(batch_df)
         if os.path.isdir(state_path):
-            rows = spark.read.parquet(state_path).unionByName(rows)
+            stored = spark.read.parquet(state_path)
+            applied = stored.select(APPLIED_BATCH).first()
+            if applied is not None and batch_id <= applied[0]:
+                return
+            rows = stored.drop(APPLIED_BATCH).unionByName(rows)
         state = merge(rows).localCheckpoint(eager=True)
         (
             report(state)
@@ -998,7 +1011,9 @@ def _state_monitor(
             .partitionBy("batch_id")
             .parquet(monitor_path)
         )
-        state.write.mode("overwrite").parquet(state_path)
+        state.withColumn(APPLIED_BATCH, F.lit(batch_id)).write.mode("overwrite").parquet(
+            state_path
+        )
 
     (
         stream_events(spark, src_dir)
