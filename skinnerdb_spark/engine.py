@@ -29,6 +29,9 @@ from skinnerdb_spark.session import get_spark
 from skinnerdb_spark.sources.csv import load_csv
 from skinnerdb_spark.state import plan_helper
 
+#: cached_sql keeps at most this many results; the oldest are evicted
+RESULT_CACHE_MAX = 64
+
 
 class Engine:
     def __init__(self, spark: SparkSession | None = None, sf_dir: str | None = None):
@@ -355,7 +358,6 @@ class Engine:
         # bounded cache: evict oldest entries beyond the cap so a long-lived
         # warehouse session can't grow the cache without limit (every stale
         # fingerprint generation leaves dead entries behind otherwise)
-        cap = int(os.environ.get("SKINNER_RESULT_CACHE_MAX", "64"))
         entries = sorted(
             (
                 os.path.join(cache_root, d)
@@ -364,7 +366,7 @@ class Engine:
             ),
             key=os.path.getmtime,
         )
-        for stale in entries[: max(0, len(entries) - cap)]:
+        for stale in entries[: max(0, len(entries) - RESULT_CACHE_MAX)]:
             shutil.rmtree(stale, ignore_errors=True)
         return self.spark.read.parquet(cache_dir)
 

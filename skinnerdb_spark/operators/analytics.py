@@ -567,10 +567,10 @@ def shared_bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo(spark, sf_dir, "bm25_tf", build)
 
 
-@register(
-    "docs_bm25_topk",
-    f"""
-    WITH d AS (SELECT doc_id, text FROM documents
+#: the oracle's BM25 scorer, the DuckDB mirror of shared_doc_lengths,
+#: shared_bm25_tf and the exact-ratio score: (doc_id, term, tf, dl, score)
+#: per (query term, doc) in ``scored``. CTE text to follow a WITH.
+BM25_SCORED_CTES = f"""d AS (SELECT doc_id, text FROM documents
                WHERE text IS NOT NULL AND LENGTH(text) > 0),
     toks AS (SELECT doc_id, t.term
              FROM d, UNNEST(string_split(text, ' ')) AS t(term)
@@ -598,7 +598,13 @@ def shared_bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AS DOUBLE) AS score
         FROM tf JOIN dl ON tf.doc_id = dl.doc_id
         JOIN dfreq ON tf.term = dfreq.term
-        CROSS JOIN corpus c)
+        CROSS JOIN corpus c)"""
+
+
+@register(
+    "docs_bm25_topk",
+    f"""
+    WITH {BM25_SCORED_CTES}
     SELECT term, doc_id, tf, dl, score, CAST(rnk AS BIGINT) AS rnk
     FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY term
                     ORDER BY score DESC, doc_id) AS rnk

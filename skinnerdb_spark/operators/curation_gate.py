@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skinnerdb_spark.operators.dedup import dedup_exact
-from skinnerdb_spark.operators.segments import SEG_TOKENS, dedup_segments
+from skinnerdb_spark.operators.segments import SEGMENT_CTES, dedup_segments
 from skinnerdb_spark.operators.text import text_quality
 from skinnerdb_spark.registry import register
 
@@ -52,19 +52,7 @@ from skinnerdb_spark.registry import register
                    / (LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1) AS avg_len,
                  LENGTH(text) - LENGTH(REPLACE(text, 'the', '')) AS the_cnt
           FROM documents WHERE LENGTH(text) > 0)),
-    base AS (
-      SELECT doc_id, string_split(text, ' ') AS toks
-      FROM documents WHERE length(text) > 0),
-    segs AS (
-      SELECT doc_id, seg_no,
-             array_to_string(toks[(seg_no*{SEG_TOKENS}+1):(seg_no*{SEG_TOKENS}+{SEG_TOKENS})], ' ')
-               AS seg_text
-      FROM base,
-           LATERAL unnest(range(CAST(ceil(len(toks)/{SEG_TOKENS}.0) AS BIGINT)))
-             AS t(seg_no)),
-    shared AS (
-      SELECT seg_text, COUNT(DISTINCT doc_id) AS n_docs
-      FROM segs GROUP BY seg_text),
+    {SEGMENT_CTES},
     seg_frac AS (
       SELECT s.doc_id,
              SUM(CASE WHEN sh.n_docs > 1 THEN 1 ELSE 0 END) * 1.0 / COUNT(*) AS shared_frac

@@ -266,9 +266,16 @@ def lsh_bands(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     return sigs.select("doc_id", F.posexplode(bands_arr).alias("band", "key"))
 
 
-_MINHASH_ORACLE = f"""
-    WITH {oracle_shingles_cte(k=3)},
-    shd AS (SELECT DISTINCT doc_id, s FROM sh),
+#: the oracle's shingle sets, the DuckDB mirror of shared_shingle_sets:
+#: word 3-shingles (sh) and each doc's distinct shingles (shd). CTE text to
+#: follow a WITH.
+_SHINGLE_SET_CTES = f"""{oracle_shingles_cte(k=3)},
+    shd AS (SELECT DISTINCT doc_id, s FROM sh)"""
+
+#: the oracle's LSH candidate chain over the shingle sets, the DuckDB mirror
+#: of shared_sigs -> lsh_bands -> lsh_candidates: the minhash table (mh),
+#: band keys (bands) and the candidate pairs (cand)
+_LSH_CTES = f"""{_SHINGLE_SET_CTES},
     mh AS (SELECT doc_id, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS mh
            FROM shd, generate_series(0, {N_HASHES - 1}) AS g(j)
            GROUP BY doc_id, j),
@@ -277,7 +284,18 @@ _MINHASH_ORACLE = f"""
               FROM mh GROUP BY doc_id, band),
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
              FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
+               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)"""
+
+#: shingle-set sizes and pairwise intersections over shd, the exact-Jaccard
+#: inputs of _exact_jaccard_on_candidates and _prefix_pairs_impl
+_OVERLAP_CTES = """sizes AS (SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id),
+    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS both_n
+              FROM shd a JOIN shd b ON a.s = b.s AND a.doc_id < b.doc_id
+              GROUP BY doc_a, doc_b)"""
+
+
+_MINHASH_ORACLE = f"""
+    WITH {_LSH_CTES}
     SELECT c.doc_a, c.doc_b,
            CAST(SUM(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END) AS DOUBLE)
              / {N_HASHES} AS est_jaccard
@@ -323,26 +341,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # end-to-end dedup pipeline: LSH candidates -> exact Jaccard verify -> keep/drop
 # --------------------------------------------------------------------------
 _PIPELINE_ORACLE = f"""
-    WITH {oracle_shingles_cte(k=3)},
-    shd AS (SELECT DISTINCT doc_id, s FROM sh),
-    mh AS (SELECT doc_id, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS mh
-           FROM shd, generate_series(0, {N_HASHES - 1}) AS g(j)
-           GROUP BY doc_id, j),
-    bands AS (SELECT doc_id, CAST(j // {N_HASHES // N_BANDS} AS INTEGER) AS band,
-                     md5(string_agg(mh, '|' ORDER BY j)) AS key
-              FROM mh GROUP BY doc_id, band),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id),
+    WITH {_LSH_CTES},
+    {_OVERLAP_CTES},
     verified AS (
         SELECT c.doc_a, c.doc_b,
                CAST(i.both_n AS DOUBLE) / (sa.n + sb.n - i.both_n) AS jaccard
         FROM cand c
-        JOIN (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS both_n
-              FROM shd a JOIN shd b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY doc_a, doc_b) i
-          ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
+        JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
         JOIN sizes sa ON sa.doc_id = c.doc_a
         JOIN sizes sb ON sb.doc_id = c.doc_b)
     SELECT doc_b AS drop_id, MIN(doc_a) AS kept_id, MAX(jaccard) AS jaccard
@@ -460,21 +465,8 @@ def shared_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set-overlap measure computed ONLY for pairs the minhash bands propose
 # --------------------------------------------------------------------------
 _JACCARD_ORACLE = f"""
-    WITH {oracle_shingles_cte(k=3)},
-    shd AS (SELECT DISTINCT doc_id, s FROM sh),
-    mh AS (SELECT doc_id, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS mh
-           FROM shd, generate_series(0, {N_HASHES - 1}) AS g(j)
-           GROUP BY doc_id, j),
-    bands AS (SELECT doc_id, CAST(j // {N_HASHES // N_BANDS} AS INTEGER) AS band,
-                     md5(string_agg(mh, '|' ORDER BY j)) AS key
-              FROM mh GROUP BY doc_id, band),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS both_n
-              FROM shd a JOIN shd b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY doc_a, doc_b)
+    WITH {_LSH_CTES},
+    {_OVERLAP_CTES}
     SELECT c.doc_a, c.doc_b,
            CAST(i.both_n AS DOUBLE) / (sa.n + sb.n - i.both_n) AS jaccard
     FROM cand c
@@ -568,21 +560,8 @@ def _exact_jaccard_on_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cluster-level dedup needs the transitive closure.
 # --------------------------------------------------------------------------
 _CLUSTERS_ORACLE = f"""
-    WITH RECURSIVE {oracle_shingles_cte(k=3)},
-    shd AS (SELECT DISTINCT doc_id, s FROM sh),
-    mh AS (SELECT doc_id, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS mh
-           FROM shd, generate_series(0, {N_HASHES - 1}) AS g(j)
-           GROUP BY doc_id, j),
-    bands AS (SELECT doc_id, CAST(j // {N_HASHES // N_BANDS} AS INTEGER) AS band,
-                     md5(string_agg(mh, '|' ORDER BY j)) AS key
-              FROM mh GROUP BY doc_id, band),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS both_n
-              FROM shd a JOIN shd b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY doc_a, doc_b),
+    WITH RECURSIVE {_LSH_CTES},
+    {_OVERLAP_CTES},
     verified AS (
         SELECT c.doc_a, c.doc_b
         FROM cand c
@@ -796,21 +775,8 @@ def min_label_components(pairs: DataFrame) -> DataFrame:
 # detection (doc A ⊂ doc B), which symmetric Jaccard under-scores
 # --------------------------------------------------------------------------
 _CONTAINMENT_ORACLE = f"""
-    WITH {oracle_shingles_cte(k=3)},
-    shd AS (SELECT DISTINCT doc_id, s FROM sh),
-    mh AS (SELECT doc_id, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS mh
-           FROM shd, generate_series(0, {N_HASHES - 1}) AS g(j)
-           GROUP BY doc_id, j),
-    bands AS (SELECT doc_id, CAST(j // {N_HASHES // N_BANDS} AS INTEGER) AS band,
-                     md5(string_agg(mh, '|' ORDER BY j)) AS key
-              FROM mh GROUP BY doc_id, band),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS both_n
-              FROM shd a JOIN shd b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY doc_a, doc_b)
+    WITH {_LSH_CTES},
+    {_OVERLAP_CTES}
     SELECT c.doc_a, c.doc_b,
            CAST(i.both_n AS DOUBLE) / LEAST(sa.n, sb.n) AS containment,
            CASE WHEN sa.n <= sb.n THEN c.doc_a ELSE c.doc_b END AS contained_doc,
@@ -970,10 +936,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 PREFIX_JACCARD_T = 0.5
 
 _PREFIX_ORACLE = f"""
-    WITH {oracle_shingles_cte(k=3)},
-    shd AS (SELECT DISTINCT doc_id, s FROM sh),
-    sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-              FROM shd GROUP BY doc_id),
+    WITH {_SHINGLE_SET_CTES},
+    {_OVERLAP_CTES},
     freq AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS f FROM shd GROUP BY s),
     ranked AS (
         SELECT shd.doc_id, shd.s, sizes.n,
@@ -985,18 +949,14 @@ _PREFIX_ORACLE = f"""
                WHERE rn <= n - CAST(CEIL(n / 2.0) AS BIGINT) + 1),
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
              FROM prefix a JOIN prefix b
-               ON a.s = b.s AND a.doc_id < b.doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     CAST(COUNT(*) AS BIGINT) AS inter_n
-              FROM shd a JOIN shd b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-    SELECT c.doc_a, c.doc_b, i.inter_n, sa.n AS n_a, sb.n AS n_b,
-           CAST(i.inter_n AS DOUBLE) / (sa.n + sb.n - i.inter_n) AS jaccard
+               ON a.s = b.s AND a.doc_id < b.doc_id)
+    SELECT c.doc_a, c.doc_b, i.both_n AS inter_n, sa.n AS n_a, sb.n AS n_b,
+           CAST(i.both_n AS DOUBLE) / (sa.n + sb.n - i.both_n) AS jaccard
     FROM cand c
     JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
     JOIN sizes sa ON sa.doc_id = c.doc_a
     JOIN sizes sb ON sb.doc_id = c.doc_b
-    WHERE 3 * i.inter_n >= sa.n + sb.n
+    WHERE 3 * i.both_n >= sa.n + sb.n
 """
 
 
@@ -1431,29 +1391,13 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _LSH_RECALL_ORACLE = f"""
-    WITH {oracle_shingles_cte(k=3)},
-    shd AS (SELECT DISTINCT doc_id, s FROM sh),
-    sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-              FROM shd GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     CAST(COUNT(*) AS BIGINT) AS inter_n
-              FROM shd a JOIN shd b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
+    WITH {_LSH_CTES},
+    {_OVERLAP_CTES},
     truth AS (SELECT i.doc_a, i.doc_b
               FROM inter i
               JOIN sizes sa ON sa.doc_id = i.doc_a
               JOIN sizes sb ON sb.doc_id = i.doc_b
-              WHERE 3 * i.inter_n >= sa.n + sb.n),
-    mh AS (SELECT doc_id, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS mh
-           FROM shd, generate_series(0, {N_HASHES - 1}) AS g(j)
-           GROUP BY doc_id, j),
-    bands AS (SELECT doc_id,
-                     CAST(j // {N_HASHES // N_BANDS} AS INTEGER) AS band,
-                     md5(string_agg(mh, '|' ORDER BY j)) AS key
-              FROM mh GROUP BY doc_id, band),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+              WHERE 3 * i.both_n >= sa.n + sb.n),
     hits AS (SELECT t.doc_a FROM truth t
              JOIN cand c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
     SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM truth) AS n_true,

@@ -35,6 +35,7 @@ from skinnerdb_spark import artifacts
 from skinnerdb_spark.operators.similarity import (
     TOP_K,  # noqa: F401  (re-export for tests)
     N_QUERIES,
+    RESCORE_SQL,
     _oracle_dot,
     decimal_fold,
     exact_topk_on_candidates,
@@ -139,6 +140,26 @@ def probe_cells(e: DataFrame, centroids: np.ndarray, nprobe: int = N_PROBE) -> D
     )
 
 
+def oracle_probe_ctes(index_path: str) -> str:
+    """The oracle's IVF cells, the DuckDB mirror of :func:`assign_cells` and
+    :func:`probe_cells` over the persisted centroids: every vector's cells
+    ranked by dot product (ranked_cells), its own cell (asn) and each
+    query's nprobe nearest cells (probes). CTE text to follow a WITH."""
+    a_dot = _oracle_dot("e.embedding", "c.centroid")
+    return f"""cents AS (
+        SELECT cell, centroid
+        FROM read_parquet('{index_path}/centroids/*.parquet')),
+    ranked_cells AS (
+        SELECT e.vec_id, c.cell,
+               ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                    ORDER BY {a_dot} DESC, c.cell) AS crn
+        FROM embeddings e CROSS JOIN cents c),
+    asn AS (SELECT vec_id, cell FROM ranked_cells WHERE crn = 1),
+    probes AS (
+        SELECT vec_id AS query_id, cell
+        FROM ranked_cells WHERE vec_id < {N_QUERIES} AND crn <= {N_PROBE})"""
+
+
 def build_ivf_index(spark: SparkSession, e: DataFrame, path: str) -> None:
     """Persist an IVF index: centroid matrix + per-vector cell assignments,
     both as parquet. The durable analogue of the reference's `index all`
@@ -170,41 +191,13 @@ def _ivf_oracle(index_path: str) -> str:
     k-means training is trusted from the index — it is deterministic (fixed
     sample/init/iterations), and the centroids the oracle reads are the very
     doubles the Spark plan inlines as literals."""
-    a_dot = _oracle_dot("e.embedding", "c.centroid")
     return f"""
-    WITH cents AS (
-        SELECT cell, centroid
-        FROM read_parquet('{index_path}/centroids/*.parquet')),
-    ranked_cells AS (
-        SELECT e.vec_id, c.cell,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                    ORDER BY {a_dot} DESC, c.cell) AS crn
-        FROM embeddings e CROSS JOIN cents c),
-    asn AS (SELECT vec_id, cell FROM ranked_cells WHERE crn = 1),
-    probes AS (
-        SELECT vec_id AS query_id, cell
-        FROM ranked_cells WHERE vec_id < {N_QUERIES} AND crn <= {N_PROBE}),
+    WITH {oracle_probe_ctes(index_path)},
     cand AS (
         SELECT p.query_id, a.vec_id AS neighbor_id
         FROM probes p JOIN asn a USING (cell)
         WHERE a.vec_id <> p.query_id),
-    normed AS (
-        SELECT vec_id, embedding,
-               SQRT({_oracle_dot('embedding', 'embedding')}) AS nrm
-        FROM embeddings),
-    scored AS (
-        SELECT cd.query_id, cd.neighbor_id,
-               {_oracle_dot('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cosine
-        FROM cand cd
-        JOIN normed q ON q.vec_id = cd.query_id
-        JOIN normed n ON n.vec_id = cd.neighbor_id),
-    ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-        FROM scored)
-    SELECT query_id, neighbor_id, cosine, rnk
-    FROM ranked WHERE rnk <= {TOP_K}
+    {RESCORE_SQL}
     """
 
 

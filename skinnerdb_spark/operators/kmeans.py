@@ -233,7 +233,12 @@ def _oracle_dot_q(a: str, b: str) -> str:
     )
 
 
-def _kmeans_oracle() -> str:
+def _oracle_lloyd_ctes() -> str:
+    """The oracle's Lloyd rounds, the DuckDB mirror of
+    :func:`_lloyd_final_assign`: ``WITH`` and the seed centroids (c0),
+    KMEANS_ITERS unrolled (assign, update) rounds, then ``sf``: every
+    (vec_id, cell) score against the final centroids with the vector's
+    squared norm xn."""
     k, dim = KMEANS_K, DIM
     body = f"""
     WITH emb AS (SELECT vec_id, embedding FROM embeddings),
@@ -268,14 +273,18 @@ def _kmeans_oracle() -> str:
              {_oracle_dot_q('c.carr', 'c.carr')}
                   - 2 * {_oracle_dot_q('e.embedding', 'c.carr')} AS score,
              {_oracle_dot_q('e.embedding', 'e.embedding')} AS xn
-           FROM emb e CROSS JOIN {prev} c)
+           FROM emb e CROSS JOIN {prev} c)"""
+    return body
+
+
+def _kmeans_oracle() -> str:
+    return _oracle_lloyd_ctes() + """
     SELECT vec_id, cell, CAST(xn + score AS DOUBLE) / 1e12 AS dist2
     FROM (SELECT vec_id, cell, score, xn,
                  ROW_NUMBER() OVER (PARTITION BY vec_id
                       ORDER BY score, cell) AS rn
           FROM sf) WHERE rn = 1
     """
-    return body
 
 
 @register(
@@ -350,41 +359,7 @@ SEM_CAP = 256
 
 
 def _semdedup_oracle() -> str:
-    k, dim = KMEANS_K, DIM
-    body = f"""
-    WITH emb AS (SELECT vec_id, embedding FROM embeddings),
-    c0 AS (SELECT vec_id AS cell,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS carr
-           FROM embeddings WHERE vec_id < {k})"""
-    prev = "c0"
-    for i in range(1, KMEANS_ITERS + 1):
-        body += f""",
-    s{i} AS (SELECT e.vec_id, c.cell,
-               {_oracle_dot_q('c.carr', 'c.carr')}
-                    - 2 * {_oracle_dot_q('e.embedding', 'c.carr')} AS score
-             FROM emb e CROSS JOIN {prev} c),
-    a{i} AS (SELECT vec_id, cell FROM (
-               SELECT vec_id, cell,
-                      ROW_NUMBER() OVER (PARTITION BY vec_id
-                           ORDER BY score, cell) AS rn
-               FROM s{i}) WHERE rn = 1),
-    u{i} AS (SELECT a.cell, g.i AS pos,
-               CAST(SUM({_Q.format(x='e.embedding[g.i]')})
-                    AS DOUBLE) / 1e6 / COUNT(*) AS cv
-             FROM a{i} a JOIN emb e USING (vec_id)
-             CROSS JOIN generate_series(1, {dim}) g(i)
-             GROUP BY a.cell, g.i),
-    n{i} AS (SELECT cell, list(cv ORDER BY pos) AS carr
-             FROM u{i} GROUP BY cell),
-    c{i} AS (SELECT p.cell, COALESCE(n{i}.carr, p.carr) AS carr
-             FROM {prev} p LEFT JOIN n{i} USING (cell))"""
-        prev = f"c{i}"
-    body += f""",
-    sf AS (SELECT e.vec_id, c.cell,
-             {_oracle_dot_q('c.carr', 'c.carr')}
-                  - 2 * {_oracle_dot_q('e.embedding', 'c.carr')} AS score,
-             {_oracle_dot_q('e.embedding', 'e.embedding')} AS xn
-           FROM emb e CROSS JOIN {prev} c),
+    return _oracle_lloyd_ctes() + f""",
     af AS (SELECT vec_id, cell, xn, xn + score AS d2i
            FROM (SELECT vec_id, cell, score, xn,
                         ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -407,7 +382,7 @@ def _semdedup_oracle() -> str:
            JOIN qe qy ON qy.vec_id = y.vec_id
            WHERE CAST({SEM_DEN} * (SELECT CAST(SUM(qx.qa[g.i] * qy.qa[g.i])
                                         AS BIGINT)
-                                   FROM generate_series(1, {dim}) g(i))
+                                   FROM generate_series(1, {DIM}) g(i))
                       AS DOUBLE)
                  >= CAST({SEM_NUM} AS DOUBLE)
                     * SQRT(CAST(x.xn AS DOUBLE))
@@ -420,7 +395,6 @@ def _semdedup_oracle() -> str:
     FROM af LEFT JOIN dr ON af.vec_id = dr.did
     ORDER BY af.vec_id
     """
-    return body
 
 
 @register(

@@ -43,8 +43,7 @@ from skinnerdb_spark.operators import ivf as _ivf
 from skinnerdb_spark.operators.similarity import (
     DIM,
     N_QUERIES,
-    TOP_K,
-    _oracle_dot,
+    RESCORE_SQL,
     exact_topk_on_candidates,
 )
 from skinnerdb_spark.queries.util import read_table
@@ -142,6 +141,33 @@ def _c2_sql(cb: str) -> str:
     )
 
 
+def _oracle_code_ctes(index_path: str) -> str:
+    """The oracle's PQ codes, the DuckDB mirror of :func:`encode` and the
+    query LUT over the persisted codebooks: the codebooks (cb), every
+    (vector, subspace, codeword) distance (dists), each vector's nearest
+    codeword per subspace (codes) and the per-query dot table (lut). CTE
+    text to follow a WITH."""
+    return f"""cb AS (
+        SELECT sub, code, centroid
+        FROM read_parquet('{index_path}/codebooks/*.parquet')),
+    dists AS (
+        SELECT e.vec_id, c.sub, c.code,
+               {_c2_sql('c')} - 2 * {_sub_dot_sql('e.embedding', 'c')} AS dist
+        FROM embeddings e CROSS JOIN cb c),
+    codes AS (
+        SELECT vec_id, sub, code
+        FROM (SELECT vec_id, sub, code,
+                     ROW_NUMBER() OVER (PARTITION BY vec_id, sub
+                                        ORDER BY dist, code) AS rn
+              FROM dists)
+        WHERE rn = 1),
+    lut AS (
+        SELECT q.vec_id AS query_id, c.sub, c.code,
+               {_sub_dot_sql('q.embedding', 'c')} AS pdot
+        FROM embeddings q CROSS JOIN cb c
+        WHERE q.vec_id < {N_QUERIES})"""
+
+
 def encode(e: DataFrame, cb: DataFrame) -> DataFrame:
     """Return (vec_id, sub, code): nearest codeword per subspace. Argmin via the
     monotone surrogate dist = ||c||^2 - 2<x_sub, c> (the ||x_sub||^2 term is
@@ -202,25 +228,7 @@ def _pq_oracle(index_path: str) -> str:
     codebook TRAINING is trusted from the index (deterministic: fixed
     sample/init/iterations)."""
     return f"""
-    WITH cb AS (
-        SELECT sub, code, centroid
-        FROM read_parquet('{index_path}/codebooks/*.parquet')),
-    dists AS (
-        SELECT e.vec_id, c.sub, c.code,
-               {_c2_sql('c')} - 2 * {_sub_dot_sql('e.embedding', 'c')} AS dist
-        FROM embeddings e CROSS JOIN cb c),
-    codes AS (
-        SELECT vec_id, sub, code
-        FROM (SELECT vec_id, sub, code,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                        ORDER BY dist, code) AS rn
-              FROM dists)
-        WHERE rn = 1),
-    lut AS (
-        SELECT q.vec_id AS query_id, c.sub, c.code,
-               {_sub_dot_sql('q.embedding', 'c')} AS pdot
-        FROM embeddings q CROSS JOIN cb c
-        WHERE q.vec_id < {N_QUERIES}),
+    WITH {_oracle_code_ctes(index_path)},
     adc AS (
         SELECT l.query_id, cd.vec_id,
                CAST(SUM(l.pdot) AS DECIMAL(38,12)) AS adc
@@ -234,23 +242,7 @@ def _pq_oracle(index_path: str) -> str:
                                         ORDER BY adc DESC, vec_id) AS crn
               FROM adc)
         WHERE crn <= {CAND}),
-    normed AS (
-        SELECT vec_id, embedding,
-               SQRT({_oracle_dot('embedding', 'embedding')}) AS nrm
-        FROM embeddings),
-    scored AS (
-        SELECT cd.query_id, cd.neighbor_id,
-               {_oracle_dot('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cosine
-        FROM cand cd
-        JOIN normed q ON q.vec_id = cd.query_id
-        JOIN normed n ON n.vec_id = cd.neighbor_id),
-    ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-        FROM scored)
-    SELECT query_id, neighbor_id, cosine, rnk
-    FROM ranked WHERE rnk <= {TOP_K}
+    {RESCORE_SQL}
     """
 
 
@@ -310,46 +302,13 @@ def _ivfpq_oracle(ivf_path: str, pq_path: str) -> str:
     PQ encoding + LUT produce the ADC ranking over those candidates only,
     exact cosine rescore finishes. Training of both indexes is the only
     non-SQL step (deterministic, same contract as the component entries)."""
-    from skinnerdb_spark.operators.ivf import N_PROBE
-    from skinnerdb_spark.operators.ivf import _oracle_dot as _ivf_dot
-
-    a_dot = _ivf_dot("e.embedding", "c.centroid")
     return f"""
-    WITH cents AS (
-        SELECT cell, centroid
-        FROM read_parquet('{ivf_path}/centroids/*.parquet')),
-    ranked_cells AS (
-        SELECT e.vec_id, c.cell,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                    ORDER BY {a_dot} DESC, c.cell) AS crn
-        FROM embeddings e CROSS JOIN cents c),
-    asn AS (SELECT vec_id, cell FROM ranked_cells WHERE crn = 1),
-    probes AS (
-        SELECT vec_id AS query_id, cell
-        FROM ranked_cells WHERE vec_id < {N_QUERIES} AND crn <= {N_PROBE}),
+    WITH {_ivf.oracle_probe_ctes(ivf_path)},
     ivf_cand AS (
         SELECT p.query_id, a.vec_id
         FROM probes p JOIN asn a USING (cell)
         WHERE a.vec_id <> p.query_id),
-    cb AS (
-        SELECT sub, code, centroid
-        FROM read_parquet('{pq_path}/codebooks/*.parquet')),
-    dists AS (
-        SELECT e.vec_id, c.sub, c.code,
-               {_c2_sql('c')} - 2 * {_sub_dot_sql('e.embedding', 'c')} AS dist
-        FROM embeddings e CROSS JOIN cb c),
-    codes AS (
-        SELECT vec_id, sub, code
-        FROM (SELECT vec_id, sub, code,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                        ORDER BY dist, code) AS rn
-              FROM dists)
-        WHERE rn = 1),
-    lut AS (
-        SELECT q.vec_id AS query_id, c.sub, c.code,
-               {_sub_dot_sql('q.embedding', 'c')} AS pdot
-        FROM embeddings q CROSS JOIN cb c
-        WHERE q.vec_id < {N_QUERIES}),
+    {_oracle_code_ctes(pq_path)},
     adc AS (
         SELECT ic.query_id, ic.vec_id,
                CAST(SUM(l.pdot) AS DECIMAL(38,12)) AS adc
@@ -365,23 +324,7 @@ def _ivfpq_oracle(ivf_path: str, pq_path: str) -> str:
                                         ORDER BY adc DESC, vec_id) AS crn
               FROM adc)
         WHERE crn <= {CAND}),
-    normed AS (
-        SELECT vec_id, embedding,
-               SQRT({_ivf_dot('embedding', 'embedding')}) AS nrm
-        FROM embeddings),
-    scored AS (
-        SELECT cd.query_id, cd.neighbor_id,
-               {_ivf_dot('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cosine
-        FROM cand cd
-        JOIN normed q ON q.vec_id = cd.query_id
-        JOIN normed n ON n.vec_id = cd.neighbor_id),
-    ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-        FROM scored)
-    SELECT query_id, neighbor_id, cosine, rnk
-    FROM ranked WHERE rnk <= {TOP_K}
+    {RESCORE_SQL}
     """
 
 

@@ -36,12 +36,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skinnerdb_spark.operators.analytics import (
+    BM25_SCORED_CTES,
     BM25_TERMS,
-    _BM25_TERMS_SQL,
     shared_bm25_tf,
     shared_doc_lengths,
 )
-from skinnerdb_spark.operators.similarity import DIM, _oracle_dot, dot_exact, norm_exact
+from skinnerdb_spark.operators.similarity import (
+    NORMED_CTE,
+    _oracle_dot,
+    dot_exact,
+    norm_exact,
+)
 from skinnerdb_spark.queries.util import read_table, ranked_topk
 from skinnerdb_spark.registry import register
 
@@ -51,35 +56,7 @@ RRF_K0 = 60       # RRF smoothing constant (the value from the RRF paper)
 RRF_QUERY_VEC = 0  # the corpus vector used as the dense query
 
 _RRF_ORACLE = f"""
-    WITH d AS (SELECT doc_id, text FROM documents
-               WHERE text IS NOT NULL AND LENGTH(text) > 0),
-    toks AS (SELECT doc_id, t.term
-             FROM d, UNNEST(string_split(text, ' ')) AS t(term)
-             WHERE t.term <> ''),
-    dl AS (SELECT doc_id,
-                  CAST(len(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS BIGINT) AS dl
-           FROM d),
-    corpus AS (SELECT CAST(SUM(dl) AS BIGINT) AS sd,
-                      CAST(COUNT(*) AS BIGINT) AS n FROM dl),
-    q(term) AS (VALUES {_BM25_TERMS_SQL}),
-    tf AS (SELECT toks.doc_id, toks.term, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM toks JOIN q ON toks.term = q.term
-           GROUP BY toks.doc_id, toks.term),
-    dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-              FROM tf GROUP BY term),
-    scored AS (
-        SELECT tf.doc_id,
-               CAST(CAST(2 * c.n - 2 * dfreq.df + 1 AS HUGEINT)
-                    * 22 * tf.tf * c.sd AS DOUBLE)
-                 / CAST(CAST(2 * dfreq.df + 1 AS HUGEINT)
-                        * (10 * CAST(tf.tf AS HUGEINT) * c.sd
-                           + 3 * CAST(c.sd AS HUGEINT)
-                           + 9 * CAST(dl.dl AS HUGEINT) * c.n)
-                        AS DOUBLE) AS score
-        FROM tf JOIN dl ON tf.doc_id = dl.doc_id
-        JOIN dfreq ON tf.term = dfreq.term
-        CROSS JOIN corpus c),
+    WITH {BM25_SCORED_CTES},
     bmdoc AS (SELECT doc_id,
                      CAST(SUM(CAST(ROUND(score * 1000000, 0) AS BIGINT))
                           AS BIGINT) AS sq
@@ -89,9 +66,7 @@ _RRF_ORACLE = f"""
                          ROW_NUMBER() OVER (ORDER BY sq DESC, doc_id) AS r
                   FROM bmdoc)
               WHERE r <= {RRF_K}),
-    normed AS (SELECT vec_id, embedding,
-                      SQRT({_oracle_dot('embedding', 'embedding')}) AS nrm
-               FROM embeddings),
+    {NORMED_CTE},
     qv AS (SELECT embedding AS q_emb, nrm AS q_nrm FROM normed
            WHERE vec_id = {RRF_QUERY_VEC}),
     cs AS (SELECT c.vec_id,

@@ -35,11 +35,10 @@ from skinnerdb_spark.registry import register
 
 SEG_TOKENS = 8
 
-
-@register(
-    "dedup_segments",
-    f"""
-    WITH base AS (
+#: the oracle's segments, the DuckDB mirror of dedup_segments' explode:
+#: every doc's SEG_TOKENS-token windows (segs) and per segment text the
+#: number of distinct docs holding it (shared). CTE text to follow a WITH.
+SEGMENT_CTES = f"""base AS (
       SELECT doc_id, string_split(text, ' ') AS toks
       FROM documents WHERE length(text) > 0),
     segs AS (
@@ -51,7 +50,13 @@ SEG_TOKENS = 8
              AS t(seg_no)),
     shared AS (
       SELECT seg_text, COUNT(DISTINCT doc_id) AS n_docs
-      FROM segs GROUP BY seg_text)
+      FROM segs GROUP BY seg_text)"""
+
+
+@register(
+    "dedup_segments",
+    f"""
+    WITH {SEGMENT_CTES}
     SELECT s.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_segments,
            CAST(SUM(CASE WHEN sh.n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,

@@ -70,22 +70,72 @@ def _oracle_dot(a: str, b: str) -> str:
     )
 
 
-_BRUTE_ORACLE = f"""
-    WITH normed AS (
+#: the oracle's exact norms, the DuckDB mirror of :func:`norm_exact`
+NORMED_CTE = f"""normed AS (
         SELECT vec_id, embedding, SQRT({_oracle_dot('embedding', 'embedding')}) AS nrm
-        FROM embeddings),
+        FROM embeddings)"""
+
+
+def exact_topk_on_candidates(e, cand) -> DataFrame:
+    """Shared ANN tail: exact decimal cosine + per-query rank, computed ONLY
+    for (query_id, neighbor_id) candidate pairs. Every approximate variant
+    (multi-table LSH, multiprobe, IVF) funnels through this, so emitted
+    scores are bit-identical to the brute-force baseline on the pairs they
+    retrieve."""
+    normed = e.select("vec_id", "embedding", norm_exact("embedding").alias("nrm"))
+    qn = normed.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    )
+    cn = normed.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        F.col("nrm").alias("c_nrm"),
+    )
+    scored = (
+        cand.join(F.broadcast(qn), "query_id")
+        .join(cn, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            (dot_exact("q_emb", "c_emb") / (F.col("q_nrm") * F.col("c_nrm"))).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rnk") <= TOP_K)
+        .select("query_id", "neighbor_id", "cosine", "rnk")
+    )
+
+
+#: the oracle's exact cosine rescore, the DuckDB mirror of
+#: :func:`exact_topk_on_candidates`: the normed / scored / ranked CTEs over
+#: a ``cand`` CTE of (query_id, neighbor_id) pairs, then the top-TOP_K
+#: select. SQL text to follow the cand CTE.
+RESCORE_SQL = f"""{NORMED_CTE},
     scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        SELECT cd.query_id, cd.neighbor_id,
                {_oracle_dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS cosine
-        FROM normed q JOIN normed c ON c.vec_id <> q.vec_id
-        WHERE q.vec_id < {N_QUERIES}),
+        FROM cand cd
+        JOIN normed q ON q.vec_id = cd.query_id
+        JOIN normed c ON c.vec_id = cd.neighbor_id),
     ranked AS (
         SELECT query_id, neighbor_id, cosine,
                CAST(ROW_NUMBER() OVER (PARTITION BY query_id
                     ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
         FROM scored)
     SELECT query_id, neighbor_id, cosine, rnk
-    FROM ranked WHERE rnk <= {TOP_K}
+    FROM ranked WHERE rnk <= {TOP_K}"""
+
+
+_BRUTE_ORACLE = f"""
+    WITH cand AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
+        FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
+        WHERE q.vec_id < {N_QUERIES}),
+    {RESCORE_SQL}
 """
 
 
@@ -180,22 +230,29 @@ def _plane_sign_sql(j: str, i: str) -> str:
     return f"CASE WHEN {hex_high_sql(ch)} THEN 1 ELSE -1 END"
 
 
-_LSH_BUCKET_ORACLE = f"""
-    WITH proj AS (
+def _oracle_sign_ctes(total: int) -> str:
+    """The oracle's sign-LSH signatures, the DuckDB mirror of
+    :func:`shared_bits`: the exact projection ``p`` of every vector on
+    planes 0..total-1 (proj) and its sign bit string ``bits`` (sig)."""
+    return f"""proj AS (
         SELECT e.vec_id, g.j,
                CAST(SUM(({_plane_sign_sql('g.j', 'd.i')})
                     * CAST(ROUND(CAST(e.embedding[d.i] AS DOUBLE) * 1000000)
                            AS BIGINT)) AS BIGINT) AS p
         FROM embeddings e,
-             generate_series(0, {N_PLANES - 1}) AS g(j),
+             generate_series(0, {total - 1}) AS g(j),
              generate_series(1, {DIM}) AS d(i)
         GROUP BY e.vec_id, g.j),
     sig AS (
         SELECT vec_id,
-               string_agg(CASE WHEN p > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
-        FROM proj GROUP BY vec_id)
-    SELECT bucket, COUNT(*) AS bucket_size, MIN(vec_id) AS min_vec_id
-    FROM sig GROUP BY bucket
+               string_agg(CASE WHEN p > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bits
+        FROM proj GROUP BY vec_id)"""
+
+
+_LSH_BUCKET_ORACLE = f"""
+    WITH {_oracle_sign_ctes(N_PLANES)}
+    SELECT bits AS bucket, COUNT(*) AS bucket_size, MIN(vec_id) AS min_vec_id
+    FROM sig GROUP BY bits
 """
 
 
@@ -239,40 +296,6 @@ def sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _signatures(spark, sf_dir)
     return sig.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("bucket_size"), F.min("vec_id").alias("min_vec_id")
-    )
-
-
-def exact_topk_on_candidates(e, cand) -> DataFrame:
-    """Shared ANN tail: exact decimal cosine + per-query rank, computed ONLY
-    for (query_id, neighbor_id) candidate pairs. Every approximate variant
-    (multi-table LSH, multiprobe, IVF) funnels through this, so emitted
-    scores are bit-identical to the brute-force baseline on the pairs they
-    retrieve."""
-    normed = e.select("vec_id", "embedding", norm_exact("embedding").alias("nrm"))
-    qn = normed.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cn = normed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = (
-        cand.join(F.broadcast(qn), "query_id")
-        .join(cn, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_exact("q_emb", "c_emb") / (F.col("q_nrm") * F.col("c_nrm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
     )
 
 
@@ -334,39 +357,12 @@ def _multi_ann_oracle(n_tables: int, bits: int, probe_hamming: int = 0) -> str:
                              AND c.vec_id <> q.vec_id
         WHERE q.vec_id < {N_QUERIES}),"""
     return f"""
-    WITH proj AS (
-        SELECT e.vec_id, g.j,
-               CAST(SUM(({_plane_sign_sql('g.j', 'd.i')})
-                    * CAST(ROUND(CAST(e.embedding[d.i] AS DOUBLE) * 1000000)
-                           AS BIGINT)) AS BIGINT) AS p
-        FROM embeddings e,
-             generate_series(0, {total - 1}) AS g(j),
-             generate_series(1, {DIM}) AS d(i)
-        GROUP BY e.vec_id, g.j),
-    sig AS (
-        SELECT vec_id,
-               string_agg(CASE WHEN p > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bits
-        FROM proj GROUP BY vec_id),
+    WITH {_oracle_sign_ctes(total)},
     tbl AS (
         SELECT vec_id, t.t AS t,
                SUBSTR(bits, t.t * {bits} + 1, {bits}) AS bkey
         FROM sig, generate_series(0, {n_tables - 1}) AS t(t)),{probe_cte}
-    normed AS (
-        SELECT vec_id, embedding, SQRT({_oracle_dot('embedding', 'embedding')}) AS nrm
-        FROM embeddings),
-    scored AS (
-        SELECT cd.query_id, cd.neighbor_id,
-               {_oracle_dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS cosine
-        FROM cand cd
-        JOIN normed q ON q.vec_id = cd.query_id
-        JOIN normed c ON c.vec_id = cd.neighbor_id),
-    ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-        FROM scored)
-    SELECT query_id, neighbor_id, cosine, rnk
-    FROM ranked WHERE rnk <= {TOP_K}
+    {RESCORE_SQL}
 """
 
 
@@ -715,24 +711,11 @@ def _margin_multiprobe_oracle(
     total = n_tables * bits
     mask_list = ",".join(str(m) for m in _probe_masks(bits, max_flips))
     return f"""
-    WITH proj AS (
-        SELECT e.vec_id, g.j,
-               CAST(SUM(({_plane_sign_sql('g.j', 'd.i')})
-                    * CAST(ROUND(CAST(e.embedding[d.i] AS DOUBLE) * 1000000)
-                           AS BIGINT)) AS BIGINT) AS pd
-        FROM embeddings e,
-             generate_series(0, {total - 1}) AS g(j),
-             generate_series(1, {DIM}) AS d(i)
-        GROUP BY e.vec_id, g.j),
-    sig AS (
-        SELECT vec_id,
-               string_agg(CASE WHEN pd > 0 THEN '1' ELSE '0' END,
-                          '' ORDER BY j) AS bits
-        FROM proj GROUP BY vec_id),
+    WITH {_oracle_sign_ctes(total)},
     tbl AS (
         SELECT vec_id, t.t AS t, SUBSTR(bits, t.t * {bits} + 1, {bits}) AS bkey
         FROM sig, generate_series(0, {n_tables - 1}) AS t(t)),
-    qmarg AS (SELECT vec_id, j, ABS(pd) AS m FROM proj WHERE vec_id < {N_QUERIES}),
+    qmarg AS (SELECT vec_id, j, ABS(p) AS m FROM proj WHERE vec_id < {N_QUERIES}),
     masks AS (SELECT UNNEST([{mask_list}]) AS mask),
     qp AS (
         SELECT s.vec_id AS query_id, t.t AS t, m.mask,
@@ -768,22 +751,7 @@ def _margin_multiprobe_oracle(
         SELECT DISTINCT p.query_id, c.vec_id AS neighbor_id
         FROM pk p JOIN tbl c ON c.t = p.t AND c.bkey = p.pkey
                             AND c.vec_id <> p.query_id),
-    normed AS (
-        SELECT vec_id, embedding, SQRT({_oracle_dot('embedding', 'embedding')}) AS nrm
-        FROM embeddings),
-    scored AS (
-        SELECT cd.query_id, cd.neighbor_id,
-               {_oracle_dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS cosine
-        FROM cand cd
-        JOIN normed q ON q.vec_id = cd.query_id
-        JOIN normed c ON c.vec_id = cd.neighbor_id),
-    ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-        FROM scored)
-    SELECT query_id, neighbor_id, cosine, rnk
-    FROM ranked WHERE rnk <= {TOP_K}
+    {RESCORE_SQL}
 """
 
 
@@ -806,9 +774,7 @@ def sim_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _NEARDUP_ORACLE = f"""
-    WITH normed AS (
-        SELECT vec_id, embedding, SQRT({_oracle_dot('embedding', 'embedding')}) AS nrm
-        FROM embeddings),
+    WITH {NORMED_CTE},
     pairs AS (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                {_oracle_dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) AS cosine

@@ -54,7 +54,7 @@ from pyspark.sql.window import Window
 from skinnerdb_spark.operators.similarity import (
     DIM,
     N_QUERIES,
-    TOP_K,
+    RESCORE_SQL,
     exact_topk_on_candidates,
 )
 from skinnerdb_spark.operators.textprims import fan_out
@@ -96,30 +96,7 @@ _SQ_ORACLE = f"""
                    ROW_NUMBER() OVER (PARTITION BY query_id
                         ORDER BY d2, neighbor_id) AS rn
             FROM dist) WHERE rn <= {CAND}),
-    normed AS (
-        SELECT vec_id, embedding,
-               SQRT((SELECT CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE)
-                    * CAST(embedding[i] AS DOUBLE) AS DECIMAL(28,12)))
-                    AS DOUBLE)
-                     FROM generate_series(1, {DIM}) AS g(i))) AS nrm
-        FROM embeddings),
-    scored AS (
-        SELECT c.query_id, c.neighbor_id,
-               (SELECT CAST(SUM(CAST(CAST(q.embedding[i] AS DOUBLE)
-                    * CAST(n.embedding[i] AS DOUBLE) AS DECIMAL(28,12)))
-                    AS DOUBLE)
-                FROM generate_series(1, {DIM}) AS g(i))
-               / (q.nrm * n.nrm) AS cosine
-        FROM cand c
-        JOIN normed q ON q.vec_id = c.query_id
-        JOIN normed n ON n.vec_id = c.neighbor_id)
-    SELECT query_id, neighbor_id, cosine,
-           CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT query_id, neighbor_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY cosine DESC, neighbor_id) AS rnk
-          FROM scored)
-    WHERE rnk <= {TOP_K}
+    {RESCORE_SQL}
 """
 
 

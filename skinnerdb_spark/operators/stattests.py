@@ -262,11 +262,11 @@ MWU_BUCKET_CENTS = 100_000  # $1000-wide value buckets for the prefix sum:
                             # (order totals ~$900-$600k -> ~600 buckets),
                             # independent of row count
 
-
-@register(
-    "stats_mann_whitney",
-    """
-    WITH g AS (
+#: the oracle's two value-domain arms shared by the Mann-Whitney and KS
+#: entries: each order total in exact cents with its arm (g: 1 = URGENT,
+#: 0 = LOW) and per distinct value the count in each arm (per). CTE text to
+#: follow a WITH.
+_ARMS_CTES = """g AS (
         SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
                CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS grp
         FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
@@ -274,7 +274,13 @@ MWU_BUCKET_CENTS = 100_000  # $1000-wide value buckets for the prefix sum:
         SELECT v,
                CAST(SUM(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1v,
                CAST(SUM(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0v
-        FROM g GROUP BY v),
+        FROM g GROUP BY v)"""
+
+
+@register(
+    "stats_mann_whitney",
+    f"""
+    WITH {_ARMS_CTES},
     c AS (
         SELECT v, n1v, n0v,
                CAST(COALESCE(SUM(n0v) OVER (ORDER BY v
@@ -512,16 +518,8 @@ def cusum_series(daily: DataFrame) -> DataFrame:
 
 @register(
     "stats_ks_test",
-    """
-    WITH g AS (
-        SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
-               CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS grp
-        FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
-    per AS (
-        SELECT v,
-               CAST(SUM(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1v,
-               CAST(SUM(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0v
-        FROM g GROUP BY v),
+    f"""
+    WITH {_ARMS_CTES},
     c AS (
         SELECT CAST(SUM(n1v) OVER (ORDER BY v) AS BIGINT) AS c1le,
                CAST(SUM(n0v) OVER (ORDER BY v) AS BIGINT) AS c0le

@@ -23,11 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: words column expression (array<string>) from a text column name
-def words(text_col: str = "text") -> Column:
-    return F.split(F.col(text_col), " ")
-
-
 #: estimated input bytes per core at or above which fan_out is a no-op
 FAN_OUT_MIN_BYTES_PER_CORE = 32 * 1024 * 1024
 

@@ -987,11 +987,10 @@ def _state_monitor(
       partition overwrite, so a replayed batch rewrites ITS rows instead of
       appending duplicates;
     - the state overwrite restates the full frame and, in the same write,
-      the batch's id (column :data:`APPLIED_BATCH`). A batch at or below the
-      stored id is skipped: after a crash between the state overwrite and
-      the offset commit, Structured Streaming re-runs that batch under the
-      same id, and a summed state would count it twice. A state path
-      therefore belongs to one checkpoint."""
+      the batch's id (column :data:`APPLIED_BATCH`); a batch at or below it
+      is skipped, since after a crash before the offset commit Structured
+      Streaming re-runs the batch under its id and a summed state would
+      count it twice. A state path therefore belongs to one checkpoint."""
     import os
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
@@ -1011,9 +1010,7 @@ def _state_monitor(
             .partitionBy("batch_id")
             .parquet(monitor_path)
         )
-        state.withColumn(APPLIED_BATCH, F.lit(batch_id)).write.mode("overwrite").parquet(
-            state_path
-        )
+        state.withColumn(APPLIED_BATCH, F.lit(batch_id)).write.mode("overwrite").parquet(state_path)
 
     (
         stream_events(spark, src_dir)

@@ -752,7 +752,7 @@ def test_explain_adaptive_dot_renders_tree(spark, sf_dir):
     assert "not adaptive" in fallback
 
 
-def test_cached_sql_roundtrip_and_staleness(spark, sf_dir, tmp_path):
+def test_cached_sql_roundtrip_and_staleness(spark, sf_dir, tmp_path, monkeypatch):
     """Persisted result cache: miss -> materialize, hit -> identical rows
     from parquet; any warehouse file change flips the key (new fingerprint
     = miss). Uses a COPY of the warehouse so staleness can be simulated
@@ -769,7 +769,7 @@ def test_cached_sql_roundtrip_and_staleness(spark, sf_dir, tmp_path):
     # sessions BY DESIGN (copytree preserves mtimes, so a rerun would HIT)
     os.environ["SKINNER_RESULT_CACHE_DIR"] = str(tmp_path / "result_cache")
     try:
-        _run_cached_sql_scenario(eng, wh, sql)
+        _run_cached_sql_scenario(eng, wh, sql, monkeypatch)
     finally:
         os.environ.pop("SKINNER_RESULT_CACHE_DIR", None)
         # the session-scoped fixture shares temp views across tests —
@@ -777,8 +777,10 @@ def test_cached_sql_roundtrip_and_staleness(spark, sf_dir, tmp_path):
         Engine(spark, sf_dir)
 
 
-def _run_cached_sql_scenario(eng, wh, sql):
+def _run_cached_sql_scenario(eng, wh, sql, monkeypatch):
     import os
+
+    from skinnerdb_spark import engine
 
     first = eng.cached_sql(sql).collect()
     assert eng.last_cache_hit is False
@@ -799,14 +801,11 @@ def _run_cached_sql_scenario(eng, wh, sql):
     assert eng.last_cache_hit is False
 
     # bounded cache: with cap=2, a third distinct result evicts the oldest
-    os.environ["SKINNER_RESULT_CACHE_MAX"] = "2"
-    try:
-        eng.cached_sql("SELECT COUNT(*) AS n FROM region")
-        root = os.environ["SKINNER_RESULT_CACHE_DIR"]
-        live = [d for d in os.listdir(root) if ".tmp-" not in d]
-        assert len(live) <= 2
-    finally:
-        os.environ.pop("SKINNER_RESULT_CACHE_MAX", None)
+    monkeypatch.setattr(engine, "RESULT_CACHE_MAX", 2)
+    eng.cached_sql("SELECT COUNT(*) AS n FROM region")
+    root = os.environ["SKINNER_RESULT_CACHE_DIR"]
+    live = [d for d in os.listdir(root) if ".tmp-" not in d]
+    assert len(live) <= 2
 
     # detached engine refuses
     import pytest as _pytest
