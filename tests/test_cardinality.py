@@ -131,34 +131,24 @@ def _phases_theta_join(spark, sf_dir):
 
 def _phases_lsh_candidates(spark, sf_dir):
     """The dedup family's one pair-generating phase: (band, key) bucket
-    self-join candidate pairs, before any verify/filter stage. The oracle
-    mirrors dedup.py's exact md5 hash family (same CTEs as _MINHASH_ORACLE,
-    truncated at the candidate stage)."""
-    from skinnerdb_spark.operators.dedup import N_BANDS, N_HASHES, lsh_candidates
-    from skinnerdb_spark.operators.textprims import oracle_shingles_cte
+    self-join candidate pairs, before any verify/filter stage. The oracle is
+    the dedup oracles' own LSH chain (dedup._LSH_CTES), counted at its
+    candidate stage."""
+    from skinnerdb_spark.operators.dedup import _LSH_CTES, lsh_candidates
 
     cand = lsh_candidates(spark, sf_dir)
     sig = f"""
-    WITH {oracle_shingles_cte(k=3)},
-    shd AS (SELECT DISTINCT doc_id, s FROM sh),
-    mh AS (SELECT doc_id, j, MIN(md5(CAST(j AS VARCHAR) || ':' || s)) AS mh
-           FROM shd, generate_series(0, {N_HASHES - 1}) AS g(j)
-           GROUP BY doc_id, j),
-    bands AS (SELECT doc_id, CAST(j // {N_HASHES // N_BANDS} AS INTEGER) AS band,
-                     md5(string_agg(mh, '|' ORDER BY j)) AS key
-              FROM mh GROUP BY doc_id, band)
-    SELECT COUNT(*) FROM (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
+    WITH {_LSH_CTES}
+    SELECT COUNT(*) FROM cand
     """
     return [("lsh_candidate_pairs", cand, sig)]
 
 
 def _phases_dedup_segments(spark, sf_dir):
     """Segment-dedup intermediate phases: the map-side segment explode and
-    the shared-segment aggregation, before the per-doc rollup."""
-    from skinnerdb_spark.operators.segments import SEG_TOKENS
+    the shared-segment aggregation, before the per-doc rollup. The oracle is
+    dedup_segments' own segment CTEs (segments.SEGMENT_CTES)."""
+    from skinnerdb_spark.operators.segments import SEG_TOKENS, SEGMENT_CTES
 
     d = read_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     toks = F.split(F.col("text"), " ")
@@ -172,21 +162,11 @@ def _phases_dedup_segments(spark, sf_dir):
         F.countDistinct("doc_id").alias("n_docs")
     ).filter(F.col("n_docs") > 1)
     segs_cte = f"""
-    WITH base AS (SELECT doc_id, string_split(text, ' ') AS toks
-                  FROM documents WHERE length(text) > 0),
-    segs AS (SELECT doc_id, seg_no,
-                    array_to_string(toks[(seg_no*{SEG_TOKENS}+1):(seg_no*{SEG_TOKENS}+{SEG_TOKENS})], ' ')
-                      AS seg_text
-             FROM base,
-                  LATERAL unnest(range(CAST(ceil(len(toks)/{SEG_TOKENS}.0) AS BIGINT)))
-                    AS t(seg_no))
+    WITH {SEGMENT_CTES}
     """
     return [
         ("segment_explode", segs, segs_cte + "SELECT COUNT(*) FROM segs"),
-        ("shared_segments", shared,
-         segs_cte + """SELECT COUNT(*) FROM (
-             SELECT seg_text FROM segs GROUP BY seg_text
-             HAVING COUNT(DISTINCT doc_id) > 1)"""),
+        ("shared_segments", shared, segs_cte + "SELECT COUNT(*) FROM shared WHERE n_docs > 1"),
     ]
 
 
