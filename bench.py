@@ -25,7 +25,6 @@ uninterpretable on its own. The surface therefore runs PAIRS_DEFAULT times
 back-to-back in one session; "value" stays the FIRST (coldest) pass — the
 number comparable to the reference's cold 104 s — while "runs" carries every
 pass total and "best_total"/query best-of expose the ambient floor.
-Set --pairs N / SPARK_GRAFT_BENCH_RUNS=N to override (1 = legacy single-shot).
 
 Per-query details land in $SPARK_GRAFT_BENCH_CSV (pass 1; best-of seconds in
 the JSON). The reference's UCT counters have no Spark equivalent; wall-clock
@@ -42,8 +41,11 @@ import time
 PAIRS_DEFAULT = 2
 
 
-def run_pass(spark, sf_dir: str, csv_lines: list[str] | None) -> tuple[dict, dict]:
-    """One full timed pass over the bench surface.
+def run_pass(
+    spark, sf_dir: str, excluded: list[str], csv_lines: list[str] | None
+) -> tuple[dict, dict]:
+    """One full timed pass over the bench surface, minus the ``excluded``
+    entry names.
 
     Returns (per_query seconds, per_query rows). csv_lines, when given,
     accumulates the reference-style per-query stats rows
@@ -53,20 +55,7 @@ def run_pass(spark, sf_dir: str, csv_lines: list[str] | None) -> tuple[dict, dic
     from skinnerdb_spark.plans.metrics import plan_metrics, run_and_count
     from skinnerdb_spark.registry import all_specs, family_builds
 
-    specs = {n: s for n, s in all_specs().items() if s.bench}
-    # SPARK_GRAFT_BENCH_EXCLUDE: comma-separated entry names to skip — used
-    # for the sf10 (100x) scale run, where the OUTPUT-BOUND pair generators
-    # (name_edit_distance_pairs: 3.3M pairs at sf1; dedup_simhash_pairs:
-    # 43M) would dominate the run with result-writing, not operator work.
-    # Exclusions are deliberate, named, and land in the JSON so no run can
-    # silently claim coverage it didn't have.
-    excluded = [
-        e
-        for e in os.environ.get("SPARK_GRAFT_BENCH_EXCLUDE", "").split(",")
-        if e and e in specs
-    ]
-    for e in excluded:
-        specs.pop(e)
+    specs = {n: s for n, s in all_specs().items() if s.bench and n not in excluded}
     per_query: dict[str, float] = {}
     rows: dict[str, int] = {}
 
@@ -238,9 +227,13 @@ def calibration_sec(spark) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", PAIRS_DEFAULT))
-    if "--pairs" in sys.argv:
-        n_runs = int(sys.argv[sys.argv.index("--pairs") + 1])
+    # SPARK_GRAFT_BENCH_EXCLUDE: comma-separated entry names to skip — used
+    # for the sf10 (100x) scale run, where the OUTPUT-BOUND pair generators
+    # (name_edit_distance_pairs: 3.3M pairs at sf1; dedup_simhash_pairs:
+    # 43M) would dominate the run with result-writing, not operator work.
+    # Exclusions are deliberate, named, and land in the JSON so no run can
+    # silently claim coverage it didn't have.
+    excluded = [e for e in os.environ.get("SPARK_GRAFT_BENCH_EXCLUDE", "").split(",") if e]
     from skinnerdb_spark.registry import all_specs
     from skinnerdb_spark.session import get_spark
 
@@ -271,8 +264,8 @@ def main() -> None:
     ]
     passes: list[dict[str, float]] = []
     rows: dict[str, int] = {}
-    for i in range(max(1, n_runs)):
-        pq, rw = run_pass(spark, sf_dir, csv_lines if i == 0 else None)
+    for i in range(PAIRS_DEFAULT):
+        pq, rw = run_pass(spark, sf_dir, excluded, csv_lines if i == 0 else None)
         passes.append(pq)
         if i == 0:
             rows = rw
@@ -341,9 +334,8 @@ def main() -> None:
         ).adaptive_counters(),
         "detail_csv": csv_path,
     }
-    skipped = [e for e in os.environ.get("SPARK_GRAFT_BENCH_EXCLUDE", "").split(",") if e]
-    if skipped:
-        out["excluded"] = skipped
+    if excluded:
+        out["excluded"] = excluded
     line = json.dumps(out)
     if len(line) > 1900:  # belt-and-suspenders under the capture limit
         out["queries"] = dict(sorted(per_query.items(), key=lambda kv: -kv[1])[:8])

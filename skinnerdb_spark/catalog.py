@@ -31,10 +31,11 @@ TABLES = [
     "embeddings",
 ]
 
-#: dimension tables small enough to always broadcast in star joins
-BROADCAST_DIMS = {"region", "nation", "supplier", "part"}
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+#: the warehouse that static oracles reading persisted artifacts embed,
+#: resolved at import: the driver's gate runs at sf0.01 (default), and
+#: tests/conftest.py pins it to the local test SF before any import
+ORACLE_SF_DIR = os.environ.get("SKINNER_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -87,8 +88,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: read_table(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so ``spark.sql`` works directly —
     the equivalent of the reference console session having a loaded DB."""
     for t in TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(prefix + t)
+        read_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -1,22 +1,8 @@
 """Interactive console — the reference's primary UX (SkinnerCmd REPL,
 src/console/SkinnerCmd.java:298-344 command dispatch, 351-387 main loop).
 
-Command surface, mapped 1:1 onto the Engine facade:
-
-    quit                      exit
-    help                      this text
-    list                      tables in the session catalog
-    load <tbl> <csv> [sep]    CSV -> parquet-backed view (LoadCSV analogue)
-    compress [tbl]            rewrite table(s) as dictionary+zstd parquet
-    index all | index <tbl>   cache table(s) in columnar RAM (Indexer analogue)
-    bench <dir>               run a .sql directory with per-query stats
-    exec <file>               run each ';'-terminated statement in a file
-    explain <sql>             formatted physical plan
-    explain adaptive <sql>    per-order sampled C_out + chosen join order
-    explain adaptive dot [every N] <sql>  graphviz DOT of the explored order tree (every N: snapshot files)
-ops [name ...]            register operator results as op_<name> SQL views
-    adaptive on|off           route SQL through adaptive join ordering
-    <anything else>           SQL -> execute + print rows
+The command surface, mapped 1:1 onto the Engine facade, is listed once, in
+``_HELP`` (what the ``help`` command prints).
 
 Run: ``python -m skinnerdb_spark.console [sf_dir]``.
 
@@ -44,6 +30,7 @@ skew <tbl> <col> [k]      hottest keys + salting recommendation (plans/skew.py)
 layout zorder|range <tbl> <cols...>  rewrite with a pruning layout, re-point view
 bench <dir>               run every .sql file in <dir>, print per-query stats
 exec <file>               execute ';'-separated statements from a file
+ops [name ...]            register operator results as op_<name> SQL views
 analyze <sql>             run the statement, report executed-plan metrics
 analyze dot <sql>         executed-plan profile graph (graphviz, SQLMetrics)
 vacuum [apply]            inventory (apply: reclaim) persisted artifacts
@@ -53,11 +40,13 @@ explain adaptive dot [every N] <sql>  graphviz DOT of the explored order tree (e
 adaptive on|off           toggle adaptive join ordering for SQL input
 <sql>                     execute SQL and print the result"""
 
+#: rows printed per result table
+MAX_ROWS = 20
+
 
 class Console:
-    def __init__(self, engine: Engine, max_rows: int = 20):
+    def __init__(self, engine: Engine):
         self.engine = engine
-        self.max_rows = max_rows
         self.adaptive = False
 
     # -- command dispatch (SkinnerCmd.processInput) -------------------------
@@ -159,9 +148,7 @@ class Console:
 
             df = self.engine.spark.table(args[0])
             topk = int(args[2]) if len(args) > 2 else 10
-            body = skew_report(df, args[1], topk=topk)._show_string(
-                self.max_rows, 60, False
-            )
+            body = skew_report(df, args[1], topk=topk)._show_string(MAX_ROWS, 60, False)
             n = recommend_salts(df, args[1])
             hint = (
                 "no salting needed (AQE handles this skew level)"
@@ -172,9 +159,7 @@ class Console:
         if cmd == "profile":
             # extension: the data-quality summary (operators/analytics
             # profile_frame) for any registered table, one scan
-            return self.engine.profile(rest.strip())._show_string(
-                self.max_rows, 60, False
-            )
+            return self.engine.profile(rest.strip())._show_string(MAX_ROWS, 60, False)
         if cmd == "load":
             return self._load(rest.split())
         if cmd == "bench":
@@ -222,7 +207,7 @@ class Console:
 
     def _sql(self, text: str) -> str:
         df = self.engine.adaptive_sql(text) if self.adaptive else self.engine.sql(text)
-        out = df._show_string(self.max_rows, 60, False)
+        out = df._show_string(MAX_ROWS, 60, False)
         if self.adaptive:
             order = getattr(self.engine.last_adaptive, "best_order", ())
             if order:

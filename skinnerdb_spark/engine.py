@@ -46,7 +46,7 @@ class Engine:
         self.sf_dir = sf_dir
         register_views(self.spark, sf_dir)
 
-    def attach_operators(self, names: list[str] | None = None, prefix: str = "op_") -> list[str]:
+    def attach_operators(self, names: list[str] | None = None) -> list[str]:
         """Expose registry operators as SQL-addressable temp views: every
         entry's (lazy) DataFrame registers as ``op_<name>``, so the whole
         pipeline tier composes in plain SQL —
@@ -68,7 +68,7 @@ class Engine:
         chosen = names if names is not None else sorted(specs)
         created = []
         for name in chosen:
-            view = f"{prefix}{name}"
+            view = f"op_{name}"
             specs[name].spark(self.spark, self.sf_dir).createOrReplaceTempView(view)
             created.append(view)
         return created
@@ -226,9 +226,7 @@ class Engine:
                 unsafe.append(name)
         return unsafe
 
-    def relayout_table(
-        self, name: str, cols: list[str], mode: str = "zorder", n_files: int = 32
-    ) -> dict:
+    def relayout_table(self, name: str, cols: list[str], mode: str = "zorder") -> dict:
         """Rewrite a registered table with a pruning-friendly physical layout
         and re-point its view — `compress` for I/O-elision instead of bytes:
         ``mode='range'`` range-sorts on ``cols`` (tight file min/max on the
@@ -247,6 +245,7 @@ class Engine:
         missing = [c for c in cols if c not in df.columns]
         if missing:
             raise ValueError(f"unknown column(s) {missing} in table {name!r}")
+        n_files = 32
         if mode == "zorder":
             write_zorder(df, dst, cols, n_files=n_files)
         else:
@@ -313,7 +312,7 @@ class Engine:
         repeated queries hit deserialized columnar batches."""
         self.spark.table(name).cache()
 
-    def cached_sql(self, text: str, refresh: bool = False) -> DataFrame:
+    def cached_sql(self, text: str) -> DataFrame:
         """Persisted result cache: re-running the same SQL against an
         unchanged warehouse reads the materialized parquet result instead of
         recomputing — a durable artifact like the IVF index (operators/
@@ -344,7 +343,7 @@ class Engine:
             "SKINNER_RESULT_CACHE_DIR", os.path.join(ARTIFACT_ROOT, "result_cache")
         )
         cache_dir = os.path.join(cache_root, key)
-        if not refresh and os.path.isdir(cache_dir):
+        if os.path.isdir(cache_dir):
             self.last_cache_hit = True
             return self.spark.read.parquet(cache_dir)
         self.last_cache_hit = False

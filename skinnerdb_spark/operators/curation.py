@@ -32,7 +32,6 @@ from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
 
 PER_CLASS = 20  # class-balanced sample size per label
-KNN_K = 5  # neighbors per query in the label vote (= similarity.TOP_K)
 
 
 @register(

@@ -22,9 +22,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from skinnerdb_spark.operators.textprims import (
+    ORACLE_SHINGLES_CTE,
     fan_out,
     hex_high_sql,
-    oracle_shingles_cte,
     shingles_expr,
 )
 from skinnerdb_spark.queries.util import read_table
@@ -35,12 +35,11 @@ N_HASHES = 8  # minhash signature length
 N_BANDS = 4  # LSH bands (rows per band = 2)
 SIMHASH_BITS = 32
 
-#: conf key: LSH buckets larger than this are dropped from candidate
-#: generation (a degenerate band key — e.g. near-constant documents — would
-#: otherwise make one bucket quadratic). Dropped buckets are observable via
-#: :func:`hot_bucket_report`; the default never fires on healthy corpora.
-LSH_MAX_BUCKET = "skinnerdb.lsh.maxBucket"
-_LSH_MAX_BUCKET_DEFAULT = 100_000
+#: LSH buckets larger than this are dropped from candidate generation (a
+#: degenerate band key — e.g. near-constant documents — would otherwise make
+#: one bucket quadratic). Dropped buckets are observable via
+#: :func:`hot_bucket_report`; the cap never fires on healthy corpora.
+LSH_MAX_BUCKET = 100_000
 
 
 def shared_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,36 +107,26 @@ def cap_buckets(bands: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
 def hot_bucket_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(band, key, bucket_n) for buckets the cap excluded — 'no silent caps':
     callers can count/inspect exactly what candidate generation dropped."""
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
     bands = lsh_bands(shared_sigs(spark, sf_dir))
     return (
         bands.groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > cap)
+        .filter(F.col("bucket_n") > LSH_MAX_BUCKET)
     )
 
 
 def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached (doc_a, doc_b) LSH candidate pairs: the bucket self-join on
     (band, key) — the only pair-generating shuffle in the dedup family.
-    Buckets over ``skinnerdb.lsh.maxBucket`` are excluded first (see
+    Buckets over ``LSH_MAX_BUCKET`` are excluded first (see
     :func:`cap_buckets`; :func:`hot_bucket_report` shows what was dropped).
 
     Oracle-parity caveat: the DuckDB oracles for the LSH family
     (dedup_minhash_lsh / dedup_pipeline_decisions / dedup_ngram_jaccard)
-    never cap — if a corpus or a tightened conf trips the cap, the gates
-    will diverge BY DESIGN. A non-default cap is warned about here so a
-    gate failure is traceable to the cap rather than a logic bug; inspect
-    :func:`hot_bucket_report` to see exactly which buckets were dropped."""
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    if cap != _LSH_MAX_BUCKET_DEFAULT:
-        import warnings
-
-        warnings.warn(
-            f"{LSH_MAX_BUCKET}={cap} (non-default): LSH candidate pairs may "
-            "diverge from the uncapped DuckDB oracles; see hot_bucket_report()",
-            stacklevel=2,
-        )
+    never cap — if a corpus trips the cap, the gates will diverge BY
+    DESIGN; inspect :func:`hot_bucket_report` to see exactly which buckets
+    were dropped."""
+    cap = LSH_MAX_BUCKET
 
     def build():
         bands = cap_buckets(lsh_bands(shared_sigs(spark, sf_dir)), ["band", "key"], cap)
@@ -216,8 +205,8 @@ def dedup_norm_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # MinHash + LSH
 # --------------------------------------------------------------------------
-def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, sig): sig[j] = MIN(md5(j || ':' || shingle)) as an H-element
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig): sig[j] = MIN(md5(j || ':' || shingle)) as an N_HASHES-element
     array. MIN over md5 hex strings is a valid minhash (uniform over the
     hash's order). Docs with < 3 words are dropped (mirrors the oracle's
     len(w) >= 3 guard).
@@ -245,23 +234,22 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
             F.min(
                 F.md5(F.concat(F.lit(f"{j}:"), F.col("s")).cast("binary"))
             ).alias(f"m{j}")
-            for j in range(n_hashes)
+            for j in range(N_HASHES)
         ]
     )
     return mins.select(
-        "doc_id", F.array(*[F.col(f"m{j}") for j in range(n_hashes)]).alias("sig")
+        "doc_id", F.array(*[F.col(f"m{j}") for j in range(N_HASHES)]).alias("sig")
     )
 
 
-def lsh_bands(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
+def lsh_bands(sigs: DataFrame) -> DataFrame:
     """(doc_id, band, key): band key = md5 of the band's minhashes in j-order.
-    Rows per band derive from the *actual* signature length (size(sig)), so a
-    longer signature from minhash_signatures(n_hashes=16) bands correctly.
-    The posexplode here is |docs| * n_bands rows — the only fan-out in the
+    Rows per band derive from the *actual* signature length (size(sig)).
+    The posexplode here is |docs| * N_BANDS rows — the only fan-out in the
     pipeline, and it feeds directly into the bucket self-join shuffle."""
     bands_arr = F.expr(
-        f"transform(sequence(0, {n_bands - 1}), b -> md5(cast(concat_ws('|', "
-        f"slice(sig, b * (size(sig) div {n_bands}) + 1, size(sig) div {n_bands})) as binary)))"
+        f"transform(sequence(0, {N_BANDS - 1}), b -> md5(cast(concat_ws('|', "
+        f"slice(sig, b * (size(sig) div {N_BANDS}) + 1, size(sig) div {N_BANDS})) as binary)))"
     )
     return sigs.select("doc_id", F.posexplode(bands_arr).alias("band", "key"))
 
@@ -269,7 +257,7 @@ def lsh_bands(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
 #: the oracle's shingle sets, the DuckDB mirror of shared_shingle_sets:
 #: word 3-shingles (sh) and each doc's distinct shingles (shd). CTE text to
 #: follow a WITH.
-_SHINGLE_SET_CTES = f"""{oracle_shingles_cte(k=3)},
+_SHINGLE_SET_CTES = f"""{ORACLE_SHINGLES_CTE},
     shd AS (SELECT DISTINCT doc_id, s FROM sh)"""
 
 #: the oracle's LSH candidate chain over the shingle sets, the DuckDB mirror
@@ -498,9 +486,8 @@ def shared_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_candidates memo is keyed cand@{cap}, so a mid-session cap change
     must propagate here (and to shared_clusters downstream) instead of
     serving pairs verified against the OLD candidate set."""
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
     return memo(
-        spark, sf_dir, f"verified_jaccard@{cap}",
+        spark, sf_dir, f"verified_jaccard@{LSH_MAX_BUCKET}",
         lambda: _exact_jaccard_on_candidates(spark, sf_dir),
     )
 
@@ -616,7 +603,7 @@ def shared_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     in verified near-dup pairs — a small fraction of the corpus. The key
     carries the LSH bucket cap (ADVICE r8): clusters derive from verified
     pairs derive from cand@{cap}."""
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
+    cap = LSH_MAX_BUCKET
 
     def build() -> DataFrame:
         verified = shared_verified_pairs(spark, sf_dir).filter(
@@ -880,12 +867,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Manku et al., WWW'07) on the already-verified signature column.
 
     The minhash family's hot-bucket cap applies here too
-    (``skinnerdb.lsh.maxBucket``): a degenerate band value shared by b docs
+    (``LSH_MAX_BUCKET``): a degenerate band value shared by b docs
     contributes b^2 candidates, so production runs bound b and observe the
     drops. Same oracle-parity caveat as the minhash entries: the DuckDB
     mirror assumes the cap is not hit at gate SF (largest bucket at sf0.01
-    is 343 vs the 100k default)."""
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
+    is 343 vs the 100k cap)."""
     # signatures ride the join as 32-bit INTEGERS, not 32-char bit-strings:
     # bands become (sig >> (32-8b)) & 255 (identical grouping to the MSB-first
     # substring bands the oracle uses), candidate rows shrink ~6x on the
@@ -905,7 +891,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band", "band_key"),
     )
-    bands = cap_buckets(bands, ["band", "band_key"], cap)
+    bands = cap_buckets(bands, ["band", "band_key"], LSH_MAX_BUCKET)
     a = bands.select(
         F.col("doc_id").alias("doc_a"), F.col("sig_int").alias("sig_a"), "band", "band_key"
     )
@@ -1001,12 +987,11 @@ def prefix_hot_bucket_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     key since r11); recover the offending string by filtering
     ``shared_shingle_sets`` for docs whose transform(sh_set, xxhash64)
     contains it."""
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
     prefix = _rarity_prefix(shared_shingle_sets(spark, sf_dir))
     return (
         prefix.groupBy("s")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > cap)
+        .filter(F.col("bucket_n") > LSH_MAX_BUCKET)
     )
 
 
@@ -1053,11 +1038,11 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
       provably passes — output unchanged, oracle needs no mirror.
       Together with the int-hash verify (:func:`shared_shingle_hashes`)
       the sf1 wall time went 365 s -> 33 s (output bit-identical).
-    - the family hot-bucket cap (``skinnerdb.lsh.maxBucket``) on prefix
+    - the family hot-bucket cap (``LSH_MAX_BUCKET``) on prefix
       buckets: the recall-1.0 guarantee cannot survive truly degenerate
       shingles at 100 TB, so past the cap the operator drops the bucket
-      loudly (same warn-on-non-default + report protocol as
-      :func:`lsh_candidates`; the default never fires on healthy data).
+      observably (:func:`prefix_hot_bucket_report`, the twin of
+      :func:`lsh_candidates`' report; the cap never fires on healthy data).
 
     Why not PPJoin+'s suffix filter (considered r8, rejected with
     reasoning): the positional filter here already enforces the
@@ -1088,26 +1073,15 @@ def shared_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     existed). Keyed by the bucket cap like shared_verified_pairs: a
     mid-session cap change must rebuild the pairs, not serve ones computed
     under the old cap."""
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
     return memo(
-        spark, sf_dir, f"prefix_pairs@{cap}",
+        spark, sf_dir, f"prefix_pairs@{LSH_MAX_BUCKET}",
         lambda: _prefix_pairs_impl(spark, sf_dir),
     )
 
 
 def _prefix_pairs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    if cap != _LSH_MAX_BUCKET_DEFAULT:
-        import warnings
-
-        warnings.warn(
-            f"{LSH_MAX_BUCKET}={cap} (non-default): prefix-filter pairs may "
-            "diverge from the uncapped DuckDB oracle (recall guarantee "
-            "waived past the cap); see prefix_hot_bucket_report()",
-            stacklevel=2,
-        )
     sh = shared_shingle_sets(spark, sf_dir)
-    prefix = cap_buckets(_rarity_prefix(sh), ["s"], cap)
+    prefix = cap_buckets(_rarity_prefix(sh), ["s"], LSH_MAX_BUCKET)
     a, b = prefix.alias("a"), prefix.alias("b")
     # Join-predicate pruning (output-identical, see docstring):
     # - LENGTH filter: J >= 1/2 forces set sizes within 2x of each other

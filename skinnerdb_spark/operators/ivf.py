@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skinnerdb_spark import artifacts
+from skinnerdb_spark.catalog import ORACLE_SF_DIR
 from skinnerdb_spark.operators.similarity import (
-    TOP_K,  # noqa: F401  (re-export for tests)
     N_QUERIES,
     RESCORE_SQL,
     _oracle_dot,
@@ -69,14 +69,14 @@ def source_fingerprint(sf_dir: str) -> str:
     return f"v{INDEX_VERSION}:" + artifacts.file_fingerprint(src)
 
 
-def train_centroids(train: np.ndarray, k: int = K_CELLS, iters: int = N_ITERS) -> np.ndarray:
+def train_centroids(train: np.ndarray) -> np.ndarray:
     """Plain Lloyd k-means on unit-normalized vectors (spherical k-means).
-    Deterministic: init = first k training rows, fixed iteration count."""
+    Deterministic: init = first K_CELLS training rows, N_ITERS iterations."""
     x = train / np.linalg.norm(train, axis=1, keepdims=True)
-    c = x[:k].copy()
-    for _ in range(iters):
+    c = x[:K_CELLS].copy()
+    for _ in range(N_ITERS):
         assign = np.argmax(x @ c.T, axis=1)
-        for j in range(k):
+        for j in range(K_CELLS):
             members = x[assign == j]
             if len(members):
                 m = members.mean(axis=0)
@@ -177,13 +177,6 @@ def build_ivf_index(spark: SparkSession, e: DataFrame, path: str) -> None:
     assign_cells(e, centroids).write.mode("overwrite").parquet(f"{path}/assignments")
 
 
-#: the oracle SQL is a static string, so the persisted-index location it
-#: reads is resolved at import: the driver's gate runs at sf0.01 (default);
-#: tests/conftest.py pins SKINNER_ORACLE_SF_DIR to the local test SF before
-#: the registry is populated.
-_ORACLE_SF_DIR = os.environ.get("SKINNER_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-
 def _ivf_oracle(index_path: str) -> str:
     """DuckDB SQL re-deriving the ENTIRE IVF search from the persisted
     centroids parquet: assignment (argmax dot per vector), probe selection
@@ -225,7 +218,7 @@ def load_ivf_index(spark: SparkSession, path: str) -> tuple[np.ndarray, DataFram
 
 @register(
     "sim_ivf_ann",
-    _ivf_oracle(default_index_path(_ORACLE_SF_DIR)),
+    _ivf_oracle(default_index_path(ORACLE_SF_DIR)),
     bench=True,
     tags=("similarity", "pipeline", "ivf"),
 )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from skinnerdb_spark.operators.dedup import _SHINGLE_SET_CTES, shared_shingle_sets
 from skinnerdb_spark.operators.textprims import fan_out
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
@@ -129,17 +130,16 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 EVAL_DOCS = 20
 CONTAM_MIN_SHARED = 2
 #: hard ceiling on the broadcast eval-shingle array (same guard pattern as
-#: dedup's skinnerdb.lsh.maxBucket): the check assumes "eval set is megabytes,
-#: corpus is 100 TB" — a mis-scoped EVAL_DOCS boundary would otherwise fold an
+#: dedup.LSH_MAX_BUCKET): the check assumes "eval set is megabytes, corpus is
+#: 100 TB" — a mis-scoped EVAL_DOCS boundary would otherwise fold an
 #: unbounded shingle set into one row and OOM an executor. A fired cap
 #: degrades LOUDLY: warning here + :func:`contamination_eval_report`.
-CONTAM_MAX_EVAL = "skinnerdb.contamination.maxEvalShingles"
-_CONTAM_MAX_EVAL_DEFAULT = 1_000_000
+CONTAM_MAX_EVAL = 1_000_000
 
 
 def _capped_eval_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-row (ev_set) DataFrame of distinct eval shingles, deterministically
-    truncated to the conf cap (lexicographic order, lowest first).
+    truncated to CONTAM_MAX_EVAL (lexicographic order, lowest first).
 
     The bound is enforced BEFORE any single-row aggregation:
     distinct -> orderBy -> limit(cap) runs as a TakeOrdered (each executor
@@ -147,9 +147,7 @@ def _capped_eval_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect step — the final fold only ever sees <= cap rows. A FIRED cap
     (eval set actually larger than the bound) warns loudly, since the DuckDB
     oracle never caps and the gate would diverge."""
-    from skinnerdb_spark.operators.dedup import shared_shingle_sets
-
-    cap = int(spark.conf.get(CONTAM_MAX_EVAL, str(_CONTAM_MAX_EVAL_DEFAULT)))
+    cap = CONTAM_MAX_EVAL
     sets = shared_shingle_sets(spark, sf_dir)
     distinct = (
         sets.filter(F.col("doc_id") < EVAL_DOCS)
@@ -162,7 +160,7 @@ def _capped_eval_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         import warnings
 
         warnings.warn(
-            f"{CONTAM_MAX_EVAL}={cap} FIRED: eval shingle set exceeds the cap; "
+            f"CONTAM_MAX_EVAL={cap} FIRED: eval shingle set exceeds the cap; "
             "shingles were dropped and contamination_check will diverge from "
             "the uncapped DuckDB oracle; see contamination_eval_report()",
             stacklevel=2,
@@ -178,9 +176,7 @@ def contamination_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row (n_eval_shingles, cap, n_dropped): what the eval-array cap
     would drop — the contamination twin of dedup.hot_bucket_report ('no
     silent caps')."""
-    from skinnerdb_spark.operators.dedup import shared_shingle_sets
-
-    cap = int(spark.conf.get(CONTAM_MAX_EVAL, str(_CONTAM_MAX_EVAL_DEFAULT)))
+    cap = CONTAM_MAX_EVAL
     return (
         shared_shingle_sets(spark, sf_dir)
         .filter(F.col("doc_id") < EVAL_DOCS)
@@ -197,12 +193,7 @@ def contamination_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "contamination_check",
     f"""
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    sh AS (SELECT doc_id,
-                  array_to_string(ws[g.i + 1 : g.i + 3], ' ') AS s
-           FROM w, UNNEST(generate_series(0, len(ws) - 3, 1)) AS g(i)
-           WHERE len(ws) >= 3),
-    shd AS (SELECT DISTINCT doc_id, s FROM sh),
+    WITH {_SHINGLE_SET_CTES},
     ev AS (SELECT DISTINCT s FROM shd WHERE doc_id < {EVAL_DOCS}),
     hits AS (
         SELECT c.doc_id, COUNT(*) AS shared_shingles
@@ -223,11 +214,8 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup verify stage, dedup.py:_exact_jaccard_on_candidates): zero
     explodes, zero shuffles over the corpus — the shape that works when the
     corpus is 100 TB and the eval set is megabytes. The folded array is
-    bounded by ``skinnerdb.contamination.maxEvalShingles`` (default 1M —
-    never fires on a sane eval set); a fired cap warns and is observable via
-    :func:`contamination_eval_report`."""
-    from skinnerdb_spark.operators.dedup import shared_shingle_sets
-
+    bounded by ``CONTAM_MAX_EVAL`` (1M — never fires on a sane eval set);
+    a fired cap warns and is observable via :func:`contamination_eval_report`."""
     sets = shared_shingle_sets(spark, sf_dir)
     ev = _capped_eval_set(spark, sf_dir)
     return (

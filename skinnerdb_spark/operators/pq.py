@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from skinnerdb_spark import artifacts
+from skinnerdb_spark.catalog import ORACLE_SF_DIR
 from skinnerdb_spark.operators import ivf as _ivf
 from skinnerdb_spark.operators.similarity import (
     DIM,
@@ -218,9 +219,6 @@ def ensure_pq_index(spark: SparkSession, e: DataFrame, sf_dir: str) -> str:
     return path
 
 
-_ORACLE_SF_DIR = os.environ.get("SKINNER_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-
 def _pq_oracle(index_path: str) -> str:
     """DuckDB SQL re-deriving the ENTIRE PQ search from the persisted
     codebooks parquet: per-subspace encoding (argmin), the per-query LUT,
@@ -248,7 +246,7 @@ def _pq_oracle(index_path: str) -> str:
 
 @register(
     "sim_pq_ann",
-    _pq_oracle(default_index_path(_ORACLE_SF_DIR)),
+    _pq_oracle(default_index_path(ORACLE_SF_DIR)),
     bench=True,
     tags=("similarity", "pipeline", "pq"),
 )
@@ -331,7 +329,7 @@ def _ivfpq_oracle(ivf_path: str, pq_path: str) -> str:
 @register(
     "sim_ivfpq_ann",
     _ivfpq_oracle(
-        _ivf.default_index_path(_ORACLE_SF_DIR), default_index_path(_ORACLE_SF_DIR)
+        _ivf.default_index_path(ORACLE_SF_DIR), default_index_path(ORACLE_SF_DIR)
     ),
     bench=True,
     tags=("similarity", "pipeline", "ivf", "pq"),

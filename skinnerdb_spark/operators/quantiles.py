@@ -59,7 +59,6 @@ def exact_value_at_ranks(
     ranks: Callable[[Column], Column],
     bins: int = 4096,
     leaf_limit: int = 65536,
-    max_levels: int = 4,
 ) -> DataFrame:
     """Exact value at the given 1-indexed rank(s) in ascending ``value_col``
     order within each group — without sorting the input.
@@ -132,7 +131,7 @@ def exact_value_at_ranks(
             )
         return base.crossJoin(F.broadcast(ranges)).filter(cond)
 
-    for _ in range(max_levels):
+    for _ in range(4):  # descent levels; bins=4096 needs 2 for 1e12 rows
         narrow = [t for t in targets if t["count"] > leaf_limit and t["lo"] != t["hi"]]
         if not narrow:
             break

@@ -331,37 +331,18 @@ MP_PROBES = 600
 MP_FLIPS = 3
 
 
-def _multi_ann_oracle(n_tables: int, bits: int, probe_hamming: int = 0) -> str:
-    total = n_tables * bits
-    if probe_hamming:
-        # query keys expand to themselves + all Hamming-1 flips (UNION dedups)
-        probe_cte = f"""
-    qtbl AS (SELECT vec_id, t, bkey FROM tbl WHERE vec_id < {N_QUERIES}),
-    probes AS (
-        SELECT vec_id, t, bkey AS pkey FROM qtbl
-        UNION
-        SELECT vec_id, t,
-               SUBSTR(bkey, 1, g.i - 1)
-               || (CASE WHEN SUBSTR(bkey, g.i, 1) = '1' THEN '0' ELSE '1' END)
-               || SUBSTR(bkey, g.i + 1) AS pkey
-        FROM qtbl, generate_series(1, {bits}) AS g(i)),
-    cand AS (
-        SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        FROM probes q JOIN tbl c ON q.t = c.t AND q.pkey = c.bkey
-                                AND c.vec_id <> q.vec_id),"""
-    else:
-        probe_cte = f"""
+def _multi_ann_oracle(n_tables: int, bits: int) -> str:
+    return f"""
+    WITH {_oracle_sign_ctes(n_tables * bits)},
+    tbl AS (
+        SELECT vec_id, t.t AS t,
+               SUBSTR(bits, t.t * {bits} + 1, {bits}) AS bkey
+        FROM sig, generate_series(0, {n_tables - 1}) AS t(t)),
     cand AS (
         SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
         FROM tbl q JOIN tbl c ON q.t = c.t AND q.bkey = c.bkey
                              AND c.vec_id <> q.vec_id
-        WHERE q.vec_id < {N_QUERIES}),"""
-    return f"""
-    WITH {_oracle_sign_ctes(total)},
-    tbl AS (
-        SELECT vec_id, t.t AS t,
-               SUBSTR(bits, t.t * {bits} + 1, {bits}) AS bkey
-        FROM sig, generate_series(0, {n_tables - 1}) AS t(t)),{probe_cte}
+        WHERE q.vec_id < {N_QUERIES}),
     {RESCORE_SQL}
 """
 
@@ -456,14 +437,13 @@ def sim_hot_bucket_report(
 ) -> DataFrame:
     """(t, bkey, bucket_n) for sign-LSH buckets the cap excluded — the
     similarity-side twin of dedup.hot_bucket_report ('no silent caps')."""
-    from skinnerdb_spark.operators.dedup import LSH_MAX_BUCKET, _LSH_MAX_BUCKET_DEFAULT
+    from skinnerdb_spark.operators.dedup import LSH_MAX_BUCKET
 
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
     tbl = _multi_signatures_df(spark, sf_dir, n_tables, bits)
     return (
         tbl.groupBy("t", "bkey")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > cap)
+        .filter(F.col("bucket_n") > LSH_MAX_BUCKET)
     )
 
 
@@ -474,23 +454,20 @@ def _multi_ann(
     bucket key at Hamming distance 1 from each query key (true multiprobe:
     more of each table searched per query at no extra table/signature cost).
 
-    Hot-bucket guard: corpus-side buckets larger than ``skinnerdb.lsh.maxBucket``
+    Hot-bucket guard: corpus-side buckets larger than ``dedup.LSH_MAX_BUCKET``
     are dropped before the candidate join (same cap + observable-report
     pattern as the dedup family, dedup.cap_buckets) — a degenerate key (e.g.
     zero-ish vectors all projecting to the same sign pattern) would otherwise
     funnel an unbounded slice of the corpus into every query's candidate set.
     Dropped buckets are visible via :func:`sim_hot_bucket_report`; the DuckDB
-    oracles never cap, so a fired cap shows up as gate divergence (warned at
-    the dedup twin; default cap 100k never fires on healthy corpora)."""
-    from skinnerdb_spark.operators.dedup import (
-        LSH_MAX_BUCKET,
-        _LSH_MAX_BUCKET_DEFAULT,
-        cap_buckets,
-    )
+    oracles never cap, so a fired cap shows up as gate divergence (the 100k
+    cap never fires on healthy corpora)."""
+    from skinnerdb_spark.operators.dedup import LSH_MAX_BUCKET, cap_buckets
 
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
     e = read_table(spark, sf_dir, "embeddings")
-    tbl = cap_buckets(_multi_signatures_df(spark, sf_dir, n_tables, bits), ["t", "bkey"], cap)
+    tbl = cap_buckets(
+        _multi_signatures_df(spark, sf_dir, n_tables, bits), ["t", "bkey"], LSH_MAX_BUCKET
+    )
     q = tbl.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("t").alias("qt"), F.col("bkey").alias("qkey")
     )
@@ -595,8 +572,6 @@ def shared_query_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _margin_probe_candidates(
     spark: SparkSession,
     sf_dir: str,
-    n_tables: int = MP_TABLES,
-    bits: int = MP_BITS,
     probes: int = MP_PROBES,
     max_flips: int = MP_FLIPS,
 ) -> DataFrame:
@@ -610,26 +585,21 @@ def _margin_probe_candidates(
     deterministic, and identical in DuckDB because the costs are exact
     decimals, not IEEE sums). The zero-cost empty flip-set ranks first for
     every table, so the exact buckets are always probed (probes >=
-    n_tables is asserted) and the candidate set is a strict superset of
+    MP_TABLES is asserted) and the candidate set is a strict superset of
     the no-probing variant's.
 
-    Scale shape: the probe frame is N_QUERIES x n_tables x |masks| rows
+    Scale shape: the probe frame is N_QUERIES x MP_TABLES x |masks| rows
     (query-side constants — 14k rows here), ranked by a window PARTITIONED
     by query, then broadcast into the corpus bucket join; the corpus side
     is the same capped (t, bkey) table every sign-LSH entry uses. Corpus
     cost is |retrieved buckets|, the multiprobe trade made explicit."""
-    from skinnerdb_spark.operators.dedup import (
-        LSH_MAX_BUCKET,
-        _LSH_MAX_BUCKET_DEFAULT,
-        cap_buckets,
-    )
+    from skinnerdb_spark.operators.dedup import LSH_MAX_BUCKET, cap_buckets
 
-    assert n_tables * bits <= MAX_PLANES
-    assert probes >= n_tables, "exact buckets must always be probed"
-    masks = _probe_masks(bits, max_flips)
-    cap = int(spark.conf.get(LSH_MAX_BUCKET, str(_LSH_MAX_BUCKET_DEFAULT)))
-    e = read_table(spark, sf_dir, "embeddings")
-    tbl = cap_buckets(_multi_signatures_df(spark, sf_dir, n_tables, bits), ["t", "bkey"], cap)
+    assert probes >= MP_TABLES, "exact buckets must always be probed"
+    masks = _probe_masks(MP_BITS, max_flips)
+    tbl = cap_buckets(
+        _multi_signatures_df(spark, sf_dir, MP_TABLES, MP_BITS), ["t", "bkey"], LSH_MAX_BUCKET
+    )
 
     qk = shared_bits(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "bits"
@@ -640,14 +610,14 @@ def _margin_probe_candidates(
         .select(
             "query_id",
             "marr",
-            F.explode(F.sequence(F.lit(0), F.lit(n_tables - 1))).alias("t"),
+            F.explode(F.sequence(F.lit(0), F.lit(MP_TABLES - 1))).alias("t"),
             "bits",
         )
         .select(
             "query_id",
             "marr",
             "t",
-            F.expr(f"substring(bits, t * {bits} + 1, {bits})").alias("qkey"),
+            F.expr(f"substring(bits, t * {MP_BITS} + 1, {MP_BITS})").alias("qkey"),
         )
         .select(
             "query_id",
@@ -659,10 +629,10 @@ def _margin_probe_candidates(
         .withColumn(
             "cost",
             F.expr(
-                f"aggregate(filter(sequence(0, {bits - 1}), "
+                f"aggregate(filter(sequence(0, {MP_BITS - 1}), "
                 f"b -> (shiftright(mask, b) & 1) = 1), "
                 f"CAST(0 AS BIGINT), "
-                f"(acc, b) -> acc + element_at(marr, t * {bits} + b + 1))"
+                f"(acc, b) -> acc + element_at(marr, t * {MP_BITS} + b + 1))"
             ),
         )
     )
@@ -672,7 +642,7 @@ def _margin_probe_candidates(
         "query_id",
         F.col("t").alias("qt"),
         F.expr(
-            f"concat_ws('', transform(sequence(0, {bits - 1}), "
+            f"concat_ws('', transform(sequence(0, {MP_BITS - 1}), "
             f"b -> CASE WHEN (shiftright(mask, b) & 1) = 1 "
             f"THEN (CASE WHEN substring(qkey, b + 1, 1) = '1' THEN '0' ELSE '1' END) "
             f"ELSE substring(qkey, b + 1, 1) END))"
@@ -691,18 +661,10 @@ def _margin_probe_candidates(
     return cand
 
 
-def _margin_multiprobe(
-    spark: SparkSession,
-    sf_dir: str,
-    n_tables: int = MP_TABLES,
-    bits: int = MP_BITS,
-    probes: int = MP_PROBES,
-    max_flips: int = MP_FLIPS,
-) -> DataFrame:
+def _margin_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k over the margin-probed candidate set (docstring above)."""
     e = read_table(spark, sf_dir, "embeddings")
-    cand = _margin_probe_candidates(spark, sf_dir, n_tables, bits, probes, max_flips)
-    return exact_topk_on_candidates(e, cand)
+    return exact_topk_on_candidates(e, _margin_probe_candidates(spark, sf_dir))
 
 
 def _margin_multiprobe_oracle(

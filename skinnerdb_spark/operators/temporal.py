@@ -108,13 +108,12 @@ def range_join(
     ts: str,
     start: str,
     end: str,
-    bucket: str = "1 week",
 ) -> DataFrame:
     """Interval join: left rows whose ts falls in [right.start, right.end)
-    for the same key. Right intervals are replicated per covered time bucket
-    and the join runs equi on (key, bucket) + residual range filter — the
-    bucketed-range-join strategy (bounded shuffle keys, no cross product)."""
-    seconds = {"1 day": 86400, "1 week": 604800}[bucket]
+    for the same key. Right intervals are replicated per covered one-week
+    bucket and the join runs equi on (key, bucket) + residual range filter —
+    the bucketed-range-join strategy (bounded shuffle keys, no cross product)."""
+    seconds = 7 * 86400
     lb = left.withColumn(
         "__bucket", (F.unix_timestamp(F.col(ts).cast("timestamp")) / seconds).cast("long")
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from skinnerdb_spark.operators.textprims import fan_out, oracle_shingles_cte, shingles_expr
+from skinnerdb_spark.operators.textprims import ORACLE_SHINGLES_CTE, fan_out, shingles_expr
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
 from skinnerdb_spark.state import memo
@@ -148,7 +148,7 @@ def text_regex_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_fingerprint",
     f"""
-    WITH {oracle_shingles_cte(k=3)},
+    WITH {ORACLE_SHINGLES_CTE},
     mins AS (SELECT doc_id, MIN(md5(s)) AS min_shingle_hash
              FROM sh GROUP BY doc_id)
     SELECT d.doc_id,

@@ -64,19 +64,15 @@ def shingles_expr(words_col: str, k: int = 3) -> Column:
     )
 
 
-def oracle_shingles_cte(k: int = 3, table: str = "documents") -> str:
-    """DuckDB CTE producing (doc_id, s) word-k-shingles — mirror of
-    :func:`shingles_expr`.
-
-    Uses the *list-returning* generate_series + unnest (DuckDB's table
-    function form rejects lateral column arguments); inclusive bounds match
-    Spark's sequence()."""
-    joined = " || ' ' || ".join(f"w[i + {j}]" for j in range(k))
-    return f"""
-    ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM {table}),
-    idx AS (SELECT doc_id, w, UNNEST(generate_series(1, len(w) - {k - 1})) AS i
-            FROM ws WHERE len(w) >= {k}),
-    sh AS (SELECT doc_id, {joined} AS s FROM idx)
+#: DuckDB CTEs producing (doc_id, s) word 3-shingles of documents — mirror
+#: of :func:`shingles_expr` at k=3. Uses the *list-returning*
+#: generate_series + unnest (DuckDB's table function form rejects lateral
+#: column arguments); inclusive bounds match Spark's sequence().
+ORACLE_SHINGLES_CTE = """
+    ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+    idx AS (SELECT doc_id, w, UNNEST(generate_series(1, len(w) - 2)) AS i
+            FROM ws WHERE len(w) >= 3),
+    sh AS (SELECT doc_id, w[i + 0] || ' ' || w[i + 1] || ' ' || w[i + 2] AS s FROM idx)
     """
 
 

@@ -30,33 +30,18 @@ def replicate_for_salt(df: DataFrame, n_salts: int = 16) -> DataFrame:
     )
 
 
-#: join types where every output row is driven by the (salted-once) probe
-#: side; right/full outer would emit unmatched build rows n_salts times.
-_SALT_SAFE_HOW = {"inner", "left", "leftouter", "left_outer", "semi", "left_semi", "leftsemi", "anti", "left_anti", "leftanti"}
-
-
 def salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: Column,
-    n_salts: int = 16,
-    how: str = "inner",
+    probe: DataFrame, build: DataFrame, on: Column, n_salts: int = 16
 ) -> DataFrame:
-    """Skew-resistant equi-join: probe side salted, build side replicated,
-    join key extended with the salt so each hot key spreads over n_salts
-    shuffle partitions. Semantically identical to probe.join(build, on, how)
-    for probe-driven join types only (inner/left/semi/anti) — right/full
-    outer are rejected because the replicated build side would emit each
-    unmatched build row n_salts times."""
-    if how.lower().replace("_", "") not in {h.replace("_", "") for h in _SALT_SAFE_HOW}:
-        raise ValueError(
-            f"salted_join supports probe-driven join types {sorted(_SALT_SAFE_HOW)}; "
-            f"got {how!r} (unmatched build rows would be duplicated per salt)"
-        )
+    """Skew-resistant inner equi-join: probe side salted, build side
+    replicated, join key extended with the salt so each hot key spreads over
+    n_salts shuffle partitions. Semantically identical to
+    probe.join(build, on) — every output row is driven by the salted-once
+    probe side, so no row is duplicated per salt."""
     p = salted(probe, n_salts)
     b = replicate_for_salt(build, n_salts)
     cond = on & (p[SALT_COL] == b[SALT_COL])
-    return p.join(b, cond, how).drop(SALT_COL)
+    return p.join(b, cond).drop(SALT_COL)
 
 
 #: merge functions usable to combine per-salt partials into the final value
@@ -126,14 +111,13 @@ def skew_report(df: DataFrame, key: str, topk: int = 20) -> DataFrame:
 def recommend_salts(
     df: DataFrame,
     key: str,
-    factor: int = 2,
     cap: int = 64,
     partitions: int | None = None,
 ) -> int:
     """How many salts (1 = don't salt) a shuffle on ``key`` needs so the
     hottest key's rows spread to roughly the ideal per-partition share:
     with P shuffle partitions and ``ideal = total/P`` rows per partition,
-    a key staying under ``factor * ideal`` is AQE's problem, not ours
+    a key staying under ``2 * ideal`` is AQE's problem, not ours
     (return 1); above it, fan the key out over ``ceil(max_cnt / ideal)``
     salts, capped. The two-row aggregate is the only driver-side data —
     bounded at any scale. Feeds :func:`salted_join` /
@@ -148,6 +132,6 @@ def recommend_salts(
     if not row or row.tot is None:
         return 1
     ideal = max(1, row.tot // p)
-    if row.mx <= factor * ideal:
+    if row.mx <= 2 * ideal:
         return 1
     return int(min(cap, -(-row.mx // ideal)))

@@ -37,14 +37,13 @@ _REGISTRY: dict[str, QuerySpec] = {}
 def register(
     name: str,
     oracle: str | None,
-    doc: str = "",
     bench: bool = True,
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, doc or (fn.__doc__ or ""), bench, tags)
+        _REGISTRY[name] = QuerySpec(name, fn, oracle, fn.__doc__ or "", bench, tags)
         return fn
 
     return deco

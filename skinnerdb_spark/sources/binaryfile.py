@@ -9,10 +9,9 @@ payloads + typed metadata, ready for Arrow-batched feature extraction.
 Scale rules encoded here:
 
 - **One row per file, one task per file group**: the source never splits a
-  file, so a few multi-GB videos skew tasks. ``load_binary`` exposes
-  ``repartition_to`` to spread payloads after the scan, and callers should
-  prefer many small objects (or pointer columns into an object store) over
-  monoliths.
+  file, so a few multi-GB videos skew tasks. Callers repartition after the
+  scan to spread payloads, and should prefer many small objects (or pointer
+  columns into an object store) over monoliths.
 - **Driver-side listing**: millions of tiny files make file listing the
   bottleneck long before I/O. At warehouse scale, land binaries into
   Parquet ``binary`` columns early (``to_media`` + a parquet write) and keep
@@ -36,9 +35,7 @@ def load_binary(
     spark: SparkSession,
     path: str,
     glob: str | None = None,
-    recursive: bool = False,
     max_bytes: int | None = None,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Read files under ``path`` as (path, modificationTime, length, content).
 
@@ -49,13 +46,9 @@ def load_binary(
     reader = spark.read.format("binaryFile")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
     df = reader.load(path)
     if max_bytes is not None:
         df = df.filter(F.col("length") <= max_bytes)
-    if repartition_to:
-        df = df.repartition(repartition_to)
     return df
 
 
@@ -78,14 +71,8 @@ def to_media(files: DataFrame, media_type: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # registry entry: the ingestion manifest, oracle-verified byte-for-byte
 # --------------------------------------------------------------------------
-import os as _os
-
+from skinnerdb_spark.catalog import ORACLE_SF_DIR
 from skinnerdb_spark.registry import register
-
-#: static oracle resolves its warehouse at import, like the IVF index oracle
-#: (operators/ivf.py): the driver gate runs at sf0.01; tests/conftest.py pins
-#: this env var to the local test SF before the registry is populated.
-_ORACLE_SF = _os.environ.get("SKINNER_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 @register(
@@ -94,7 +81,7 @@ _ORACLE_SF = _os.environ.get("SKINNER_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     SELECT regexp_extract(filename, '[^/]+$') AS file_name,
            CAST(size AS BIGINT) AS length,
            md5(hex(content)) AS content_md5
-    FROM read_blob('{_ORACLE_SF}/*.parquet')
+    FROM read_blob('{ORACLE_SF_DIR}/*.parquet')
     """,
     tags=("sources", "multimodal", "binary"),
 )

@@ -14,17 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
+    df: DataFrame, table_name: str, bucket_col: str, n_buckets: int = 32
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)
+    """Persist as a bucketed managed table."""
+    df.write.mode("overwrite").bucketBy(n_buckets, bucket_col).saveAsTable(table_name)
 
 
 def bucketed_join(

@@ -44,14 +44,10 @@ def load_csv(
     )
 
 
-def store_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def store_table(df: DataFrame, path: str) -> None:
     """Persist as Parquet — the engine's column-store format (replaces the
-    reference's one-serialized-file-per-column layout, src/data/IntData.java:60-67).
-    ``partition_by`` enables partition pruning at scale."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    reference's one-serialized-file-per-column layout, src/data/IntData.java:60-67)."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def compact(spark: SparkSession, path: str, out_path: str, target_mb: int = 128) -> int:

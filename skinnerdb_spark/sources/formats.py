@@ -6,8 +6,7 @@ Scale rules encoded here rather than left to callers:
 
 - JSONL without an explicit schema triggers a FULL inference scan of the
   input before the real read — twice the I/O at 100 TB. ``load_jsonl``
-  therefore requires a schema (pass ``infer=True`` to opt into the scan,
-  for exploration only).
+  and ``load_xml`` therefore take a required schema.
 - Corrupt records are quarantined into a ``_corrupt_record`` column
   (PERMISSIVE mode) instead of failing the job — at billions of
   crawled-JSON lines there WILL be bad rows; dropping them silently
@@ -26,39 +25,29 @@ from pyspark.sql import types as T
 CORRUPT_COL = "_corrupt_record"
 
 
-def load_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    infer: bool = False,
-    multiline: bool = False,
-) -> DataFrame:
+def _with_corrupt_col(schema: T.StructType | str) -> T.StructType:
+    """``schema`` (a StructType or DDL string) plus the quarantine column."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if CORRUPT_COL not in schema.fieldNames():
+        schema = schema.add(CORRUPT_COL, T.StringType())
+    return schema
+
+
+def load_jsonl(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
     """Read line-delimited JSON with an explicit schema.
 
-    The schema parameter is mandatory unless ``infer=True``: schema
-    inference reads the whole input once before the query runs, which is
-    harmless on a laptop sample and doubles the scan at warehouse scale.
+    The schema is mandatory: schema inference reads the whole input once
+    before the query runs, which doubles the scan at warehouse scale.
     Malformed lines land in ``_corrupt_record`` (added to the schema if
     absent) rather than failing or silently dropping.
     """
-    if schema is None and not infer:
-        raise ValueError(
-            "load_jsonl requires an explicit schema at scale "
-            "(schema inference = a full extra pass over the input); "
-            "pass infer=True to opt in for exploration"
-        )
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", CORRUPT_COL
+    return (
+        spark.read.option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .schema(_with_corrupt_col(schema))
+        .json(path)
     )
-    if multiline:
-        reader = reader.option("multiLine", "true")
-    if schema is not None:
-        if isinstance(schema, str):
-            schema = T.StructType.fromDDL(schema)
-        if CORRUPT_COL not in schema.fieldNames():
-            schema = schema.add(CORRUPT_COL, T.StringType())
-        reader = reader.schema(schema)
-    return reader.json(path)
 
 
 def quarantine_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -82,13 +71,10 @@ def quarantine_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return clean, corrupt
 
 
-def store_jsonl(df: DataFrame, path: str, compression: str | None = None) -> None:
+def store_jsonl(df: DataFrame, path: str) -> None:
     """Write line-delimited JSON (one object per line — the exchange format
-    every data-pipeline tool reads). Optional codec ('gzip', 'zstd', ...)."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+    every data-pipeline tool reads)."""
+    df.write.mode("overwrite").json(path)
 
 
 def load_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -109,53 +95,32 @@ def store_orc(
 
 
 def load_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema: T.StructType | str | None = None,
-    infer: bool = False,
+    spark: SparkSession, path: str, row_tag: str, schema: T.StructType | str
 ) -> DataFrame:
     """Read XML via Spark 4's built-in ``xml`` data source (one row per
     ``row_tag`` element — feeds, sitemaps, Wikipedia dumps, PubMed).
 
-    Same scale discipline as ``load_jsonl``: an explicit schema is
-    mandatory unless ``infer=True`` (XML inference is a full extra parse
-    of the input), and malformed elements quarantine into
-    ``_corrupt_record`` (PERMISSIVE) instead of failing the job — route
-    them with ``quarantine_split`` exactly like JSONL."""
-    if schema is None and not infer:
-        raise ValueError(
-            "load_xml requires an explicit schema at scale "
-            "(schema inference = a full extra pass over the input); "
-            "pass infer=True to opt in for exploration"
-        )
-    reader = (
+    Same scale discipline as ``load_jsonl``: the schema is mandatory (XML
+    inference is a full extra parse of the input), and malformed elements
+    quarantine into ``_corrupt_record`` (PERMISSIVE) instead of failing the
+    job — route them with ``quarantine_split`` exactly like JSONL."""
+    return (
         spark.read.format("xml")
         .option("rowTag", row_tag)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .schema(_with_corrupt_col(schema))
+        .load(path)
     )
-    if schema is not None:
-        if isinstance(schema, str):
-            schema = T.StructType.fromDDL(schema)
-        if CORRUPT_COL not in schema.fieldNames():
-            schema = schema.add(CORRUPT_COL, T.StringType())
-        reader = reader.schema(schema)
-    return reader.load(path)
 
 
-def store_xml(
-    df: DataFrame, path: str, row_tag: str, root_tag: str = "rows",
-    compression: str | None = None,
-) -> None:
+def store_xml(df: DataFrame, path: str, row_tag: str, root_tag: str = "rows") -> None:
     """Write XML (one ``row_tag`` element per row under ``root_tag`` per
-    file). Optional codec ('gzip', ...)."""
-    w = (
+    file)."""
+    (
         df.write.mode("overwrite")
         .format("xml")
         .option("rowTag", row_tag)
         .option("rootTag", root_tag)
+        .save(path)
     )
-    if compression:
-        w = w.option("compression", compression)
-    w.save(path)

@@ -17,7 +17,7 @@ equivalent is *layout*: make the parquet files themselves the index.
   destroy listing and small-file performance).
 
 - :func:`write_zorder` — multi-column locality via a Morton (Z-order) key:
-  each hot column is min-max-scaled to ``bits`` bits and the bits are
+  each hot column is min-max-scaled to 16 bits and the bits are
   interleaved, so sorting by the single key clusters BOTH columns at once.
   Range-sorting can make only its leading column's per-file min/max tight;
   Z-order makes every participating column's stats tight (~sqrt sharing of
@@ -85,12 +85,10 @@ def morton_key(scaled: list[Column], bits: int) -> Column:
     return reduce(lambda a, t: a.bitwiseOR(t), terms, F.lit(0)).cast("bigint")
 
 
-def write_zorder(
-    df: DataFrame, path: str, cols: list[str], n_files: int = 32, bits: int = 16
-) -> None:
+def write_zorder(df: DataFrame, path: str, cols: list[str], n_files: int = 32) -> None:
     """Persist parquet clustered on the Morton interleave of ``cols``.
 
-    Each column is min-max scaled to ``bits`` bits (one tiny bounds
+    Each column is min-max scaled to 16 bits (one tiny bounds
     aggregate, driver-collected — 2 numbers per column), the keys are
     interleaved, and files are range-partitioned + sorted on the single
     Z key. The key column is dropped before write: the layout IS the
@@ -102,8 +100,8 @@ def write_zorder(
     columns participate via their epoch representation (cast once before
     scaling) — time x key Z-orders are the common warehouse case.
 
-    ``bits`` is clamped so the interleaved key fits 63 bits: 4+ columns at
-    the default 16 bits would shift into the bigint sign bit, flipping key
+    The bit width is clamped so the interleaved key fits 63 bits: 4+
+    columns at 16 bits would shift into the bigint sign bit, flipping key
     signs and silently INVERTING the clustering order."""
     dtypes = dict(df.dtypes)
     if not cols:
@@ -116,7 +114,7 @@ def write_zorder(
                 f"z-order column {c!r} has non-orderable-numeric type {t}; "
                 "use mode='range' for string keys (lexicographic sort)"
             )
-    bits = min(bits, 63 // len(cols))
+    bits = min(16, 63 // len(cols))
 
     def numeric(c: str) -> F.Column:
         t = dtypes[c]

@@ -363,20 +363,21 @@ def ev_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # real Structured Streaming entry points (no oracle — stream semantics; the
 # batch twins above are the value-verified forms)
 # --------------------------------------------------------------------------
-def stream_dedup(spark: SparkSession, src_dir: str, watermark: str = "1 hour") -> DataFrame:
+def stream_dedup(spark: SparkSession, src_dir: str) -> DataFrame:
     """Watermarked streaming deduplication: at-most-one emitted row per
     (user_id, event_type) among events inside the watermark horizon —
     Structured Streaming's dropDuplicatesWithinWatermark-style state-bounded
     dedup (state evicts as the watermark advances). The value-verified batch
     twin is :func:`ev_stream_dedup`."""
-    return stream_events(spark, src_dir, watermark).dropDuplicates(
+    return stream_events(spark, src_dir).dropDuplicates(
         ["user_id", "event_type"]
     )
 
 
-def stream_events(spark: SparkSession, src_dir: str, watermark: str = "1 hour") -> DataFrame:
-    """readStream over the events parquet directory with an event-time
-    watermark — the late-data bound a production pipeline would set."""
+def stream_events(spark: SparkSession, src_dir: str) -> DataFrame:
+    """readStream over the events parquet directory with a one-hour
+    event-time watermark — the late-data bound a production pipeline would
+    set."""
     import os
 
     # defensive: callers may pass a session built outside session.py. Pin the
@@ -406,14 +407,14 @@ def stream_events(spark: SparkSession, src_dir: str, watermark: str = "1 hour") 
         stream = stream.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     elif ts_type == "timestamp_ntz":
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream.withWatermark("ts", watermark)
+    return stream.withWatermark("ts", "1 hour")
 
 
-def stream_tumbling_counts(events: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """Streaming tumbling-window counts (append-able once the watermark
-    passes). Same aggregation as ev_tumbling_hour."""
+def stream_tumbling_counts(events: DataFrame) -> DataFrame:
+    """Streaming one-hour tumbling-window counts (append-able once the
+    watermark passes). Same aggregation as ev_tumbling_hour."""
     return (
-        events.groupBy(F.window("ts", duration).alias("win"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -557,29 +558,28 @@ def stream_enriched(events: DataFrame, dim: DataFrame, on: str) -> DataFrame:
     return events.join(F.broadcast(dim), on)
 
 
-def stream_stream_join(
-    left: DataFrame, right: DataFrame, key: str = "user_id", within: str = "30 minutes"
-) -> DataFrame:
-    """Watermarked stream-stream inner join with an event-time range bound —
-    the stateful two-stream operator (both sides buffer in the state store;
+def stream_stream_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Watermarked stream-stream inner join on user_id with an event-time
+    range bound (the right event within 30 minutes after the left) — the
+    stateful two-stream operator (both sides buffer in the state store;
     the time-range condition + watermarks bound how long). Inner-join
     matches emit as soon as both sides arrive; state for rows older than
     watermark + range is evicted. At 100 TB/day stream rates this bound is
     what keeps the join's state finite."""
     l = left.select(
-        F.col(key), F.col("ts").alias("l_ts"), F.col("event_type").alias("l_type")
+        F.col("user_id"), F.col("ts").alias("l_ts"), F.col("event_type").alias("l_type")
     )
     r = right.select(
-        F.col(key).alias("r_key"),
+        F.col("user_id").alias("r_key"),
         F.col("ts").alias("r_ts"),
         F.col("event_type").alias("r_type"),
     )
     return l.join(
         r,
-        (F.col(key) == F.col("r_key"))
+        (F.col("user_id") == F.col("r_key"))
         & (F.col("r_ts") > F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}")),
-    ).select(key, "l_ts", "l_type", "r_ts", "r_type")
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
+    ).select("user_id", "l_ts", "l_type", "r_ts", "r_type")
 
 
 def run_stream_once(
@@ -605,8 +605,6 @@ def stream_incremental_rollup(
     src_dir: str,
     out_path: str,
     checkpoint: str,
-    duration: str = "1 hour",
-    watermark: str = "1 hour",
 ) -> None:
     """Incrementally persisted streaming rollup via ``foreachBatch`` — the
     production shape of :func:`ev_rollup_merge`: each micro-batch's updated
@@ -623,7 +621,7 @@ def stream_incremental_rollup(
     continuous-ingest pattern: bounded state (watermark), bounded writes
     (touched partitions only), exactly-once via checkpoint + idempotent
     sink."""
-    agg = stream_tumbling_counts(stream_events(spark, src_dir, watermark), duration)
+    agg = stream_tumbling_counts(stream_events(spark, src_dir))
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -803,14 +801,9 @@ def mg_shard_col(shards: int = MG_SHARDS) -> F.Column:
     ).cast("long").alias("shard")
 
 
-def stream_heavy_hitters(
-    events: DataFrame,
-    item_expr: str = MG_ITEM_EXPR,
-    k: int = MG_K,
-    shards: int = MG_SHARDS,
-) -> DataFrame:
+def stream_heavy_hitters(events: DataFrame) -> DataFrame:
     """Heavy hitters over an unbounded stream in BOUNDED state: each of
-    ``shards`` hash shards maintains a Misra-Gries summary of ``k`` counters
+    MG_SHARDS hash shards maintains a Misra-Gries summary of MG_K counters
     via applyInPandasWithState, persisted across micro-batches. An item maps
     to exactly ONE shard, so draining the shards is a union (no cross-shard
     merge error), and the classic deterministic guarantee holds per item:
@@ -821,22 +814,20 @@ def stream_heavy_hitters(
     present — no randomization, no sketch collisions (contrast
     approx_distinct_sketch's HLL, which trades that guarantee for fixed
     size). State is k (item, count) pairs + one total per shard — bounded by
-    k*shards regardless of stream length or item cardinality; this is how a
+    MG_K*MG_SHARDS regardless of stream length or item cardinality; this is how a
     100 TB/day stream tracks its top keys without a corpus-sized groupBy.
 
     Reference analogue: none (the reference has no streaming); extends the
     engine's streaming tier (SURVEY §2.9 extension)."""
-    import functools
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     keyed = events.filter(
         F.col("event_type").isNotNull() & F.col("value").isNotNull()
-    ).select(F.expr(item_expr).alias("item")).withColumn(
-        "shard", mg_shard_col(shards)
+    ).select(F.expr(MG_ITEM_EXPR).alias("item")).withColumn(
+        "shard", mg_shard_col(MG_SHARDS)
     )
     return keyed.groupBy("shard").applyInPandasWithState(
-        functools.partial(_mg_update, k=k),
+        _mg_update,
         outputStructType="shard long, item string, est long, n_shard long",
         stateStructType="items array<string>, counts array<long>, n long",
         outputMode="update",

@@ -5,13 +5,14 @@ import os
 import duckdb
 import pytest
 
-from skinnerdb_spark.catalog import TABLES, table_path
-from skinnerdb_spark.session import get_spark
-
 SF_DIR = os.environ.get("SKINNER_TEST_SF_DIR", "/root/testdata/sf0.001")
 # static oracle SQL (e.g. sim_ivf_ann's persisted-index path) must target the
-# SF the tests run at — pin before the registry is populated
+# SF the tests run at — pin before skinnerdb_spark.catalog resolves it at import
 os.environ.setdefault("SKINNER_ORACLE_SF_DIR", SF_DIR)
+
+from skinnerdb_spark.catalog import TABLES, table_path  # noqa: E402
+from skinnerdb_spark.session import get_spark  # noqa: E402
+
 # the tests read sf0.001: a 4g driver heap is plenty, smaller than
 # get_spark's host-sized default (half the physical memory), and the same
 # on every host; subprocess sessions inherit the setting

@@ -454,7 +454,7 @@ def test_jsonl_roundtrip_and_quarantine(spark, sf_dir, tmp_path):
     b = {r["doc_id"]: r["text"] for r in clean.collect()}
     assert a == b
     # schema is mandatory at scale
-    with pytest.raises(ValueError, match="schema"):
+    with pytest.raises(TypeError, match="schema"):
         load_jsonl(spark, out)
     # corrupt line -> quarantined, good lines still parse
     bad = tmp_path / "bad"
@@ -1354,7 +1354,7 @@ def test_xml_roundtrip_and_quarantine(spark, sf_dir, tmp_path):
     a = {r["doc_id"]: r["n_chars"] for r in docs.collect()}
     b = {r["doc_id"]: r["n_chars"] for r in clean.collect()}
     assert a == b
-    with pytest.raises(ValueError, match="schema"):
+    with pytest.raises(TypeError, match="schema"):
         load_xml(spark, out, row_tag="doc")
     bad = tmp_path / "badxml"
     bad.mkdir()

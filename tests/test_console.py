@@ -4,7 +4,9 @@ directly, the same seam the reference's processInput exposes."""
 
 from __future__ import annotations
 
+import inspect
 import io
+import re
 
 import pytest
 
@@ -23,7 +25,12 @@ def test_sql_roundtrip(console):
 
 
 def test_help_list_quit(console):
-    assert "bench" in console.handle("help")
+    # every command Console.handle dispatches is listed by `help`, read
+    # from its `cmd == "..."` branches so a new command cannot go unlisted
+    dispatched = re.findall(r'cmd == "(\w+)"', inspect.getsource(Console.handle))
+    assert "bench" in dispatched and "ops" in dispatched
+    listed = {ln.split()[0] for ln in console.handle("help").splitlines()}
+    assert set(dispatched) <= listed, set(dispatched) - listed
     assert "lineitem" in console.handle("list")
     assert console.handle("quit") is None
     assert "region:" in console.handle("compress region")  # real rewrite + report

@@ -3,9 +3,9 @@ properties, and simhash NULL-text semantics.
 
 The cap is the 100 TB degenerate-input guard: one pathological bucket of b
 members contributes b^2 candidate pairs, so production dedup/ANN always
-bounds bucket size. These tests set a tiny cap via conf and assert the
-candidate generation is actually bounded and the dropped buckets are
-observable (no silent caps).
+bounds bucket size. These tests patch the cap constant to a tiny value and
+assert the candidate generation is actually bounded and the dropped buckets
+are observable (no silent caps).
 """
 
 from __future__ import annotations
@@ -15,8 +15,8 @@ import warnings
 import pytest
 from pyspark.sql import functions as F
 
+from skinnerdb_spark.operators import dedup
 from skinnerdb_spark.operators.dedup import (
-    LSH_MAX_BUCKET,
     cap_buckets,
     hot_bucket_report,
     lsh_candidates,
@@ -37,47 +37,28 @@ def test_cap_buckets_drops_only_over_cap(spark):
     assert sizes == {"b2": 2, "b3": 1}, "the 5-member bucket must be dropped whole"
 
 
-def test_dedup_lsh_cap_bounds_candidates_and_reports(spark, sf_dir):
+def test_dedup_lsh_cap_bounds_candidates_and_reports(spark, sf_dir, monkeypatch):
     uncapped = lsh_candidates(spark, sf_dir).count()
-    prev = spark.conf.get(LSH_MAX_BUCKET, None)
-    spark.conf.set(LSH_MAX_BUCKET, "1")
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            capped = lsh_candidates(spark, sf_dir).count()
-        assert any(LSH_MAX_BUCKET in str(x.message) for x in w), (
-            "non-default cap must warn about oracle divergence"
-        )
-        # a pair needs a shared bucket of size >= 2; cap=1 excludes them all
-        assert capped == 0 <= uncapped
-        dropped = hot_bucket_report(spark, sf_dir)
-        if uncapped > 0:
-            assert dropped.count() > 0, "dropped buckets must be observable"
-        assert dropped.filter(F.col("bucket_n") <= 1).count() == 0
-    finally:
-        if prev is None:
-            spark.conf.unset(LSH_MAX_BUCKET)
-        else:
-            spark.conf.set(LSH_MAX_BUCKET, prev)
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", 1)
+    capped = lsh_candidates(spark, sf_dir).count()
+    # a pair needs a shared bucket of size >= 2; cap=1 excludes them all
+    assert capped == 0 <= uncapped
+    dropped = hot_bucket_report(spark, sf_dir)
+    if uncapped > 0:
+        assert dropped.count() > 0, "dropped buckets must be observable"
+    assert dropped.filter(F.col("bucket_n") <= 1).count() == 0
 
 
-def test_similarity_ann_cap_bounds_candidates_and_reports(spark, sf_dir):
+def test_similarity_ann_cap_bounds_candidates_and_reports(spark, sf_dir, monkeypatch):
     uncapped = _multi_ann(spark, sf_dir, 2, 2).count()
     assert uncapped > 0
-    prev = spark.conf.get(LSH_MAX_BUCKET, None)
-    spark.conf.set(LSH_MAX_BUCKET, "1")
-    try:
-        # every (query, neighbor) pair shares a corpus bucket of size >= 2
-        # (the query itself is a corpus member here), so cap=1 empties it
-        assert _multi_ann(spark, sf_dir, 2, 2).count() == 0
-        dropped = sim_hot_bucket_report(spark, sf_dir, 2, 2)
-        assert dropped.count() > 0, "dropped buckets must be observable"
-        assert dropped.filter(F.col("bucket_n") <= 1).count() == 0
-    finally:
-        if prev is None:
-            spark.conf.unset(LSH_MAX_BUCKET)
-        else:
-            spark.conf.set(LSH_MAX_BUCKET, prev)
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", 1)
+    # every (query, neighbor) pair shares a corpus bucket of size >= 2
+    # (the query itself is a corpus member here), so cap=1 empties it
+    assert _multi_ann(spark, sf_dir, 2, 2).count() == 0
+    dropped = sim_hot_bucket_report(spark, sf_dir, 2, 2)
+    assert dropped.count() > 0, "dropped buckets must be observable"
+    assert dropped.filter(F.col("bucket_n") <= 1).count() == 0
 
 
 def test_multiprobe_top1_never_worse_than_exact_bucket(spark, sf_dir):
@@ -146,12 +127,12 @@ def test_simhash_drops_null_text(spark, tmp_path):
     assert sigs[0] == sigs[2]
 
 
-def test_contamination_eval_cap_bounds_array_and_reports(spark, sf_dir):
+def test_contamination_eval_cap_bounds_array_and_reports(spark, sf_dir, monkeypatch):
     """The eval-shingle cap is the contamination twin of the LSH hot-bucket
-    guard: a tiny cap must bound the broadcast array, warn about oracle
-    divergence, and report exactly how many shingles were dropped."""
+    guard: a tiny cap must bound the broadcast array, warn that it FIRED
+    (oracle divergence), and report exactly how many shingles were dropped."""
+    from skinnerdb_spark.operators import pipeline
     from skinnerdb_spark.operators.pipeline import (
-        CONTAM_MAX_EVAL,
         _capped_eval_set,
         contamination_check,
         contamination_eval_report,
@@ -161,46 +142,33 @@ def test_contamination_eval_cap_bounds_array_and_reports(spark, sf_dir):
     assert full["n_dropped"] == 0, "default cap must never fire on test data"
     uncapped_hits = contamination_check(spark, sf_dir).count()
 
-    prev = spark.conf.get(CONTAM_MAX_EVAL, None)
-    spark.conf.set(CONTAM_MAX_EVAL, "3")
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            ev = _capped_eval_set(spark, sf_dir).collect()[0]["ev_set"]
-        assert any(CONTAM_MAX_EVAL in str(x.message) for x in w), (
-            "non-default cap must warn about oracle divergence"
-        )
-        assert len(ev) == 3, "broadcast eval array must be bounded by the cap"
-        assert ev == sorted(ev), "truncation must be deterministic (sorted)"
-        rep = contamination_eval_report(spark, sf_dir).collect()[0]
-        assert rep["cap"] == 3
-        assert rep["n_dropped"] == rep["n_eval_shingles"] - 3 > 0
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            capped_hits = contamination_check(spark, sf_dir).count()
-        assert capped_hits <= uncapped_hits, "capping can only lose hits"
-    finally:
-        if prev is None:
-            spark.conf.unset(CONTAM_MAX_EVAL)
-        else:
-            spark.conf.set(CONTAM_MAX_EVAL, prev)
+    monkeypatch.setattr(pipeline, "CONTAM_MAX_EVAL", 3)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        ev = _capped_eval_set(spark, sf_dir).collect()[0]["ev_set"]
+    assert any("FIRED" in str(x.message) for x in w), (
+        "a fired cap must warn about oracle divergence"
+    )
+    assert len(ev) == 3, "broadcast eval array must be bounded by the cap"
+    assert ev == sorted(ev), "truncation must be deterministic (sorted)"
+    rep = contamination_eval_report(spark, sf_dir).collect()[0]
+    assert rep["cap"] == 3
+    assert rep["n_dropped"] == rep["n_eval_shingles"] - 3 > 0
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        capped_hits = contamination_check(spark, sf_dir).count()
+    assert capped_hits <= uncapped_hits, "capping can only lose hits"
 
 
-def test_simhash_pairs_respect_bucket_cap(spark, sf_dir):
+def test_simhash_pairs_respect_bucket_cap(spark, sf_dir, monkeypatch):
     """The hot-bucket cap bounds simhash-pair candidate generation exactly
     like the minhash family: a tiny cap excludes the dominant band bucket
-    and strictly shrinks the pair set; restoring the conf restores it."""
-    from skinnerdb_spark.operators.dedup import LSH_MAX_BUCKET, dedup_simhash_pairs
+    and strictly shrinks the pair set; restoring the cap restores it."""
+    from skinnerdb_spark.operators.dedup import dedup_simhash_pairs
 
     uncapped = dedup_simhash_pairs(spark, sf_dir).count()
-    prev = spark.conf.get(LSH_MAX_BUCKET, None)
-    spark.conf.set(LSH_MAX_BUCKET, "5")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "LSH_MAX_BUCKET", 5)
         capped = dedup_simhash_pairs(spark, sf_dir).count()
         assert capped < uncapped
-    finally:
-        if prev is None:
-            spark.conf.unset(LSH_MAX_BUCKET)
-        else:
-            spark.conf.set(LSH_MAX_BUCKET, prev)
     assert dedup_simhash_pairs(spark, sf_dir).count() == uncapped
