@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import warnings
 
-import pytest
 from pyspark.sql import functions as F
 
 from skinnerdb_spark.operators import dedup
