@@ -115,10 +115,11 @@ class Engine:
 
     def vacuum(self, apply: bool = False) -> list[dict]:
         """Inventory (and with ``apply=True`` delete) the engine's persisted
-        warehouse artifacts: compressed/layout table copies (re-derivable —
-        always deletable), ANN indexes (deletable only when STALE per their
-        source fingerprint), and the result cache (self-evicting — reported,
-        never vacuumed here). Returns [{path, kind, bytes, stale, removed}].
+        warehouse artifacts: compressed/layout table copies and UCT snapshot
+        files (re-derivable — always deletable), ANN indexes (deletable only
+        when STALE per their source fingerprint), and the result cache
+        (self-evicting — reported, never vacuumed here). Returns
+        [{path, kind, bytes, stale, removed}].
 
         The ops counterpart of the artifact lifecycle: fingerprints already
         prevent *serving* stale indexes; vacuum reclaims their disk.
@@ -155,6 +156,9 @@ class Engine:
                 if self.sf_dir and os.path.basename(self.sf_dir.rstrip("/")) == sf_name:
                     stale = not mod.index_is_fresh(path, self.sf_dir)
                 deletable = stale is True
+            elif name == "uct_snapshots":
+                kind = "uct-snapshots"  # `explain adaptive dot every N` rewrites them
+                deletable = True
             elif name == "result_cache":
                 kind = "result-cache (self-evicting)"
                 deletable = False

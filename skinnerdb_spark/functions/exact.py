@@ -61,3 +61,43 @@ def DS(expr: str) -> str:
 def DAVG(expr: str) -> str:
     """Oracle-SQL (DuckDB) counterpart of :func:`davg`."""
     return f"(CAST(SUM(CAST({expr} AS DECIMAL(30,6))) AS DOUBLE) / COUNT({expr}))"
+
+
+# Exact dot products of float vectors. Each element product is taken in
+# double (exact for float x float) and rounded once into DECIMAL(28,12); the
+# fold accumulates at DECIMAL(30,12): (30,12)+(28,12) types as (31,12) —
+# exact, below Spark's precision-38 cap (at 38 Spark would round away the
+# last scale digit) — and re-casts to (30,12) losslessly. The sum is the
+# same exact decimal in both engines whatever the fold order. ``to`` wraps
+# that sum: TO_DOUBLE for a score, TO_DEC to keep it exact for comparisons
+# and further sums, TO_DEC6 for a per-row value summed across rows (an
+# explicit ROUND on both sides: DuckDB's decimal downscale cast truncates).
+TO_DOUBLE = "CAST({} AS DOUBLE)"
+TO_DEC = "CAST({} AS DECIMAL(30,12))"
+TO_DEC6 = "CAST(ROUND({}, 6) AS DECIMAL(22,6))"
+
+
+def ddot(a: str, b: str, to: str) -> str:
+    """Spark SQL: the exact dot of two array<float> expressions, wrapped by
+    ``to``. Plain SQL text, so it also works inside a lambda."""
+    return to.format(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        f"CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(28,12))), "
+        f"CAST(0 AS DECIMAL(30,12)), (acc, v) -> CAST(acc + v AS DECIMAL(30,12)))"
+    )
+
+
+def DDOT(a: str, b: str, n: int, to: str) -> str:
+    """Oracle-SQL (DuckDB) counterpart of :func:`ddot`: ``a`` and ``b`` are
+    element expressions of the lateral 1-based index ``i`` in 1..n."""
+    total = f"SUM(CAST(CAST({a} AS DOUBLE) * CAST({b} AS DOUBLE) AS DECIMAL(28,12)))"
+    return f"(SELECT {to.format(total)} FROM generate_series(1, {n}) AS g(i))"
+
+
+def dot_exact(a: str, b: str) -> Column:
+    """Exact dot product of two array<float> columns, as a double."""
+    return F.expr(ddot(a, b, TO_DOUBLE))
+
+
+def norm_exact(a: str) -> Column:
+    return F.sqrt(dot_exact(a, a))

@@ -601,6 +601,45 @@ BM25_SCORED_CTES = f"""d AS (SELECT doc_id, text FROM documents
         CROSS JOIN corpus c)"""
 
 
+def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(term, doc_id, tf, dl, score) per (query term, doc): the BM25 scorer
+    over the shared_doc_lengths and shared_bm25_tf family frames, the Spark
+    mirror of BM25_SCORED_CTES. The score is one exact-integer ratio,
+    computed in 128-bit integer space (DECIMAL(38,0) here, HUGEINT in the
+    oracle), each side converted once to double, so the IEEE values match
+    bitwise (see docs_bm25_topk)."""
+    dl = shared_doc_lengths(spark, sf_dir)
+    corpus = dl.agg(
+        F.sum("dl").cast("bigint").alias("sd"), F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    tf = shared_bm25_tf(spark, sf_dir)
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+
+    def dec(c):  # 128-bit-wide exact integer lane
+        return c.cast("decimal(38,0)")
+
+    num = dec(2 * F.col("n") - 2 * F.col("df") + 1) * 22 * dec(F.col("tf")) * dec(F.col("sd"))
+    den = dec(2 * F.col("df") + 1) * (
+        10 * dec(F.col("tf")) * dec(F.col("sd"))
+        + 3 * dec(F.col("sd"))
+        + 9 * dec(F.col("dl")) * dec(F.col("n"))
+    )
+    return (
+        # no broadcast hint on tf: AQE broadcasts iff the runtime query-hit
+        # size allows, else co-partitions on doc_id (see docs_bm25_topk)
+        dl.join(tf, "doc_id")
+        .join(F.broadcast(dfreq), "term")
+        .join(F.broadcast(corpus))
+        .select(
+            "term",
+            "doc_id",
+            "tf",
+            "dl",
+            (num.cast("double") / den.cast("double")).alias("score"),
+        )
+    )
+
+
 @register(
     "docs_bm25_topk",
     f"""
@@ -641,35 +680,7 @@ def docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver on a high-df query term at corpus scale (forced-fallback
     equivalence asserted in tests/test_scale.py). Final top-k is a
     per-term window over |q| * matched-docs rows."""
-    dl = shared_doc_lengths(spark, sf_dir)
-    corpus = dl.agg(
-        F.sum("dl").cast("bigint").alias("sd"), F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    tf = shared_bm25_tf(spark, sf_dir)
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    def dec(c):  # 128-bit-wide exact integer lane (see docstring)
-        return c.cast("decimal(38,0)")
-
-    num = dec(2 * F.col("n") - 2 * F.col("df") + 1) * 22 * dec(F.col("tf")) * dec(F.col("sd"))
-    den = dec(2 * F.col("df") + 1) * (
-        10 * dec(F.col("tf")) * dec(F.col("sd"))
-        + 3 * dec(F.col("sd"))
-        + 9 * dec(F.col("dl")) * dec(F.col("n"))
-    )
-    scored = (
-        # no broadcast hint on tf: AQE broadcasts iff the runtime query-hit
-        # size allows, else co-partitions on doc_id (see docstring)
-        dl.join(tf, "doc_id")
-        .join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(corpus))
-        .select(
-            "term",
-            "doc_id",
-            "tf",
-            "dl",
-            (num.cast("double") / den.cast("double")).alias("score"),
-        )
-    )
+    scored = bm25_scored(spark, sf_dir)
     wr = Window.partitionBy("term").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(wr).cast("bigint"))

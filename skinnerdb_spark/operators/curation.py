@@ -27,7 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from skinnerdb_spark.functions.exact import DDOT, TO_DEC6, ddot
 from skinnerdb_spark.operators.similarity import _BRUTE_ORACLE, sim_bruteforce_topk
+from skinnerdb_spark.operators.textprims import MD5_INT, md5_int
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
 
@@ -704,26 +706,12 @@ def sample_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 from skinnerdb_spark.operators.similarity import DIM  # noqa: E402
 
-#: per-row squared L2 norm as DECIMAL(22,6): the zip_with products are exact
-#: at (28,12) (float*float fits), the fold accumulator stays (30,12)
-#: (below Spark's precision-38 rounding cliff), and the scale-6 recast keeps
-#: the CROSS-ROW sum's scaled integer far under 2^53 so the final
-#: decimal->double cast is bit-identical in both engines. The re-scale is an
-#: EXPLICIT ROUND(x, 6) on both sides: DuckDB's decimal->decimal downscale
-#: cast TRUNCATES where Spark's rounds (found by the hash gate); ROUND is
-#: half-away-from-zero in both engines.
-_NORM_SQ_DEC = (
-    "CAST(ROUND(aggregate(zip_with(embedding, embedding, (x, y) -> "
-    "CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(28,12))), "
-    "CAST(0 AS DECIMAL(30,12)), (acc, v) -> CAST(acc + v AS DECIMAL(30,12)))"
-    ", 6) AS DECIMAL(22,6))"
-)
+#: per-row squared L2 norm as DECIMAL(22,6) (TO_DEC6): the scale-6 recast
+#: keeps the CROSS-ROW sum's scaled integer far under 2^53 so the final
+#: decimal->double cast is bit-identical in both engines.
+_NORM_SQ_DEC = ddot("embedding", "embedding", TO_DEC6)
 
-_ORACLE_NORM_SQ = (
-    "(SELECT CAST(ROUND(SUM(CAST(CAST(embedding[i] AS DOUBLE) * "
-    "CAST(embedding[i] AS DOUBLE) AS DECIMAL(28,12))), 6) AS DECIMAL(22,6)) "
-    f"FROM generate_series(1, {DIM}) AS g(i))"
-)
+_ORACLE_NORM_SQ = DDOT("embedding[i]", "embedding[i]", DIM, TO_DEC6)
 
 
 @register(
@@ -925,8 +913,7 @@ N_SHARDS = 8  # training shards in the striping manifest
     f"""
     WITH d AS (
         SELECT doc_id,
-               CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT
-                    % {N_SHARDS} AS BIGINT) AS shard,
+               CAST({MD5_INT("CAST(doc_id AS VARCHAR)", 6)} % {N_SHARDS} AS BIGINT) AS shard,
                CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
                     AS BIGINT) AS n_tokens
         FROM documents WHERE text IS NOT NULL AND LENGTH(text) > 0),
@@ -970,14 +957,7 @@ def sample_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull() & (F.length("text") > 0))
         .select(
             "doc_id",
-            (
-                F.conv(
-                    F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 6),
-                    16,
-                    10,
-                ).cast("bigint")
-                % N_SHARDS
-            ).alias("shard"),
+            (F.expr(md5_int("CAST(doc_id AS STRING)", 6)) % N_SHARDS).alias("shard"),
             F.expr("size(filter(split(text, ' '), x -> x != ''))")
             .cast("bigint")
             .alias("n_tokens"),

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from skinnerdb_spark.operators.dedup import dedup_exact
 from skinnerdb_spark.operators.segments import SEGMENT_CTES, dedup_segments
-from skinnerdb_spark.operators.text import text_quality
+from skinnerdb_spark.operators.text import QUALITY_SQL, text_quality
 from skinnerdb_spark.registry import register
 
 
@@ -40,18 +40,7 @@ from skinnerdb_spark.registry import register
              CASE WHEN doc_id = MIN(doc_id) OVER (PARTITION BY md5(text))
                   THEN 0 ELSE 1 END AS is_dup
       FROM documents),
-    q AS (
-      SELECT doc_id,
-             (CASE WHEN n_tokens BETWEEN 10 AND 500 THEN 0.5 ELSE 0.0 END
-            + CASE WHEN avg_len BETWEEN 3.0 AND 9.0 THEN 0.3 ELSE 0.0 END
-            + CASE WHEN the_cnt > 0 THEN 0.2 ELSE 0.0 END) AS quality_score
-      FROM (
-          SELECT doc_id,
-                 LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS n_tokens,
-                 CAST(LENGTH(REPLACE(text, ' ', '')) AS DOUBLE)
-                   / (LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1) AS avg_len,
-                 LENGTH(text) - LENGTH(REPLACE(text, 'the', '')) AS the_cnt
-          FROM documents WHERE LENGTH(text) > 0)),
+    q AS ({QUALITY_SQL}),
     {SEGMENT_CTES},
     seg_frac AS (
       SELECT s.doc_id,

@@ -25,6 +25,7 @@ from skinnerdb_spark.operators.textprims import (
     ORACLE_SHINGLES_CTE,
     fan_out,
     hex_high_sql,
+    hex_int,
     shingles_expr,
 )
 from skinnerdb_spark.queries.util import read_table
@@ -363,8 +364,10 @@ def dedup_pipeline_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
-_SIMHASH_ORACLE = f"""
-    WITH wt AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents),
+#: the oracle's 32-bit SimHash signatures, the DuckDB mirror of
+#: :func:`_simhash_sigs`: per-word md5 bits (wt, bits) and each document's
+#: signature string (sig). CTE text to follow a WITH.
+_SIMHASH_SIG_CTES = f"""wt AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents),
     bits AS (SELECT doc_id, i,
                     CASE WHEN SUM(CASE WHEN {hex_high_sql("SUBSTR(md5(w), i, 1)")}
                                        THEN 1 ELSE -1 END) > 0
@@ -372,7 +375,10 @@ _SIMHASH_ORACLE = f"""
              FROM wt, generate_series(1, {SIMHASH_BITS}) AS g(i)
              GROUP BY doc_id, i),
     sig AS (SELECT doc_id, string_agg(bit, '' ORDER BY i) AS simhash
-            FROM bits GROUP BY doc_id)
+            FROM bits GROUP BY doc_id)"""
+
+_SIMHASH_ORACLE = f"""
+    WITH {_SIMHASH_SIG_CTES}
     SELECT doc_id, simhash, SUBSTR(simhash, 1, 16) AS bucket16
     FROM sig
 """
@@ -410,8 +416,7 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 32-bit int; char j's nibble-high-bit sits at bit 4*(8-j)+3
     masks = [
         F.expr(
-            f"transform(hs, h -> CAST(conv(substring(h, {(c - 1) * 8 + 1}, 8), 16, 10)"
-            " AS BIGINT))"
+            f"transform(hs, h -> {hex_int('h', (c - 1) * 8 + 1, 8)})"
         ).alias(f"ms{c}")
         for c in range(1, 5)
     ]
@@ -826,15 +831,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIMHASH_BAND_LEN = SIMHASH_BITS // 4  # 4 bands; Hamming<=3 pairs share >=1
 
 _SIMHASH_PAIRS_ORACLE = f"""
-    WITH wt AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents),
-    bits AS (SELECT doc_id, i,
-                    CASE WHEN SUM(CASE WHEN {hex_high_sql("SUBSTR(md5(w), i, 1)")}
-                                       THEN 1 ELSE -1 END) > 0
-                         THEN '1' ELSE '0' END AS bit
-             FROM wt, generate_series(1, {SIMHASH_BITS}) AS g(i)
-             GROUP BY doc_id, i),
-    sig AS (SELECT doc_id, string_agg(bit, '' ORDER BY i) AS simhash
-            FROM bits GROUP BY doc_id),
+    WITH {_SIMHASH_SIG_CTES},
     bands AS (SELECT doc_id, simhash, b.b AS band,
                      SUBSTR(simhash, (b.b - 1) * {SIMHASH_BAND_LEN} + 1,
                             {SIMHASH_BAND_LEN}) AS band_key

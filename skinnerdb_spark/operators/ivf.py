@@ -19,7 +19,7 @@ a REAL DuckDB oracle that re-derives the entire search from the persisted
 centroids parquet (reference analogue: index-backed probe correctness,
 src/indexing/IntIndex.java:95-134). Determinism of training is pinned by
 fixed sample, fixed init, and fixed iteration count; cross-engine exactness
-of every dot product uses the decimal-fold machinery (similarity.py).
+of every dot product uses the exact decimal dot (functions/exact.py).
 """
 
 from __future__ import annotations
@@ -33,11 +33,11 @@ from pyspark.sql import functions as F
 
 from skinnerdb_spark import artifacts
 from skinnerdb_spark.catalog import ORACLE_SF_DIR
+from skinnerdb_spark.functions.exact import TO_DOUBLE, ddot
 from skinnerdb_spark.operators.similarity import (
     N_QUERIES,
     RESCORE_SQL,
     _oracle_dot,
-    decimal_fold,
     exact_topk_on_candidates,
 )
 from skinnerdb_spark.queries.util import read_table
@@ -102,12 +102,8 @@ def _centroid_array_sql(centroids: np.ndarray) -> str:
 
 def _cell_dot(emb: str) -> str:
     """Decimal-exact dot of row column ``emb`` with lambda-bound centroid
-    ``c`` (same product/fold shape as similarity._oracle_dot, so Spark and
-    DuckDB agree bitwise)."""
-    return decimal_fold(
-        f"zip_with({emb}, c.centroid, (x, y) -> "
-        f"CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(28,12)))"
-    )
+    ``c`` (the oracle's is similarity._oracle_dot)."""
+    return ddot(emb, "c.centroid", TO_DOUBLE)
 
 
 def assign_cells(e: DataFrame, centroids: np.ndarray) -> DataFrame:

@@ -395,6 +395,20 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_stats(media)
 
 
+def _probe_docs(ids: DataFrame, schema: T.StructType, probe) -> DataFrame:
+    """One ``schema`` row per ``media_id`` of ``ids``: ``probe(media_id)``
+    builds the document's media bytes, decodes them back and returns the row
+    as a dict — the Arrow-batched loop of the codec round-trip entries.
+    ``probe`` runs worker-side, so it imports its codec itself."""
+    cols = schema.fieldNames()
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame([probe(int(mid)) for mid in pdf["media_id"]], columns=cols)
+
+    return ids.mapInPandas(gen, schema=schema)
+
+
 # ---------------------------------------------------------------------------
 # REAL JPEG path (r7): the pure-stdlib baseline JPEG codec (operators/
 # jpeg.py) exercised end-to-end through Spark — encode a smooth fixture
@@ -452,29 +466,22 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the pure-Python DCT is a test-fixture path — a production 100 TB
     decode pass swaps in a native codec behind the same batch signature."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(mid: int) -> dict:
         from skinnerdb_spark.operators.jpeg import decode_jpeg, encode_jpeg
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h, px = _jpeg_test_pixels(mid)
-                data = encode_jpeg(w, h, px, channels=3, quality=90)
-                dw, dh, dc, out = decode_jpeg(data)
-                ok = (
-                    (dw, dh, dc) == (w, h, 3)
-                    and max(abs(a - b) for a, b in zip(px, out)) <= JPEG_TOL
-                )
-                rows.append({"media_id": mid, "width": dw, "height": dh,
-                             "channels": dc, "within_tol": ok})
-            yield pd.DataFrame(rows, columns=[f.name for f in _JPEG_SCHEMA.fields])
+        w, h, px = _jpeg_test_pixels(mid)
+        dw, dh, dc, out = decode_jpeg(encode_jpeg(w, h, px, channels=3, quality=90))
+        ok = (
+            (dw, dh, dc) == (w, h, 3)
+            and max(abs(a - b) for a, b in zip(px, out)) <= JPEG_TOL
+        )
+        return {"media_id": mid, "width": dw, "height": dh, "channels": dc, "within_tol": ok}
 
     d = read_table(spark, sf_dir, "documents")
     ids = d.select(F.col("doc_id").alias("media_id")).filter(
         F.col("media_id") < JPEG_DOCS
     )
-    return ids.repartition(8).mapInPandas(gen, schema=_JPEG_SCHEMA)
+    return _probe_docs(ids.repartition(8), _JPEG_SCHEMA, probe)
 
 
 # ---------------------------------------------------------------------------
@@ -547,41 +554,28 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode/feature pass of an audio curation pipeline at 100 TB; a native
     codec swaps in behind the same batch signature."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(mid: int) -> dict:
         from skinnerdb_spark.operators.audio import decode_wav, encode_wav
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                n, sr, ch = _audio_params(mid)
-                interleaved = [
-                    _audio_sample(mid, c, i) for i in range(n) for c in range(ch)
-                ]
-                sr_d, ch_d, out = decode_wav(encode_wav(sr, ch, interleaved))
-                nf = len(out) // ch_d
-                ch0 = out[0::ch_d]
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": sr_d,
-                        "channels": ch_d,
-                        "n_frames": nf,
-                        "duration_us": nf * 1_000_000 // sr_d,
-                        "sum_ch0": sum(ch0),
-                        "peak_abs": max(abs(v) for v in out),
-                        "zero_crossings": sum(
-                            1
-                            for a, b in zip(ch0, ch0[1:])
-                            if (a < 0) != (b < 0)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _AUDIO_SCHEMA.fields])
+        n, sr, ch = _audio_params(mid)
+        interleaved = [_audio_sample(mid, c, i) for i in range(n) for c in range(ch)]
+        sr_d, ch_d, out = decode_wav(encode_wav(sr, ch, interleaved))
+        nf = len(out) // ch_d
+        ch0 = out[0::ch_d]
+        return {
+            "media_id": mid,
+            "sample_rate": sr_d,
+            "channels": ch_d,
+            "n_frames": nf,
+            "duration_us": nf * 1_000_000 // sr_d,
+            "sum_ch0": sum(ch0),
+            "peak_abs": max(abs(v) for v in out),
+            "zero_crossings": sum(1 for a, b in zip(ch0, ch0[1:]) if (a < 0) != (b < 0)),
+        }
 
     d = read_table(spark, sf_dir, "documents")
     ids = d.select(F.col("doc_id").alias("media_id"))
-    return ids.repartition(16).mapInPandas(gen, schema=_AUDIO_SCHEMA)
+    return _probe_docs(ids.repartition(16), _AUDIO_SCHEMA, probe)
 
 
 # ---------------------------------------------------------------------------
@@ -651,51 +645,43 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     test-fixture path — a production 100 TB pass swaps a native
     demuxer/decoder behind the same batch signature."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(mid: int) -> dict:
         from skinnerdb_spark.operators.avi import decode_avi, encode_avi
         from skinnerdb_spark.operators.jpeg import decode_jpeg, encode_jpeg
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h, fps, n = _video_params(mid)
-                avi = encode_avi(
-                    w, h, fps,
-                    [
-                        encode_jpeg(w, h, _video_frame_pixels(mid, f),
-                                    channels=3, quality=90)
-                        for f in range(n)
-                    ],
-                )
-                dw, dh, dfps, dn, frames = decode_avi(avi)
-                sampled = list(range(0, dn, 2))
-                ok = (dw, dh, dfps, dn) == (w, h, fps, n)
-                for f in sampled:
-                    fw, fh, fc, px = decode_jpeg(frames[f])
-                    ref = _video_frame_pixels(mid, f)
-                    ok = ok and (fw, fh, fc) == (w, h, 3) and max(
-                        abs(a - b) for a, b in zip(px, ref)
-                    ) <= VIDEO_TOL
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "fps": dfps,
-                        "n_frames": dn,
-                        "sampled_count": len(sampled),
-                        "duration_us": dn * (1_000_000 // dfps),
-                        "within_tol": ok,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _VIDEO_SCHEMA.fields])
+        w, h, fps, n = _video_params(mid)
+        avi = encode_avi(
+            w, h, fps,
+            [
+                encode_jpeg(w, h, _video_frame_pixels(mid, f), channels=3, quality=90)
+                for f in range(n)
+            ],
+        )
+        dw, dh, dfps, dn, frames = decode_avi(avi)
+        sampled = list(range(0, dn, 2))
+        ok = (dw, dh, dfps, dn) == (w, h, fps, n)
+        for f in sampled:
+            fw, fh, fc, px = decode_jpeg(frames[f])
+            ref = _video_frame_pixels(mid, f)
+            ok = ok and (fw, fh, fc) == (w, h, 3) and max(
+                abs(a - b) for a, b in zip(px, ref)
+            ) <= VIDEO_TOL
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "fps": dfps,
+            "n_frames": dn,
+            "sampled_count": len(sampled),
+            "duration_us": dn * (1_000_000 // dfps),
+            "within_tol": ok,
+        }
 
     d = read_table(spark, sf_dir, "documents")
     ids = d.select(F.col("doc_id").alias("media_id")).filter(
         F.col("media_id") < VIDEO_DOCS
     )
-    return ids.repartition(16).mapInPandas(gen, schema=_VIDEO_SCHEMA)
+    return _probe_docs(ids.repartition(16), _VIDEO_SCHEMA, probe)
 
 
 # ---------------------------------------------------------------------------
@@ -781,35 +767,27 @@ def multimodal_webp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a test-fixture path — a production decode pass swaps in a native
     codec behind the same batch signature."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(mid: int) -> dict:
         from skinnerdb_spark.operators.webp import decode_webp, encode_webp
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h, px = _webp_test_pixels(mid)
-                data = encode_webp(w, h, px, channels=3)
-                dw, dh, dc, out = decode_webp(data)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "channels": dc,
-                        "sum_r": sum(out[0::3]),
-                        "sum_g": sum(out[1::3]),
-                        "sum_b": sum(out[2::3]),
-                        "lossless": out == px and (dw, dh, dc) == (w, h, 3),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _WEBP_SCHEMA.fields])
+        w, h, px = _webp_test_pixels(mid)
+        dw, dh, dc, out = decode_webp(encode_webp(w, h, px, channels=3))
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "channels": dc,
+            "sum_r": sum(out[0::3]),
+            "sum_g": sum(out[1::3]),
+            "sum_b": sum(out[2::3]),
+            "lossless": out == px and (dw, dh, dc) == (w, h, 3),
+        }
 
     d = read_table(spark, sf_dir, "documents")
     ids = d.select(F.col("doc_id").alias("media_id")).filter(
         F.col("media_id") < WEBP_DOCS
     )
-    return ids.repartition(8).mapInPandas(gen, schema=_WEBP_SCHEMA).orderBy("media_id")
+    return _probe_docs(ids.repartition(8), _WEBP_SCHEMA, probe).orderBy("media_id")
 
 
 # ---------------------------------------------------------------------------
@@ -888,35 +866,27 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a test-fixture path — a production decode pass swaps in a native codec
     behind the same batch signature."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(mid: int) -> dict:
         from skinnerdb_spark.operators.gif import decode_gif, encode_gif
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h, px = _gif_test_pixels(mid)
-                data = encode_gif(w, h, px)
-                dw, dh, dc, out = decode_gif(data)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "channels": dc,
-                        "sum_r": sum(out[0::3]),
-                        "sum_g": sum(out[1::3]),
-                        "sum_b": sum(out[2::3]),
-                        "lossless": out == px and (dw, dh, dc) == (w, h, 3),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _GIF_SCHEMA.fields])
+        w, h, px = _gif_test_pixels(mid)
+        dw, dh, dc, out = decode_gif(encode_gif(w, h, px))
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "channels": dc,
+            "sum_r": sum(out[0::3]),
+            "sum_g": sum(out[1::3]),
+            "sum_b": sum(out[2::3]),
+            "lossless": out == px and (dw, dh, dc) == (w, h, 3),
+        }
 
     d = read_table(spark, sf_dir, "documents")
     ids = d.select(F.col("doc_id").alias("media_id")).filter(
         F.col("media_id") < GIF_DOCS
     )
-    return ids.repartition(8).mapInPandas(gen, schema=_GIF_SCHEMA).orderBy("media_id")
+    return _probe_docs(ids.repartition(8), _GIF_SCHEMA, probe).orderBy("media_id")
 
 
 # ---------------------------------------------------------------------------
@@ -958,6 +928,15 @@ _TIFF_ORACLE = f"""
 """
 
 
+_TIFF_SCHEMA = T.StructType(
+    [
+        T.StructField(c, T.LongType())
+        for c in ("media_id", "width", "height", "channels", "sum_r", "sum_g", "sum_b",
+                  "px_last_row0_b")
+    ]
+)
+
+
 def _tiff_test_pixels(mid: int) -> tuple[int, int, bytes]:
     """Deterministic fixture with a flat-run region (x < 3 red channel and
     the y = 0 blue row) so PackBits actually emits repeat packets, not just
@@ -988,40 +967,23 @@ def multimodal_tiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     test-fixture path — production swaps a native codec behind the same
     batch signature."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(mid: int) -> dict:
         from skinnerdb_spark.operators.codecs import decode_image
         from skinnerdb_spark.operators.tiff import encode_tiff
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h, px = _tiff_test_pixels(mid)
-                data = encode_tiff(w, h, px, rows_per_strip=2, packbits=True)
-                dw, dh, dc, out = decode_image(data)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "channels": dc,
-                        "sum_r": sum(out[0::3]),
-                        "sum_g": sum(out[1::3]),
-                        "sum_b": sum(out[2::3]),
-                        "px_last_row0_b": out[2],
-                    }
-                )
-            yield pd.DataFrame(rows)
+        w, h, px = _tiff_test_pixels(mid)
+        dw, dh, dc, out = decode_image(encode_tiff(w, h, px, rows_per_strip=2, packbits=True))
+        return {
+            "media_id": mid,
+            "width": dw,
+            "height": dh,
+            "channels": dc,
+            "sum_r": sum(out[0::3]),
+            "sum_g": sum(out[1::3]),
+            "sum_b": sum(out[2::3]),
+            "px_last_row0_b": out[2],
+        }
 
     d = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < TIFF_DOCS)
-    return (
-        d.select(F.col("doc_id").alias("media_id"))
-        .mapInPandas(
-            gen,
-            schema=(
-                "media_id long, width long, height long, channels long, "
-                "sum_r long, sum_g long, sum_b long, px_last_row0_b long"
-            ),
-        )
-        .orderBy("media_id")
-    )
+    ids = d.select(F.col("doc_id").alias("media_id"))
+    return _probe_docs(ids, _TIFF_SCHEMA, probe).orderBy("media_id")

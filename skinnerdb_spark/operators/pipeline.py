@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from skinnerdb_spark.operators.dedup import _SHINGLE_SET_CTES, shared_shingle_sets
-from skinnerdb_spark.operators.textprims import fan_out
+from skinnerdb_spark.operators.textprims import MD5_INT, fan_out, md5_int
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
 
@@ -84,8 +84,7 @@ def _stratum_sql(len_expr: str) -> str:
     WITH s AS (
         SELECT doc_id,
                {_stratum_sql('LENGTH(text)')} AS stratum,
-               CAST(('0x' || SUBSTR(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
-                    AS DOUBLE) / 4294967296.0 AS u
+               CAST({MD5_INT("CAST(doc_id AS VARCHAR)", 8)} AS DOUBLE) / 4294967296.0 AS u
         FROM documents)
     SELECT stratum, COUNT(*) AS n_sampled, MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
     FROM s
@@ -103,11 +102,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout, any rerun — the property RNG-based df.sample cannot give a data
     pipeline. One map-side filter + one groupBy."""
     d = read_table(spark, sf_dir, "documents")
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-        .cast("double")
-        / F.lit(4294967296.0)
-    )
+    u = F.expr(md5_int("CAST(doc_id AS STRING)", 8)).cast("double") / F.lit(4294967296.0)
     rate = F.when(F.col("stratum") == "short", _STRATA_RATES["short"]).when(
         F.col("stratum") == "medium", _STRATA_RATES["medium"]
     ).otherwise(_STRATA_RATES["long"])

@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 
 from skinnerdb_spark import artifacts
 from skinnerdb_spark.catalog import ORACLE_SF_DIR
+from skinnerdb_spark.functions.exact import DDOT, TO_DEC, ddot
 from skinnerdb_spark.operators import ivf as _ivf
 from skinnerdb_spark.operators.similarity import (
     DIM,
@@ -98,48 +99,27 @@ def train_codebooks(train: np.ndarray) -> pd.DataFrame:
 
 
 # --- exact-decimal subspace dots, Spark + DuckDB mirrors -------------------
-# Same product-cast/fold shape as similarity.dot_exact, but the result stays
-# DECIMAL so argmin comparisons and the 4-term ADC sum are EXACT (a final
-# double would reintroduce order-dependent rounding in the ADC group-sum).
-
-
-def _dec_fold(elements: str) -> str:
-    return (
-        f"CAST(aggregate({elements}, CAST(0 AS DECIMAL(30,12)), "
-        f"(acc, v) -> CAST(acc + v AS DECIMAL(30,12))) AS DECIMAL(30,12))"
-    )
+# The result stays DECIMAL (TO_DEC) so argmin comparisons and the 4-term ADC
+# sum are EXACT (a double would reintroduce order-dependent rounding in the
+# ADC group-sum).
 
 
 def _sub_dot_spark(emb: str) -> str:
-    """Decimal dot of ``emb``'s sub-th 16-dim slice with row column
-    ``centroid`` (codebook rows carry ``sub``/``centroid``)."""
-    return _dec_fold(
-        f"zip_with(slice({emb}, CAST(sub * {SUBDIM} + 1 AS INT), {SUBDIM}), centroid, "
-        f"(x, y) -> CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(28,12)))"
-    )
+    """Decimal dot of ``emb``'s sub-th slice with row column ``centroid``
+    (codebook rows carry ``sub``/``centroid``)."""
+    return ddot(f"slice({emb}, CAST(sub * {SUBDIM} + 1 AS INT), {SUBDIM})", "centroid", TO_DEC)
 
 
-_C2_SPARK = _dec_fold(
-    "zip_with(centroid, centroid, "
-    "(x, y) -> CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(28,12)))"
-)
+_C2_SPARK = ddot("centroid", "centroid", TO_DEC)
 
 
 def _sub_dot_sql(emb: str, cb: str) -> str:
     """DuckDB mirror: dot of ``emb``'s {cb}.sub-th slice with {cb}.centroid."""
-    return (
-        f"(SELECT CAST(SUM(CAST(CAST({emb}[{cb}.sub * {SUBDIM} + i] AS DOUBLE)"
-        f" * CAST({cb}.centroid[i] AS DOUBLE) AS DECIMAL(28,12)))"
-        f" AS DECIMAL(30,12)) FROM generate_series(1, {SUBDIM}) AS g(i))"
-    )
+    return DDOT(f"{emb}[{cb}.sub * {SUBDIM} + i]", f"{cb}.centroid[i]", SUBDIM, TO_DEC)
 
 
 def _c2_sql(cb: str) -> str:
-    return (
-        f"(SELECT CAST(SUM(CAST(CAST({cb}.centroid[i] AS DOUBLE)"
-        f" * CAST({cb}.centroid[i] AS DOUBLE) AS DECIMAL(28,12)))"
-        f" AS DECIMAL(30,12)) FROM generate_series(1, {SUBDIM}) AS g(i))"
-    )
+    return DDOT(f"{cb}.centroid[i]", f"{cb}.centroid[i]", SUBDIM, TO_DEC)
 
 
 def _oracle_code_ctes(index_path: str) -> str:
@@ -219,6 +199,49 @@ def ensure_pq_index(spark: SparkSession, e: DataFrame, sf_dir: str) -> str:
     return path
 
 
+def _adc_candidates(
+    spark: SparkSession, e: DataFrame, path: str, codes: DataFrame, keys: list[str]
+) -> DataFrame:
+    """(query_id, neighbor_id): each query's top-CAND vectors of ``codes``
+    (vec_id, sub, code rows) by ADC score. The LUT holds every (query,
+    subspace, codeword) dot of the index at ``path`` (|Q| x M x K rows,
+    broadcast) and joins ``codes`` on ``keys``; a vector's ADC score is the
+    exact-decimal sum of its M looked-up dots; ties break to the lowest
+    vec_id."""
+    cb = spark.read.parquet(f"{path}/codebooks")
+    queries = e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+    lut = queries.crossJoin(F.broadcast(cb)).select(
+        "query_id", "sub", "code", F.expr(_sub_dot_spark("q_emb")).alias("pdot")
+    )
+    adc = (
+        codes.join(F.broadcast(lut), keys)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("pdot").cast("decimal(38,12)").alias("adc"))
+    )
+    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
+    return (
+        adc.withColumn("crn", F.row_number().over(wc))
+        .filter(F.col("crn") <= CAND)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    )
+
+
+#: the oracle's top-CAND ADC candidates (cand) over an ``adc`` CTE of
+#: (query_id, vec_id, adc), then the exact rescore: the DuckDB mirror of
+#: :func:`_adc_candidates`' ranking and the shared rescore tail.
+_ORACLE_CAND_TAIL = f"""cand AS (
+        SELECT query_id, vec_id AS neighbor_id
+        FROM (SELECT query_id, vec_id,
+                     ROW_NUMBER() OVER (PARTITION BY query_id
+                                        ORDER BY adc DESC, vec_id) AS crn
+              FROM adc)
+        WHERE crn <= {CAND}),
+    {RESCORE_SQL}"""
+
+
 def _pq_oracle(index_path: str) -> str:
     """DuckDB SQL re-deriving the ENTIRE PQ search from the persisted
     codebooks parquet: per-subspace encoding (argmin), the per-query LUT,
@@ -233,14 +256,7 @@ def _pq_oracle(index_path: str) -> str:
         FROM codes cd JOIN lut l ON cd.sub = l.sub AND cd.code = l.code
         WHERE cd.vec_id <> l.query_id
         GROUP BY l.query_id, cd.vec_id),
-    cand AS (
-        SELECT query_id, vec_id AS neighbor_id
-        FROM (SELECT query_id, vec_id,
-                     ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY adc DESC, vec_id) AS crn
-              FROM adc)
-        WHERE crn <= {CAND}),
-    {RESCORE_SQL}
+    {_ORACLE_CAND_TAIL}
     """
 
 
@@ -267,27 +283,8 @@ def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_ivf_ann."""
     e = read_table(spark, sf_dir, "embeddings")
     path = ensure_pq_index(spark, e, sf_dir)
-    cb = spark.read.parquet(f"{path}/codebooks")
     codes = spark.read.parquet(f"{path}/codes")
-    queries = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    lut = queries.crossJoin(F.broadcast(cb)).select(
-        "query_id", "sub", "code", F.expr(_sub_dot_spark("q_emb")).alias("pdot")
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("pdot").cast("decimal(38,12)").alias("adc"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-    cand = (
-        adc.withColumn("crn", F.row_number().over(wc))
-        .filter(F.col("crn") <= CAND)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    return exact_topk_on_candidates(e, cand)
+    return exact_topk_on_candidates(e, _adc_candidates(spark, e, path, codes, ["sub", "code"]))
 
 
 # --------------------------------------------------------------------------
@@ -315,14 +312,7 @@ def _ivfpq_oracle(ivf_path: str, pq_path: str) -> str:
         JOIN lut l ON cd.sub = l.sub AND cd.code = l.code
                    AND l.query_id = ic.query_id
         GROUP BY ic.query_id, ic.vec_id),
-    cand AS (
-        SELECT query_id, vec_id AS neighbor_id
-        FROM (SELECT query_id, vec_id,
-                     ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY adc DESC, vec_id) AS crn
-              FROM adc)
-        WHERE crn <= {CAND}),
-    {RESCORE_SQL}
+    {_ORACLE_CAND_TAIL}
     """
 
 
@@ -366,24 +356,6 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
     )
-    cb = spark.read.parquet(f"{pq_path}/codebooks")
-    codes = spark.read.parquet(f"{pq_path}/codes")
-    queries = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    lut = queries.crossJoin(F.broadcast(cb)).select(
-        "query_id", "sub", "code", F.expr(_sub_dot_spark("q_emb")).alias("pdot")
-    )
-    adc = (
-        ivf_cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("pdot").cast("decimal(38,12)").alias("adc"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-    cand = (
-        adc.withColumn("crn", F.row_number().over(wc))
-        .filter(F.col("crn") <= CAND)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
+    codes = ivf_cand.join(spark.read.parquet(f"{pq_path}/codes"), "vec_id")
+    cand = _adc_candidates(spark, e, pq_path, codes, ["query_id", "sub", "code"])
     return exact_topk_on_candidates(e, cand)

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from skinnerdb_spark.operators.textprims import MD5_INT, md5_int
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
 from skinnerdb_spark.state import memo
@@ -195,7 +196,7 @@ _SQL_TARGETS = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
                       list_filter(string_split(text, ' '), x -> x <> '') AS ws
                FROM documents WHERE text IS NOT NULL AND LENGTH(text) > 0),
     inst AS (SELECT doc_id, source,
-                    ('0x' || substr(md5(t.w), 1, 6))::BIGINT % {DSIR_BUCKETS} AS b
+                    {MD5_INT("t.w", 6)} % {DSIR_BUCKETS} AS b
              FROM w, UNNEST(ws) t(w)),
     raw AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr FROM inst GROUP BY b),
     traw AS (SELECT CAST(SUM(cr) AS BIGINT) AS tr FROM raw),
@@ -247,11 +248,7 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 6), 16, 10)
-        .cast("bigint")
-        % DSIR_BUCKETS
-    )
+    bucket = F.expr(md5_int("w", 6)) % DSIR_BUCKETS
     inst = d.select(
         "doc_id", "source", F.explode(F.expr(_WORDS_EXPR)).alias("w")
     ).select("doc_id", "source", bucket.alias("b"))
@@ -568,8 +565,7 @@ CMS_WIDTH = 64
     f"""
     WITH h AS (
         SELECT user_id, d.d AS d,
-               ('0x' || substr(md5(CAST(d.d AS VARCHAR) || ':'
-                               || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT
+               {MD5_INT("CAST(d.d AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)", 6)}
                  % {CMS_WIDTH} AS b
         FROM events CROSS JOIN generate_series(0, {CMS_DEPTH - 1}) d(d)),
     counters AS (
@@ -619,21 +615,7 @@ def ev_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events")
     d_arr = F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("d")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("d").cast("string"),
-                        F.lit(":"),
-                        F.col("user_id").cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        F.expr(md5_int("concat(CAST(d AS STRING), ':', CAST(user_id AS STRING))", 6))
         % CMS_WIDTH
     )
     # ONE corpus pass; cached because `truth` feeds three consumers with

@@ -35,18 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from skinnerdb_spark.operators.analytics import (
-    BM25_SCORED_CTES,
-    BM25_TERMS,
-    shared_bm25_tf,
-    shared_doc_lengths,
-)
-from skinnerdb_spark.operators.similarity import (
-    NORMED_CTE,
-    _oracle_dot,
-    dot_exact,
-    norm_exact,
-)
+from skinnerdb_spark.functions.exact import dot_exact, norm_exact
+from skinnerdb_spark.operators.analytics import BM25_SCORED_CTES, bm25_scored
+from skinnerdb_spark.operators.similarity import NORMED_CTE, _oracle_dot
 from skinnerdb_spark.queries.util import read_table, ranked_topk
 from skinnerdb_spark.registry import register
 
@@ -100,29 +91,9 @@ def docs_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer-scaled RRF score."""
     # sparse side: the docs_bm25_topk family frames (r11 — shared, so the
     # corpus tokenize+explode runs once per session across both retrievers)
-    dl = shared_doc_lengths(spark, sf_dir)
-    corpus = dl.agg(
-        F.sum("dl").cast("bigint").alias("sd"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    )
-    tf = shared_bm25_tf(spark, sf_dir)
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-
-    def dec(c):  # 128-bit exact-integer lane (docs_bm25_topk precedent)
-        return c.cast("decimal(38,0)")
-
-    num = dec(2 * F.col("n") - 2 * F.col("df") + 1) * 22 * dec(F.col("tf")) * dec(F.col("sd"))
-    den = dec(2 * F.col("df") + 1) * (
-        10 * dec(F.col("tf")) * dec(F.col("sd"))
-        + 3 * dec(F.col("sd"))
-        + 9 * dec(F.col("dl")) * dec(F.col("n"))
-    )
-    score = num.cast("double") / den.cast("double")
     bmdoc = (
-        dl.join(tf, "doc_id")
-        .join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(corpus))
-        .select("doc_id", F.round(score * 1_000_000, 0).cast("bigint").alias("sq"))
+        bm25_scored(spark, sf_dir)
+        .select("doc_id", F.round(F.col("score") * 1_000_000, 0).cast("bigint").alias("sq"))
         .groupBy("doc_id")
         .agg(F.sum("sq").cast("bigint").alias("sq"))
     )

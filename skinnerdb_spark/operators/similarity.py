@@ -20,10 +20,11 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from skinnerdb_spark.functions.exact import DDOT, TO_DOUBLE, dot_exact, norm_exact
 from skinnerdb_spark.operators.textprims import fan_out, hex_high_sql
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
@@ -35,39 +36,9 @@ N_QUERIES = 10  # deterministic query set: vec_id < N_QUERIES
 TOP_K = 5
 
 
-def decimal_fold(elements: str) -> str:
-    """Exact decimal sum of an array<decimal(28,12)> expression.
-
-    Accumulator stays at DECIMAL(30,12): (30,12)+(28,12) types as (31,12) —
-    exact, below Spark's 38-precision cap (at 38 Spark would *round away* the
-    last scale digit) — then re-casts to (30,12) losslessly.
-    """
-    return (
-        f"CAST(aggregate({elements}, CAST(0 AS DECIMAL(30,12)), "
-        f"(acc, v) -> CAST(acc + v AS DECIMAL(30,12))) AS DOUBLE)"
-    )
-
-
-def dot_exact(a: str, b: str) -> Column:
-    """Order-independent exact dot product of two array<float> columns."""
-    return F.expr(
-        decimal_fold(
-            f"zip_with({a}, {b}, (x, y) -> "
-            f"CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(28,12)))"
-        )
-    )
-
-
-def norm_exact(a: str) -> Column:
-    return F.sqrt(dot_exact(a, a))
-
-
 def _oracle_dot(a: str, b: str) -> str:
-    """DuckDB lateral-sum mirror of :func:`dot_exact` (1-based index order)."""
-    return (
-        f"(SELECT CAST(SUM(CAST(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)"
-        f" AS DECIMAL(28,12))) AS DOUBLE) FROM generate_series(1, {DIM}) AS g(i))"
-    )
+    """DuckDB mirror of :func:`dot_exact` over two DIM-vectors."""
+    return DDOT(f"{a}[i]", f"{b}[i]", DIM, TO_DOUBLE)
 
 
 #: the oracle's exact norms, the DuckDB mirror of :func:`norm_exact`

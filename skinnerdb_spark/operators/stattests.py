@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from skinnerdb_spark.operators.textprims import HEX_INT, hex_int
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
 
@@ -277,6 +278,25 @@ _ARMS_CTES = """g AS (
         FROM g GROUP BY v)"""
 
 
+def _value_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(v, n1v, n0v, bucket): the Spark mirror of _ARMS_CTES' ``per``, with
+    each value's MWU_BUCKET_CENTS-wide prefix-sum bucket."""
+    o = read_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
+    )
+    g = o.select(
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("v"),
+        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("grp"),
+    )
+    per = g.groupBy("v").agg(
+        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("bigint").alias("n1v"),
+        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast("bigint").alias("n0v"),
+    )
+    return per.withColumn("bucket", F.expr(f"v DIV {MWU_BUCKET_CENTS}"))
+
+
 @register(
     "stats_mann_whitney",
     f"""
@@ -324,20 +344,7 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct value stays in int64 up to ~2M ties per exact cent value."""
     from pyspark.sql.window import Window
 
-    o = read_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
-    )
-    g = o.select(
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("v"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("grp"),
-    )
-    per = g.groupBy("v").agg(
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("bigint").alias("n1v"),
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast("bigint").alias("n0v"),
-    )
-    per = per.withColumn("bucket", F.expr(f"v DIV {MWU_BUCKET_CENTS}"))
+    per = _value_arms(spark, sf_dir)
     # NOTE (r11 session 5, measured negative result): per is consumed
     # twice (offset collect + window path) so the scan + value aggregate
     # run twice per query — but an eager localCheckpoint of the
@@ -560,20 +567,7 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     change, same plan)."""
     from pyspark.sql.window import Window as _W
 
-    o = read_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
-    )
-    g = o.select(
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("v"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("grp"),
-    )
-    per = g.groupBy("v").agg(
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("bigint").alias("n1v"),
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast("bigint").alias("n0v"),
-    )
-    per = per.withColumn("bucket", F.expr(f"v DIV {MWU_BUCKET_CENTS}"))
+    per = _value_arms(spark, sf_dir)
     # double execution (offset collect + window path) kept deliberately —
     # the localCheckpoint cut measured SLOWER at sf10 (3.81 -> 6.08 s);
     # see the stats_mann_whitney note.
@@ -668,8 +662,7 @@ _BOOT_ORACLE = f"""
         FROM orders, UNNEST(generate_series(0, {BOOT_B // 4 - 1})) AS g(bg)),
     rows_b AS (
         SELECT pri, c, bg * 4 + s.s AS b,
-               CAST(('0x' || SUBSTR(h, 1 + 8 * s.s, 8))::UBIGINT AS DOUBLE)
-                   / 4294967296.0 AS u
+               CAST({HEX_INT("h", "1 + 8 * s.s", 8)} AS DOUBLE) / 4294967296.0 AS u
         FROM rows_g, UNNEST(generate_series(0, 3)) AS s(s)),
     rep AS (
         SELECT pri, b,
@@ -759,10 +752,7 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     us = rows_g.select(
         "pri", "c", "bg",
         *[
-            F.expr(
-                f"CAST(conv(substring(h, {1 + 8 * s}, 8), 16, 10) AS DOUBLE)"
-                " / 4294967296.0"
-            ).alias(f"u{s}")
+            F.expr(f"CAST({hex_int('h', 1 + 8 * s, 8)} AS DOUBLE) / 4294967296.0").alias(f"u{s}")
             for s in range(4)
         ],
     )

@@ -54,10 +54,9 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_quality",
-    """
-    SELECT doc_id,
+#: the oracle's (doc_id, quality_score), the DuckDB mirror of
+#: :func:`text_quality`: a SELECT to stand alone or in a CTE.
+QUALITY_SQL = """SELECT doc_id,
            (CASE WHEN n_tokens BETWEEN 10 AND 500 THEN 0.5 ELSE 0.0 END
           + CASE WHEN avg_len BETWEEN 3.0 AND 9.0 THEN 0.3 ELSE 0.0 END
           + CASE WHEN the_cnt > 0 THEN 0.2 ELSE 0.0 END) AS quality_score
@@ -67,7 +66,13 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(LENGTH(REPLACE(text, ' ', '')) AS DOUBLE)
                  / (LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1) AS avg_len,
                LENGTH(text) - LENGTH(REPLACE(text, 'the', '')) AS the_cnt
-        FROM documents WHERE LENGTH(text) > 0)
+        FROM documents WHERE LENGTH(text) > 0)"""
+
+
+@register(
+    "text_quality",
+    f"""
+    {QUALITY_SQL}
     """,
     tags=("text", "pipeline"),
 )

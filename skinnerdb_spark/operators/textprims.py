@@ -83,3 +83,28 @@ HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
 def hex_high_sql(char_expr: str) -> str:
     quoted = ", ".join(f"'{c}'" for c in HEX_HIGH)
     return f"({char_expr} IN ({quoted}))"
+
+
+# Portable integer hashes: ``n`` hex digits of an md5 digest, from 1-based
+# position ``start``, read as a BIGINT — the same integer in both engines
+# for n <= 15 (60 bits). Spark's conv() returns a decimal STRING, so the
+# explicit BIGINT cast keeps later arithmetic integral whatever the
+# session's ANSI setting.
+def hex_int(hex_expr: str, start: int | str, n: int) -> str:
+    """Spark SQL: digits start..start+n-1 of the hex string ``hex_expr``."""
+    return f"CAST(conv(substring({hex_expr}, {start}, {n}), 16, 10) AS BIGINT)"
+
+
+def HEX_INT(hex_expr: str, start: int | str, n: int) -> str:
+    """Oracle-SQL (DuckDB) counterpart of :func:`hex_int`."""
+    return f"CAST(('0x' || SUBSTR({hex_expr}, {start}, {n}))::UBIGINT AS BIGINT)"
+
+
+def md5_int(text: str, n: int) -> str:
+    """Spark SQL: the first ``n`` md5 hex digits of the string ``text``."""
+    return hex_int(f"md5(CAST({text} AS BINARY))", 1, n)
+
+
+def MD5_INT(text: str, n: int) -> str:
+    """Oracle-SQL (DuckDB) counterpart of :func:`md5_int`."""
+    return HEX_INT(f"md5({text})", 1, n)

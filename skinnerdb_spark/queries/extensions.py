@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from skinnerdb_spark.functions.exact import DS, dsum
+from skinnerdb_spark.operators.textprims import MD5_INT, md5_int
 from skinnerdb_spark.queries.util import read_table, ts
 from skinnerdb_spark.registry import register
 from skinnerdb_spark.state import memo
@@ -606,11 +607,8 @@ KMV_ESTIMATE = (
 def kmv_hash(col: str) -> Column:
     """The KMV key hash: the first 15 md5 hex chars of the key's string
     form as a BIGINT in [0, _KMV_DOMAIN) — the value the DuckDB oracles
-    compute as ``('0x' || SUBSTR(md5(...), 1, 15))::UBIGINT``."""
-    return F.expr(
-        f"CAST(conv(substring(md5(CAST(CAST({col} AS STRING) AS BINARY)),"
-        " 1, 15), 16, 10) AS BIGINT)"
-    )
+    compute with ``MD5_INT``."""
+    return F.expr(md5_int(f"CAST({col} AS STRING)", 15))
 
 
 def bottom_k(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -646,8 +644,7 @@ def kmv_sketch(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     f"""
     WITH dk AS (SELECT DISTINCT l_returnflag, l_partkey FROM lineitem),
     h AS (SELECT l_returnflag,
-                 CAST(('0x' || SUBSTR(md5(CAST(l_partkey AS VARCHAR)), 1, 15))
-                      ::UBIGINT AS BIGINT) AS h
+                 {MD5_INT("CAST(l_partkey AS VARCHAR)", 15)} AS h
           FROM dk),
     r AS (SELECT l_returnflag, h,
                  ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn
@@ -774,8 +771,7 @@ def window_ntile_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH dk AS (SELECT DISTINCT l_returnflag, l_linestatus, l_partkey
                 FROM lineitem),
     h AS (SELECT l_returnflag, l_linestatus,
-                 CAST(('0x' || SUBSTR(md5(CAST(l_partkey AS VARCHAR)), 1, 15))
-                      ::UBIGINT AS BIGINT) AS h
+                 {MD5_INT("CAST(l_partkey AS VARCHAR)", 15)} AS h
           FROM dk),
     part_bot AS (
         SELECT l_returnflag, l_linestatus, h FROM (
@@ -978,17 +974,13 @@ BLOOM_K = 3  # salted hash functions per key
 
 
 def _bloom_bucket_spark(i: int) -> str:
-    return (
-        f"CAST(conv(substring(md5(CAST(concat(CAST(k AS STRING), '#{i}')"
-        f" AS BINARY)), 1, 15), 16, 10) % {BLOOM_M} AS BIGINT)"
-    )
+    h = md5_int(f"concat(CAST(k AS STRING), '#{i}')", 15)
+    return f"CAST({h} % {BLOOM_M} AS BIGINT)"
 
 
 def _bloom_bucket_duck(i: str) -> str:
-    return (
-        f"CAST(('0x' || SUBSTR(md5(CAST(k AS VARCHAR) || '#' || {i}), 1, 15))"
-        f"::UBIGINT AS BIGINT) % {BLOOM_M}"
-    )
+    h = MD5_INT(f"CAST(k AS VARCHAR) || '#' || {i}", 15)
+    return f"{h} % {BLOOM_M}"
 
 
 @register(
@@ -1009,9 +1001,7 @@ def _bloom_bucket_duck(i: str) -> str:
         WHERE l_shipdate >= DATE '1995-07-01' AND l_shipdate < DATE '1996-01-01'),
     probe AS (SELECT DISTINCT k FROM rows_probe),
     pe AS (
-        SELECT k, i, CAST(('0x' || SUBSTR(md5(CAST(k AS VARCHAR) || '#'
-                   || CAST(i AS VARCHAR)), 1, 15))::UBIGINT AS BIGINT)
-                   % {BLOOM_M} AS b
+        SELECT k, i, {_bloom_bucket_duck("CAST(i AS VARCHAR)")} AS b
         FROM probe, (VALUES (1), (2), (3)) AS t(i)),
     pass_keys AS (
         SELECT k FROM pe JOIN bits USING (b) GROUP BY k HAVING COUNT(*) = {BLOOM_K}),

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from skinnerdb_spark.functions.exact import DS, dsum
+from skinnerdb_spark.operators.textprims import MD5_INT, md5_int
 from skinnerdb_spark.queries.util import read_table
 from skinnerdb_spark.registry import register
 
@@ -795,10 +796,7 @@ def mg_shard_col(shards: int = MG_SHARDS) -> F.Column:
     textprims.py): first 8 md5 hex digits mod ``shards``. Shared by the
     stream sketch and its exact batch twin ev_heavy_hitters so their shard
     spaces line up."""
-    return (
-        F.conv(F.substring(F.md5(F.col("item").cast("binary")), 1, 8), 16, 10)
-        .cast("bigint") % shards
-    ).cast("long").alias("shard")
+    return (F.expr(md5_int("item", 8)) % shards).cast("long").alias("shard")
 
 
 def stream_heavy_hitters(events: DataFrame) -> DataFrame:
@@ -889,8 +887,7 @@ _HH_ORACLE = f"""
         FROM events
         WHERE event_type IS NOT NULL AND value IS NOT NULL),
     sharded AS (
-        SELECT CAST(CAST(('0x' || SUBSTR(md5(item), 1, 8)) AS UBIGINT)
-                    % {MG_SHARDS} AS BIGINT) AS shard, item
+        SELECT CAST({MD5_INT("item", 8)} % {MG_SHARDS} AS BIGINT) AS shard, item
         FROM items),
     counts AS (
         SELECT shard, item, CAST(COUNT(*) AS BIGINT) AS cnt

@@ -205,6 +205,25 @@ def test_vacuum_inventories_and_reclaims(console, spark, sf_dir):
     assert "25" in console.handle("SELECT COUNT(*) AS n FROM nation")
 
 
+def test_vacuum_reclaims_uct_snapshots(console):
+    """UCT snapshot files are a re-derivable artifact: `vacuum` lists the
+    directory `explain adaptive dot every N` writes, `vacuum apply` removes
+    it."""
+    import os
+
+    out = console.handle(
+        "explain adaptive dot every 1 SELECT COUNT(*) AS n FROM orders, customer "
+        "WHERE o_custkey = c_custkey"
+    )
+    snap_dir = os.path.dirname(out.splitlines()[1])
+    assert os.path.basename(snap_dir) == "uct_snapshots"
+    row = next(r for r in console.engine.vacuum() if r["path"] == snap_dir)
+    assert row["kind"] == "uct-snapshots" and row["bytes"] > 0 and not row["removed"]
+    assert os.path.isdir(snap_dir), "a dry run deletes nothing"
+    row = next(r for r in console.engine.vacuum(apply=True) if r["path"] == snap_dir)
+    assert row["removed"] is True and not os.path.isdir(snap_dir)
+
+
 def test_vacuum_refuses_to_orphan_unrepointable_view(console, spark, sf_dir):
     """A rewrite copy serving a view that is NOT a warehouse table cannot be
     re-pointed, so `vacuum apply` must leave it on disk and say why."""

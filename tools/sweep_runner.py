@@ -25,8 +25,9 @@ import json
 import os
 import shutil
 import sys
-import threading
 import time
+
+from pyspark import InheritableThread
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -89,7 +90,9 @@ def run_one(spark, spec, sf_dir: str, timeout: float) -> dict:
             result["status"] = "error"
             result["error"] = f"{type(e).__name__}: {str(e)[:200]}"
 
-    th = threading.Thread(target=work, daemon=True)
+    # InheritableThread: in py4j pinned-thread mode a bare Thread would leak
+    # its pinned JVM thread and the job-group local property per entry
+    th = InheritableThread(target=work, daemon=True)
     th.start()
     th.join(timeout)
     if th.is_alive():
